@@ -40,26 +40,27 @@ object DatasetBuilder {
     planes.join(broadcast(metadata), Seq("experiment"))
 
   /** Per-experiment seeded split with the reference's count rules.
-    * Experiment count is metadata-scale, so the per-experiment counts
-    * live in a broadcast map; the data-side work is one window over
-    * rand(seed) within each experiment.
+    * One window over rand(seed) within each experiment gives each row
+    * its rank and, over the whole-partition frame, its experiment's
+    * size; a UDF maps the size to train/val thresholds with
+    * Splitter.splitCounts. No job runs at construction; the ratios are
+    * checked here, at the call.
     */
   def assignSplits(planes: DataFrame, seed: Long,
                    ratios: (Double, Double, Double) = (0.8, 0.1, 0.1)): DataFrame = {
-    val counts = planes.groupBy("experiment").count().collect()
-      .map(r => r.getString(0) -> Splitter.splitCounts(r.getLong(1), ratios)).toMap
-    val bc = planes.sparkSession.sparkContext.broadcast(counts)
+    Splitter.checkRatios(ratios)
     val w = Window.partitionBy("experiment").orderBy(col("__r"))
-    val trUdf = udf((e: String) => bc.value(e)._1)
-    val vaUdf = udf((e: String) => bc.value(e)._1 + bc.value(e)._2)
+    val split = udf { (rn: Int, n: Long) =>
+      val (tr, va, _) = Splitter.splitCounts(n, ratios)
+      if (rn < tr) "train" else if (rn < tr + va) "val" else "test"
+    }.asNonNullable()
     planes
       .withColumn("__r", rand(seed))
       .withColumn("__rn", row_number().over(w) - 1)
-      .withColumn("split",
-        when(col("__rn") < trUdf(col("experiment")), "train")
-          .when(col("__rn") < vaUdf(col("experiment")), "val")
-          .otherwise("test"))
-      .drop("__r", "__rn")
+      .withColumn("__n", count(lit(1)).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      .withColumn("split", split(col("__rn"), col("__n")))
+      .drop("__r", "__rn", "__n")
   }
 
   /** P1 `_subset_data_dict`: category filters; 'all' = no predicate. */

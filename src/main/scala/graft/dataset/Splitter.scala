@@ -79,15 +79,21 @@ object Splitter {
     df.withColumn(IdxCol, posOf(col(batchIdxCol).cast("int")))
   }
 
+  /** build.py's ratio checks: the ratios sum to 1 and none is 0. */
+  private[dataset] def checkRatios(ratios: (Double, Double, Double)): Unit = {
+    val (tr, va, te) = ratios
+    val total = math.round((tr + va + te) * 100) / 100.0
+    require(total == 1.0, s"Data splits must sum to 1, supplied splits sum to $total")
+    require(tr != 0 && va != 0 && te != 0, "All splits must be non-zero")
+  }
+
   /** Split counts per build.py:213-256 (sklearn ceil semantics for
     * fractional test sizes). Returns (train, val, test) counts; val or
     * test may be 0 when n is too small for all splits.
     */
   private[dataset] def splitCounts(n: Long, ratios: (Double, Double, Double)): (Long, Long, Long) = {
+    checkRatios(ratios)
     val (tr, va, te) = ratios
-    val total = math.round((tr + va + te) * 100) / 100.0
-    require(total == 1.0, s"Data splits must sum to 1, supplied splits sum to $total")
-    require(tr != 0 && va != 0 && te != 0, "All splits must be non-zero")
     if (n == 1) (1L, 0L, 0L)
     else if (n == 2) (1L, 1L, 0L)
     else {

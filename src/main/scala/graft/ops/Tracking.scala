@@ -83,12 +83,14 @@ object Tracking {
                  divisions: Option[DataFrame] = None): DataFrame = {
     val s = linked.sparkSession
     import s.implicits._
-    val cells = linked.flatMap { p =>
-      p.labels.iterator.filter(_ != 0).toSet.toSeq.map((l: Int) => (p.fov, p.stack, l))
-    }.toDF("fov", "frame", "label")
+    // only fov, stack and labels are read: pixels are never deserialized
+    val cells = linked.select("fov", "stack", "labels").as[(String, Int, Array[Int])]
+      .flatMap { case (fov, stack, labels) =>
+        labels.iterator.filter(_ != 0).toSet.toSeq.map((l: Int) => (fov, stack, l))
+      }.toDF("fov", "frame", "label")
     // movie horizon from the PLANES (a trailing empty frame still
     // extends the movie), tiny per-fov aggregate — AQE broadcasts it
-    val horizons = linked.map(p => (p.fov, p.stack)).toDF("fov", "frame")
+    val horizons = linked.select(col("fov"), col("stack").as("frame"))
       .groupBy("fov").agg(max("frame").as("last_frame"))
     val base = cells.groupBy("fov", "label")
       .agg(sort_array(collect_set("frame")).as("frames"),

@@ -77,12 +77,17 @@ object Npy {
     }
   }
 
-  /** Write just the NPY v1.0 header; callers stream the payload after
-    * it (the combined-NPZ sink appends plane-by-plane without ever
-    * materializing the full tensor).
+  /** Just the NPY v1.0 header; callers stream the payload after it
+    * (the combined-NPZ sink appends executor-encoded chunks without
+    * ever materializing the full tensor).
     */
-  def writeHeaderTo(out: DataOutputStream, descr: String, shape: Seq[Int]): Unit =
+  def header(descr: String, shape: Seq[Int]): Array[Byte] = {
+    val bos = new ByteArrayOutputStream()
+    val out = new DataOutputStream(bos)
     writeHeader(out, descr, shape)
+    out.flush()
+    bos.toByteArray
+  }
 
   private def writeHeader(out: DataOutputStream, descr: String, shape: Seq[Int]): Unit = {
     val shapeStr = shape.mkString("(", ", ", if (shape.length == 1) ",)" else ")")

@@ -5,9 +5,24 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataOutputStream, File}
+import org.apache.commons.compress.archivers.zip.{ZipArchiveEntry, ZipArchiveOutputStream, Zip64Mode}
+import org.apache.hadoop.util.CrcUtil
+
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, File, InputStream, SequenceInputStream}
 import java.nio.{ByteBuffer, ByteOrder}
-import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
+import java.util.zip.{CRC32, Deflater, DeflaterOutputStream, ZipEntry, ZipInputStream, ZipOutputStream}
+import scala.jdk.CollectionConverters._
+
+/** One partition of a combined training NPZ, encoded on its executor:
+  * `planes` planes of shape (`nRows`, `nCols`, `nCh`) — `uniform` is
+  * false if the partition's planes disagree on it — and, for the X
+  * (channel-last float) and y (int label) entries, the payload as a raw
+  * deflate chunk with its uncompressed length and CRC-32. Public: Spark
+  * codegen cannot compile an encoder for a private nested class.
+  */
+final case class NpzChunk(planes: Long, nRows: Int, nCols: Int, nCh: Int, uniform: Boolean,
+                          x: Array[Byte], xLength: Long, xCrc: Int,
+                          y: Array[Byte], yLength: Long, yCrc: Int)
 
 /** NPZ (zip of NPY) source/sink — the reference's unit of annotation
   * work and training data (io_utils.py:37-239, S10/S12/S13/S14 in
@@ -202,7 +217,7 @@ object Npz {
   /** Channel-last little-endian float bytes of one plane (the NPY
     * payload row of the combined X tensor).
     */
-  private def channelLastFloatBytes(p: ImagePlane): Array[Byte] = {
+  private[sources] def channelLastFloatBytes(p: ImagePlane): Array[Byte] = {
     val nCh = p.channels.length
     val planeSize = p.nRows * p.nCols
     val bb = ByteBuffer.allocate(planeSize * nCh * 4).order(ByteOrder.LITTLE_ENDIAN)
@@ -223,10 +238,86 @@ object Npz {
     bb.array()
   }
 
-  private def labelIntBytes(p: ImagePlane): Array[Byte] = {
+  private[sources] def labelIntBytes(p: ImagePlane): Array[Byte] = {
     val bb = ByteBuffer.allocate(p.labels.length * 4).order(ByteOrder.LITTLE_ENDIAN)
     bb.asIntBuffer().put(p.labels)
     bb.array()
+  }
+
+  /** Deflated size, uncompressed length and CRC-32 of a run of raw
+    * deflate chunks; `+` appends one run to another.
+    */
+  private[sources] final case class RawEntry(deflated: Long, length: Long, crc: Int) {
+    def +(next: RawEntry): RawEntry = RawEntry(deflated + next.deflated, length + next.length,
+      CrcUtil.compose(crc, next.crc, next.length, CrcUtil.GZIP_POLYNOMIAL))
+  }
+
+  /** Raw deflate at the zip default level, ended with a sync flush and
+    * no final block, so chunks from separate deflaters concatenate
+    * into one valid deflate stream.
+    */
+  private final class ChunkDeflater {
+    private val bos = new ByteArrayOutputStream()
+    private val deflater = new Deflater(Deflater.DEFAULT_COMPRESSION, true)
+    private val out = new DeflaterOutputStream(bos, deflater, 65536, true)
+    private val crc = new CRC32()
+    var length = 0L
+    def write(b: Array[Byte]): Unit = { out.write(b); crc.update(b); length += b.length }
+    def crcValue: Int = crc.getValue.toInt
+    def finish(): Array[Byte] = { out.flush(); deflater.end(); bos.toByteArray }
+  }
+
+  /** The empty final deflate block that closes a stream of chunks. */
+  private val FinalBlock = Array[Byte](3, 0)
+
+  /** One partition's planes as one [[NpzChunk]]; empty partitions emit nothing. */
+  private[sources] def encodeChunk(planes: Iterator[ImagePlane]): Iterator[NpzChunk] =
+    if (!planes.hasNext) Iterator.empty
+    else {
+      val x = new ChunkDeflater
+      val y = new ChunkDeflater
+      val h = planes.next()
+      var n = 0L
+      var uniform = true
+      (Iterator.single(h) ++ planes).foreach { p =>
+        uniform &&= p.nRows == h.nRows && p.nCols == h.nCols && p.channels.length == h.channels.length
+        x.write(channelLastFloatBytes(p))
+        y.write(labelIntBytes(p))
+        n += 1
+      }
+      Iterator.single(NpzChunk(n, h.nRows, h.nCols, h.channels.length, uniform,
+        x.finish(), x.length, x.crcValue, y.finish(), y.length, y.crcValue))
+    }
+
+  /** Total plane count of the partitions; the NPY shape holds Ints. */
+  private[sources] def planeCount(perPartition: Seq[Long]): Int = {
+    val n = perPartition.sum
+    require(n > 0, "no planes to combine")
+    require(n <= Int.MaxValue, s"$n planes exceed the NPY shape's Int range")
+    n.toInt
+  }
+
+  /** Write one deflated zip entry: the NPY header as its own
+    * chunk, then `chunks` (whose sizes and CRCs are `parts`), then the
+    * final block. Sizes and CRC go into the local header up front, so
+    * the entry streams without a data descriptor.
+    */
+  private def writeRawEntry(zos: ZipArchiveOutputStream, name: String, npyHeader: Array[Byte],
+                            parts: Seq[RawEntry], chunks: Iterator[Array[Byte]]): Unit = {
+    val d = new ChunkDeflater
+    d.write(npyHeader)
+    val head = d.finish()
+    val total = (RawEntry(head.length, d.length, d.crcValue) +: parts)
+      .reduce(_ + _) + RawEntry(FinalBlock.length, 0L, 0)
+    val e = new ZipArchiveEntry(name)
+    e.setMethod(ZipEntry.DEFLATED)
+    e.setTime(System.currentTimeMillis())
+    e.setSize(total.length)
+    e.setCompressedSize(total.deflated)
+    e.setCrc(total.crc & 0xffffffffL)
+    val streams = (Iterator.single(head) ++ chunks ++ Iterator.single(FinalBlock))
+      .map(b => new ByteArrayInputStream(b): InputStream)
+    zos.addRawArchiveEntry(e, new SequenceInputStream(streams.asJavaEnumeration))
   }
 
   /** S14 `concatenate_npz_files` / `create_combined_npz`
@@ -234,47 +325,49 @@ object Npz {
     * training NPZ `{X: [n, rows, cols, chan], y: [n, rows, cols, 1]}`.
     *
     * Single-file output is inherently driver-written, but the encode
-    * STREAMS: a first pass establishes the count and the (uniform)
-    * plane shape, then the X and y NPY entries are written header
-    * first and appended plane-by-plane from `toLocalIterator` — driver
-    * heap holds one plane at a time, never the dataset. The sorted
-    * input is disk-persisted so the three passes don't recompute
-    * upstream, and the file goes through the Hadoop FileSystem so
-    * `outFile` may live on any mounted store. The distributed form of
-    * the same data is PlaneStore.save.
+    * runs on the executors in one pass: each partition of the
+    * `(fov, crop, slice, stack)`-sorted planes becomes one [[NpzChunk]]
+    * holding its X and y payloads as raw deflate chunks with their
+    * lengths and CRC-32s. The chunks are persisted (not the raw
+    * planes); one metadata collect gives the plane count and checks the
+    * shape is uniform; the driver then composes each entry's CRC and
+    * streams the header chunk and the partition chunks from
+    * `toLocalIterator` into the zip unchanged. Driver heap holds one
+    * partition's deflated chunk at a time, never the dataset; a chunk
+    * is one byte array, so it must stay under 2 GB. The file
+    * goes through the Hadoop FileSystem so `outFile` may live on any
+    * mounted store. The distributed form of the same data is
+    * PlaneStore.save.
     */
   def createCombinedNpz(ds: Dataset[ImagePlane], outFile: String): Unit = {
     val spark = ds.sparkSession
-    val sorted = ds.sort("fov", "crop", "slice", "stack")
-      .persist(StorageLevel.DISK_ONLY)
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, length}
+    val chunks = ds.sort("fov", "crop", "slice", "stack")
+      .mapPartitions((it: Iterator[ImagePlane]) => encodeChunk(it))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val n = sorted.count().toInt
-      require(n > 0, "no planes to combine")
-      import org.apache.spark.sql.functions.size
-      import spark.implicits._
-      val shapes = sorted
-        .select($"nRows", $"nCols", size($"channels").as("nCh"))
-        .distinct().limit(2).collect()
-      require(shapes.length == 1,
-        s"combined NPZ requires uniform plane shape, got ${shapes.mkString(", ")}")
-      val (rows, cols, nCh) =
-        (shapes(0).getInt(0), shapes(0).getInt(1), shapes(0).getInt(2))
+      val meta = chunks.withColumn("xDeflated", length(col("x")))
+        .withColumn("yDeflated", length(col("y"))).drop("x", "y").collect()
+      val n = planeCount(meta.map(_.getAs[Long]("planes")).toSeq)
+      val shapes = meta.map(r =>
+        (r.getAs[Int]("nRows"), r.getAs[Int]("nCols"), r.getAs[Int]("nCh"))).distinct
+      val uniform = meta.forall(_.getAs[Boolean]("uniform"))
+      require(shapes.length == 1 && uniform,
+        s"combined NPZ requires uniform plane shape, got ${shapes.mkString(", ")}" +
+          (if (uniform) "" else " and mixed shapes within a partition"))
+      val (rows, cols, nCh) = shapes(0)
+      def parts(e: String) = meta.toSeq.map(r => RawEntry(r.getAs[Int](s"${e}Deflated"),
+        r.getAs[Long](s"${e}Length"), r.getAs[Int](s"${e}Crc")))
+      def payload(e: String) = chunks.select(col(e)).as[Array[Byte]].toLocalIterator().asScala
       val fs = new Path(outFile).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val zos = new ZipOutputStream(fs.create(new Path(outFile), true))
+      val zos = new ZipArchiveOutputStream(fs.create(new Path(outFile), true))
       try {
-        val dout = new DataOutputStream(zos)
-        zos.putNextEntry(new ZipEntry("X.npy"))
-        Npy.writeHeaderTo(dout, "<f4", Seq(n, rows, cols, nCh))
-        sorted.toLocalIterator().forEachRemaining(p => dout.write(channelLastFloatBytes(p)))
-        dout.flush()
-        zos.closeEntry()
-        zos.putNextEntry(new ZipEntry("y.npy"))
-        Npy.writeHeaderTo(dout, "<i4", Seq(n, rows, cols, 1))
-        sorted.toLocalIterator().forEachRemaining(p => dout.write(labelIntBytes(p)))
-        dout.flush()
-        zos.closeEntry()
+        zos.setUseZip64(Zip64Mode.AsNeeded)
+        writeRawEntry(zos, "X.npy", Npy.header("<f4", Seq(n, rows, cols, nCh)), parts("x"), payload("x"))
+        writeRawEntry(zos, "y.npy", Npy.header("<i4", Seq(n, rows, cols, 1)), parts("y"), payload("y"))
       } finally zos.close()
-    } finally sorted.unpersist()
+    } finally chunks.unpersist()
   }
 
   /** S12 `load_npzs` (io_utils.py:166-239): read a caliban crop dir

@@ -73,6 +73,38 @@ class DatasetBuilderSpec extends SparkSpec {
     assert(rows.forall(r => r.nRows == 10 && r.nCols == 10))
   }
 
+  test("assignSplits: no job at construction, splitCounts per experiment, ratios checked at the call") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (planes, meta) = fixture()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(jobStart: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      DatasetBuilder.buildDataset(spark, planes, meta, seed = 42)
+      org.apache.spark.GraftTestAccess.drainListenerBus(spark.sparkContext)
+      assert(jobs.get() == 0, s"buildDataset ran ${jobs.get()} job(s) at construction")
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    val sizes = Seq("a" -> 1, "b" -> 2, "c" -> 3, "d" -> 10, "e" -> 23, "f" -> 57)
+    val rows = sizes.flatMap { case (e, n) => (0 until n).map(i => (e, i)) }
+      .toDF("experiment", "id").repartition(3)
+    Seq((0.8, 0.1, 0.1), (0.6, 0.2, 0.2)).foreach { ratios =>
+      val got = DatasetBuilder.assignSplits(rows, seed = 7, ratios).groupBy("experiment", "split")
+        .count().as[(String, String, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
+      sizes.foreach { case (e, n) =>
+        val (tr, va, te) = Splitter.splitCounts(n, ratios)
+        assert(Seq("train", "val", "test").map(k => got.getOrElse((e, k), 0L)) == Seq(tr, va, te),
+          s"$e of $n at $ratios")
+      }
+    }
+    intercept[IllegalArgumentException](DatasetBuilder.assignSplits(rows, 7, (0.5, 0.2, 0.2)))
+    // checked at the call even when there is no row to split
+    intercept[IllegalArgumentException](DatasetBuilder.assignSplits(rows.limit(0), 7, (0.9, 0.1, 0.0)))
+  }
+
   test("summarize: per-tissue image and cell counts") {
     val (planes, meta) = fixture()
     val ds = DatasetBuilder.buildDataset(spark, planes, meta, seed = 42)
