@@ -19,8 +19,11 @@ import org.apache.spark.sql.Dataset
   *     majority pixel vote (J3, crop_utils.py:178-206), background
   *     never overwriting (crop_utils.py:209).
   *
-  * At scale the only wide dependency is the stitch shuffle, keyed by
-  * (fov, stack, slice) — the natural partitioning for this workload.
+  * The standalone `stitchCrops` shuffles decoded crops, keyed by
+  * (fov, stack, slice). EP2's reconstruct does not call it: it
+  * exchanges the compressed NPZ units by fov and runs [[stitchGroup]]
+  * in its streaming kernel (Reconstruct.reconstructFromNpzDir), so
+  * there the one wide dependency moves file bytes, not planes.
   */
 object CropOps {
 

@@ -119,30 +119,77 @@ object Reconstruct {
   def reconstructFromNpzDir(spark: SparkSession, dir: String): Dataset[ImagePlane] =
     reconstructFromNpzDir(spark, dir, loadPlan(spark, dir))
 
-  /** EP2 inverse: NPZ dir -> reconstructed full-size planes. The
-    * expected-unit grid (fovs x crops x slices) is built by narrow
-    * explodes from one row per fov — the driver never materializes the
-    * product, so the same code plans a 100k-fov reconstruction.
+  /** EP2 inverse: NPZ dir -> reconstructed full-size planes, in one
+    * exchange of the still-compressed work units.
+    *
+    * The units ([[Npz.unitFiles]]) whose crop and slice indices are in
+    * the plan are unioned with one marker row per plan fov (null
+    * content, slice -1), so a fov none of whose units came back still
+    * reconstructs, as zeros. The union is hash-partitioned by fov and
+    * sorted by (fov, slice, crop): that repartition is the plan's only
+    * shuffle, and it moves NPZ bytes, not decoded planes. One
+    * `mapPartitions` pass then streams each fov slice by slice: it
+    * decodes and zero-fills the slice's units (S12, [[Npz.fillUnit]]),
+    * keeps the stacks the slice owns (C8, [[SliceOps.ownedStacks]]) and
+    * stitches each kept stack's crops (C4, [[CropOps.stitchGroup]]).
+    * Units of a fov outside the plan have no marker and are skipped.
+    * Task memory is one (fov, slice): its compressed units, their
+    * decoded crops and one canvas.
     */
   def reconstructFromNpzDir(spark: SparkSession, dir: String,
                             plan: ReconstructionPlan): Dataset[ImagePlane] = {
-    import org.apache.spark.sql.functions.{col, explode, lit, typedlit}
+    import org.apache.spark.sql.functions.{col, lit}
     import spark.implicits._
     val nCrops = plan.cropPlan.map(_.numCrops).getOrElse(1)
-    val sliceLens: Seq[(Int, Int)] = plan.slicePlan match {
-      case Some(p) => p.starts.indices.map(i => i -> (p.ends(i) - p.starts(i)))
-      case None => Seq(0 -> plan.stackLen)
-    }
-    val grid = spark.createDataset(plan.fovs).toDF("fov")
-      .withColumn("crop", explode(lit((0 until nCrops).toArray)))
-      .select(col("fov"), col("crop"), explode(typedlit(sliceLens)).as("sl"))
-      .select(col("fov"), col("crop"),
-        col("sl._1").as("slice"), col("sl._2").as("stackLen"))
+    val slices = plan.slicePlan.getOrElse(
+      SliceOps.SlicePlan(Array(0), Array(plan.stackLen), plan.stackLen))
+    val units = Npz.unitFiles(spark, dir)
+      .where(col("crop") < nCrops && col("slice") < slices.numSlices)
+    val markers = plan.fovs.toDF("fov").select(lit(null).cast("string").as("path"), col("fov"),
+      lit(-1).as("crop"), lit(-1).as("slice"), lit(null).cast("binary").as("content"))
+    units.unionByName(markers)
+      .repartition(col("fov"))
+      .sortWithinPartitions("fov", "slice", "crop")
+      .select("fov", "slice", "crop", "path", "content")
+      .as[(String, Int, Int, String, Array[Byte])]
+      .mapPartitions(rows => stitchFovs(rows.buffered, plan, nCrops, slices))
+  }
+
+  /** The reconstruct kernel over one partition of (fov, slice, crop)-
+    * sorted rows, where each plan fov's marker row sorts first.
+    */
+  private def stitchFovs(
+      in: collection.BufferedIterator[(String, Int, Int, String, Array[Byte])],
+      plan: ReconstructionPlan, nCrops: Int, slices: SliceOps.SlicePlan): Iterator[ImagePlane] = {
     val unitRows = plan.cropPlan.map(_.cropRows).getOrElse(plan.nRows)
     val unitCols = plan.cropPlan.map(_.cropCols).getOrElse(plan.nCols)
-    var ds = Npz.loadNpzsWithGridDf(spark, dir, grid, unitRows, unitCols, plan.channels)
-    plan.slicePlan.foreach(p => ds = SliceOps.stitchSlices(ds, p))
-    plan.cropPlan.foreach(p => ds = CropOps.stitchCrops(ds, p))
-    ds
+    def sliceOut(fov: String, s: Int): Iterator[ImagePlane] = {
+      val files = Map.newBuilder[Int, (String, Array[Byte])]
+      while (in.hasNext && in.head._1 == fov && in.head._2 == s) {
+        val (_, _, crop, path, content) = in.next()
+        files += crop -> (path, content)
+      }
+      val byCrop = files.result()
+      val start = slices.starts(s)
+      val crops = (0 until nCrops).map { c =>
+        val (path, content) = byCrop.getOrElse(c, (null, null))
+        Npz.fillUnit(fov, c, s, slices.ends(s) - start, path, content,
+          unitRows, unitCols, plan.channels)
+      }
+      SliceOps.ownedStacks(slices, s).iterator.map { stack =>
+        val planes = crops.map(_(stack - start))
+        plan.cropPlan match {
+          case Some(cp) => CropOps.stitchGroup(fov, stack, 0, planes, cp)
+          case None => planes.head.copy(stack = stack, slice = 0)
+        }
+      }
+    }
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+      val fov = in.head._1
+      val inPlan = in.head._2 < 0
+      while (in.hasNext && in.head._1 == fov && (in.head._2 < 0 || !inPlan)) in.next()
+      if (inPlan) (0 until slices.numSlices).iterator.flatMap(sliceOut(fov, _))
+      else Iterator.empty
+    }
   }
 }

@@ -14,7 +14,8 @@ import org.apache.spark.sql.Dataset
   * stitchSlices preserves the reference's asymmetry vs crop-stitching:
   * on overlap the HIGHEST covering slice wins unconditionally
   * (last-writer-wins, slice_utils.py:151-159) — deliberately different
-  * from C4's majority vote.
+  * from C4's majority vote. That rule lives in [[ownedStacks]], which
+  * the fused EP2 read (Reconstruct.reconstructFromNpzDir) shares.
   */
 object SliceOps {
 
@@ -56,18 +57,29 @@ object SliceOps {
     }
   }
 
+  /** C8's highest-slice-wins rule (slice_utils.py:151-159): the
+    * original stack indices slice `s` keeps when the slices are
+    * stitched — its own [start, end) up to where the next slice starts,
+    * so `[starts(s), starts(s + 1))`, and `[starts(s), ends(s))` for the
+    * last slice.
+    */
+  def ownedStacks(plan: SlicePlan, s: Int): Range =
+    plan.starts(s) until
+      (if (s + 1 < plan.numSlices) math.min(plan.starts(s + 1), plan.ends(s)) else plan.ends(s))
+
   /** C8 `stitch_slices` (slice_utils.py:126-161): restore the original
-    * stack index; where two slices cover a stack, the higher slice id
-    * wins (unconditional overwrite in the reference). Implemented as a
-    * max-by-slice reduce per (fov, crop, original stack) — a
-    * shuffle-light alternative to materializing a canvas.
+    * stack index and keep each stack from the slice that owns it under
+    * [[ownedStacks]], so on overlap the higher slice wins (the
+    * reference's unconditional overwrite). Narrow: each row is kept or
+    * dropped on its own, which assumes every slice arrives whole, as
+    * slicePlanes and the grid-completed NPZ read give it.
     */
   def stitchSlices(ds: Dataset[ImagePlane], plan: SlicePlan): Dataset[ImagePlane] = {
     implicit val enc = ds.encoder
-    import ds.sparkSession.implicits._
-    ds.map(p => p.copy(stack = plan.starts(p.slice) + p.stack))
-      .groupByKey(p => (p.fov, p.crop, p.stack))
-      .reduceGroups((a, b) => if (a.slice >= b.slice) a else b)
-      .map { case (_, p) => p.copy(slice = 0) }
+    ds.flatMap { p =>
+      val stack = plan.starts(p.slice) + p.stack
+      if (ownedStacks(plan, p.slice).contains(stack)) Some(p.copy(stack = stack, slice = 0))
+      else None
+    }
   }
 }

@@ -127,9 +127,11 @@ object Tracking {
   def lineageConsistent(linked: Dataset[ImagePlane], tracks: DataFrame): DataFrame = {
     val s = linked.sparkSession
     import s.implicits._
-    val maskLabels = linked.flatMap { p =>
-      p.labels.iterator.filter(_ != 0).toSet.toSeq.map((l: Int) => (p.fov, l))
-    }.toDF("fov", "label")
+    // only fov and labels are read: pixels are never deserialized
+    val maskLabels = linked.select("fov", "labels").as[(String, Array[Int])]
+      .flatMap { case (fov, labels) =>
+        labels.iterator.filter(_ != 0).toSet.toSeq.map((l: Int) => (fov, l))
+      }.toDF("fov", "label")
       .groupBy("fov").agg(sort_array(collect_set("label")).as("mask_labels"))
     val trackLabels = tracks.groupBy("fov")
       .agg(sort_array(collect_set("label")).as("track_labels"))

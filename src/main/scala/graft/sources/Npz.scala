@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.core.ImagePlane
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 import org.apache.commons.compress.archivers.zip.{ZipArchiveEntry, ZipArchiveOutputStream, Zip64Mode}
@@ -370,13 +370,52 @@ object Npz {
     } finally chunks.unpersist()
   }
 
+  /** The work-unit file name `fov_{f}_crop_{c}_slice_{s}` the sink
+    * writes (io_utils.py:73), matched against the file's base name.
+    */
+  private val UnitName = "fov_(.+)_crop_(\\d+)_slice_(\\d+)"
+
+  /** The NPZ work units under `dir`, still compressed: one row per file
+    * whose base name parses as a unit, with columns (path, fov, crop,
+    * slice, content). Nothing is decoded, so a join or exchange on the
+    * unit key moves the files' bytes, not their planes.
+    */
+  private[graft] def unitFiles(spark: SparkSession, dir: String): DataFrame = {
+    import org.apache.spark.sql.functions.{col, regexp_extract}
+    val name = regexp_extract(col("path"), "[^/]*$", 0)
+    spark.read.format("binaryFile")
+      .option("pathGlobFilter", "*.npz")
+      .load(dir)
+      .where(name.rlike(UnitName))
+      .select(col("path"), regexp_extract(name, UnitName, 1).as("fov"),
+        regexp_extract(name, UnitName, 2).cast("int").as("crop"),
+        regexp_extract(name, UnitName, 3).cast("int").as("slice"), col("content"))
+  }
+
+  /** S12's zero-fill for one work unit: stacks `0 until stackLen` of
+    * (fov, crop, slice), decoded from `content` where the file holds
+    * them and all-zero `nRows` x `nCols` planes where it does not (a
+    * null `content` is a unit the annotators never returned). Stacks
+    * the file holds past `stackLen` are dropped; `stackLen <= 0` gives
+    * no planes.
+    */
+  private[graft] def fillUnit(fov: String, crop: Int, slice: Int, stackLen: Int,
+                              path: String, content: Array[Byte], nRows: Int, nCols: Int,
+                              channels: Seq[String]): IndexedSeq[ImagePlane] = {
+    val decoded =
+      if (content == null) IndexedSeq.empty else decodeTrainingNpz(path, content, channels).toIndexedSeq
+    (0 until stackLen).map { b =>
+      if (b < decoded.length) decoded(b).copy(fov = fov, crop = crop, slice = slice)
+      else ImagePlane(fov, b, crop, slice, nRows, nCols, channels,
+        new Array[Float](channels.length * nRows * nCols), new Array[Int](nRows * nCols))
+    }
+  }
+
   /** S12 `load_npzs` (io_utils.py:166-239): read a caliban crop dir
     * back, zero-filling planes whose NPZ is missing (annotator never
     * returned it) against the expected (fov, crop, slice, stackLen)
     * grid — the truncated last slice simply declares a shorter
-    * stackLen, as the reference handles it. The per-unit stack
-    * expansion runs distributed (narrow explode), so only one row per
-    * work unit ever exists driver-side.
+    * stackLen, as the reference handles it.
     */
   def loadNpzsWithGrid(spark: SparkSession, dir: String,
                        expected: Seq[(String, Int, Int, Int)],
@@ -389,44 +428,23 @@ object Npz {
   }
 
   /** Distributed-grid variant: `expectedGrid` has columns
-    * (fov, crop, slice, stackLen) and may come from any plan — e.g.
-    * the narrow fov-fanout Reconstruct builds, which never
-    * materializes the fovs x crops x slices product on the driver.
+    * (fov, crop, slice, stackLen) and may come from any plan. The grid
+    * is left-joined to the still-compressed [[unitFiles]] on
+    * (fov, crop, slice), and each unit is decoded and zero-filled by
+    * [[fillUnit]] after the join, so the join never broadcasts or
+    * shuffles decoded planes.
     */
   def loadNpzsWithGridDf(spark: SparkSession, dir: String,
-                         expectedGrid: org.apache.spark.sql.DataFrame,
+                         expectedGrid: DataFrame,
                          nRows: Int, nCols: Int,
                          channels: Seq[String] = Seq("channel0")): Dataset[ImagePlane] = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{array, col, explode, lit, sequence, when}
-    val present = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.npz")
-      .load(dir)
-      .select("path", "content")
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val name = new File(path).getName.stripSuffix(".npz")
-        "fov_(.+)_crop_(\\d+)_slice_(\\d+)".r.findFirstMatchIn(name).toSeq.flatMap { m =>
-          decodeTrainingNpz(path, bytes, channels).map(
-            _.copy(fov = m.group(1), crop = m.group(2).toInt, slice = m.group(3).toInt))
-        }
-      }
-    // sequence(0, -1) would step BACKWARD ([0, -1]) for stackLen=0 —
-    // guard so an empty stack contributes zero rows, not phantom indices.
-    val expectedDs = expectedGrid
-      .withColumn("stack", explode(when(col("stackLen") > 0,
-        sequence(lit(0), col("stackLen") - 1))
-        .otherwise(array().cast("array<int>"))))
-      .drop("stackLen")
-    val joined = expectedDs.join(present.toDF(), Seq("fov", "crop", "slice", "stack"), "left")
-    joined.as[(String, Int, Int, Int, Option[Int], Option[Int],
-      Option[Seq[String]], Option[Array[Float]], Option[Array[Int]])]
-      .map { case (fov, crop, slice, stack, nR, nC, ch, px, lb) =>
-        ImagePlane(fov, stack, crop, slice,
-          nR.getOrElse(nRows), nC.getOrElse(nCols),
-          ch.getOrElse(channels),
-          px.getOrElse(new Array[Float](channels.length * nRows * nCols)),
-          lb.getOrElse(new Array[Int](nRows * nCols)))
+    expectedGrid.select("fov", "crop", "slice", "stackLen")
+      .join(unitFiles(spark, dir), Seq("fov", "crop", "slice"), "left")
+      .select("fov", "crop", "slice", "stackLen", "path", "content")
+      .as[(String, Int, Int, Int, String, Array[Byte])]
+      .flatMap { case (fov, crop, slice, stackLen, path, content) =>
+        fillUnit(fov, crop, slice, stackLen, path, content, nRows, nCols, channels)
       }
   }
 }
