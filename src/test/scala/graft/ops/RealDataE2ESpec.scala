@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{Fixtures, SparkSpec}
 import graft.sources.Tiff
 import org.apache.spark.sql.functions._
 
@@ -15,10 +15,9 @@ import java.nio.file.Files
 class RealDataE2ESpec extends SparkSpec {
 
   private val fixtureDir =
-    "/root/reference/data/raw_data/static/2d/mibi/DCIS/Nuclear_DNA/20200116_DCIS"
+    s"${Fixtures.ontology}/static/2d/mibi/DCIS/Nuclear_DNA/20200116_DCIS"
 
   test("real DCIS TIFFs crop, sink, and reconstruct byte-exact") {
-    assume(new java.io.File(fixtureDir).exists())
     val saveDir = Files.createTempDirectory("real_e2e").toFile.getAbsolutePath
 
     // EP1: distributed decode of the real 512x512 points
@@ -48,8 +47,7 @@ class RealDataE2ESpec extends SparkSpec {
   }
 
   test("ontology scan feeds the reader: planes from a pruned subtree") {
-    assume(new java.io.File("/root/reference/data/raw_data").exists())
-    val scan = Tiff.scanOntology(spark, "/root/reference/data/raw_data",
+    val scan = Tiff.scanOntology(spark, Fixtures.ontology,
       imagingTypes = Seq("mibi"))
     val dirs = scan.select("path").distinct().collect().map(_.getString(0))
     assert(dirs.nonEmpty)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkSpec
+import graft.{Fixtures, SparkSpec}
 import graft.core.ImagePlane
 import graft.functions.Strings
 import graft.ops.PlotUtils
@@ -77,7 +77,7 @@ class PlaneStoreSpec extends SparkSpec {
   }
 
   test("datasetsAvailable censuses the reference ontology tree (S3)") {
-    val df = Tiff.datasetsAvailable(spark, "/root/reference/data/raw_data")
+    val df = Tiff.datasetsAvailable(spark, Fixtures.ontology)
     val rows = df.collect()
     assert(rows.nonEmpty)
     assert(rows.forall(_.getAs[Long]("n_files") >= 1))

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkSpec
+import graft.{Fixtures, SparkSpec}
 import graft.core.ImagePlane
 
 import java.nio.file.Files
@@ -66,9 +66,8 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("TIFF decode: reference fixture reads with correct dims") {
-    val path = "/root/reference/data/raw_data/static/2d/mibi/DCIS/" +
+    val path = s"${Fixtures.ontology}/static/2d/mibi/DCIS/" +
       "Nuclear_DNA/20200116_DCIS/20200116_DCIS_Point2304_crop_0.tif"
-    assume(new java.io.File(path).exists())
     val bytes = Files.readAllBytes(java.nio.file.Paths.get(path))
     val frames = Tiff.decodeFrames(bytes)
     assert(frames.nonEmpty)
@@ -104,13 +103,12 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("loadMetadata enriches like the reference (S4, data_loader.py:375-394)") {
-    val base = "/root/reference/data/raw_data"
-    assume(new java.io.File(base).exists())
+    val base = Fixtures.ontology
     val df = Tiff.loadMetadata(spark, base)
     val rows = df.collect()
     assert(rows.nonEmpty, "metadata fixtures found")
     val a549 = rows.find(_.getAs[String]("metadata_path")
-      .contains("20190514_EP01")).get
+      .contains("Phase/A549/20190514_EP01")).get
     // TYPE/ONTOLOGY arrays space-joined (str.cat(sep=' '))
     assert(a549.getAs[String]("TYPE") == "cell A549")
     assert(a549.getAs[String]("ONTOLOGY") == "static 2d Phase")
@@ -148,7 +146,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("scanOntology parses levels and prunes by predicate") {
-    val df = Tiff.scanOntology(spark, "/root/reference/data/raw_data",
+    val df = Tiff.scanOntology(spark, Fixtures.ontology,
       imagingTypes = Seq("mibi"))
     val rows = df.collect()
     assert(rows.nonEmpty)

@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import graft.SparkSpec
+import graft.{Fixtures, SparkSpec}
 import graft.sources.Tiff
 import org.apache.spark.sql.functions._
 
@@ -8,7 +8,7 @@ import java.nio.file.Files
 
 class TiffDataSourceSpec extends SparkSpec {
 
-  private val RefBase = "/root/reference/data/raw_data"
+  private val RefBase = Fixtures.ontology
 
   /** Synthetic ontology tree with the `*_s{ss}_p{pp}` filename
     * convention across two imaging subtrees.
@@ -90,7 +90,6 @@ class TiffDataSourceSpec extends SparkSpec {
   }
 
   test("reference fixture: scanOntology on the V2 walk matches the known tree") {
-    assume(new java.io.File(RefBase).exists())
     val all = Tiff.scanOntology(spark, RefBase)
     assert(all.count() == 6, "six reference TIFFs")
     val mibi = Tiff.scanOntology(spark, RefBase, imagingTypes = Seq("mibi"))
