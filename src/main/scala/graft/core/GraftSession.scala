@@ -12,6 +12,18 @@ import org.apache.spark.sql.SparkSession
   * parity. `nanosAsLong` lets us ingest nanosecond parquet timestamps
   * (the `events` table) which Spark otherwise rejects; graft.queries.Q
   * rebases them to microsecond TimestampType at load.
+  *
+  * The `file` scheme is mapped to [[NioLocalFileSystem]]
+  * (`fs.file.impl`) and [[NioLocalFs]] (`fs.AbstractFileSystem.file.impl`
+  * for FileContext users such as stream checkpoints). They are the
+  * stock checksummed local FileSystems, except that permissions are set
+  * in-process instead of by a `chmod` child process per file and per
+  * `.crc` sidecar. Other schemes (`s3a://`, `hdfs://`) keep their own
+  * FileSystems. Caveat: Hadoop caches FileSystem instances by scheme,
+  * authority and user, not by conf. A `file://` FileSystem resolved in
+  * this JVM from a conf without the mapping, before the first session
+  * resolves one, stays cached as the stock class; `FileSystem.newInstance`
+  * and FileContext resolve from the conf they are given.
   */
 object GraftSession {
 
@@ -29,6 +41,8 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.compression.codec", "zstd")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
 
   def get(): SparkSession = {
     val s = builder().getOrCreate()

@@ -394,8 +394,9 @@ object IoQueries {
   // S1-S4/S9 digest: the ontology-tree source family (scanOntology's
   // DSv2 walk + loadMetadata's per-experiment JSON enrichment) over
   // the COMMITTED copy of the reference's raw_data tree
-  // (fixtures/ontology, verbatim from /root/reference/data/raw_data
-  // like the TIFF fixtures). One row per experiment directory: the
+  // (fixtures/ontology, verbatim from data/raw_data of the upstream
+  // vanvalenlab/deepcell-data-engineering repository, like the TIFF
+  // fixtures). One row per experiment directory: the
   // file census (count / byte total / lexical-first name from the
   // scan) full-outer-joined to the metadata census (space-joined
   // ontology string, TYPE join, dims, channel-0 marker, facility).

@@ -11,8 +11,9 @@ import Q._
   * filters (P1/P7/P8), the implicit joins (J1), aggregations
   * (A1/A2/A4/A5/A6/A7/A9), windows (W1/W3), sorts/top-k (S16), set
   * ops/splits (R1/R2/R4/R5) — as an idiomatic Spark DataFrame plan with
-  * a DuckDB oracle. Reference citations are to
-  * vanvalenlab/deepcell-data-engineering (read-only at /root/reference).
+  * a DuckDB oracle. Reference citations are to the upstream
+  * vanvalenlab/deepcell-data-engineering repository; its raw_data tree
+  * is committed under fixtures/ontology.
   */
 object RelationalQueries {
 

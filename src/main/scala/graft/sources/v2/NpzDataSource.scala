@@ -1,7 +1,10 @@
 package graft.sources.v2
 
 import graft.sources.Npz
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -12,6 +15,7 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, In}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -83,10 +87,14 @@ class NpzScanBuilder(path: String) extends ScanBuilder
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  override def build(): Scan = new NpzScan(path, pushed, required)
+  // the SESSION Hadoop conf (spark.hadoop.*: s3a credentials, FS
+  // impls), captured on the driver as TiffScanBuilder does
+  override def build(): Scan = new NpzScan(path, pushed, required,
+    new SerializableConfiguration(SparkSession.active.sessionState.newHadoopConf()))
 }
 
-class NpzScan(path: String, pushed: Array[Filter], required: StructType)
+class NpzScan(path: String, pushed: Array[Filter], required: StructType,
+              hadoopConf: SerializableConfiguration)
     extends Scan with Batch {
 
   override def readSchema(): StructType = required
@@ -106,7 +114,7 @@ class NpzScan(path: String, pushed: Array[Filter], required: StructType)
     }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val fs = new Path(path).getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = new Path(path).getFileSystem(hadoopConf.value)
     val re = "fov_(.+)_crop_(\\d+)_slice_(\\d+)\\.npz".r
     val parts = fs.listStatus(new Path(path)).toSeq
       .filter(_.getPath.getName.endsWith(".npz"))
@@ -122,25 +130,29 @@ class NpzScan(path: String, pushed: Array[Filter], required: StructType)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new NpzReaderFactory(required)
+    new NpzReaderFactory(required, SparkSession.active.sparkContext.broadcast(hadoopConf))
 }
 
 case class NpzInputPartition(file: String, fov: String, crop: Int, slice: Int)
     extends InputPartition
 
-class NpzReaderFactory(required: StructType) extends PartitionReaderFactory {
+class NpzReaderFactory(required: StructType,
+                       hadoopConf: Broadcast[SerializableConfiguration])
+    extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new NpzPartitionReader(partition.asInstanceOf[NpzInputPartition], required)
+    new NpzPartitionReader(partition.asInstanceOf[NpzInputPartition], required,
+      hadoopConf.value.value)
 }
 
-class NpzPartitionReader(part: NpzInputPartition, required: StructType)
+class NpzPartitionReader(part: NpzInputPartition, required: StructType,
+                         hadoopConf: Configuration)
     extends PartitionReader[InternalRow] {
 
   private val needPixels = required.fieldNames.contains("pixels")
   private val needLabels = required.fieldNames.contains("labels")
 
   private lazy val rows: Iterator[InternalRow] = {
-    val fs = new Path(part.file).getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = new Path(part.file).getFileSystem(hadoopConf)
     val in = fs.open(new Path(part.file))
     val bytes = try {
       val len = fs.getFileStatus(new Path(part.file)).getLen.toInt

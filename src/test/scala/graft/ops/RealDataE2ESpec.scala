@@ -23,7 +23,7 @@ class RealDataE2ESpec extends SparkSpec {
     // EP1: distributed decode of the real 512x512 points
     val planes = Tiff.readTiffDir(spark, fixtureDir)
     val orig = planes.collect().map(p => p.fov -> p).toMap
-    assume(orig.nonEmpty)
+    assert(orig.nonEmpty, s"no planes decoded from the committed fixture $fixtureDir")
     orig.values.foreach(p => assert(p.nRows == 512 && p.nCols == 512))
     val fovs = orig.keys.toSeq.sorted
 

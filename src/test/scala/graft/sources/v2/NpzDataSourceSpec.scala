@@ -68,4 +68,24 @@ class NpzDataSourceSpec extends SparkSpec {
       assert(lb == p.labels.toSeq)
     }
   }
+
+  test("a session-only Hadoop key reaches the planner listing and the readers") {
+    // `graftfs://` resolves only through the session conf (see
+    // TiffHadoopConfSpec), so a bare `new Configuration()` in either
+    // place fails with "No FileSystem for scheme"
+    spark.conf.set("fs.graftfs.impl", classOf[GraftTestFileSystem].getName)
+    spark.conf.set("fs.graftfs.impl.disable.cache", "true")
+    try {
+      GraftTestFileSystem.listings.set(0)
+      GraftTestFileSystem.opens.set(0)
+      val rows = spark.read.format("graft.sources.v2.NpzDataSource")
+        .load(s"graftfs://$dir").filter(col("fov") === "fov3").collect()
+      assert(rows.map(_.getAs[Int]("stack")).sorted.toSeq == Seq(0, 1))
+      assert(GraftTestFileSystem.listings.get() >= 1, "planner lists through graftfs://")
+      assert(GraftTestFileSystem.opens.get() >= 1, "readers open through graftfs://")
+    } finally {
+      spark.conf.unset("fs.graftfs.impl")
+      spark.conf.unset("fs.graftfs.impl.disable.cache")
+    }
+  }
 }
