@@ -6,9 +6,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Several registered query paths materialize intermediate data that
   * executors write and a later stage reads back: the streaming drain
-  * harnesses (graft.streaming.StreamOps.drainAppend/drainUpdates), the
-  * NPZ round-trip store (q_npz_roundtrip), and the reconstruct/sink
-  * digest queries. On local[*] a `java.nio` temp dir is correct —
+  * (graft.streaming.StreamOps.drain), the NPZ round-trip store
+  * (q_npz_roundtrip), and the reconstruct/sink digest queries. On
+  * local[*] a `java.nio` temp dir is correct —
   * executors share the driver's host — but on a real cluster a bare
   * `file:/tmp/...` path written from executors lands on each
   * executor's LOCAL disk and the read-back sees only the driver's
@@ -38,9 +38,9 @@ object Scratch {
     * base (or a local temp dir when unconfigured); returns a path
     * string usable by any Hadoop-FileSystem-aware reader/writer.
     *
-    * Retention: allocations are NOT deleted here — the DataFrames the
-    * drain harnesses return read from them lazily, so their lifetime
-    * is the consumer's. Local temp dirs go with /tmp; a configured
+    * Retention: allocations are NOT deleted here — the DataFrames that
+    * the drain returns read from them lazily, so their lifetime is the
+    * consumer's. Local temp dirs go with /tmp; a configured
     * shared base should point at TTL'd storage (object-store lifecycle
     * rule or a tmpwatch'd mount), the standard contract for Spark
     * scratch space.

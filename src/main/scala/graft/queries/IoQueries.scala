@@ -524,10 +524,10 @@ object IoQueries {
     * micro-batches), not a single gulp.
     */
   private def qStreamTarIngest(s: SparkSession, dir: String): DataFrame = {
-    val (samples, batches) = graft.streaming.StreamOps
+    val ingest = graft.streaming.StreamOps
       .tarSampleIngest(s, s"$fixturesRoot/tarshard/samples")
-    tarSampleCensus(samples)
-      .withColumn("multi_batch", lit(batches >= 2))
+    tarSampleCensus(ingest.result)
+      .withColumn("multi_batch", lit(ingest.numBatches >= 2))
   }
 
   /** Write→read round trip through the TAR-shard SINK: the documents

@@ -520,29 +520,27 @@ object ScaleQueries {
     * aggregation, so it shares q_evt_hourly's oracle.
     */
   private def qStreamHourly(s: SparkSession, dir: String): DataFrame =
-    StreamOps.hourlyCounts(s, dir, queryName = s"stream_hourly_${math.abs(dir.hashCode)}")
+    StreamOps.hourlyCounts(s, dir).result
 
   /** Streaming exact dedup (watermarked dropDuplicates) — the census
     * of the deduped stream must equal batch count-distinct.
     */
   private def qStreamDedup(s: SparkSession, dir: String): DataFrame =
-    StreamOps.dedupCounts(s, dir,
-      queryName = s"stream_dedup_${math.abs(dir.hashCode)}")
+    StreamOps.dedupCounts(s, dir).result
 
   /** Streaming batch-vs-store dedup (stream-static anti join +
     * keep-first aggregation) — must equal q_dedup_incremental exactly,
     * so it shares its oracle.
     */
   private def qStreamIncremental(s: SparkSession, dir: String): DataFrame =
-    StreamOps.incrementalDedup(s, dir,
-      queryName = s"stream_inc_${math.abs(dir.hashCode)}")
+    StreamOps.incrementalDedup(s, dir).result
 
   /** Streaming EWMA via mapGroupsWithState — O(1) state per user; the
     * dyadic α=1/2 recursion replays as a batch list_reduce, so stream
     * and oracle agree on the hash (see StreamOps.ewmaState).
     */
   private def qStreamEwma(s: SparkSession, dir: String): DataFrame =
-    StreamOps.ewmaState(s, dir)._1
+    StreamOps.ewmaState(s, dir).result
 
   /** Streaming multi-touch attribution — q_evt_attribution's O(1)-state
     * twin (two counters + last-touch channel + eight integer credit
@@ -552,14 +550,14 @@ object ScaleQueries {
     * See StreamOps.attributionState.
     */
   private def qStreamAttribution(s: SparkSession, dir: String): DataFrame =
-    StreamOps.attributionState(s, dir)._1
+    StreamOps.attributionState(s, dir).result
 
   /** The same EWMA on Spark 4's transformWithState (RocksDB-backed
     * named state) — API-surface twin, must hash-match q_stream_ewma's
     * oracle exactly. See StreamOps.ewmaStateTws.
     */
   private def qStreamEwmaTws(s: SparkSession, dir: String): DataFrame =
-    StreamOps.ewmaStateTws(s, dir)._1
+    StreamOps.ewmaStateTws(s, dir).result
 
   /** The append-mode sessionizer on Spark 4's transformWithState with
     * EVENT-TIME TIMERS — watermark-evicted open-session state on the
@@ -577,7 +575,7 @@ object ScaleQueries {
     * design cannot reconstruct). See StreamOps.patternState.
     */
   private def qStreamPattern(s: SparkSession, dir: String): DataFrame =
-    StreamOps.patternState(s, dir)._1
+    StreamOps.patternState(s, dir).result
 
   /** The same CEP DFA on Spark 4's transformWithState (RocksDB-backed
     * named state) — API-surface twin of q_stream_pattern, must
@@ -585,15 +583,14 @@ object ScaleQueries {
     * StreamOps.patternStateTws.
     */
   private def qStreamPatternTws(s: SparkSession, dir: String): DataFrame =
-    StreamOps.patternStateTws(s, dir)._1
+    StreamOps.patternStateTws(s, dir).result
 
   /** Stateful streaming sessionization (flatMapGroupsWithState) —
     * must equal the batch window-algebra sessionization, so it shares
     * q_evt_sessionize's oracle.
     */
   private def qStreamSessionize(s: SparkSession, dir: String): DataFrame =
-    StreamOps.sessionCounts(s, dir,
-      queryName = s"stream_sessions_${math.abs(dir.hashCode)}")
+    StreamOps.sessionCounts(s, dir).result
 
   /** The BOUNDED-STATE hourly rollup, driver-visible: append output
     * mode + watermark eviction (StreamOps.hourlyCountsAppend), the
@@ -613,8 +610,7 @@ object ScaleQueries {
     * end+gap the final watermark strictly passed.
     */
   private def qStreamSessionizeAppend(s: SparkSession, dir: String): DataFrame =
-    StreamOps.sessionCountsAppend(s, dir,
-      queryName = s"stream_sessions_append_${math.abs(dir.hashCode)}").result
+    StreamOps.sessionCountsAppend(s, dir).result
 
   /** The hourly append-mode emission-law oracle, shared verbatim by
     * the classic windowed aggregation and its transformWithState twin
@@ -631,8 +627,7 @@ object ScaleQueries {
       |ORDER BY hour, event_type""".stripMargin
 
   private def qStreamHourlyAppend(s: SparkSession, dir: String): DataFrame =
-    StreamOps.hourlyCountsAppend(s, dir, glob = Some("events.parquet"),
-      queryName = s"stream_hourly_append_${math.abs(dir.hashCode)}").result
+    StreamOps.hourlyCountsAppend(s, dir, glob = Some("events.parquet")).result
 
   /** The watermark-evicted hourly rollup on Spark 4's
     * transformWithState — MapState + one event-time timer per open
@@ -642,8 +637,7 @@ object ScaleQueries {
     * StreamOps.hourlyCountsAppendTws.
     */
   private def qStreamHourlyTws(s: SparkSession, dir: String): DataFrame =
-    StreamOps.hourlyCountsAppendTws(s, dir,
-      queryName = s"stream_hourly_tws_${math.abs(dir.hashCode)}").result
+    StreamOps.hourlyCountsAppendTws(s, dir).result
 
   /** Native session_window sessionization (StreamOps
     * .sessionWindowAppend): the engine-managed twin of the custom
@@ -660,8 +654,7 @@ object ScaleQueries {
     val streamDir = StreamOps.timeSliceParquet(
       graft.core.EventTime.normalize(s.read.parquet(s"$dir/events.parquet")),
       col("ts"), 6, "q_stream_sesswin")
-    StreamOps.sessionWindowAppend(s, streamDir, glob = None,
-      queryName = s"stream_session_native_${math.abs(dir.hashCode)}").result
+    StreamOps.sessionWindowAppend(s, streamDir, glob = None).result
   }
 
   /** Left-outer stream-stream interval join (StreamOps
@@ -686,8 +679,7 @@ object ScaleQueries {
       .normalize(s.read.parquet(s"$dir/events.parquet"))
     val streamDir = StreamOps.timeSliceParquet(
       events, col("ts"), 6, "q_stream_range_outer")
-    val run = StreamOps.intervalJoinOuterAppend(s, streamDir, glob = None,
-      queryName = s"stream_range_outer_${math.abs(dir.hashCode)}").result
+    val run = StreamOps.intervalJoinOuterAppend(s, streamDir, glob = None).result
     val maxUs = events.agg(max(unix_micros(col("ts")))).head.getLong(0)
     run.filter(col("p_us") <= maxUs - 7200000000L)
   }
@@ -702,8 +694,7 @@ object ScaleQueries {
     val streamDir = StreamOps.timeSliceParquet(
       graft.core.EventTime.normalize(s.read.parquet(s"$dir/events.parquet")),
       col("ts"), 6, "q_stream_psi")
-    StreamOps.psiDriftAppend(s, streamDir, glob = None,
-      queryName = s"stream_psi_${math.abs(dir.hashCode)}").result
+    StreamOps.psiDriftAppend(s, streamDir, glob = None).result
   }
 
   /** [[qStreamPsi]] on Spark 4's transformWithState — ValueState
@@ -716,8 +707,7 @@ object ScaleQueries {
     val streamDir = StreamOps.timeSliceParquet(
       graft.core.EventTime.normalize(s.read.parquet(s"$dir/events.parquet")),
       col("ts"), 6, "q_stream_psi_tws")
-    StreamOps.psiDriftAppendTws(s, streamDir, glob = None,
-      queryName = s"stream_psi_tws_${math.abs(dir.hashCode)}").result
+    StreamOps.psiDriftAppendTws(s, streamDir, glob = None).result
   }
 
   /** The bounded-state incremental dedup, driver-visible:
@@ -794,8 +784,7 @@ object ScaleQueries {
   private def qStreamStitch(s: SparkSession, dir: String): DataFrame = {
     val (streamDir, plan) = stitchStreamFixture(s)
     StreamOps.incrementalStitchAppend(s, streamDir, plan,
-      quarantineMinutes = 3, watermarkDelay = "2 minutes",
-      queryName = s"stream_stitch_${math.abs(dir.hashCode)}").result
+      quarantineMinutes = 3, watermarkDelay = "2 minutes").result
   }
 
   /** The same bounded incremental stitch on Spark 4's
@@ -806,8 +795,7 @@ object ScaleQueries {
   private def qStreamStitchTws(s: SparkSession, dir: String): DataFrame = {
     val (streamDir, plan) = stitchStreamFixture(s)
     StreamOps.incrementalStitchAppendTws(s, streamDir, plan,
-      quarantineMinutes = 3, watermarkDelay = "2 minutes",
-      queryName = s"stream_stitch_tws_${math.abs(dir.hashCode)}").result
+      quarantineMinutes = 3, watermarkDelay = "2 minutes").result
   }
 
   /** Streaming near-dup gate: arriving docs banded-MinHash-checked
@@ -816,12 +804,10 @@ object ScaleQueries {
     * StreamOps.neardupStatic.
     */
   private def qStreamNeardup(s: SparkSession, dir: String): DataFrame =
-    StreamOps.neardupStatic(s, dir,
-      queryName = s"stream_neardup_${math.abs(dir.hashCode)}")._1
+    StreamOps.neardupStatic(s, dir).result
 
   private def qStreamIncrementalAppend(s: SparkSession, dir: String): DataFrame =
-    StreamOps.incrementalDedupAppend(s, dir, dir, glob = Some("documents.parquet"),
-      queryName = s"stream_inc_append_${math.abs(dir.hashCode)}")
+    StreamOps.incrementalDedupAppend(s, dir, dir, glob = Some("documents.parquet"))
       .result.select("fp").distinct().orderBy("fp")
 
   /** Stream-stream interval join, driver-visible (StreamOps
@@ -844,8 +830,7 @@ object ScaleQueries {
     val streamDir = StreamOps.timeSliceParquet(
       graft.core.EventTime.normalize(s.read.parquet(s"$dir/events.parquet")),
       col("ts"), 6, "q_stream_range")
-    StreamOps.intervalJoinAppend(s, streamDir,
-      queryName = s"stream_range_append_${math.abs(dir.hashCode)}").result
+    StreamOps.intervalJoinAppend(s, streamDir).result
   }
 
   /** Streaming twin of q_evt_countmin: the native CMS aggregate runs
@@ -861,11 +846,10 @@ object ScaleQueries {
     import graft.functions.CountMin
     val ev = t(s, dir, "events")
     val streamDir = StreamOps.sliceParquet(ev, col("event_id"), 6, "q_stream_cms")
-    val (sk, _) = StreamOps.completeAggDrain(s, streamDir, "*.parquet",
+    val sk = StreamOps.completeAggDrain(s, streamDir, "*.parquet",
       df => df.agg(CountMin.cmsSketch(col("user_id"),
         EventQueries.cmsD, EventQueries.cmsW).as("sk")),
-      queryName = s"stream_countmin_${math.abs(dir.hashCode)}",
-      stateKey = "q_stream_countmin")
+      "q_stream_countmin").result
     EventQueries.cmsProbeTable(ev, sk)
   }
 
@@ -900,22 +884,11 @@ object ScaleQueries {
         (col("top3") * col("p10")).as("low_c"),
         ((col("top3") * 10 + 5) * col("p10")).as("rep_dc"))
     val streamDir = StreamOps.sliceParquet(ev, col("event_id"), 6, "q_stream_ddq")
-    val qn = s"stream_ddq_${math.abs(dir.hashCode)}"
-    StreamOps.completeAggDrain(s, streamDir, "*.parquet",
+    val streamHist = StreamOps.completeAggDrain(s, streamDir, "*.parquet",
       df => bucketize(df).groupBy("event_type", "bid")
         .agg(count(lit(1)).as("s_cnt"), max("rep_dc").as("s_rep"),
           max("low_c").as("s_low")),
-      queryName = qn, stateKey = "q_stream_dd_quantile")
-    // The drained memory-sink relation exposes FIXED attribute ids, so
-    // its self-joins fail relation dedup (INTERNAL_ERROR conflicting
-    // references). The histogram is sketch-sized BY CONSTRUCTION
-    // (|event types| x ~40 buckets), so pinning it into a local
-    // relation is bounded and gives the readout joins ordinary
-    // dedup-able leaves.
-    val drained = s.table(qn)
-    val streamHist = s.createDataFrame(
-      new java.util.ArrayList(java.util.Arrays.asList(drained.collect(): _*)),
-      drained.schema)
+      "q_stream_dd_quantile").result
     val batchHist = bucketize(ev).groupBy("event_type", "bid")
       .agg(count(lit(1)).as("cnt"), max("rep_dc").as("rep_dc"),
         max("low_c").as("low_c"))
@@ -970,12 +943,11 @@ object ScaleQueries {
     import graft.functions.MisraGriesTopK.mgTopK
     val docs = t(s, dir, "documents")
     val streamDir = StreamOps.sliceParquet(docs, col("doc_id"), 5, "q_stream_topk")
-    val (sk, _) = StreamOps.completeAggDrain(s, streamDir, "*.parquet",
+    val sk = StreamOps.completeAggDrain(s, streamDir, "*.parquet",
       df => df.select(explode(split(col("text"), " ")).as("token"))
         .agg(mgTopK(col("token"), TextQueries.mgK).as("summary"),
           count(lit(1)).as("n_total")),
-      queryName = s"stream_topk_${math.abs(dir.hashCode)}",
-      stateKey = "q_stream_topk")
+      "q_stream_topk").result
     TextQueries.mgVerdict(
       docs.select(explode(split(col("text"), " ")).as("token")), sk)
   }

@@ -3,7 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.DecimalType
+import graft.streaming.StreamOps
 import Q._
 
 /** Similarity search over the `embeddings` table (64-dim float
@@ -535,9 +537,7 @@ object SimilarityQueries {
       .localCheckpoint()
     val index = storeVecs.select(col("store_id"))
       .join(coded.select(col("vec_id").as("store_id"), col("cl")), Seq("store_id"))
-    val batchSchema = s.read.parquet(s"$dir/embeddings.parquet").schema
-    val stream = s.readStream.schema(batchSchema)
-      .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+    val stream = StreamOps.fileStream(s, dir, Some("embeddings.parquet"))
       .filter(col("vec_id") % 10 === 9)
       .select(col("vec_id"), dvec(col("embedding")).as("vec"))
       .join(coded, Seq("vec_id"))
@@ -553,14 +553,9 @@ object SimilarityQueries {
       .select(col("vec_id"), col("n_cand"),
         coalesce(col("best0"), lit(-1.0)).as("best_sim"),
         (coalesce(col("best0"), lit(-1.0)) < 0.2).as("novel"))
-    // bounded drain, not an update-mode memory sink: emitted volume is
-    // one scored row per arriving vector (linear in data) — updates go
-    // executor-side to parquet and the driver stays O(1), same contract
-    // as every other drain harness (StreamOps.drainUpdates)
-    val (drained, maxState) = graft.streaming.StreamOps.drainUpdates(
-      scored, Seq("vec_id", "n_cand", "best_sim", "novel"))
-    graft.streaming.StreamOps.stateHighWater("q_stream_semgate") = maxState
-    drained
+    // emitted volume is one scored row per arriving vector (linear in
+    // data); the drain writes updates executor-side to parquet
+    StreamOps.drain(scored, OutputMode.Update(), "q_stream_semgate").result
       .groupBy("vec_id")
       .agg(max(struct(col("n_cand"), col("best_sim"), col("novel"))).as("last"))
       .select(col("vec_id"), col("last.n_cand").as("n_cand"),

@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQueryListener, StreamingQueryProgress, Trigger}
 
 /** Structured Streaming surface (SURVEY.md §2.10): the reference has
   * no streaming runtime, but the engine exposes the event pipeline as
@@ -10,27 +12,160 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * dedup — so "dynamic" data can arrive incrementally instead of as a
   * batch tensor.
   *
-  * For local verification the stream is driven synchronously from the
-  * same parquet (`processAllAvailable` + memory sink); on a cluster
-  * the identical plan runs against a live source with the watermark
-  * bounding state.
+  * Every builder reads a parquet file stream ([[fileStream]]) and
+  * hands its output to the one [[drain]]: for local verification the
+  * stream runs to completion under `Trigger.AvailableNow` and each
+  * micro-batch lands executor-side in a parquet scratch directory; on
+  * a cluster the identical plan runs against a live source with the
+  * watermark bounding state.
   */
 object StreamOps {
 
-  /** Watermarked hourly counts per event type; returns the final
-    * result table after draining the (file-backed) stream. Source
-    * time encodings are canonicalized by [[graft.core.EventTime]]
-    * (same boundary rule as graft.queries.Q.t).
+  /** A drained stream: the emitted table plus the state-store
+    * high-water over every micro-batch (from
+    * `StreamingQueryProgress.stateOperators`) — the number a 100 TB
+    * deployment actually has to bound — and the micro-batch count.
     */
-  def hourlyCounts(spark: SparkSession, sfDir: String,
-                   queryName: String = "stream_hourly"): DataFrame = {
-    val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    // streaming file source needs a directory; glob-filter to events
-    val stream = graft.core.EventTime.normalize(spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir))
-    val agg = stream
+  case class Drained(result: DataFrame, maxStateRows: Long, numBatches: Int) {
+    def map(f: DataFrame => DataFrame): Drained = copy(result = f(result))
+  }
+
+  /** State-store high-water marks observed by the most recent drain
+    * of each stream operator, keyed by the operator's registry name.
+    * Bench emits this map as `state_rows` in its JSON line, making the
+    * bound a per-round driver-visible artifact instead of spec-only
+    * assurance. [[drain]] is its only writer.
+    */
+  val stateHighWater: scala.collection.concurrent.TrieMap[String, Long] =
+    scala.collection.concurrent.TrieMap.empty
+
+  /** How long [[drain]] waits, after the query has stopped, for the
+    * listener bus to deliver its QueryTerminatedEvent. */
+  private val terminatedTimeoutMs = 60000L
+
+  /** The one streaming drain. Runs `out` under `Trigger.AvailableNow`
+    * until all available input is processed, writing each micro-batch
+    * through foreachBatch into a fresh [[graft.core.Scratch]] directory
+    * (append for Append and Update, overwrite for Complete, so the
+    * directory ends with the last complete table) and reads it back
+    * with the stream's schema. The writes are executor-side, so driver
+    * memory stays O(1) whatever the emitted volume; a memory sink
+    * would hold every emitted row on the driver.
+    *
+    * The batch count and state high-water come from a
+    * StreamingQueryListener filtered by the query id, complete up to
+    * the query's QueryTerminatedEvent; the query's own progress buffer
+    * keeps only the last `spark.sql.streaming.numRecentProgressUpdates`
+    * batches. The high-water is recorded as `stateHighWater(name)`.
+    *
+    * Session confs are set for the run and restored after, an unset
+    * key staying unset:
+    *   - `spark.sql.shuffle.partitions` = 8. Stateful micro-batch
+    *     drains commit one state store PER SHUFFLE PARTITION PER BATCH,
+    *     so at the session's core-count partitions a short multi-batch
+    *     replay spends its wall on state-store commits, not on the
+    *     operator (guide §2: partitioning sized to the workload, not
+    *     the core count). Partition count changes no registered
+    *     result: every drained contract is either a deterministic
+    *     per-key fold, a mergeable aggregation, or set-semantics output.
+    *   - the RocksDB state-store provider, when the plan holds a
+    *     `transformWithState` node (which requires it).
+    */
+  private[graft] def drain(out: Dataset[_], mode: OutputMode, name: String): Drained = {
+    val spark = out.sparkSession
+    val dir = graft.core.Scratch.dir(spark, "graft_drain")
+    val writeMode = if (mode == OutputMode.Complete()) "overwrite" else "append"
+    val rocksDb = out.queryExecution.logical.exists(_.isInstanceOf[TransformWithState])
+    val confs = ("spark.sql.shuffle.partitions" -> "8") +:
+      (if (rocksDb) Seq("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+       else Nil)
+    val listener = new DrainListener
+    spark.streams.addListener(listener)
+    try {
+      val id = withConfs(spark, confs) {
+        val q = out.toDF().writeStream
+          .outputMode(mode)
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            batch.write.mode(writeMode).parquet(dir)
+            ()
+          }
+          .trigger(Trigger.AvailableNow())
+          .start()
+        try q.processAllAvailable() finally q.stop()
+        q.id
+      }
+      val progress = listener.awaitTerminated(id)
+      val maxState = progress.flatMap(_.stateOperators.map(_.numRowsTotal))
+        .foldLeft(0L)(math.max)
+      stateHighWater(name) = maxState
+      Drained(spark.read.schema(out.schema).parquet(dir), maxState, progress.length)
+    } finally spark.streams.removeListener(listener)
+  }
+
+  /** Progress events of every query in the session until removed;
+    * [[awaitTerminated]] picks one query's. */
+  private final class DrainListener extends StreamingQueryListener {
+    private val progress =
+      scala.collection.mutable.ArrayBuffer.empty[StreamingQueryProgress]
+    private val ended = scala.collection.mutable.Set.empty[java.util.UUID]
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+      synchronized(progress += e.progress)
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+      synchronized { ended += e.id; notifyAll() }
+
+    /** The query's progress in batch order, once its terminated event
+      * arrived (the bus delivers a query's events in order). */
+    def awaitTerminated(id: java.util.UUID): Seq[StreamingQueryProgress] = synchronized {
+      val deadline = System.currentTimeMillis() + terminatedTimeoutMs
+      while (!ended(id) && System.currentTimeMillis() < deadline)
+        wait(math.max(1L, deadline - System.currentTimeMillis()))
+      if (!ended(id)) throw new IllegalStateException(
+        s"stream $id stopped but its QueryTerminatedEvent did not arrive " +
+          s"within $terminatedTimeoutMs ms; its batch count and state are unknown")
+      progress.filter(_.id == id).toSeq
+    }
+  }
+
+  /** Run `body` with `kvs` set as session confs, then restore each key
+    * to its previous explicit value, or unset it if it had none. */
+  private def withConfs[T](spark: SparkSession, kvs: Seq[(String, String)])(body: => T): T = {
+    val set = spark.conf.getAll
+    val prev = kvs.map { case (k, _) => k -> set.get(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  /** A parquet file stream over the directory `dir`: the schema of the
+    * same files read as a batch, `glob` as `pathGlobFilter` (selects
+    * one table's file(s) when `dir` is a shared testdata dir), and
+    * `maxFiles` > 0 as `maxFilesPerTrigger` (one micro-batch per
+    * `maxFiles` files, oldest first; 0 takes everything in one batch).
+    * A `ts` column is canonicalized by [[graft.core.EventTime]] (same
+    * boundary rule as graft.queries.Q.t).
+    */
+  private[graft] def fileStream(spark: SparkSession, dir: String,
+      glob: Option[String] = None, maxFiles: Int = 0): DataFrame = {
+    val schema = spark.read.parquet(glob.fold(dir)(g => s"$dir/$g")).schema
+    var reader = spark.readStream.schema(schema)
+    glob.foreach(g => reader = reader.option("pathGlobFilter", g))
+    if (maxFiles > 0) reader = reader.option("maxFilesPerTrigger", maxFiles)
+    val stream = reader.parquet(dir)
+    if (schema.fieldNames.contains("ts")) graft.core.EventTime.normalize(stream)
+    else stream
+  }
+
+  private val eventsGlob = Some("events.parquet")
+
+  /** Watermarked hourly counts per event type, COMPLETE output mode;
+    * the drained result is the final table.
+    */
+  def hourlyCounts(spark: SparkSession, sfDir: String): Drained = {
+    val agg = fileStream(spark, sfDir, eventsGlob)
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -38,17 +173,8 @@ object StreamOps {
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("event_type"), col("n"), col("sum_value"))
-    withStreamShufflePartitions(spark) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    spark.table(queryName).orderBy("hour", "event_type")
+    drain(agg, OutputMode.Complete(), "q_stream_hourly")
+      .map(_.orderBy("hour", "event_type"))
   }
 
   /** Streaming exact dedup: watermarked `dropDuplicates` on
@@ -59,22 +185,15 @@ object StreamOps {
     * arrival lateness; the dedup state itself is keyed, not windowed,
     * matching the batch semantics.
     */
-  def dedupCounts(spark: SparkSession, sfDir: String,
-                  queryName: String = "stream_dedup"): DataFrame = {
-    val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val stream = graft.core.EventTime.normalize(spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir))
-    val deduped = stream
+  def dedupCounts(spark: SparkSession, sfDir: String): Drained = {
+    val deduped = fileStream(spark, sfDir, eventsGlob)
       .withWatermark("ts", "24 hours")
       .dropDuplicates("user_id", "event_type")
       .select("user_id", "event_type")
-    val (drained, _, _) = drainAppend(deduped, queryName)
-    drained
+    drain(deduped, OutputMode.Append(), "q_stream_dedup").map(_
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_users"))
-      .orderBy("event_type")
+      .orderBy("event_type"))
   }
 
   /** Streaming incremental (batch-vs-store) dedup — the continuous-
@@ -88,72 +207,23 @@ object StreamOps {
     * same (doc_id, fp) table as the batch operator, so it shares its
     * oracle verbatim.
     */
-  def incrementalDedup(spark: SparkSession, sfDir: String,
-                       queryName: String = "stream_inc_dedup"): DataFrame = {
-    val batchSchema = spark.read.parquet(s"$sfDir/documents.parquet").schema
+  def incrementalDedup(spark: SparkSession, sfDir: String): Drained = {
     val fp = md5(regexp_replace(lower(trim(col("text"))), "\\s+", " "))
     val store = spark.read.parquet(s"$sfDir/documents.parquet")
       .filter(col("doc_id") % 10 =!= 9)
       .select(fp.as("fp")).distinct()
-    val novel = spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sfDir)
+    val novel = fileStream(spark, sfDir, Some("documents.parquet"))
       .filter(col("doc_id") % 10 === 9)
       .select(col("doc_id"), fp.as("fp"))
       .join(store, Seq("fp"), "left_anti")
       .groupBy("fp").agg(min("doc_id").as("doc_id"))
-    // UPDATE-mode bounded drain, not a complete-mode memory sink: the
-    // novel-fingerprint set grows ~n/10 with the corpus, and complete
-    // mode re-emitted ALL of it into driver memory every micro-batch.
-    // Updates land executor-side in parquet (driver O(1)); min(doc_id)
-    // is monotone per key, so re-folding the drained updates with the
-    // same min yields exactly the final table the complete sink held.
-    val (drained, maxState) = drainUpdates(novel, Seq("fp", "doc_id"))
-    stateHighWater("q_stream_incremental") = maxState
-    drained.groupBy("fp").agg(min("doc_id").as("doc_id"))
-      .select("doc_id", "fp").orderBy("doc_id")
-  }
-
-  /** Result of an append-mode run: the emitted table plus the state-
-    * store high-water mark observed across every micro-batch (from
-    * `StreamingQueryProgress.stateOperators`) — the number a 100 TB
-    * deployment actually has to bound.
-    */
-  case class AppendRun(result: DataFrame, maxStateRows: Long, numBatches: Int)
-
-  /** State-store high-water marks observed by the most recent run of
-    * each append-mode operator, keyed by the operator's registry name.
-    * Bench emits this map as `state_rows` in its JSON line, making the
-    * bound a per-round driver-visible artifact instead of spec-only
-    * assurance.
-    */
-  val stateHighWater: scala.collection.concurrent.TrieMap[String, Long] =
-    scala.collection.concurrent.TrieMap.empty
-
-  /** Run `body` (a stream start + drain) with the streaming shuffle
-    * partition count, restoring the session value after. Stateful
-    * micro-batch drains commit one state store PER SHUFFLE PARTITION
-    * PER BATCH, so at the session's core-count partitions a short
-    * multi-batch replay spends its wall on state-store commits, not on
-    * the operator (measured for the 5 wrapped append drains in
-    * round 17; extended to every drain in optimization r18 — guide §2,
-    * partitioning sized to the workload, not the core count). A
-    * deployment sizes `spark.graft.stream.shufflePartitions` to its
-    * per-micro-batch volume; the local default 8 carries the replay
-    * slice volumes comfortably. Partition count changes no registered
-    * result: every drained contract is either a deterministic per-key
-    * fold, a mergeable aggregation, or set-semantics output (the
-    * arrival-order caveats are the same at any partition count).
-    */
-  private[graft] def withStreamShufflePartitions[T](
-      spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val n = spark.conf.getOption("spark.graft.stream.shufflePartitions")
-      .getOrElse("8")
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n)
-    try body finally spark.conf.set(key, prev)
+    // UPDATE mode, not complete: the novel-fingerprint set grows ~n/10
+    // with the corpus, and complete mode re-emits ALL of it every
+    // micro-batch. min(doc_id) is monotone per key, so re-folding the
+    // drained updates with the same min yields exactly the final table.
+    drain(novel, OutputMode.Update(), "q_stream_incremental").map(
+      _.groupBy("fp").agg(min("doc_id").as("doc_id"))
+        .select("doc_id", "fp").orderBy("doc_id"))
   }
 
   /** Replay a batch table as genuinely incremental arrival: `nSlices`
@@ -239,44 +309,21 @@ object StreamOps {
       nSlices, prefix)
   }
 
-  /** Drain a complete-mode aggregation over a sliced file stream and
-    * return (final result table, state-store high water). The generic
-    * harness behind the sketch twins (q_stream_countmin /
-    * q_stream_topk): `build` maps the raw stream to a streaming
-    * aggregation whose buffers are MERGEABLE summaries, so state holds
-    * one buffer per group (one row total for a global sketch) no
-    * matter how many micro-batches arrive — O(sketch) streaming state,
-    * vs. the complete-mode window harnesses whose state is
-    * result-sized. stateKey records the high water for Bench's
-    * state_rows artifact.
+  /** Drain a complete-mode aggregation over a sliced file stream; the
+    * result is the final table. The generic harness behind the sketch
+    * twins (q_stream_countmin / q_stream_topk): `build` maps the raw
+    * stream to a streaming aggregation whose buffers are MERGEABLE
+    * summaries, so state holds one buffer per group (one row total for
+    * a global sketch) no matter how many micro-batches arrive —
+    * O(sketch) streaming state, vs. the complete-mode window harnesses
+    * whose state is result-sized. `name` is the registry name the
+    * state high-water is recorded under for Bench's state_rows.
     */
   def completeAggDrain(spark: SparkSession, dir: String, glob: String,
-                       build: DataFrame => DataFrame, queryName: String,
-                       stateKey: String,
-                       maxFilesPerTrigger: Int = 1): (DataFrame, Long) = {
-    val batchSchema = spark.read.parquet(dir).schema
-    val stream = spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", glob)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(dir)
-    val progress = withStreamShufflePartitions(spark) {
-      val q = build(stream).writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable()
-      val p = q.recentProgress
-      q.stop()
-      p
-    }
-    val maxState = progress.flatMap(_.stateOperators.map(_.numRowsTotal))
-      .foldLeft(0L)(math.max)
-    stateHighWater(stateKey) = maxState
-    (spark.table(queryName), maxState)
-  }
+                       build: DataFrame => DataFrame, name: String,
+                       maxFilesPerTrigger: Int = 1): Drained =
+    drain(build(fileStream(spark, dir, Some(glob), maxFilesPerTrigger)),
+      OutputMode.Complete(), name)
 
   /** The 100 TB form of [[hourlyCounts]]: APPEND output mode, so each
     * window row is emitted exactly once — when the watermark passes
@@ -296,18 +343,8 @@ object StreamOps {
     */
   def hourlyCountsAppend(spark: SparkSession, eventsDir: String,
                          maxFilesPerTrigger: Int = 1,
-                         queryName: String = "stream_hourly_append",
-                         glob: Option[String] = None): AppendRun = {
-    // the streaming file source requires a DIRECTORY; `glob` selects
-    // one table's file(s) when eventsDir is a shared testdata dir
-    val batchSchema = spark.read
-      .parquet(glob.map(g => s"$eventsDir/$g").getOrElse(eventsDir)).schema
-    var reader = spark.readStream
-      .schema(batchSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-    glob.foreach(g => reader = reader.option("pathGlobFilter", g))
-    val stream = graft.core.EventTime.normalize(reader.parquet(eventsDir))
-    val agg = stream
+                         glob: Option[String] = None): Drained = {
+    val agg = fileStream(spark, eventsDir, glob, maxFilesPerTrigger)
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -315,23 +352,8 @@ object StreamOps {
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("event_type"), col("n"), col("sum_value"))
-    val progress = withStreamShufflePartitions(spark) {
-      val q = agg.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable()
-      val p = q.recentProgress
-      q.stop()
-      p
-    }
-    val maxState = progress.flatMap(_.stateOperators.map(_.numRowsTotal))
-      .foldLeft(0L)(math.max)
-    stateHighWater("q_stream_hourly_append") = maxState
-    AppendRun(spark.table(queryName).orderBy("hour", "event_type"),
-      maxState, progress.length)
+    drain(agg, OutputMode.Append(), "q_stream_hourly_append")
+      .map(_.orderBy("hour", "event_type"))
   }
 
   /** Streaming PSI drift monitor — the append-mode twin of
@@ -347,45 +369,28 @@ object StreamOps {
     */
   def psiDriftAppend(spark: SparkSession, eventsDir: String,
                      maxFilesPerTrigger: Int = 1,
-                     queryName: String = "stream_psi",
-                     glob: Option[String] = None): AppendRun = {
+                     glob: Option[String] = None): Drained = {
     import graft.queries.EventQueries.{psiBucketSums, psiMicro, psiTotals}
-    val path = glob.map(g => s"$eventsDir/$g").getOrElse(eventsDir)
-    val batch = spark.read.parquet(path)
-    val rSums = psiBucketSums(col("value"), "r_")
-    val ref = batch.agg(rSums.head, rSums.tail: _*).withColumn("j", lit(1))
-    var reader = spark.readStream
-      .schema(batch.schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-    glob.foreach(g => reader = reader.option("pathGlobFilter", g))
-    val stream = graft.core.EventTime.normalize(reader.parquet(eventsDir))
     val bSums = psiBucketSums(col("value"), "b_")
-    val agg = stream
+    val agg = fileStream(spark, eventsDir, glob, maxFilesPerTrigger)
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour"))
       .agg(bSums.head, bSums.tail: _*)
       .select((date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour") +:
         (0 until graft.queries.EventQueries.psiNBuckets).map(b => col(s"b_$b"))): _*)
       .withColumn("j", lit(1))
-    val out = psiTotals(agg.join(ref, "j"))
+    val out = psiTotals(agg.join(psiReference(spark, eventsDir, glob), "j"))
       .select(col("hour"), col("n_events"), psiMicro.as("psi_micro"))
       .withColumn("drifted", col("psi_micro") > 200000L)
-    val progress = withStreamShufflePartitions(spark) {
-      val q = out.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable()
-      val p = q.recentProgress
-      q.stop()
-      p
-    }
-    val maxState = progress.flatMap(_.stateOperators.map(_.numRowsTotal))
-      .foldLeft(0L)(math.max)
-    stateHighWater("q_stream_psi") = maxState
-    AppendRun(spark.table(queryName).orderBy("hour"), maxState, progress.length)
+    drain(out, OutputMode.Append(), "q_stream_psi").map(_.orderBy("hour"))
+  }
+
+  /** The 1-row static reference histogram both PSI monitors join. */
+  private def psiReference(spark: SparkSession, dir: String,
+                           glob: Option[String]): DataFrame = {
+    val rSums = graft.queries.EventQueries.psiBucketSums(col("value"), "r_")
+    spark.read.parquet(glob.fold(dir)(g => s"$dir/$g"))
+      .agg(rSums.head, rSums.tail: _*).withColumn("j", lit(1))
   }
 
   case class EvtH(event_type: String, us: Long, cents: Long,
@@ -438,58 +443,32 @@ object StreamOps {
   }
 
   def psiDriftAppendTws(spark: SparkSession, eventsDir: String,
-                        glob: Option[String] = Some("events.parquet"),
-                        maxFilesPerTrigger: Int = 1,
-                        queryName: String = "stream_psi_tws"): AppendRun = {
+                        glob: Option[String] = eventsGlob,
+                        maxFilesPerTrigger: Int = 1): Drained = {
     import spark.implicits._
-    import graft.queries.EventQueries.{psiBucket, psiBucketSums, psiMicro,
-      psiTotals, psiNBuckets}
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val path = glob.map(g => s"$eventsDir/$g").getOrElse(eventsDir)
-      val batch = spark.read.parquet(path)
-      val rSums = psiBucketSums(col("value"), "r_")
-      val ref = batch.agg(rSums.head, rSums.tail: _*).withColumn("j", lit(1))
-      var reader = spark.readStream
-        .schema(batch.schema)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      glob.foreach(g => reader = reader.option("pathGlobFilter", g))
-      val stream = graft.core.EventTime.normalize(reader.parquet(eventsDir))
-      val events = stream
-        .withWatermark("ts", "2 hours")
-        .select(
-          (floor(unix_micros(col("ts")) / 3600000000L) * 3600000L)
-            .as("hourMs"),
-          psiBucket(col("value")).cast("int").as("bkt"), col("ts"))
-        .as[EvtP]
-      val closed = events
-        .groupByKey(_.hourMs)
-        .transformWithState(new PsiProcessor,
-          org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          OutputMode.Append())
-        .toDF("hour_ms", "counts")
-      val buckets = closed.select(
-        (col("hour_ms") +:
-          (0 until psiNBuckets).map(b => col("counts")(b).as(s"b_$b"))): _*)
-        .withColumn("j", lit(1))
-      val out = psiTotals(buckets.join(ref, "j"))
-        .select(
-          date_format(timestamp_millis(col("hour_ms")),
-            "yyyy-MM-dd HH:mm:ss").as("hour"),
-          col("n_events"), psiMicro.as("psi_micro"))
-        .withColumn("drifted", col("psi_micro") > 200000L)
-      val (drained, maxState, nBatches) = drainAppend(out, queryName)
-      stateHighWater("q_stream_psi_tws") = maxState
-      AppendRun(drained.orderBy("hour"), maxState, nBatches)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
-      }
-    }
+    import graft.queries.EventQueries.{psiBucket, psiMicro, psiTotals, psiNBuckets}
+    val closed = fileStream(spark, eventsDir, glob, maxFilesPerTrigger)
+      .withWatermark("ts", "2 hours")
+      .select(
+        (floor(unix_micros(col("ts")) / 3600000000L) * 3600000L).as("hourMs"),
+        psiBucket(col("value")).cast("int").as("bkt"), col("ts"))
+      .as[EvtP]
+      .groupByKey(_.hourMs)
+      .transformWithState(new PsiProcessor,
+        org.apache.spark.sql.streaming.TimeMode.EventTime(),
+        OutputMode.Append())
+      .toDF("hour_ms", "counts")
+    val buckets = closed.select(
+      (col("hour_ms") +:
+        (0 until psiNBuckets).map(b => col("counts")(b).as(s"b_$b"))): _*)
+      .withColumn("j", lit(1))
+    val out = psiTotals(buckets.join(psiReference(spark, eventsDir, glob), "j"))
+      .select(
+        date_format(timestamp_millis(col("hour_ms")),
+          "yyyy-MM-dd HH:mm:ss").as("hour"),
+        col("n_events"), psiMicro.as("psi_micro"))
+      .withColumn("drifted", col("psi_micro") > 200000L)
+    drain(out, OutputMode.Append(), "q_stream_psi_tws").map(_.orderBy("hour"))
   }
 
   /** [[hourlyCountsAppend]] on the Spark 4 `transformWithState` API —
@@ -559,49 +538,27 @@ object StreamOps {
     * law (spec-pinned in StreamAppendSpec).
     */
   def hourlyCountsAppendTws(spark: SparkSession, eventsDir: String,
-                            glob: Option[String] = Some("events.parquet"),
-                            maxFilesPerTrigger: Int = 0,
-                            queryName: String = "stream_hourly_tws"): AppendRun = {
+                            glob: Option[String] = eventsGlob,
+                            maxFilesPerTrigger: Int = 0): Drained = {
     import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val path = glob.map(g => s"$eventsDir/$g").getOrElse(eventsDir)
-      val batchSchema = spark.read.parquet(path).schema
-      var reader = spark.readStream.schema(batchSchema)
-      if (maxFilesPerTrigger > 0)
-        reader = reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-      glob.foreach(g => reader = reader.option("pathGlobFilter", g))
-      val stream = graft.core.EventTime.normalize(reader.parquet(eventsDir))
-      val events = stream
-        .withWatermark("ts", "2 hours")
-        .select(col("event_type"), unix_micros(col("ts")).as("us"),
-          (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"),
-          col("ts"))
-        .as[EvtH]
-      val closed = events
-        .groupByKey(_.event_type)
-        .transformWithState(new HourlyProcessor,
-          org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          OutputMode.Append())
-        .toDF("event_type", "hour_ms", "n", "cents")
-      val (drained, maxState, nBatches) = drainAppend(closed, queryName)
-      stateHighWater("q_stream_hourly_tws") = maxState
-      val out = drained.select(
+    val closed = fileStream(spark, eventsDir, glob, maxFilesPerTrigger)
+      .withWatermark("ts", "2 hours")
+      .select(col("event_type"), unix_micros(col("ts")).as("us"),
+        (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"),
+        col("ts"))
+      .as[EvtH]
+      .groupByKey(_.event_type)
+      .transformWithState(new HourlyProcessor,
+        org.apache.spark.sql.streaming.TimeMode.EventTime(),
+        OutputMode.Append())
+      .toDF("event_type", "hour_ms", "n", "cents")
+    drain(closed, OutputMode.Append(), "q_stream_hourly_tws").map(_
+      .select(
         date_format(timestamp_millis(col("hour_ms")),
           "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("event_type"), col("n"),
         (col("cents") / 100.0).as("sum_value"))
-        .orderBy("hour", "event_type")
-      AppendRun(out, maxState, nBatches)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
-      }
-    }
+      .orderBy("hour", "event_type"))
   }
 
   /** NATIVE session windows (`session_window(ts, gap)` — Spark's
@@ -618,18 +575,10 @@ object StreamOps {
     */
   def sessionWindowAppend(spark: SparkSession, sfDir: String,
                           gapMinutes: Int = 30,
-                          queryName: String = "stream_session_native",
-                          glob: Option[String] = Some("events.parquet"),
-                          maxFilesPerTrigger: Int = 1): AppendRun = {
-    val batchSchema = spark.read
-      .parquet(glob.map(g => s"$sfDir/$g").getOrElse(sfDir)).schema
-    var reader = spark.readStream
-      .schema(batchSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-    glob.foreach(g => reader = reader.option("pathGlobFilter", g))
-    val stream = graft.core.EventTime.normalize(reader.parquet(sfDir))
+                          glob: Option[String] = eventsGlob,
+                          maxFilesPerTrigger: Int = 1): Drained = {
     val gapUs = gapMinutes * 60L * 1000000L
-    val agg = stream
+    val agg = fileStream(spark, sfDir, glob, maxFilesPerTrigger)
       .withWatermark("ts", "10 minutes")
       .groupBy(session_window(col("ts"), s"$gapMinutes minutes"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
@@ -637,9 +586,8 @@ object StreamOps {
         unix_micros(col("session_window.start")).as("start_us"),
         (unix_micros(col("session_window.end")) - gapUs).as("end_us"),
         col("n_events"))
-    val (drained, maxState, nBatches) = drainAppend(agg, queryName)
-    stateHighWater("q_stream_session_native") = maxState
-    AppendRun(drained.orderBy("user_id", "start_us"), maxState, nBatches)
+    drain(agg, OutputMode.Append(), "q_stream_session_native")
+      .map(_.orderBy("user_id", "start_us"))
   }
 
   /** The 100 TB form of [[incrementalDedup]]: the static-store
@@ -658,30 +606,22 @@ object StreamOps {
   def incrementalDedupAppend(spark: SparkSession, docsDir: String, sfDir: String,
                              horizon: String = "30 minutes",
                              maxFilesPerTrigger: Int = 1,
-                             queryName: String = "stream_inc_dedup_append",
-                             glob: Option[String] = None): AppendRun = {
-    val batchSchema = spark.read
-      .parquet(glob.map(g => s"$docsDir/$g").getOrElse(docsDir)).schema
+                             glob: Option[String] = None): Drained = {
     val fp = md5(regexp_replace(lower(trim(col("text"))), "\\s+", " "))
     // one doc a minute: replays ingest order as event time
     val tsOf = timestamp_micros(col("doc_id") * 60000000L)
     val store = spark.read.parquet(s"$sfDir/documents.parquet")
       .filter(col("doc_id") % 10 =!= 9)
       .select(fp.as("fp")).distinct()
-    var reader = spark.readStream
-      .schema(batchSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-    glob.foreach(g => reader = reader.option("pathGlobFilter", g))
-    val novel = reader.parquet(docsDir)
+    val novel = fileStream(spark, docsDir, glob, maxFilesPerTrigger)
       .filter(col("doc_id") % 10 === 9)
       .select(col("doc_id"), fp.as("fp"), tsOf.as("ts"))
       .withWatermark("ts", horizon)
       .dropDuplicatesWithinWatermark("fp")
       .join(store, Seq("fp"), "left_anti")
       .select("doc_id", "fp")
-    val (drained, maxState, nBatches) = drainAppend(novel, queryName)
-    stateHighWater("q_stream_incremental_append") = maxState
-    AppendRun(drained.orderBy("doc_id"), maxState, nBatches)
+    drain(novel, OutputMode.Append(), "q_stream_incremental_append")
+      .map(_.orderBy("doc_id"))
   }
 
   case class Evt(user_id: Long, us: Long, event_id: Long)
@@ -691,95 +631,6 @@ object StreamOps {
   case class EvtV(user_id: Long, us: Long, event_id: Long, value: Double)
   case class EwmaState(n: Long, ewma: Double)
 
-  /** Streaming EWMA (α = 1/2): the MINIMAL stateful online feature —
-    * state per user is exactly one (count, ewma) pair, updated by the
-    * dyadic recursion e' = v/2 + e/2 (e₁ = v₁), events folded in
-    * (us, event_id) order within each batch. This is the canonical
-    * "replace an unbounded history window with O(1) state" streaming
-    * twin: the batch form would collect a user's whole history to fold
-    * it; the stream carries 16 bytes per user forever.
-    *
-    * Every division halves the exponent only, so the recursion is
-    * bit-exact and the DuckDB oracle replays it as a `list_reduce`
-    * over the ordered per-user history — batch and stream agree on the
-    * HASH, not just approximately.
-    *
-    * Update-mode updates are gathered by a foreachBatch harness (the
-    * memory sink does not take update mode); the per-user LAST update
-    * wins via the monotone event count, so a TIME-ORDERED multi-batch
-    * replay produces the same final table as one batch. Like any
-    * arrival-order-defined online feature, cross-batch agreement with
-    * the batch fold assumes batches arrive in event-time order (the
-    * within-batch sort handles intra-batch disorder); spec-asserted
-    * with a two-file time-sliced replay.
-    */
-  /** Bounded drain for the update-mode parity harnesses: every
-    * micro-batch's update rows append to a temp parquet sink
-    * (executor-side writes — driver memory stays O(1) no matter the
-    * key cardinality), read back once the stream drains. Replaces the
-    * collect-into-ArrayBuffer pattern, whose driver buffer — not the
-    * state store — became the ceiling at 100x users. Returns the
-    * drained updates (columns renamed to `cols`) plus the state-store
-    * high-water across batches.
-    */
-  private[graft] def drainUpdates[T](updates: org.apache.spark.sql.Dataset[T],
-      cols: Seq[String]): (DataFrame, Long) = {
-    val spark = updates.sparkSession
-    val dir = graft.core.Scratch.dir(spark, "graft_drain")
-    val progress = withStreamShufflePartitions(spark) {
-      val q = updates.writeStream
-        .outputMode("update")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[T], _: Long) =>
-          batch.write.mode("append").parquet(dir)
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable()
-      val p = q.recentProgress
-      q.stop()
-      p
-    }
-    val maxState = progress.flatMap(_.stateOperators.map(_.numRowsTotal))
-      .foldLeft(0L)(math.max)
-    (spark.read.schema(updates.schema).parquet(dir).toDF(cols: _*), maxState)
-  }
-
-  /** [[drainUpdates]]' append-mode sibling, for harnesses whose
-    * EMITTED-row volume grows with the data (finalized sessions, join
-    * pairs): each micro-batch appends to a temp parquet sink
-    * executor-side and the result is read back once the stream drains,
-    * so driver memory stays O(1) regardless of emission volume — the
-    * memory sink accumulates every emitted row on the driver, which
-    * made the harness (not the state store) the scale ceiling. Returns
-    * (drained rows, state-store high-water, batch count).
-    */
-  private def drainAppend(out: DataFrame, queryName: String)
-      : (DataFrame, Long, Int) = {
-    val spark = out.sparkSession
-    val dir = graft.core.Scratch.dir(spark, "graft_drain")
-    val progress = withStreamShufflePartitions(spark) {
-      val q = out.writeStream
-        .outputMode("append")
-        .queryName(queryName)
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-           _: Long) =>
-            batch.write.mode("append").parquet(dir)
-            ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable()
-      val p = q.recentProgress
-      q.stop()
-      p
-    }
-    val maxState = progress.flatMap(_.stateOperators.map(_.numRowsTotal))
-      .foldLeft(0L)(math.max)
-    (spark.read.schema(out.schema).parquet(dir), maxState, progress.length)
-  }
-
   /** Streaming WebDataset ingest — the production arrival shape:
     * shard archives LAND in a directory continuously and each becomes
     * one micro-batch (`maxFilesPerTrigger = 1`, the shard being the
@@ -787,12 +638,12 @@ object StreamOps {
     * assembly is the same map-side pass as the batch scan
     * ([[graft.sources.TarShards.readSamples]]) — STATELESS, so append
     * emission is total (no watermark law needed) and exactly-once
-    * comes free from the file-source tracking log. Returns the
-    * drained samples plus the micro-batch count so callers can pin
-    * that ingest really was incremental, not one gulp.
+    * comes free from the file-source tracking log. The micro-batch
+    * count lets callers pin that ingest really was incremental, not
+    * one gulp.
     */
   def tarSampleIngest(spark: SparkSession, dir: String,
-                      glob: String = "*.tar"): (DataFrame, Int) = {
+                      glob: String = "*.tar"): Drained = {
     import spark.implicits._
     val stream = spark.readStream.format("binaryFile")
       // file streams need an explicit schema; binaryFile's is fixed
@@ -813,26 +664,38 @@ object StreamOps {
           }
       }
       .toDF("shard", "sidx", "key", "exts", "entries")
-    val (df, _, batches) = drainAppend(stream, "tar_ingest")
-    (df, batches)
+    drain(stream, OutputMode.Append(), "q_stream_tar_ingest")
   }
 
+  /** Streaming EWMA (α = 1/2): the MINIMAL stateful online feature —
+    * state per user is exactly one (count, ewma) pair, updated by the
+    * dyadic recursion e' = v/2 + e/2 (e₁ = v₁), events folded in
+    * (us, event_id) order within each batch. This is the canonical
+    * "replace an unbounded history window with O(1) state" streaming
+    * twin: the batch form would collect a user's whole history to fold
+    * it; the stream carries 16 bytes per user forever.
+    *
+    * Every division halves the exponent only, so the recursion is
+    * bit-exact and the DuckDB oracle replays it as a `list_reduce`
+    * over the ordered per-user history — batch and stream agree on the
+    * HASH, not just approximately.
+    *
+    * Update-mode updates are gathered by [[drain]]; the per-user LAST
+    * update wins via the monotone event count, so a TIME-ORDERED
+    * multi-batch replay produces the same final table as one batch. Like any
+    * arrival-order-defined online feature, cross-batch agreement with
+    * the batch fold assumes batches arrive in event-time order (the
+    * within-batch sort handles intra-batch disorder); spec-asserted
+    * with a two-file time-sliced replay.
+    */
   def ewmaState(spark: SparkSession, sfDir: String,
                 glob: String = "events.parquet",
-                maxFilesPerTrigger: Int = 0): (DataFrame, Long) = {
+                maxFilesPerTrigger: Int = 0): Drained = {
     import spark.implicits._
-    val batchSchema = spark.read.parquet(s"$sfDir/$glob").schema
-    var reader = spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", glob)
-    if (maxFilesPerTrigger > 0)
-      reader = reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-    val stream = graft.core.EventTime.normalize(reader.parquet(sfDir))
-    val events = stream
+    val updates = fileStream(spark, sfDir, Some(glob), maxFilesPerTrigger)
       .select(col("user_id"), unix_micros(col("ts")).as("us"),
         col("event_id"), col("value"))
       .as[EvtV]
-    val updates = events
       .groupByKey(_.user_id)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout)(
         (uid: Long, it: Iterator[EvtV], state: GroupState[EwmaState]) => {
@@ -844,17 +707,17 @@ object StreamOps {
           state.update(st)
           (uid, st.n, st.ewma)
         })
-    val (drained, maxState) =
-      drainUpdates(updates, Seq("user_id", "n_events", "ewma"))
-    stateHighWater("q_stream_ewma") = maxState
-    val out = drained
-      .groupBy("user_id")
-      .agg(max(struct(col("n_events"), col("ewma"))).as("last"))
-      .select(col("user_id"), col("last.n_events").as("n_events"),
-        round(col("last.ewma"), 6).as("ewma"))
-      .orderBy("user_id")
-    (out, maxState)
+      .toDF("user_id", "n_events", "ewma")
+    drain(updates, OutputMode.Update(), "q_stream_ewma").map(lastEwma)
   }
+
+  /** The per-user last EWMA update: the event count is monotone. */
+  private def lastEwma(updates: DataFrame): DataFrame = updates
+    .groupBy("user_id")
+    .agg(max(struct(col("n_events"), col("ewma"))).as("last"))
+    .select(col("user_id"), col("last.n_events").as("n_events"),
+      round(col("last.ewma"), 6).as("ewma"))
+    .orderBy("user_id")
 
   case class EvtTV(user_id: Long, us: Long, event_id: Long,
                    event_type: String, value: Double)
@@ -879,16 +742,9 @@ object StreamOps {
     */
   def attributionState(spark: SparkSession, sfDir: String,
                        glob: String = "events.parquet",
-                       maxFilesPerTrigger: Int = 0): (DataFrame, Long) = {
+                       maxFilesPerTrigger: Int = 0): Drained = {
     import spark.implicits._
-    val batchSchema = spark.read.parquet(s"$sfDir/$glob").schema
-    var reader = spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", glob)
-    if (maxFilesPerTrigger > 0)
-      reader = reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-    val stream = graft.core.EventTime.normalize(reader.parquet(sfDir))
-    val events = stream
+    val events = fileStream(spark, sfDir, Some(glob), maxFilesPerTrigger)
       .select(col("user_id"), unix_micros(col("ts")).as("us"),
         col("event_id"), col("event_type"), col("value"))
       .as[EvtTV]
@@ -923,11 +779,9 @@ object StreamOps {
           (uid, st.seq, st.nltC, st.ltcC, st.linC, st.lincC,
             st.nltV, st.ltcV, st.linV, st.lincV)
         })
-    val (drained, maxState) = drainUpdates(updates,
-      Seq("user_id", "seq", "nlt_c", "ltc_c", "lin_c", "linc_c",
-        "nlt_v", "ltc_v", "lin_v", "linc_v"))
-    stateHighWater("q_stream_attribution") = maxState
-    val out = drained
+      .toDF("user_id", "seq", "nlt_c", "ltc_c", "lin_c", "linc_c",
+        "nlt_v", "ltc_v", "lin_v", "linc_v")
+    drain(updates, OutputMode.Update(), "q_stream_attribution").map(_
       .groupBy("user_id")
       .agg(max(struct(col("seq"), col("nlt_c"), col("ltc_c"), col("lin_c"),
         col("linc_c"), col("nlt_v"), col("ltc_v"), col("lin_v"),
@@ -942,8 +796,7 @@ object StreamOps {
           |  'view',  nlt_v, ltc_v, lin_v, linc_v)
           |  AS (channel, n_last_touch, lt_cents, lin_credit_ppm, lin_cents_ppm)
           |""".stripMargin))
-      .orderBy("channel")
-    (out, maxState)
+      .orderBy("channel"))
   }
 
   /** [[ewmaState]] on the Spark 4 `transformWithState` API — the
@@ -952,9 +805,8 @@ object StreamOps {
     * available): the SAME dyadic EWMA recursion held in a
     * `ValueState[EwmaState]`, so it must reproduce [[ewmaState]]'s
     * table bit-for-bit and shares q_stream_ewma's DuckDB oracle.
-    * transformWithState requires the RocksDB state-store provider;
-    * the conf is set for the stream's start and restored after
-    * (streams capture their conf at start).
+    * transformWithState requires the RocksDB state-store provider,
+    * which [[drain]] selects from the plan.
     */
   private class EwmaProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessor[
@@ -978,41 +830,18 @@ object StreamOps {
     }
   }
 
-  def ewmaStateTws(spark: SparkSession, sfDir: String): (DataFrame, Long) = {
+  def ewmaStateTws(spark: SparkSession, sfDir: String): Drained = {
     import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-      val stream = graft.core.EventTime.normalize(
-        spark.readStream.schema(batchSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(sfDir))
-      val events = stream
-        .select(col("user_id"), unix_micros(col("ts")).as("us"),
-          col("event_id"), col("value"))
-        .as[EvtV]
-      val updates = events.groupByKey(_.user_id)
-        .transformWithState(new EwmaProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update())
-      val (drained, maxState) =
-        drainUpdates(updates, Seq("user_id", "n_events", "ewma"))
-      stateHighWater("q_stream_ewma_tws") = maxState
-      val out = drained
-        .groupBy("user_id")
-        .agg(max(struct(col("n_events"), col("ewma"))).as("last"))
-        .select(col("user_id"), col("last.n_events").as("n_events"),
-          round(col("last.ewma"), 6).as("ewma"))
-        .orderBy("user_id")
-      (out, maxState)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
-      }
-    }
+    val updates = fileStream(spark, sfDir, eventsGlob)
+      .select(col("user_id"), unix_micros(col("ts")).as("us"),
+        col("event_id"), col("value"))
+      .as[EvtV]
+      .groupByKey(_.user_id)
+      .transformWithState(new EwmaProcessor,
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        OutputMode.Update())
+      .toDF("user_id", "n_events", "ewma")
+    drain(updates, OutputMode.Update(), "q_stream_ewma_tws").map(lastEwma)
   }
 
   /** [[patternState]] on the Spark 4 `transformWithState` API: the
@@ -1047,45 +876,33 @@ object StreamOps {
     }
   }
 
-  def patternStateTws(spark: SparkSession, sfDir: String): (DataFrame, Long) = {
+  def patternStateTws(spark: SparkSession, sfDir: String): Drained = {
     import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-      val stream = graft.core.EventTime.normalize(
-        spark.readStream.schema(batchSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(sfDir))
-      val events = stream
-        .select(col("user_id"), unix_micros(col("ts")).as("us"),
-          col("event_id"), substring(col("event_type"), 1, 1).as("letter"))
-        .as[EvtT]
-      val updates = events.groupByKey(_.user_id)
-        .transformWithState(new PatternProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Update())
-      val (drained, maxState) = drainUpdates(updates,
-        Seq("user_id", "n_events", "n_conv", "n_err_runs", "signup_converted"))
-      stateHighWater("q_stream_pattern_tws") = maxState
-      val out = drained
-        .groupBy("user_id")
-        .agg(max(struct(col("n_events"), col("n_conv"), col("n_err_runs"),
-          col("signup_converted"))).as("last"))
-        .select(col("user_id"), col("last.n_events").as("n_events"),
-          col("last.n_conv").as("n_conv"),
-          col("last.n_err_runs").as("n_err_runs"),
-          col("last.signup_converted").as("signup_converted"))
-        .orderBy("user_id")
-      (out, maxState)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
-      }
-    }
+    val updates = fileStream(spark, sfDir, eventsGlob)
+      .select(col("user_id"), unix_micros(col("ts")).as("us"),
+        col("event_id"), substring(col("event_type"), 1, 1).as("letter"))
+      .as[EvtT]
+      .groupByKey(_.user_id)
+      .transformWithState(new PatternProcessor,
+        org.apache.spark.sql.streaming.TimeMode.None(),
+        OutputMode.Update())
+      .toDF(patternCols: _*)
+    drain(updates, OutputMode.Update(), "q_stream_pattern_tws").map(lastPattern)
   }
+
+  private val patternCols =
+    Seq("user_id", "n_events", "n_conv", "n_err_runs", "signup_converted")
+
+  /** The per-user last CEP update: nEvents is strictly monotone per touch. */
+  private def lastPattern(updates: DataFrame): DataFrame = updates
+    .groupBy("user_id")
+    .agg(max(struct(col("n_events"), col("n_conv"), col("n_err_runs"),
+      col("signup_converted"))).as("last"))
+    .select(col("user_id"), col("last.n_events").as("n_events"),
+      col("last.n_conv").as("n_conv"),
+      col("last.n_err_runs").as("n_err_runs"),
+      col("last.signup_converted").as("signup_converted"))
+    .orderBy("user_id")
 
   case class EvtT(user_id: Long, us: Long, event_id: Long, letter: String)
   case class CepState(nEvents: Long, inMatch: Boolean, runLen: Int,
@@ -1146,20 +963,12 @@ object StreamOps {
     */
   def patternState(spark: SparkSession, sfDir: String,
                    glob: String = "events.parquet",
-                   maxFilesPerTrigger: Int = 0): (DataFrame, Long) = {
+                   maxFilesPerTrigger: Int = 0): Drained = {
     import spark.implicits._
-    val batchSchema = spark.read.parquet(s"$sfDir/$glob").schema
-    var reader = spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", glob)
-    if (maxFilesPerTrigger > 0)
-      reader = reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-    val stream = graft.core.EventTime.normalize(reader.parquet(sfDir))
-    val events = stream
+    val updates = fileStream(spark, sfDir, Some(glob), maxFilesPerTrigger)
       .select(col("user_id"), unix_micros(col("ts")).as("us"),
         col("event_id"), substring(col("event_type"), 1, 1).as("letter"))
       .as[EvtT]
-    val updates = events
       .groupByKey(_.user_id)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout)(
         (uid: Long, it: Iterator[EvtT], state: GroupState[CepState]) => {
@@ -1171,20 +980,8 @@ object StreamOps {
           val (n, conv, err, conv2) = cepEmit(st)
           (uid, n, conv, err, conv2)
         })
-    val (drained, maxState) = drainUpdates(updates,
-      Seq("user_id", "n_events", "n_conv", "n_err_runs", "signup_converted"))
-    stateHighWater("q_stream_pattern") = maxState
-    // last update per user wins: nEvents is strictly monotone per touch
-    val out = drained
-      .groupBy("user_id")
-      .agg(max(struct(col("n_events"), col("n_conv"), col("n_err_runs"),
-        col("signup_converted"))).as("last"))
-      .select(col("user_id"), col("last.n_events").as("n_events"),
-        col("last.n_conv").as("n_conv"),
-        col("last.n_err_runs").as("n_err_runs"),
-        col("last.signup_converted").as("signup_converted"))
-      .orderBy("user_id")
-    (out, maxState)
+      .toDF(patternCols: _*)
+    drain(updates, OutputMode.Update(), "q_stream_pattern").map(lastPattern)
   }
 
   /** The 100 TB form of [[sessionCounts]]: per-user state carries ONE
@@ -1209,19 +1006,13 @@ object StreamOps {
     */
   def sessionCountsAppend(spark: SparkSession, sfDir: String,
                           gapMinutes: Int = 30,
-                          watermarkDelay: String = "10 minutes",
-                          queryName: String = "stream_sessions_append"): AppendRun = {
+                          watermarkDelay: String = "10 minutes"): Drained = {
     import spark.implicits._
-    val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val stream = graft.core.EventTime.normalize(spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir))
     val gapUs = gapMinutes * 60L * 1000000L
     val gapMs = gapMinutes * 60L * 1000L
     // the watermarked event-time column must survive into the grouped
     // dataset for event-time timeout to be legal
-    val events = stream
+    val events = fileStream(spark, sfDir, eventsGlob)
       .withWatermark("ts", watermarkDelay)
       .select(col("user_id"), unix_micros(col("ts")).as("us"), col("event_id"),
         col("ts"))
@@ -1260,9 +1051,8 @@ object StreamOps {
           }
         })
       .toDF("user_id", "start_us", "end_us", "n_events")
-    val (drained, maxState, nBatches) = drainAppend(closed, queryName)
-    stateHighWater("q_stream_sessionize_append") = maxState
-    AppendRun(drained.orderBy("user_id", "start_us"), maxState, nBatches)
+    drain(closed, OutputMode.Append(), "q_stream_sessionize_append")
+      .map(_.orderBy("user_id", "start_us"))
   }
 
   /** [[sessionCountsAppend]] on the Spark 4 `transformWithState` API
@@ -1327,41 +1117,22 @@ object StreamOps {
 
   def sessionCountsAppendTws(spark: SparkSession, sfDir: String,
                              gapMinutes: Int = 30,
-                             watermarkDelay: String = "10 minutes",
-                             queryName: String = "stream_sessions_tws"): AppendRun = {
+                             watermarkDelay: String = "10 minutes"): Drained = {
     import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-      val stream = graft.core.EventTime.normalize(spark.readStream
-        .schema(batchSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sfDir))
-      val gapUs = gapMinutes * 60L * 1000000L
-      val gapMs = gapMinutes * 60L * 1000L
-      val events = stream
-        .withWatermark("ts", watermarkDelay)
-        .select(col("user_id"), unix_micros(col("ts")).as("us"),
-          col("event_id"), col("ts"))
-        .as[EvtW]
-      val closed = events
-        .groupByKey(_.user_id)
-        .transformWithState(new SessionProcessor(gapUs, gapMs),
-          org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          OutputMode.Append())
-        .toDF("user_id", "start_us", "end_us", "n_events")
-      val (drained, maxState, nBatches) = drainAppend(closed, queryName)
-      stateHighWater("q_stream_sessionize_tws") = maxState
-      AppendRun(drained.orderBy("user_id", "start_us"), maxState, nBatches)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
-      }
-    }
+    val gapUs = gapMinutes * 60L * 1000000L
+    val gapMs = gapMinutes * 60L * 1000L
+    val closed = fileStream(spark, sfDir, eventsGlob)
+      .withWatermark("ts", watermarkDelay)
+      .select(col("user_id"), unix_micros(col("ts")).as("us"),
+        col("event_id"), col("ts"))
+      .as[EvtW]
+      .groupByKey(_.user_id)
+      .transformWithState(new SessionProcessor(gapUs, gapMs),
+        org.apache.spark.sql.streaming.TimeMode.EventTime(),
+        OutputMode.Append())
+      .toDF("user_id", "start_us", "end_us", "n_events")
+    drain(closed, OutputMode.Append(), "q_stream_sessionize_tws")
+      .map(_.orderBy("user_id", "start_us"))
   }
 
   /** Streaming EP2: incremental crop-stitching. Annotated work units
@@ -1382,20 +1153,14 @@ object StreamOps {
     *
     * Emits (fov, stack, slice, n_cells, n_nonzero) — the stitched
     * plane's invariants (the full plane can equally be written to a
-    * sink; the summary keeps the memory-sink spec light).
+    * sink; the summary keeps the drained table light).
     */
   def incrementalStitch(spark: SparkSession, planesDir: String,
                         plan: graft.ops.CropOps.CropPlan,
-                        queryName: String = "stream_stitch",
-                        maxFilesPerTrigger: Int = 1): DataFrame = {
+                        maxFilesPerTrigger: Int = 1): Drained = {
     import spark.implicits._
     import graft.core.ImagePlane
-    val schema = spark.read.parquet(planesDir).schema
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .option("basePath", planesDir)
-      .parquet(planesDir)
+    val stream = fileStream(spark, planesDir, maxFiles = maxFilesPerTrigger)
       .select("fov", "stack", "crop", "slice", "nRows", "nCols",
         "channels", "pixels", "labels")
       .as[ImagePlane]
@@ -1418,8 +1183,8 @@ object StreamOps {
           }
         })
       .toDF("fov", "stack", "slice", "n_cells", "n_nonzero")
-    val (drained, _, _) = drainAppend(stitched, queryName)
-    drained.orderBy("fov", "stack", "slice")
+    drain(stitched, OutputMode.Append(), "stream_stitch")
+      .map(_.orderBy("fov", "stack", "slice"))
   }
 
   /** One streamed work unit for [[incrementalStitchAppend]]: an
@@ -1468,14 +1233,9 @@ object StreamOps {
                               plan: graft.ops.CropOps.CropPlan,
                               quarantineMinutes: Int = 5,
                               watermarkDelay: String = "2 minutes",
-                              maxFilesPerTrigger: Int = 1,
-                              queryName: String = "stream_stitch_append"): AppendRun = {
+                              maxFilesPerTrigger: Int = 1): Drained = {
     import spark.implicits._
-    val schema = spark.read.parquet(planesDir).schema
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(planesDir)
+    val stream = fileStream(spark, planesDir, maxFiles = maxFilesPerTrigger)
       .withWatermark("ts", watermarkDelay)
       .select("fov", "stack", "crop", "slice", "nRows", "nCols",
         "channels", "pixels", "labels", "ts")
@@ -1513,9 +1273,8 @@ object StreamOps {
           }
         })
       .toDF("fov", "stack", "slice", "n_crops", "n_cells", "n_nonzero", "status")
-    val (drained, maxState, nBatches) = drainAppend(stitched, queryName)
-    stateHighWater("q_stream_stitch") = maxState
-    AppendRun(drained.orderBy("fov", "stack", "slice"), maxState, nBatches)
+    drain(stitched, OutputMode.Append(), "q_stream_stitch")
+      .map(_.orderBy("fov", "stack", "slice"))
   }
 
   /** [[incrementalStitchAppend]] on the Spark 4 `transformWithState`
@@ -1592,40 +1351,22 @@ object StreamOps {
                                  plan: graft.ops.CropOps.CropPlan,
                                  quarantineMinutes: Int = 5,
                                  watermarkDelay: String = "2 minutes",
-                                 maxFilesPerTrigger: Int = 1,
-                                 queryName: String = "stream_stitch_tws"): AppendRun = {
+                                 maxFilesPerTrigger: Int = 1): Drained = {
     import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val schema = spark.read.parquet(planesDir).schema
-      val stream = spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger)
-        .parquet(planesDir)
-        .withWatermark("ts", watermarkDelay)
-        .select("fov", "stack", "crop", "slice", "nRows", "nCols",
-          "channels", "pixels", "labels", "ts")
-        .as[CropArrival]
-      val gapMs = quarantineMinutes * 60L * 1000L
-      val stitched = stream
-        .groupByKey(p => (p.fov, p.stack, p.slice))
-        .transformWithState(new StitchProcessor(plan, gapMs),
-          org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          OutputMode.Append())
-        .toDF("fov", "stack", "slice", "n_crops", "n_cells", "n_nonzero",
-          "status")
-      val (drained, maxState, nBatches) = drainAppend(stitched, queryName)
-      stateHighWater("q_stream_stitch_tws") = maxState
-      AppendRun(drained.orderBy("fov", "stack", "slice"), maxState, nBatches)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
-      }
-    }
+    val gapMs = quarantineMinutes * 60L * 1000L
+    val stitched = fileStream(spark, planesDir, maxFiles = maxFilesPerTrigger)
+      .withWatermark("ts", watermarkDelay)
+      .select("fov", "stack", "crop", "slice", "nRows", "nCols",
+        "channels", "pixels", "labels", "ts")
+      .as[CropArrival]
+      .groupByKey(p => (p.fov, p.stack, p.slice))
+      .transformWithState(new StitchProcessor(plan, gapMs),
+        org.apache.spark.sql.streaming.TimeMode.EventTime(),
+        OutputMode.Append())
+      .toDF("fov", "stack", "slice", "n_crops", "n_cells", "n_nonzero",
+        "status")
+    drain(stitched, OutputMode.Append(), "q_stream_stitch_tws")
+      .map(_.orderBy("fov", "stack", "slice"))
   }
 
   /** Streaming NEAR-duplicate gate — the ingest-time complement of
@@ -1648,8 +1389,7 @@ object StreamOps {
     * via the pinned signature fixture, like the batch LSH family —
     * hash-gates every value.
     */
-  def neardupStatic(spark: SparkSession, sfDir: String,
-                    queryName: String = "stream_neardup"): (DataFrame, Long) = {
+  def neardupStatic(spark: SparkSession, sfDir: String): Drained = {
     import graft.functions.{Dedup, MinhashEstimate}
     val bands = 32
     val r = 4
@@ -1680,8 +1420,7 @@ object StreamOps {
       .withColumn("bucket",
         xxhash64(slice(col("store_mh"), col("band") * r + 1, lit(r))))
       .select(col("store_id"), col("band"), col("bucket"))
-    val stream = spark.readStream.schema(docs.schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(sfDir)
+    val stream = fileStream(spark, sfDir, Some("documents.parquet"))
       .filter(col("doc_id") % 10 === 9)
     val sb = banded(Dedup.withMinhash(stream, "text",
       numHashes = 128, shingleWidth = 3), "doc_id", "mh")
@@ -1697,19 +1436,16 @@ object StreamOps {
         max(col("est_pm")).as("best_est_pm"))
       .select(col("doc_id"), col("n_cand"), col("best_est_pm"),
         (col("best_est_pm") < 5000L).as("novel"))
-    val (drained, maxState) = drainUpdates(scored, scored.columns.toSeq)
-    stateHighWater("q_stream_neardup") = maxState
     // last update per doc wins (a doc's 32 band rows arrive in one
     // batch, so there is exactly one)
-    val out = drained
+    drain(scored, OutputMode.Update(), "q_stream_neardup").map(_
       .groupBy("doc_id")
       .agg(max(struct(col("n_cand"), col("best_est_pm"), col("novel")))
         .as("last"))
       .select(col("doc_id"), col("last.n_cand").as("n_cand"),
         col("last.best_est_pm").as("best_est_pm"),
         col("last.novel").as("novel"))
-      .orderBy("doc_id")
-    (out, maxState)
+      .orderBy("doc_id"))
   }
 
   /** Stateful streaming sessionization via flatMapGroupsWithState
@@ -1724,16 +1460,11 @@ object StreamOps {
     * local run, unbounded on a continuous stream. The deployed form
     * is [[sessionCountsAppend]] (event-time timeout, bounded state).
     */
-  def sessionCounts(spark: SparkSession, sfDir: String, gapMinutes: Int = 30,
-                    queryName: String = "stream_sessions"): DataFrame = {
+  def sessionCounts(spark: SparkSession, sfDir: String,
+                    gapMinutes: Int = 30): Drained = {
     import spark.implicits._
-    val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val stream = graft.core.EventTime.normalize(spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir))
     val gapUs = gapMinutes * 60L * 1000000L
-    val events = stream
+    val events = fileStream(spark, sfDir, eventsGlob)
       .select(col("user_id"), unix_micros(col("ts")).as("us"), col("event_id"))
       .as[Evt]
     val updated = events
@@ -1751,13 +1482,12 @@ object StreamOps {
           Iterator((uid, s.nSessions, s.nEvents))
         })
       .toDF("user_id", "n_sessions", "n_events")
-    val (drained, _) = drainUpdates(updated, updated.columns.toSeq)
     // the update drain appends per-batch emissions; keep each user's
     // final totals (single-batch local runs emit exactly once)
-    drained
+    drain(updated, OutputMode.Update(), "q_stream_sessionize").map(_
       .groupBy("user_id")
       .agg(max(col("n_sessions")).as("n_sessions"), max(col("n_events")).as("n_events"))
-      .orderBy("user_id")
+      .orderBy("user_id"))
   }
 
   /** Stream-stream interval join, append mode: purchases join the same
@@ -1780,34 +1510,11 @@ object StreamOps {
                          rangeMinutes: Int = 60,
                          watermarkDelay: String = "30 minutes",
                          maxFilesPerTrigger: Int = 1,
-                         queryName: String = "stream_range_append",
-                         glob: Option[String] = None): AppendRun = {
-    val batchSchema = spark.read
-      .parquet(glob.map(g => s"$eventsDir/$g").getOrElse(eventsDir)).schema
-    def src(): DataFrame = {
-      var reader = spark.readStream
-        .schema(batchSchema)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      glob.foreach(g => reader = reader.option("pathGlobFilter", g))
-      graft.core.EventTime.normalize(reader.parquet(eventsDir))
-    }
-    val purchases = src().filter(col("event_type") === "purchase")
-      .select(col("event_id").as("p_event_id"), col("user_id").as("p_user"),
-        col("ts").as("p_ts"))
-      .withWatermark("p_ts", watermarkDelay)
-    val clicks = src().filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-      .withWatermark("c_ts", watermarkDelay)
-    val pairs = purchases.join(clicks,
-        col("p_user") === col("c_user") &&
-        col("c_ts") >= col("p_ts") - expr(s"INTERVAL $rangeMinutes MINUTES") &&
-        col("c_ts") <= col("p_ts"))
-      .select(col("p_event_id").as("event_id"), col("p_user").as("user_id"),
-        unix_micros(col("p_ts")).as("p_us"), unix_micros(col("c_ts")).as("c_us"))
-    val (drained, maxState, nBatches) = drainAppend(pairs, queryName)
-    stateHighWater("q_stream_range_append") = maxState
-    AppendRun(drained.orderBy("event_id", "c_us"), maxState, nBatches)
-  }
+                         glob: Option[String] = None): Drained =
+    drain(purchaseClicks(spark, eventsDir, rangeMinutes, watermarkDelay,
+        maxFilesPerTrigger, glob, "inner"),
+      OutputMode.Append(), "q_stream_range_append")
+      .map(_.orderBy("event_id", "c_us"))
 
   /** LEFT OUTER stream-stream interval join — [[intervalJoinAppend]]'s
     * completeness twin: a purchase with NO click in its preceding
@@ -1823,17 +1530,21 @@ object StreamOps {
                               rangeMinutes: Int = 60,
                               watermarkDelay: String = "30 minutes",
                               maxFilesPerTrigger: Int = 1,
-                              queryName: String = "stream_range_outer",
-                              glob: Option[String] = None): AppendRun = {
-    val batchSchema = spark.read
-      .parquet(glob.map(g => s"$eventsDir/$g").getOrElse(eventsDir)).schema
-    def src(): DataFrame = {
-      var reader = spark.readStream
-        .schema(batchSchema)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      glob.foreach(g => reader = reader.option("pathGlobFilter", g))
-      graft.core.EventTime.normalize(reader.parquet(eventsDir))
-    }
+                              glob: Option[String] = None): Drained =
+    drain(purchaseClicks(spark, eventsDir, rangeMinutes, watermarkDelay,
+        maxFilesPerTrigger, glob, "left_outer"),
+      OutputMode.Append(), "q_stream_range_outer")
+      .map(_.orderBy("event_id", "c_us"))
+
+  /** Purchases joined to the same user's clicks from the preceding
+    * `rangeMinutes`, both sides watermarked, as (event_id, user_id,
+    * p_us, c_us) — the stream shared by the two interval-join twins.
+    */
+  private def purchaseClicks(spark: SparkSession, eventsDir: String,
+                             rangeMinutes: Int, watermarkDelay: String,
+                             maxFilesPerTrigger: Int, glob: Option[String],
+                             joinType: String): DataFrame = {
+    def src(): DataFrame = fileStream(spark, eventsDir, glob, maxFilesPerTrigger)
     val purchases = src().filter(col("event_type") === "purchase")
       .select(col("event_id").as("p_event_id"), col("user_id").as("p_user"),
         col("ts").as("p_ts"))
@@ -1841,15 +1552,12 @@ object StreamOps {
     val clicks = src().filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
       .withWatermark("c_ts", watermarkDelay)
-    val pairs = purchases.join(clicks,
+    purchases.join(clicks,
         col("p_user") === col("c_user") &&
         col("c_ts") >= col("p_ts") - expr(s"INTERVAL $rangeMinutes MINUTES") &&
         col("c_ts") <= col("p_ts"),
-        "left_outer")
+        joinType)
       .select(col("p_event_id").as("event_id"), col("p_user").as("user_id"),
         unix_micros(col("p_ts")).as("p_us"), unix_micros(col("c_ts")).as("c_us"))
-    val (drained, maxState, nBatches) = drainAppend(pairs, queryName)
-    stateHighWater("q_stream_range_outer") = maxState
-    AppendRun(drained.orderBy("event_id", "c_us"), maxState, nBatches)
   }
 }

@@ -97,8 +97,7 @@ object Ep2Bench {
     // ---- phase 2: streamed incremental stitch ----
     val t1 = System.nanoTime()
     val run = StreamOps.incrementalStitchAppend(spark, streamDir, plan,
-      quarantineMinutes = 3, watermarkDelay = "2 minutes",
-      queryName = "ep2_bench_stitch")
+      quarantineMinutes = 3, watermarkDelay = "2 minutes")
     val census = run.result.collect()
     val streamSec = (System.nanoTime() - t1) / 1e9
     val stitched = census.count(_.getAs[String]("status") == "stitched")

@@ -233,7 +233,7 @@ class TarShardsSpec extends SparkSpec {
     assert(back.find(_._1 == "k0").get._2("txt").sameElements(Array[Byte](4, 5, 6)))
     // the STREAMING ingest shares the gunzip-aware entry point, so
     // compressed shards arrive identically through the file stream
-    val (streamed, batches) =
+    val graft.streaming.StreamOps.Drained(streamed, _, batches) =
       graft.streaming.StreamOps.tarSampleIngest(spark, d, "*.tar.gz")
     assert(streamed.count() == 2 && batches >= 1)
   }

@@ -62,7 +62,7 @@ class PsiDriftSpec extends SparkSpec {
       Files.move(part.toPath, dest, StandardCopyOption.REPLACE_EXISTING)
       dest.toFile.setLastModified(1700000000000L + i * 10000L)
     }
-    val run = StreamOps.psiDriftAppend(spark, streamDir, queryName = "psi_spec")
+    val run = StreamOps.psiDriftAppend(spark, streamDir)
     val stream = run.result.collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
     // max ts 05:30, watermark 2 h -> 03:30: hours 0..2 finalized (end <= wm)

@@ -37,7 +37,7 @@ class SessionWindowSpec extends SparkSpec {
 
     // native rule agrees: ONE merged session (inclusive gap boundary),
     // finalized (wm = 02:00 - 10 min); user 2's session is held
-    val run = StreamOps.sessionWindowAppend(spark, d, queryName = "sesswin_spec")
+    val run = StreamOps.sessionWindowAppend(spark, d)
     val out = run.result.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     val t0 = 1704067200000000L // 2024-01-01 00:00:00 UTC in micros

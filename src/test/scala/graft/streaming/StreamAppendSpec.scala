@@ -48,7 +48,7 @@ class StreamAppendSpec extends SparkSpec {
   test("append-mode hourly agg: emitted rows match batch, state stays bounded (watermark evicts)") {
     val events = spark.read.parquet(s"$sfDir/events.parquet")
     val dir = sliceToDir(events, "ts", 10, "hourly")
-    val run = StreamOps.hourlyCountsAppend(spark, dir, queryName = "spec_hourly_append")
+    val run = StreamOps.hourlyCountsAppend(spark, dir)
     val emitted = run.result.collect()
       .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
     val batch = EventQueries.defs("q_evt_hourly")(spark, sfDir)
@@ -75,10 +75,9 @@ class StreamAppendSpec extends SparkSpec {
   test("transformWithState hourly rollup: sliced replay equals classic, per-window timers evict") {
     val events = spark.read.parquet(s"$sfDir/events.parquet")
     val dir = sliceToDir(events, "ts", 10, "hourlytws")
-    val classic = StreamOps.hourlyCountsAppend(spark, dir,
-      queryName = "spec_hourly_append_ref")
+    val classic = StreamOps.hourlyCountsAppend(spark, dir)
     val run = StreamOps.hourlyCountsAppendTws(spark, dir, glob = None,
-      maxFilesPerTrigger = 1, queryName = "spec_hourly_tws")
+      maxFilesPerTrigger = 1)
     def toMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
     val a = toMap(classic.result)
@@ -102,8 +101,7 @@ class StreamAppendSpec extends SparkSpec {
   test("append-mode incremental dedup: fingerprint set matches batch, dedup state evicts") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val dir = sliceToDir(docs, "doc_id", 5, "incdedup")
-    val run = StreamOps.incrementalDedupAppend(spark, dir, sfDir,
-      queryName = "spec_inc_dedup_append")
+    val run = StreamOps.incrementalDedupAppend(spark, dir, sfDir)
     val emittedFps = run.result.collect().map(_.getString(1)).toSet
     val batchRows = graft.queries.DedupQueries.defs("q_dedup_incremental")(spark, sfDir).collect()
     val batchFps = batchRows.map(_.getString(1)).toSet
@@ -168,8 +166,7 @@ class StreamAppendSpec extends SparkSpec {
         }
     }
     val run = StreamOps.incrementalStitchAppend(spark, streamDir, plan,
-      quarantineMinutes = 3, watermarkDelay = "2 minutes",
-      queryName = "spec_stitch_append")
+      quarantineMinutes = 3, watermarkDelay = "2 minutes")
     val rows = run.result.collect()
       .map(r => (r.getString(0), r.getInt(1)) ->
         (r.getLong(3), r.getLong(4), r.getLong(5), r.getString(6))).toMap
@@ -198,8 +195,7 @@ class StreamAppendSpec extends SparkSpec {
   test("stream-stream interval join: pairs match batch, range condition evicts join state") {
     val events = spark.read.parquet(s"$sfDir/events.parquet")
     val dir = sliceToDir(events, "ts", 10, "rangejoin")
-    val run = StreamOps.intervalJoinAppend(spark, dir,
-      queryName = "spec_range_append")
+    val run = StreamOps.intervalJoinAppend(spark, dir)
     val emitted = run.result.collect()
       .map(r => (r.getLong(0), r.getLong(3))).toSet
     // drained inner join == the batch operator's pair set (matches
@@ -254,8 +250,7 @@ class StreamAppendSpec extends SparkSpec {
     // single-directory run (the registry shape): all events in one
     // batch, then the timeout batch closes every session the final
     // watermark passed
-    val run = StreamOps.sessionCountsAppend(spark, sfDir,
-      queryName = "spec_sessions_append")
+    val run = StreamOps.sessionCountsAppend(spark, sfDir)
     val emitted = run.result.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     // each emitted session is final: exactly one per (user, start),

@@ -2,12 +2,13 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.queries.{EventQueries, Q}
+import StreamOps.Drained
 
 class StreamOpsSpec extends SparkSpec {
 
   test("streaming hourly agg equals the batch rollup") {
     val dir = "/root/testdata/sf0.001"
-    val streamed = StreamOps.hourlyCounts(spark, dir, "spec_hourly")
+    val streamed = StreamOps.hourlyCounts(spark, dir).result
       .collect().map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
     val batch = EventQueries.defs("q_evt_hourly")(spark, dir)
       .collect().map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
@@ -26,7 +27,7 @@ class StreamOpsSpec extends SparkSpec {
     PlaneStore.save(CropOps.cropPlanes(ImagePlane.toDataset(spark, orig), plan),
       dir, maxRecordsPerFile = 3) // several files => several micro-batches
     val out = StreamOps.incrementalStitch(spark, dir, plan,
-      queryName = "spec_stitch", maxFilesPerTrigger = 2)
+      maxFilesPerTrigger = 2).result
       .collect().map(r => (r.getString(0), r.getInt(1)) -> (r.getLong(3), r.getLong(4))).toMap
     assert(out.size == orig.size, s"every canvas completed: ${out.keys}")
     orig.foreach { o =>
@@ -38,7 +39,7 @@ class StreamOpsSpec extends SparkSpec {
 
   test("streaming dedup census equals batch count-distinct") {
     val dir = "/root/testdata/sf0.001"
-    val streamed = StreamOps.dedupCounts(spark, dir, "spec_dedup")
+    val streamed = StreamOps.dedupCounts(spark, dir).result
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val batch = Q.t(spark, dir, "events")
       .groupBy("event_type")
@@ -49,7 +50,7 @@ class StreamOpsSpec extends SparkSpec {
 
   test("streaming incremental dedup equals the batch anti-join operator") {
     val dir = "/root/testdata/sf0.001"
-    val streamed = StreamOps.incrementalDedup(spark, dir, "spec_inc_dedup")
+    val streamed = StreamOps.incrementalDedup(spark, dir).result
       .collect().map(r => r.getLong(0) -> r.getString(1)).toSeq.sorted
     val batch = graft.queries.DedupQueries.defs("q_dedup_incremental")(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toSeq.sorted
@@ -59,7 +60,7 @@ class StreamOpsSpec extends SparkSpec {
 
   test("stateful sessionization equals the batch window algebra") {
     val dir = "/root/testdata/sf0.001"
-    val streamed = StreamOps.sessionCounts(spark, dir, queryName = "spec_sessions")
+    val streamed = StreamOps.sessionCounts(spark, dir).result
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     val batch = EventQueries.defs("q_evt_sessionize")(spark, dir)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -69,7 +70,7 @@ class StreamOpsSpec extends SparkSpec {
   test("streaming EWMA: O(1)-per-user state, and a time-sliced replay equals one batch") {
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
-    val (oneShot, maxState) = StreamOps.ewmaState(spark, dir)
+    val Drained(oneShot, maxState, _) = StreamOps.ewmaState(spark, dir)
     val one = oneShot.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     val nUsers = spark.read.parquet(s"$dir/events.parquet")
       .select("user_id").distinct().count()
@@ -95,7 +96,7 @@ class StreamOpsSpec extends SparkSpec {
     // the file source replays in modification order; make it unambiguous
     tmp.resolve("evt_001.parquet").toFile
       .setLastModified(tmp.resolve("evt_000.parquet").toFile.lastModified() + 10000)
-    val (sliced, _) = StreamOps.ewmaState(spark, tmp.toString,
+    val Drained(sliced, _, _) = StreamOps.ewmaState(spark, tmp.toString,
       glob = "evt_*.parquet", maxFilesPerTrigger = 1)
     val two = sliced.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     assert(two == one, "time-ordered two-batch replay must reproduce the single-batch EWMA")
@@ -104,7 +105,7 @@ class StreamOpsSpec extends SparkSpec {
   test("streaming attribution: O(1)-state census equals the batch window, sliced replay agrees") {
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
-    val (oneShot, maxState) = StreamOps.attributionState(spark, dir)
+    val Drained(oneShot, maxState, _) = StreamOps.attributionState(spark, dir)
     def toMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
@@ -132,7 +133,7 @@ class StreamOpsSpec extends SparkSpec {
     writeSlice(ev.filter(unix_micros(col("ts")) >= cut), "evt_001.parquet")
     tmp.resolve("evt_001.parquet").toFile
       .setLastModified(tmp.resolve("evt_000.parquet").toFile.lastModified() + 10000)
-    val (sliced, _) = StreamOps.attributionState(spark, tmp.toString,
+    val Drained(sliced, _, _) = StreamOps.attributionState(spark, tmp.toString,
       glob = "evt_*.parquet", maxFilesPerTrigger = 1)
     assert(toMap(sliced) == one,
       "time-ordered two-batch replay must reproduce the single-batch census")
@@ -140,8 +141,8 @@ class StreamOpsSpec extends SparkSpec {
 
   test("transformWithState EWMA equals the mapGroupsWithState twin bit-for-bit") {
     val dir = "/root/testdata/sf0.001"
-    val (mgws, _) = StreamOps.ewmaState(spark, dir)
-    val (tws, maxState) = StreamOps.ewmaStateTws(spark, dir)
+    val Drained(mgws, _, _) = StreamOps.ewmaState(spark, dir)
+    val Drained(tws, maxState, _) = StreamOps.ewmaStateTws(spark, dir)
     val a = mgws.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     val b = tws.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     assert(a == b, "the Spark 4 state API must reproduce the classic API exactly")
@@ -153,8 +154,8 @@ class StreamOpsSpec extends SparkSpec {
 
   test("transformWithState CEP equals the mapGroupsWithState twin bit-for-bit") {
     val dir = "/root/testdata/sf0.001"
-    val (mgws, _) = StreamOps.patternState(spark, dir)
-    val (tws, maxState) = StreamOps.patternStateTws(spark, dir)
+    val Drained(mgws, _, _) = StreamOps.patternState(spark, dir)
+    val Drained(tws, maxState, _) = StreamOps.patternStateTws(spark, dir)
     def toMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getBoolean(4))).toMap
@@ -168,8 +169,7 @@ class StreamOpsSpec extends SparkSpec {
 
   test("transformWithState timer sessionizer equals the flatMapGroups append twin") {
     val dir = "/root/testdata/sf0.001"
-    val classic = StreamOps.sessionCountsAppend(spark, dir,
-      queryName = "sess_append_ref")
+    val classic = StreamOps.sessionCountsAppend(spark, dir)
     val tws = StreamOps.sessionCountsAppendTws(spark, dir)
     def toSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r =>
@@ -185,7 +185,7 @@ class StreamOpsSpec extends SparkSpec {
   test("transformWithState MapState hourly rollup equals the windowed-agg append twin") {
     val dir = "/root/testdata/sf0.001"
     val classic = StreamOps.hourlyCountsAppend(spark, dir,
-      glob = Some("events.parquet"), queryName = "hourly_append_ref")
+      glob = Some("events.parquet"))
     val tws = StreamOps.hourlyCountsAppendTws(spark, dir)
     def toMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getString(1)) ->
@@ -234,7 +234,7 @@ class StreamOpsSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.functions.{Dedup, MinhashEstimate}
     val dir = "/root/testdata/sf0.001"
-    val (streamed, maxState) = StreamOps.neardupStatic(spark, dir)
+    val Drained(streamed, maxState, _) = StreamOps.neardupStatic(spark, dir)
     val got = streamed.collect().map(r =>
       r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getBoolean(3))).toMap
     // batch reference: identical expressions, no stream
@@ -310,7 +310,7 @@ class StreamOpsSpec extends SparkSpec {
 
   test("streaming CEP: DFA state equals the batch regex counts, O(1) state per user") {
     val dir = "/root/testdata/sf0.001"
-    val (oneShot, maxState) = StreamOps.patternState(spark, dir)
+    val Drained(oneShot, maxState, _) = StreamOps.patternState(spark, dir)
     val one = oneShot.collect().map(r => r.getLong(0) ->
       (r.getLong(1), r.getLong(2), r.getLong(3), r.getBoolean(4))).toMap
     val batch = EventQueries.defs("q_evt_pattern")(spark, dir)
@@ -355,7 +355,7 @@ class StreamOpsSpec extends SparkSpec {
       "evt_001.parquet")
     tmp.resolve("evt_001.parquet").toFile
       .setLastModified(tmp.resolve("evt_000.parquet").toFile.lastModified() + 10000)
-    val (out, _) = StreamOps.patternState(spark, tmp.toString,
+    val Drained(out, _, _) = StreamOps.patternState(spark, tmp.toString,
       glob = "evt_*.parquet", maxFilesPerTrigger = 1)
     val got = out.collect().map(r => r.getLong(0) ->
       (r.getLong(1), r.getLong(2), r.getLong(3), r.getBoolean(4))).toMap

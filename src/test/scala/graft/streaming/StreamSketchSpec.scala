@@ -21,9 +21,9 @@ class StreamSketchSpec extends SparkSpec {
     val dir = StreamOps.sliceParquet(ev, col("event_id"), 6, "spec_cms")
     val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
     assert(files.length == 6, "replay must be genuinely multi-batch")
-    val (skT, maxState) = StreamOps.completeAggDrain(spark, dir, "*.parquet",
-      df => df.agg(CountMin.cmsSketch(col("user_id"), 4, 256).as("sk")),
-      queryName = "spec_cms_drain", stateKey = "spec_cms")
+    val StreamOps.Drained(skT, maxState, _) = StreamOps.completeAggDrain(spark, dir,
+      "*.parquet", df => df.agg(CountMin.cmsSketch(col("user_id"), 4, 256).as("sk")),
+      "spec_cms")
     assert(maxState == 1L, s"global sketch state must be exactly 1 row, saw $maxState")
     val streamed = skT.head().getSeq[Long](0)
     val batch = ev.agg(CountMin.cmsSketch(col("user_id"), 4, 256))
@@ -36,10 +36,10 @@ class StreamSketchSpec extends SparkSpec {
     import graft.functions.MisraGriesTopK.mgTopK
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val dir = StreamOps.sliceParquet(docs, col("doc_id"), 5, "spec_topk")
-    val (sk, maxState) = StreamOps.completeAggDrain(spark, dir, "*.parquet",
-      df => df.select(explode(split(col("text"), " ")).as("token"))
+    val StreamOps.Drained(sk, maxState, _) = StreamOps.completeAggDrain(spark, dir,
+      "*.parquet", df => df.select(explode(split(col("text"), " ")).as("token"))
         .agg(mgTopK(col("token"), 100).as("summary"), count(lit(1)).as("n_total")),
-      queryName = "spec_topk_drain", stateKey = "spec_topk")
+      "spec_topk")
     assert(maxState == 1L, s"global summary state must be exactly 1 row, saw $maxState")
     val words = docs.select(explode(split(col("text"), " ")).as("token"))
     val verdict = graft.queries.TextQueries.mgVerdict(words, sk).collect()
