@@ -3,6 +3,12 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // Optional comma-separated allowlist for targeted timing while
+    // iterating on one query (mirrors Verify's SPARK_GRAFT_VERIFY_ONLY);
+    // unset ⇒ full inventory, the driver's contract. A name that is not
+    // registered fails here, before the session starts.
+    val only = SparkEntry.allowlist("SPARK_GRAFT_BENCH_ONLY")
+    val selected = SparkEntry.select(only)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.core.GraftSession
       .builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
@@ -17,15 +23,6 @@ object Bench {
     // first measured query doesn't absorb JVM startup
     spark.range(1000000).selectExpr("sum(id)").collect()
     SparkEntry.entry(spark).count()
-    // Optional comma-separated allowlist for targeted timing while
-    // iterating on one query (mirrors Verify's SPARK_GRAFT_VERIFY_ONLY);
-    // unset ⇒ full inventory, the driver's contract.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None        => SparkEntry.queries
-    }
     // deterministic (sorted) timing order, run-to-run comparable.
     // A query that THROWS is recorded in `err`, not as a ~0 s timing:
     // BENCH_r11 timed 8 construction-crashed queries at 0.00 s, which
@@ -41,10 +38,11 @@ object Bench {
         try src.mkString.split(" ")(0).toDouble finally src.close()
       } catch { case _: Throwable => -1.0 }
     val ctx = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Double)]
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = selected.sortBy(_.name).map { d =>
+      val name = d.name
       ctx(name) = (System.currentTimeMillis() / 1000L, loadavg())
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch {
+      try { d.build(spark, sfDir).count() } catch {
         case e: Throwable =>
           errors(name) = s"${e.getClass.getSimpleName}: " +
             String.valueOf(e.getMessage).replaceAll("\\s+", " ").take(200)

@@ -50,6 +50,10 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // Optional comma-separated allowlist for targeted replays (e.g. the
+    // sf1 dedup spot-pass); unset ⇒ full dump, the driver's contract. A
+    // name that is not registered fails here, before any work.
+    val selected = SparkEntry.select(SparkEntry.allowlist("SPARK_GRAFT_VERIFY_ONLY"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.core.GraftSession
       .builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
@@ -61,20 +65,12 @@ object Verify {
     // dir (_extra_conf.json, written even when empty), so a gate
     // artifact is self-describing about non-default config.
     val extraConf = graft.core.GraftSession.applyExtraConf(spark)
-    // Optional comma-separated allowlist for targeted replays (e.g. the
-    // sf1 dedup spot-pass); unset ⇒ full dump, the driver's contract.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None        => SparkEntry.queries
-    }
-    val failures = dump(spark, sfDir, outDir, selected.toSeq)
+    val failures = dump(spark, sfDir, outDir, selected.map(d => d.name -> d.build))
     Files.writeString(Paths.get(s"$outDir/_extra_conf.json"),
       extraConf.map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }
         .mkString("{", ",", "}"))
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
+    val json = selected
+      .map(d => s"${jsonStr(d.name)}: ${jsonStr(d.oracle)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
     if (failures.nonEmpty) {

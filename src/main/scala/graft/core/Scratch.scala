@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Scratch-directory contract for DISTRIBUTED intermediate writes.
@@ -20,42 +21,52 @@ import org.apache.spark.sql.SparkSession
   *    `FileSystem` for the base's scheme, so every downstream
   *    Hadoop-aware writer/reader (parquet sinks, the NPZ sink's
   *    FileSystem writes) resolves to storage all executors can reach.
-  *  - unset (the local[*] default): `Files.createTempDirectory`, the
-  *    pre-round-16 behavior, correct in local mode and self-cleaning
-  *    with /tmp.
+  *  - unset (the local[*] default): [[local]], a fresh directory
+  *    under `java.io.tmpdir`, correct in local mode.
   *
   * Same class of contract as the round-15 pagerank fix (iterative
   * lineage truncation via `localCheckpoint` instead of a schemeless
   * /tmp checkpoint dir) — extended to every registered-path scratch
-  * write. NOT used by the file-REPLAY harnesses (sliceParquet /
-  * timeSliceParquet / ScaleQueries.stitchStreamFixture): those depend
-  * on POSIX mtime manipulation to order micro-batches and are
+  * write. The file-REPLAY harnesses (sliceParquet / timeSliceParquet /
+  * ScaleQueries.stitchStreamFixture) call [[local]] directly: they
+  * depend on POSIX mtime manipulation to order micro-batches and are
   * local-mode test drivers by design.
+  *
+  * Retention: every allocation is registered for recursive deletion
+  * when the JVM exits (Hadoop `FileSystem.deleteOnExit` on the path's
+  * cached FileSystem, processed by Hadoop's shutdown hook after
+  * Spark's own). Nothing is deleted earlier: the DataFrames a drain
+  * returns read their directory lazily, so its lifetime is the
+  * consumer's. A configured shared base should still point at TTL'd
+  * storage (object-store lifecycle rule or a tmpwatch'd mount) for
+  * JVMs that die without running their shutdown hooks.
   */
 object Scratch {
 
   /** Allocate a fresh scratch directory under the configured shared
-    * base (or a local temp dir when unconfigured); returns a path
+    * base (or a [[local]] temp dir when unconfigured); returns a path
     * string usable by any Hadoop-FileSystem-aware reader/writer.
-    *
-    * Retention: allocations are NOT deleted here — the DataFrames that
-    * the drain returns read from them lazily, so their lifetime is the
-    * consumer's. Local temp dirs go with /tmp; a configured
-    * shared base should point at TTL'd storage (object-store lifecycle
-    * rule or a tmpwatch'd mount), the standard contract for Spark
-    * scratch space.
     */
   def dir(spark: SparkSession, prefix: String): String =
     spark.conf.getOption("spark.graft.scratchDir") match {
       case Some(base) if base.nonEmpty =>
-        val p = new org.apache.hadoop.fs.Path(
-          base, s"$prefix-${java.util.UUID.randomUUID()}")
+        val p = new Path(base, s"$prefix-${java.util.UUID.randomUUID()}")
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         fs.mkdirs(p)
         // qualify so downstream string round-trips keep the scheme
-        fs.makeQualified(p).toString
-      case _ =>
-        java.nio.file.Files.createTempDirectory(prefix)
-          .toFile.getAbsolutePath
+        val q = fs.makeQualified(p)
+        fs.deleteOnExit(q)
+        q.toString
+      case _ => local(spark, prefix)
     }
+
+  /** A fresh directory under `java.io.tmpdir`, registered for recursive
+    * deletion at JVM exit; returns its absolute path.
+    */
+  def local(spark: SparkSession, prefix: String): String = {
+    val f = java.nio.file.Files.createTempDirectory(prefix).toFile
+    val p = new Path(f.toURI.toString)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).deleteOnExit(p)
+    f.getAbsolutePath
+  }
 }

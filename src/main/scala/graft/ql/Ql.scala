@@ -28,85 +28,19 @@ object Ql {
       graft.queries.Q.t(spark, dir, name).createOrReplaceTempView(name)
     }
 
-  /** Registry entries whose DataFrame CONSTRUCTION itself runs Spark
-    * jobs — eager localCheckpoint of a shared base projection
-    * (`q_corpus_build`, the LSH candidate pipelines), iterate-to-
-    * fixpoint counts (`q_dedup_components`), driver point-lookups of a
-    * probe vector / k-means codebook (`q_sim_ann_*`), split-size
-    * counts (`q_ds_*`), a driver-held Count-Min sketch
-    * (`q_txt_heavy_hitters`), an RDD `zipWithIndex` partition-count
-    * job (`q_w3_dense_relabel`), or a run-to-completion streaming
-    * query (`q_stream_*`). Registering one of these is never a lazy
-    * view definition, so the register-everything default skips them;
-    * name them explicitly to opt in. QlSpec asserts the default path
-    * runs ZERO jobs, so a registry entry that grows a construction-
-    * time job without being listed here fails the suite.
-    */
-  val eagerQueries: Set[String] = Set(
-    "q_corpus_build", "q_dedup_components", "q_dedup_cluster_split",
-    "q_dedup_minhash_pairs", "q_dedup_lsh_recall",
-    "q_sim_ann_lsh", "q_sim_ann_ivf", "q_sim_ivf_recall",
-    "q_ds_split_contract", "q_ds_nested_prefix", "q_ds_build",
-    "q_txt_heavy_hitters", "q_w3_dense_relabel",
-    "q_graph_communities_bucketed", // bucketed-table write + plan probe at construction
-    "q_src_jsonl", // gzip JSONL sink write at construction
-    "q_src_csv", // gzip CSV sink write at construction
-    "q_src_tar_roundtrip", // shard-sink write at construction
-    "q_src_tar_gzip", // gzip shard-sink write at construction
-    "q_src_tar_reshard", // size-targeted reshard + sink write at construction
-    "q_stream_tar_ingest", // stream drain at construction
-    "q_mm_tar_pipeline", // shard-sink write at construction
-    "q_stream_hourly", "q_stream_dedup", "q_stream_sessionize",
-    "q_stream_incremental", "q_stream_hourly_append", "q_stream_hourly_tws",
-    "q_stream_incremental_append", "q_stream_sessionize_append",
-    "q_stream_sessionize_tws", "q_stream_neardup", "q_stream_semgate",
-    "q_stream_stitch", "q_stream_stitch_tws",
-    "q_stream_range_append", "q_stream_ewma",
-    "q_stream_pattern", "q_stream_ewma_tws", "q_stream_pattern_tws",
-    "q_stream_attribution",
-    "q_evt_pipeline",
-    "q_evt_range_sql", // rewrite-conf-scoped localCheckpoint at construction
-    "q_evt_overlap_sql", // rewrite-conf-scoped localCheckpoint at construction
-    "q_img_reconstruct_digest", // writes+reconstructs the NPZ law fixture
-    "q_npz_sinks_digest", // writes the stitched/combined NPZ sinks (S13/S14)
-    "q_emb_pca", "q_emb_pca2", "q_txt_bloom_decon", "q_graph_pagerank",
-    "q_graph_hits", // pair-list checkpoint at construction
-    "q_graph_kcore", "q_graph_bfs", "q_graph_triangles", // edge-list checkpoint + count
-    "q_graph_clustering", // edge-list checkpoint at construction
-    "q_sim_maxsim", "q_emb_meanpool_nn",
-    "q_stream_countmin", "q_stream_topk",
-    "q_stream_dd_quantile", // complete-mode sketch drain at construction
-    "q_stream_psi",        // append-mode drain at construction
-    "q_stream_psi_tws",    // append-mode drain at construction
-    "q_stream_session_native", // append-mode drain at construction
-    "q_stream_range_outer",    // append-mode drain at construction
-    "q_layout_bucket_join", // writes the bucketed tables + plan verdict
-    "q_npz_roundtrip", // writes the NPZ fixture at construction (S10 sink)
-    "q_graph_communities", // LPA supersteps: checkpoints + counts per round
-    "q_sketch_dd_quantile", // bucketized-base checkpoint at construction (r18)
-    "q_graph_linkpred", // shared pair-gen checkpoint at construction (r18)
-    "q_basket_rules",   // per-order brand-set checkpoint at construction (r18)
-    "q_txt_bpe_train", // per-round argmax collect (merge learning)
-    "q_txt_bpe_encode", // re-learns the merge chain at construction
-    "q_src_ontology_digest" // metadata JSON schema inference at construction
-  )
-
   /** Register inventory queries as temp views named after their registry
     * keys, so `spark.sql("SELECT * FROM q_dedup_exact")` composes with
     * further SQL. `names` empty ⇒ every LAZY registry entry: views are
     * logical-plan definitions, no Spark job runs at registration. The
-    * [[eagerQueries]] — whose construction runs jobs by design — are
-    * excluded from that default and register only when explicitly
-    * named.
+    * `eager` records ([[graft.queries.Q.QueryDef]]) — whose construction
+    * runs jobs by design — are excluded from that default and register
+    * only when explicitly named; a name that is not registered throws.
     */
   def registerQueries(spark: SparkSession, dir: String,
                       names: Iterable[String] = Nil): Unit = {
-    val all = graft.SparkEntry.queries
     val chosen =
-      if (names.isEmpty) all.filter { case (n, _) => !eagerQueries(n) }
-      else { val want = names.toSet; all.filter { case (n, _) => want(n) } }
-    chosen.foreach { case (name, fn) =>
-      fn(spark, dir).createOrReplaceTempView(name)
-    }
+      if (names.isEmpty) graft.SparkEntry.all.filterNot(_.eager)
+      else graft.SparkEntry.select(Some(names.toSet))
+    chosen.foreach(d => d.build(spark, dir).createOrReplaceTempView(d.name))
   }
 }

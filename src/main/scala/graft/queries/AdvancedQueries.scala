@@ -573,30 +573,11 @@ object AdvancedQueries {
       .orderBy("bucket")
   }
 
-  val defs: Map[String, QueryFn] = Map(
-    "q_layout_bucket_join" -> qLayoutBucketJoin _,
-    "q_sketch_dd_quantile" -> qSketchDdQuantile _,
-    "q_approx_sum" -> qApproxSum _,
-    "q_sketch_hll_merge" -> qSketchHllMerge _,
-    "q_layout_compaction" -> qLayoutCompaction _,
-    "q_part_skyline" -> qPartSkyline _,
-    "q_layout_zorder" -> qLayoutZorder _,
-    "q_skew_distinct" -> qSkewDistinct _,
-    "q_w_range_frame" -> qWRangeFrame _,
-    "q_w_rank_family" -> qWRankFamily _,
-    "q_grouping_sets" -> qGroupingSets _,
-    "q_cond_agg" -> qCondAgg _,
-    "q_regex_extract" -> qRegexExtract _,
-    "q_asof_prev_view" -> qAsofPrevView _,
-    "q_above_nation_avg" -> qAboveNationAvg _,
-    "q_natural_sort" -> qNaturalSort _,
-  )
-
-  val oracles: Map[String, String] = Map(
+  val registry: Seq[QueryDef] = Seq(
     // The TRUE literal pins the plan verdict: the engine must have
     // produced an exchange-free sort-merge join over the bucketed
     // tables, or the hash gate fails (the q_evt_variant convention).
-    "q_layout_bucket_join" ->
+    QueryDef("q_layout_bucket_join", qLayoutBucketJoin,
       """SELECT o_orderpriority, count(*) AS n_lines,
         |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
         |           * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT)
@@ -604,7 +585,8 @@ object AdvancedQueries {
         |  TRUE AS join_shuffle_free
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q_approx_sum" ->
+      eager = true), // writes the bucketed tables + plan verdict
+    QueryDef("q_approx_sum", qApproxSum,
       """WITH e AS (
         |  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents,
         |         (event_id * 2654435761) % 8 = 0 AS in_sample
@@ -615,12 +597,12 @@ object AdvancedQueries {
         |  CAST(sum(CASE WHEN in_sample THEN cents ELSE 0 END) * 8 AS BIGINT) AS est_cents,
         |  CAST(round(1000000.0 * abs(CAST(sum(CASE WHEN in_sample THEN cents ELSE 0 END) * 8 AS BIGINT)
         |       - CAST(sum(cents) AS BIGINT)) / CAST(sum(cents) AS BIGINT)) AS BIGINT) AS rel_err_ppm
-        |FROM e GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM e GROUP BY event_type ORDER BY event_type""".stripMargin),
     // HLL gate: exact counts + part censuses replayed; the two sketch
     // verdicts (direct AND union-of-parts estimates each within 3% of
     // exact) pinned TRUE — estimates are DataSketches-specific and
     // never cross the gate.
-    "q_sketch_hll_merge" ->
+    QueryDef("q_sketch_hll_merge", qSketchHllMerge,
       """WITH b AS (
         |  SELECT strftime(l_shipdate, '%Y-%m') AS bucket,
         |         dayofweek(l_shipdate) AS dw, l_orderkey AS k
@@ -639,12 +621,12 @@ object AdvancedQueries {
         |SELECT bucket, exact_distinct, n_parts,
         |       TRUE AS direct_within_pct, TRUE AS merged_within_pct
         |FROM (SELECT * FROM m UNION ALL SELECT * FROM a)
-        |ORDER BY bucket""".stripMargin,
+        |ORDER BY bucket""".stripMargin),
     // Full-law replay (not a bounds-only pin): the digit-bucket sketch
     // is bit-deterministic, so buckets, merge counters, midpoint
     // readouts and exact twins all reproduce in integer arithmetic.
     // merge_identical replays as the same full-histogram comparison.
-    "q_sketch_dd_quantile" ->
+    QueryDef("q_sketch_dd_quantile", qSketchDdQuantile,
       """WITH b AS (
         |  SELECT strftime(l_shipdate, '%Y-%m') AS m,
         |         dayofweek(l_shipdate) AS dw,
@@ -722,7 +704,8 @@ object AdvancedQueries {
         |    <= p99_exact_c * 10 * 65 AS p99_within
         |FROM nt JOIN mi USING (m) JOIN est USING (m) JOIN ex ON ex.m = nt.m
         |ORDER BY bucket""".stripMargin,
-    "q_layout_compaction" ->
+      eager = true), // bucketized-base checkpoint at construction (r18)
+    QueryDef("q_layout_compaction", qLayoutCompaction,
       """WITH f AS (
         |  SELECT doc_id, source, n_chars,
         |    coalesce(sum(n_chars) OVER (PARTITION BY source ORDER BY doc_id
@@ -739,12 +722,12 @@ object AdvancedQueries {
         |  CAST(max(bin_chars) AS BIGINT) AS max_bin_chars,
         |  CAST(round(1000000.0 * CAST(sum(bin_chars) AS BIGINT)
         |       / (count(*) * 4096)) AS BIGINT) AS fill_ppm
-        |FROM b GROUP BY source ORDER BY source""".stripMargin,
+        |FROM b GROUP BY source ORDER BY source""".stripMargin),
     // single-pass window formulation, provably equivalent to the
     // NOT-EXISTS dominance definition (see qPartSkyline scaladoc):
     // dominated iff a strictly-cheaper row has size >= mine (m1) or a
     // same-price row has size > mine (m2)
-    "q_part_skyline" ->
+    QueryDef("q_part_skyline", qPartSkyline,
       """WITH b AS (
         |  SELECT p_partkey, CAST(p_size AS BIGINT) AS p_size,
         |         CAST(round(p_retailprice * 100) AS BIGINT) AS cents
@@ -757,8 +740,8 @@ object AdvancedQueries {
         |  FROM b)
         |SELECT p_partkey, p_size, cents FROM w
         |WHERE (m1 IS NULL OR m1 < p_size) AND m2 <= p_size
-        |ORDER BY p_partkey""".stripMargin,
-    "q_layout_zorder" ->
+        |ORDER BY p_partkey""".stripMargin),
+    QueryDef("q_layout_zorder", qLayoutZorder,
       """WITH base AS (
         |  SELECT user_id & 65535 AS u,
         |         (epoch_us(ts) // 3600000000) - 473352 AS h
@@ -793,11 +776,11 @@ object AdvancedQueries {
         |  CAST(sum(CASE WHEN min_u <= 199 AND max_u >= 100 AND min_h <= 339
         |                 AND max_h >= 240 THEN rws ELSE 0 END) AS BIGINT) AS rows_scanned,
         |  CAST(sum(m) AS BIGINT) AS rows_matched FROM ft)
-        |SELECT * FROM cz UNION ALL SELECT * FROM ct ORDER BY layout""".stripMargin,
-    "q_skew_distinct" ->
+        |SELECT * FROM cz UNION ALL SELECT * FROM ct ORDER BY layout""".stripMargin),
+    QueryDef("q_skew_distinct", qSkewDistinct,
       """SELECT l_returnflag, count(DISTINCT l_partkey) AS n_distinct
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_w_rank_family" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    QueryDef("q_w_rank_family", qWRankFamily,
       """SELECT o_orderkey, o_custkey, pr, cd, quartile, cheapest_key FROM (
         |  SELECT o_orderkey, o_custkey,
         |    percent_rank() OVER w AS pr,
@@ -808,33 +791,33 @@ object AdvancedQueries {
         |       ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS cheapest_key
         |  FROM orders
         |  WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice, o_orderkey))
-        |WHERE o_orderkey % 100 = 0 ORDER BY o_orderkey""".stripMargin,
-    "q_w_range_frame" ->
+        |WHERE o_orderkey % 100 = 0 ORDER BY o_orderkey""".stripMargin),
+    QueryDef("q_w_range_frame", qWRangeFrame,
       """SELECT event_id, user_id,
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) OVER (
         |    PARTITION BY user_id ORDER BY epoch_us(ts)
         |    RANGE BETWEEN 600000000 PRECEDING AND CURRENT ROW) AS DOUBLE) AS sum_10min
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q_grouping_sets" ->
+        |FROM events ORDER BY event_id""".stripMargin),
+    QueryDef("q_grouping_sets", qGroupingSets,
       """SELECT coalesce(o_orderstatus, 'ALL') AS status,
         |  coalesce(o_orderpriority, 'ALL') AS priority, count(*) AS n
         |FROM orders
         |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        |ORDER BY status, priority""".stripMargin,
-    "q_cond_agg" ->
+        |ORDER BY status, priority""".stripMargin),
+    QueryDef("q_cond_agg", qCondAgg,
       """SELECT user_id,
         |  count(*) FILTER (event_type = 'click') AS n_click,
         |  count(*) FILTER (event_type = 'view') AS n_view,
         |  count(*) FILTER (event_type = 'purchase') AS n_purchase,
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) FILTER (event_type = 'purchase') AS DOUBLE) AS purchase_value
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_regex_extract" ->
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
+    QueryDef("q_regex_extract", qRegexExtract,
       """SELECT c_custkey,
         |  CAST(regexp_extract(c_name, '(\d+)', 1) AS BIGINT) AS name_num,
         |  length(c_name) AS name_len,
         |  CAST(regexp_extract(c_name, '(\d+)', 1) AS BIGINT) = c_custkey AS id_matches_name
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "q_asof_prev_view" ->
+        |FROM customer ORDER BY c_custkey""".stripMargin),
+    QueryDef("q_asof_prev_view", qAsofPrevView,
       """WITH w AS (
         |  SELECT event_id, user_id, event_type,
         |    last_value(CASE WHEN event_type = 'view' THEN event_id END IGNORE NULLS) OVER (
@@ -842,16 +825,16 @@ object AdvancedQueries {
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS last_view_id
         |  FROM events)
         |SELECT event_id, user_id, last_view_id
-        |FROM w WHERE event_type = 'purchase' ORDER BY event_id""".stripMargin,
-    "q_above_nation_avg" ->
+        |FROM w WHERE event_type = 'purchase' ORDER BY event_id""".stripMargin),
+    QueryDef("q_above_nation_avg", qAboveNationAvg,
       """WITH na AS (
         |  SELECT c_nationkey,
         |    CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS nation_avg
         |  FROM customer GROUP BY c_nationkey)
         |SELECT c_custkey, c.c_nationkey, c_acctbal, round(nation_avg, 6) AS nation_avg
         |FROM customer c JOIN na ON c.c_nationkey = na.c_nationkey
-        |WHERE c_acctbal > nation_avg ORDER BY c_custkey""".stripMargin,
-    "q_natural_sort" ->
+        |WHERE c_acctbal > nation_avg ORDER BY c_custkey""".stripMargin),
+    QueryDef("q_natural_sort", qNaturalSort,
       """WITH k AS (
         |  SELECT n_nationkey, n_name,
         |    regexp_replace(n_name, '\d+', '', 'g') AS prefix,
@@ -862,6 +845,6 @@ object AdvancedQueries {
         |  row_number() OVER (ORDER BY prefix, num, n_nationkey) AS nat_rank,
         |  row_number() OVER (ORDER BY n_name, n_nationkey)
         |    <> row_number() OVER (ORDER BY prefix, num, n_nationkey) AS order_differs
-        |FROM k ORDER BY n_nationkey""".stripMargin,
+        |FROM k ORDER BY n_nationkey""".stripMargin),
   )
 }

@@ -145,17 +145,8 @@ object DatasetQueries {
       .orderBy("lang")
   }
 
-  val defs: Map[String, QueryFn] = Map(
-    "q_ds_class_weights" -> qDsClassWeights _,
-    "q_ds_kfold" -> qDsKfold _,
-    "q_ds_split_contract" -> qDsSplitContract _,
-    "q_ds_nested_prefix" -> qDsNestedPrefix _,
-    "q_ds_balance" -> qDsBalance _,
-    "q_ds_build" -> qDsBuild _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_ds_class_weights" ->
+  val registry: Seq[QueryDef] = Seq(
+    QueryDef("q_ds_class_weights", qDsClassWeights,
       """WITH cls AS (
         |  SELECT lang, count(*) AS n,
         |    CAST(round(1e9 * (1.0 - 0.999) /
@@ -169,12 +160,12 @@ object DatasetQueries {
         |       AS BIGINT) AS eff_w_norm_ppm,
         |  CAST(round(1000000.0 * CAST(n_tot AS DOUBLE) / CAST(k * n AS DOUBLE))
         |       AS BIGINT) AS invfreq_ppm
-        |FROM cls, tot ORDER BY lang""".stripMargin,
-    "q_ds_kfold" ->
+        |FROM cls, tot ORDER BY lang""".stripMargin),
+    QueryDef("q_ds_kfold", qDsKfold,
       """SELECT ('0x' || substring(md5(source), 1, 8))::BIGINT % 5 AS fold,
         |  lang, count(*) AS n_docs, count(DISTINCT source) AS n_sources,
         |  min(source) AS first_source, CAST(sum(n_chars) AS BIGINT) AS n_chars_total
-        |FROM documents GROUP BY 1, 2 ORDER BY fold, lang""".stripMargin,
+        |FROM documents GROUP BY 1, 2 ORDER BY fold, lang""".stripMargin),
     // full-pipeline contract over the FIXED 30-plane fixture: 30 fovs
     // (breast 20, lung 10), each 20x20 with 16 area-16 cells, tiled
     // 2x2 into 10x10 outputs (4 cells each => n_cells = 4*n_images).
@@ -184,44 +175,44 @@ object DatasetQueries {
     // train 16/7 breast/lung), and train balancing oversamples lung
     // 7->16 fovs. In tiles: breast 8/8/64, lung 4/8/64. Pinned — the
     // engine must reproduce these from the real seeded pipeline.
-    "q_ds_build" ->
+    QueryDef("q_ds_build", qDsBuild,
       """SELECT * FROM (VALUES
         |  ('breast', 'test',  8,  32), ('breast', 'train', 64, 256),
         |  ('breast', 'val',   8,  32), ('lung',   'test',  4,  16),
         |  ('lung',   'train', 64, 256), ('lung',  'val',   8,  32)
         |) AS t(tissue, split, n_images, n_cells)
-        |ORDER BY tissue, split""".stripMargin,
+        |ORDER BY tissue, split""".stripMargin),
     // splitCounts((0.8,0.1,0.1)) main path: remainder = ceil(0.2 * n),
     // test = ceil(0.5 * remainder), val = remainder - test, train =
     // n - remainder. 0.2 * n is the same IEEE double product Scala
     // computes (valRemainderRatio rounds to exactly 0.2), so the ceil
     // chain replays bit-for-bit. Small-N degradation branches
     // (n <= 2, sub-1 expected val/test) cannot trigger at any test SF.
-    "q_ds_split_contract" ->
+    QueryDef("q_ds_split_contract", qDsSplitContract,
       """WITH n AS (SELECT count(*) AS n FROM orders),
         |c AS (SELECT n, CAST(ceil(0.2 * n) AS BIGINT) AS remainder FROM n),
         |d AS (SELECT n, remainder, CAST(ceil(0.5 * remainder) AS BIGINT) AS test FROM c)
         |SELECT 'test' AS split, test AS n FROM d
         |UNION ALL SELECT 'train', n - remainder FROM d
         |UNION ALL SELECT 'val', remainder - test FROM d
-        |ORDER BY split""".stripMargin,
+        |ORDER BY split""".stripMargin, eager = true), // split-size counts at construction
     // the R3 contract: each nested split holds exactly its requested
     // count and is a prefix (subset) of the next larger one. The
     // verdicts are pinned — the engine derives them from real
     // anti-join counts over the seeded permutation.
-    "q_ds_nested_prefix" ->
+    QueryDef("q_ds_nested_prefix", qDsNestedPrefix,
       """SELECT '10' AS split, CAST(10 AS BIGINT) AS n, true AS is_prefix_of_next
         |UNION ALL
         |SELECT '100', CAST(100 AS BIGINT), true
-        |ORDER BY split""".stripMargin,
+        |ORDER BY split""".stripMargin, eager = true), // split-size counts at construction
     // R5: every category oversamples to exactly the max category
     // count; distinct keys per category are untouched by duplication.
-    "q_ds_balance" ->
+    QueryDef("q_ds_balance", qDsBalance,
       """WITH c AS (SELECT c_mktsegment, count(*) AS cnt,
         |             count(DISTINCT c_custkey) AS n_distinct
         |           FROM customer GROUP BY 1),
         |m AS (SELECT max(cnt) AS mx FROM c)
         |SELECT c_mktsegment, mx AS n, n_distinct FROM c, m
-        |ORDER BY c_mktsegment""".stripMargin,
+        |ORDER BY c_mktsegment""".stripMargin),
   )
 }

@@ -456,22 +456,8 @@ object DedupQueries {
       .orderBy("doc_a", "doc_b")
   }
 
-  val defs: Map[String, QueryFn] = Map(
-    "q_dedup_fuzzy" -> qDedupFuzzy _,
-    "q_dedup_containment" -> qDedupContainment _,
-    "q_dedup_incremental" -> qDedupIncremental _,
-    "q_dedup_exact" -> qDedupExact _,
-    "q_dedup_weights" -> qDedupWeights _,
-    "q_dedup_keep_first" -> qDedupKeepFirst _,
-    "q_dedup_jaccard_pairs" -> qDedupJaccardPairs _,
-    "q_dedup_components" -> qDedupComponents _,
-    "q_dedup_cluster_split" -> qDedupClusterSplit _,
-    "q_corpus_build" -> qCorpusBuild _,
-    "q_dedup_group_keeper" -> qDedupGroupKeeper _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_dedup_fuzzy" ->
+  val registry: Seq[QueryDef] = Seq(
+    QueryDef("q_dedup_fuzzy", qDedupFuzzy,
       """WITH t AS (
         |  SELECT doc_id,
         |         lower(substr(regexp_replace(text, '\s+', ' ', 'g'), 1, 40)) AS title
@@ -484,8 +470,8 @@ object DedupQueries {
         |   AND abs(length(a.title) - length(b.title)) <= 1)
         |SELECT doc_a, doc_b, CAST(d AS INTEGER) AS dist
         |FROM p WHERE d <= 1
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "q_dedup_containment" ->
+        |ORDER BY doc_a, doc_b""".stripMargin),
+    QueryDef("q_dedup_containment", qDedupContainment,
       """WITH tk AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
         |sh AS (
         |  SELECT doc_id, unnest(
@@ -512,8 +498,8 @@ object DedupQueries {
         |JOIN fsets fb ON cand.doc_b = fb.doc_id
         |WHERE CAST(len(list_intersect(fa.shs, fb.shs)) AS DOUBLE)
         |    / least(len(fa.shs), len(fb.shs)) >= 0.9
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "q_dedup_incremental" ->
+        |ORDER BY doc_a, doc_b""".stripMargin),
+    QueryDef("q_dedup_incremental", qDedupIncremental,
       """WITH fp AS (
         |  SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
         |  FROM documents),
@@ -524,10 +510,10 @@ object DedupQueries {
         |SELECT doc_id, fp FROM (
         |  SELECT doc_id, fp, min(doc_id) OVER (PARTITION BY fp) AS keeper
         |  FROM novel)
-        |WHERE doc_id = keeper ORDER BY doc_id""".stripMargin,
-    "q_dedup_exact" ->
-      "SELECT count(*) AS n_docs, count(DISTINCT md5(text)) AS n_unique FROM documents",
-    "q_dedup_weights" ->
+        |WHERE doc_id = keeper ORDER BY doc_id""".stripMargin),
+    QueryDef("q_dedup_exact", qDedupExact,
+      "SELECT count(*) AS n_docs, count(DISTINCT md5(text)) AS n_unique FROM documents"),
+    QueryDef("q_dedup_weights", qDedupWeights,
       """WITH f AS (
         |  SELECT lang, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
         |  FROM documents),
@@ -536,14 +522,14 @@ object DedupQueries {
         |  CAST(sum(1000000 // sz) AS BIGINT) AS eff_micro,
         |  CAST(min(1000000 // sz) AS BIGINT) AS min_w,
         |  CAST(max(1000000 // sz) AS BIGINT) AS max_w
-        |FROM s GROUP BY lang ORDER BY lang""".stripMargin,
-    "q_dedup_keep_first" ->
+        |FROM s GROUP BY lang ORDER BY lang""".stripMargin),
+    QueryDef("q_dedup_keep_first", qDedupKeepFirst,
       """SELECT doc_id, fp FROM (
         |  SELECT doc_id, md5(text) AS fp,
         |    min(doc_id) OVER (PARTITION BY md5(text)) AS keeper
         |  FROM documents)
-        |WHERE doc_id = keeper ORDER BY doc_id""".stripMargin,
-    "q_dedup_jaccard_pairs" ->
+        |WHERE doc_id = keeper ORDER BY doc_id""".stripMargin),
+    QueryDef("q_dedup_jaccard_pairs", qDedupJaccardPairs,
       """WITH base0 AS (
         |  SELECT doc_id, lang, len(string_split(text, ' ')) AS n_tokens,
         |    CASE WHEN len(string_split(text, ' ')) >= 3 THEN
@@ -571,11 +557,11 @@ object DedupQueries {
         |WHERE len(list_distinct(list_concat(sh_a, sh_b))) > 0
         |  AND CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
         |    / len(list_distinct(list_concat(sh_a, sh_b))) >= 0.5
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "q_dedup_group_keeper" ->
+        |ORDER BY doc_a, doc_b""".stripMargin),
+    QueryDef("q_dedup_group_keeper", qDedupGroupKeeper,
       """SELECT lang, source, min(doc_id) AS keeper, count(*) AS n_members
-        |FROM documents GROUP BY lang, source ORDER BY lang, source""".stripMargin,
-    "q_dedup_components" ->
+        |FROM documents GROUP BY lang, source ORDER BY lang, source""".stripMargin),
+    QueryDef("q_dedup_components", qDedupComponents,
       """WITH RECURSIVE base0 AS (
         |  SELECT doc_id, len(string_split(text, ' ')) AS n_tokens,
         |    CASE WHEN len(string_split(text, ' ')) >= 3 THEN
@@ -605,7 +591,8 @@ object DedupQueries {
         |  SELECT e.b, r.root FROM reach r JOIN edges e ON e.a = r.id)
         |SELECT id AS doc_id, CAST(min(root) AS BIGINT) AS component
         |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin,
-    "q_dedup_cluster_split" ->
+      eager = true), // iterate-to-fixpoint component counts at construction
+    QueryDef("q_dedup_cluster_split", qDedupClusterSplit,
       """WITH RECURSIVE base0 AS (
         |  SELECT doc_id, len(string_split(text, ' ')) AS n_tokens,
         |    CASE WHEN len(string_split(text, ' ')) >= 3 THEN
@@ -641,7 +628,8 @@ object DedupQueries {
         |    WHEN cluster % 10 = 8 THEN 'val' ELSE 'test' END AS split,
         |  count(DISTINCT cluster) AS n_clusters, count(*) AS n_docs
         |FROM clustered GROUP BY 1 ORDER BY split""".stripMargin,
-    "q_corpus_build" ->
+      eager = true), // iterate-to-fixpoint component counts at construction
+    QueryDef("q_corpus_build", qCorpusBuild,
       """WITH RECURSIVE base0 AS (
         |  SELECT doc_id, len(string_split(text, ' ')) AS n_tokens,
         |    CASE WHEN len(string_split(text, ' ')) >= 3 THEN
@@ -684,5 +672,6 @@ object DedupQueries {
         |SELECT lang, count(*) AS n_docs,
         |  CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS total_tokens
         |FROM cleaned GROUP BY lang ORDER BY lang""".stripMargin,
+      eager = true), // shared base-projection localCheckpoint at construction
   )
 }

@@ -404,17 +404,6 @@ object DqQueries {
       .orderBy("qi_level")
   }
 
-  val defs: Map[String, QueryFn] = Map(
-    "q_priv_dp_hist" -> qPrivDpHist _,
-    "q_priv_dp_mean" -> qPrivDpMean _,
-    "q_priv_tclose" -> qPrivTclose _,
-    "q_priv_ldiv" -> qPrivLdiv _,
-    "q_priv_kanon" -> qPrivKanon _,
-    "q_dq_profile" -> qDqProfile _,
-    "q_dq_constraints" -> qDqConstraints _,
-    "q_skew_preflight" -> qSkewPreflight _,
-  )
-
   private def skewOracleRow(tbl: String, key: String): String =
     s"""SELECT '$tbl' AS tbl, '$key' AS key,
        |  CAST(sum(c) AS BIGINT) AS n_rows, count(*) AS n_keys,
@@ -423,8 +412,8 @@ object DqQueries {
        |  floor(100 * max(c) * count(*) / sum(c)) > 1600 AS salt_recommended
        |FROM (SELECT count(*) AS c FROM $tbl GROUP BY $key)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q_priv_tclose" ->
+  val registry: Seq[QueryDef] = Seq(
+    QueryDef("q_priv_tclose", qPrivTclose,
       """WITH cust AS (
         |  SELECT c_nationkey, c_mktsegment,
         |         CAST(floor(CAST(round(c_acctbal * 100) AS BIGINT) / 100000.0)
@@ -466,8 +455,8 @@ object DqQueries {
         |  count(CASE WHEN t_ppm > 200000 THEN 1 END) AS classes_above_t02,
         |  CAST(sum(CASE WHEN t_ppm > 200000 THEN n_c ELSE 0 END) AS BIGINT)
         |    AS rows_above_t02
-        |FROM tt GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_priv_ldiv" ->
+        |FROM tt GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q_priv_ldiv", qPrivLdiv,
       """WITH cust AS (
         |  SELECT c_nationkey, c_mktsegment,
         |         CAST(floor(CAST(round(c_acctbal * 100) AS BIGINT) / 100000.0)
@@ -504,10 +493,10 @@ object DqQueries {
         |  SELECT qi_level, 8, n_classes, c8, r8 FROM u
         |  UNION ALL
         |  SELECT qi_level, 11, n_classes, c11, r11 FROM u)
-        |ORDER BY qi_level, l""".stripMargin,
+        |ORDER BY qi_level, l""".stripMargin),
     // Clamped-mean replay: same clamp, same seeded draw, same integer
     // micro arithmetic.
-    "q_priv_dp_mean" ->
+    QueryDef("q_priv_dp_mean", qPrivDpMean,
       """WITH ev AS (
         |  SELECT event_type,
         |    least(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT),
@@ -529,11 +518,11 @@ object DqQueries {
         |  (sum_micro + noise_micro) // n AS released_mean_micro,
         |  CAST(100000000 AS BIGINT) AS clamp_micro,
         |  CAST(1000000 AS BIGINT) AS eps_micro
-        |FROM nz ORDER BY event_type""".stripMargin,
+        |FROM nz ORDER BY event_type""".stripMargin),
     // Seeded-Laplace replay: the same md5-keyed inverse-CDF transform
     // on identical operands — noise is deterministic by design (the
     // release-audit property), so the whole release hashes exactly.
-    "q_priv_dp_hist" ->
+    QueryDef("q_priv_dp_hist", qPrivDpHist,
       """WITH h AS (
         |  SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
         |         count(*) AS n
@@ -553,8 +542,8 @@ object DqQueries {
         |SELECT event_type, day, n, noise_micro,
         |  CAST(n * 1000000 + noise_micro AS BIGINT) AS released_micro,
         |  CAST(1000000 AS BIGINT) AS eps_micro
-        |FROM nz ORDER BY event_type, day""".stripMargin,
-    "q_priv_kanon" ->
+        |FROM nz ORDER BY event_type, day""".stripMargin),
+    QueryDef("q_priv_kanon", qPrivKanon,
       """WITH cust AS (
         |  SELECT c_nationkey, c_mktsegment,
         |         CAST(floor(CAST(round(c_acctbal * 100) AS BIGINT) / 100000.0)
@@ -590,11 +579,11 @@ object DqQueries {
         |  SELECT qi_level, 5, n_classes, c5, r5 FROM u
         |  UNION ALL
         |  SELECT qi_level, 11, n_classes, c11, r11 FROM u)
-        |ORDER BY qi_level, k""".stripMargin,
+        |ORDER BY qi_level, k""".stripMargin),
     // hll_ok replays as TRUE: the oracle owns the exact NDV; the
     // sketch estimate is Spark-side and gated by the verdict column
     // (the q_evt_value_pctl discipline)
-    "q_dq_profile" ->
+    QueryDef("q_dq_profile", qDqProfile,
       """WITH li AS (
         |  SELECT 'lineitem' AS tbl, c.col_name,
         |    (SELECT count(*) FROM lineitem) AS n_rows,
@@ -647,14 +636,14 @@ object DqQueries {
         |      ELSE (SELECT CAST(max(user_id) AS VARCHAR) FROM events) END AS max_s
         |  FROM (VALUES ('event_type'), ('user_id')) c(col_name))
         |SELECT * FROM li UNION ALL SELECT * FROM o UNION ALL SELECT * FROM e
-        |ORDER BY tbl, col_name""".stripMargin,
-    "q_skew_preflight" ->
+        |ORDER BY tbl, col_name""".stripMargin),
+    QueryDef("q_skew_preflight", qSkewPreflight,
       (Seq(("lineitem", "l_orderkey"), ("lineitem", "l_suppkey"),
         ("orders", "o_custkey"), ("events", "user_id"),
         ("events", "event_type"), ("documents", "source"))
         .map { case (t0, k) => skewOracleRow(t0, k) }
-        .mkString("SELECT * FROM (\n", "\nUNION ALL\n", "\n) ORDER BY tbl, key")),
-    "q_dq_constraints" ->
+        .mkString("SELECT * FROM (\n", "\nUNION ALL\n", "\n) ORDER BY tbl, key"))),
+    QueryDef("q_dq_constraints", qDqConstraints,
       """WITH rep AS (
         |  SELECT 'orders' AS tbl, 'o_orderkey_unique' AS cname,
         |    count(*) AS n_checked,
@@ -694,6 +683,6 @@ object DqQueries {
         |SELECT tbl, cname, CAST(n_checked AS BIGINT) AS n_checked,
         |  CAST(n_violations AS BIGINT) AS n_violations,
         |  n_violations = 0 AS ok
-        |FROM rep ORDER BY tbl, cname""".stripMargin,
+        |FROM rep ORDER BY tbl, cname""".stripMargin),
   )
 }

@@ -2097,70 +2097,6 @@ object EventQueries {
           .otherwise(lit(null).cast("long")).as("eta2_ppm"))
   }
 
-  val defs: Map[String, QueryFn] = Map(
-    "q_evt_anova" -> qEvtAnova _,
-    "q_evt_kruskal" -> qEvtKruskal _,
-    "q_evt_wasserstein" -> qEvtWasserstein _,
-    "q_evt_did" -> qEvtDid _,
-    "q_evt_winsor" -> qEvtWinsor _,
-    "q_evt_psi" -> qEvtPsi _,
-    "q_evt_bootstrap" -> qEvtBootstrap _,
-    "q_evt_spearman" -> qEvtSpearman _,
-    "q_evt_entropy_rate" -> qEvtEntropyRate _,
-    "q_eval_lift" -> qEvalLift _,
-    "q_eval_auc" -> qEvalAuc _,
-    "q_evt_mi" -> qEvtMi _,
-    "q_evt_ks" -> qEvtKs _,
-    "q_evt_survival" -> qEvtSurvival _,
-    "q_evt_stickiness" -> qEvtStickiness _,
-    "q_evt_benford" -> qEvtBenford _,
-    "q_evt_gini" -> qEvtGini _,
-    "q_evt_cuped" -> qEvtCuped _,
-    "q_evt_variant" -> qEvtVariant _,
-    "q_evt_srm" -> qEvtSrm _,
-    "q_evt_countmin" -> qEvtCountmin _,
-    "q_evt_gap_fill" -> qEvtGapFill _,
-    "q_evt_acf" -> qEvtAcf _,
-    "q_evt_attribution" -> qEvtAttribution _,
-    "q_evt_pattern" -> qEvtPattern _,
-    "q_evt_value_pctl" -> qEvtValuePctl _,
-    "q_evt_abtest" -> qEvtAbtest _,
-    "q_evt_pivot" -> qEvtPivot _,
-    "q_evt_rfm" -> qEvtRfm _,
-    "q_evt_unpivot" -> qEvtUnpivot _,
-    "q_evt_pipeline" -> qEvtPipeline _,
-    "q_evt_forecast" -> qEvtForecast _,
-    "q_evt_cusum" -> qEvtCusum _,
-    "q_evt_seasonality" -> qEvtSeasonality _,
-    "q_evt_interarrival" -> qEvtInterarrival _,
-    "q_evt_audience_overlap" -> qEvtAudienceOverlap _,
-    "q_evt_top_paths" -> qEvtTopPaths _,
-    "q_evt_cohort_ltv" -> qEvtCohortLtv _,
-    "q_evt_drift" -> qEvtDrift _,
-    "q_evt_ewma" -> qEvtEwma _,
-    "q_evt_hll_rolling" -> qEvtHllRolling _,
-    "q_evt_anomaly" -> qEvtAnomaly _,
-    "q_evt_funnel" -> qEvtFunnel _,
-    "q_evt_retention" -> qEvtRetention _,
-    "q_evt_hourly" -> qEvtHourly _,
-    "q_evt_sessionize" -> qEvtSessionize _,
-    "q_evt_session_stats" -> qEvtSessionStats _,
-    "q_evt_hopping" -> qEvtHopping _,
-    "q_evt_json" -> qEvtJson _,
-    "q_evt_asof" -> qEvtAsof _,
-    "q_evt_asof_native" -> qEvtAsofNative _,
-    "q_evt_asof_tol" -> qEvtAsofTol _,
-    "q_evt_range_join" -> qEvtRangeJoin _,
-    "q_evt_range_sql" -> qEvtRangeSql _,
-    "q_evt_overlap_join" -> qEvtOverlapJoin _,
-    "q_evt_overlap_sql" -> qEvtOverlapSql _,
-    "q_evt_transitions" -> qEvtTransitions _,
-    "q_evt_scd2" -> qEvtScd2 _,
-    "q_evt_concurrency" -> qEvtConcurrency _,
-    "q_evt_merge_upsert" -> qEvtMergeUpsert _,
-    "q_evt_audience_hll" -> qEvtAudienceHll _,
-  )
-
   /** SCD2 (slowly-changing-dimension type 2) interval build — the
     * warehouse-staple temporal operator: collapse each user's purchase
     * stream into versioned validity intervals of a derived attribute
@@ -2358,8 +2294,68 @@ object EventQueries {
        |FROM m""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "q_evt_anova" ->
+  // Counter replay, not a verdict: each probed CMS cell is a
+  // COUNT(*) over the identical bucket predicate (params literal-
+  // shared with graft.functions.CountMin), so the estimate VALUES
+  // hash-match — any hash or merge defect in the native aggregate
+  // shifts a counter and fails the gate.
+  private[queries] val countminOracle: String =
+    s"""WITH params AS (SELECT * FROM (VALUES (0, 131, 7), (1, 1031, 911),
+       |    (2, 131071, 3571), (3, 524287, 77377)) AS t(j, a, b)),
+       |counters AS (
+       |  SELECT p.j,
+       |    ((p.a * (e.user_id % 1000000007) + p.b) % 1000000007) % $cmsW AS bucket,
+       |    count(*) AS c
+       |  FROM events e CROSS JOIN params p GROUP BY 1, 2),
+       |probes AS (SELECT user_id, count(*) AS n_exact FROM events
+       |  WHERE user_id % 13 = 0 GROUP BY 1)
+       |SELECT pr.user_id, pr.n_exact, CAST(min(c.c) AS BIGINT) AS est,
+       |  (min(c.c) >= pr.n_exact) AS over_ok
+       |FROM probes pr CROSS JOIN params p
+       |JOIN counters c ON c.j = p.j
+       |  AND c.bucket = ((p.a * (pr.user_id % 1000000007) + p.b) % 1000000007) % $cmsW
+       |GROUP BY 1, 2 ORDER BY user_id""".stripMargin
+
+  private[queries] val attributionOracle: String =
+    """WITH e AS (
+      |  SELECT user_id, event_id, event_type, epoch_us(ts) AS us,
+      |         CAST(round(value * 100) AS BIGINT) AS cents
+      |  FROM events),
+      |w AS (
+      |  SELECT *,
+      |    last_value(CASE WHEN event_type IN ('click','view')
+      |                    THEN event_type END IGNORE NULLS) OVER (
+      |      PARTITION BY user_id ORDER BY us, event_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS lt_type,
+      |    count(CASE WHEN event_type = 'click' THEN 1 END) OVER (
+      |      PARTITION BY user_id ORDER BY us, event_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS n_click,
+      |    count(CASE WHEN event_type = 'view' THEN 1 END) OVER (
+      |      PARTITION BY user_id ORDER BY us, event_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS n_view
+      |  FROM e),
+      |p AS (
+      |  SELECT *, n_click + n_view AS n_tot FROM w
+      |  WHERE event_type = 'purchase' AND n_click + n_view > 0),
+      |a AS (
+      |  SELECT
+      |    count(CASE WHEN lt_type = 'click' THEN 1 END) AS nlt_c,
+      |    CAST(coalesce(sum(CASE WHEN lt_type = 'click' THEN cents ELSE 0 END), 0) AS BIGINT) AS ltc_c,
+      |    CAST(sum(CAST(round(1000000.0 * n_click / n_tot) AS BIGINT)) AS BIGINT) AS lin_c,
+      |    CAST(sum(CAST(round(cents * 1000000.0 * n_click / n_tot) AS BIGINT)) AS BIGINT) AS linc_c,
+      |    count(CASE WHEN lt_type = 'view' THEN 1 END) AS nlt_v,
+      |    CAST(coalesce(sum(CASE WHEN lt_type = 'view' THEN cents ELSE 0 END), 0) AS BIGINT) AS ltc_v,
+      |    CAST(sum(CAST(round(1000000.0 * n_view / n_tot) AS BIGINT)) AS BIGINT) AS lin_v,
+      |    CAST(sum(CAST(round(cents * 1000000.0 * n_view / n_tot) AS BIGINT)) AS BIGINT) AS linc_v
+      |  FROM p)
+      |SELECT 'click' AS channel, nlt_c AS n_last_touch, ltc_c AS lt_cents,
+      |       lin_c AS lin_credit_ppm, linc_c AS lin_cents_ppm FROM a
+      |UNION ALL
+      |SELECT 'view', nlt_v, ltc_v, lin_v, linc_v FROM a
+      |ORDER BY channel""".stripMargin
+
+  val registry: Seq[QueryDef] = Seq(
+    QueryDef("q_evt_anova", qEvtAnova,
       """WITH e AS (SELECT event_type, CAST(round(value * 100) AS BIGINT) AS x
         |           FROM events),
         |g AS (
@@ -2385,8 +2381,8 @@ object EventQueries {
         |  CASE WHEN ssb + ssw > 0 THEN
         |    CAST(round(1000000.0 * CAST(ssb AS DOUBLE)
         |      / CAST(ssb + ssw AS DOUBLE)) AS BIGINT) END AS eta2_ppm
-        |FROM d""".stripMargin,
-    "q_evt_kruskal" ->
+        |FROM d""".stripMargin),
+    QueryDef("q_evt_kruskal", qEvtKruskal,
       """WITH e AS (SELECT event_type, CAST(round(value * 100) AS BIGINT) AS v_c
         |           FROM events),
         |bv AS (SELECT v_c, count(*) AS t FROM e GROUP BY 1),
@@ -2421,8 +2417,8 @@ object EventQueries {
         |  CAST(round(1000.0 * CAST(r2_i AS DOUBLE) / (2.0 * n_i)) AS BIGINT)
         |    AS mean_rank_milli,
         |  h_milli, h_corr_milli
-        |FROM g, h ORDER BY event_type""".stripMargin,
-    "q_evt_wasserstein" ->
+        |FROM g, h ORDER BY event_type""".stripMargin),
+    QueryDef("q_evt_wasserstein", qEvtWasserstein,
       """WITH pairs(cohort_a, cohort_b) AS (VALUES ('view', 'click'), ('purchase', 'error')),
         |e AS (SELECT event_type, CAST(round(value * 100) AS BIGINT) AS v_c FROM events),
         |grp AS (
@@ -2447,8 +2443,8 @@ object EventQueries {
         |         / (CAST(min(n_a) AS DOUBLE) * min(n_b)))) AS BIGINT)
         |  END AS w1_millicents
         |FROM ecdf
-        |GROUP BY 1, 2 ORDER BY 1""".stripMargin,
-    "q_evt_did" ->
+        |GROUP BY 1, 2 ORDER BY 1""".stripMargin),
+    QueryDef("q_evt_did", qEvtDid,
       """WITH e AS (
         |  SELECT ((user_id * 2654435761) % 4294967296) % 2 AS treat,
         |    CASE WHEN ts >= TIMESTAMP '2024-01-16 00:00:00' THEN 1 ELSE 0 END AS post,
@@ -2478,8 +2474,8 @@ object EventQueries {
         |    ELSE CAST(round(1000.0 * ((CAST(s_post_trt AS DOUBLE) / n_post_trt - CAST(s_pre_trt AS DOUBLE) / n_pre_trt)
         |      - (CAST(s_post_ctl AS DOUBLE) / n_post_ctl - CAST(s_pre_ctl AS DOUBLE) / n_pre_ctl)))
         |      AS BIGINT) END AS did_milli
-        |FROM a""".stripMargin,
-    "q_evt_winsor" ->
+        |FROM a""".stripMargin),
+    QueryDef("q_evt_winsor", qEvtWinsor,
       """WITH e AS (SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents
         |           FROM events),
         |sup AS (
@@ -2502,10 +2498,10 @@ object EventQueries {
         |  CAST(round(1000.0 * CAST(sum(greatest(lo_cents, least(hi_cents, cents)))
         |    AS DOUBLE) / count(*)) AS BIGINT) AS winsor_mean_milli
         |FROM e JOIN b ON e.event_type = b.event_type
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_evt_psi" -> psiOracle(emissionLaw = false),
-    "q_evt_bootstrap" -> bootstrapOracle,
-    "q_evt_spearman" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q_evt_psi", qEvtPsi, psiOracle(emissionLaw = false)),
+    QueryDef("q_evt_bootstrap", qEvtBootstrap, bootstrapOracle),
+    QueryDef("q_evt_spearman", qEvtSpearman,
       """WITH u AS (
         |  SELECT user_id, count(*) AS x,
         |         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
@@ -2533,8 +2529,8 @@ object EventQueries {
         |    sqrt((CAST(sp.n AS DOUBLE)*CAST(sp.sxx AS DOUBLE) - CAST(sp.sx AS DOUBLE)*CAST(sp.sx AS DOUBLE)) *
         |         (CAST(sp.n AS DOUBLE)*CAST(sp.syy AS DOUBLE) - CAST(sp.sy AS DOUBLE)*CAST(sp.sy AS DOUBLE))))
         |    AS BIGINT) AS spearman_ppm
-        |FROM p, sp""".stripMargin,
-    "q_evt_entropy_rate" ->
+        |FROM p, sp""".stripMargin),
+    QueryDef("q_evt_entropy_rate", qEvtEntropyRate,
       """WITH t0 AS (
         |  SELECT event_type,
         |    lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
@@ -2554,8 +2550,8 @@ object EventQueries {
         |UNION ALL
         |SELECT '__RATE__', t_tot,
         |  CAST(round(CAST(wh AS DOUBLE) / t_tot) AS BIGINT) FROM tot
-        |ORDER BY event_type""".stripMargin,
-    "q_eval_lift" ->
+        |ORDER BY event_type""".stripMargin),
+    QueryDef("q_eval_lift", qEvalLift,
       """WITH u AS (
         |  SELECT user_id, count(*) AS n_events,
         |         max(CASE WHEN event_type = 'purchase' AND value >= 200.0
@@ -2576,8 +2572,8 @@ object EventQueries {
         |  CAST(floor(1000000 * cum_pos / p_tot) AS BIGINT) AS capture_ppm,
         |  CAST(round(1000000.0 * (CAST(cum_pos AS DOUBLE) / p_tot) /
         |    (CAST(cum_n AS DOUBLE) / n_tot)) AS BIGINT) AS lift_ppm
-        |FROM c ORDER BY decile""".stripMargin,
-    "q_eval_auc" ->
+        |FROM c ORDER BY decile""".stripMargin),
+    QueryDef("q_eval_auc", qEvalAuc,
       """WITH u AS (
         |  SELECT user_id, count(*) AS n_events,
         |         count(DISTINCT CAST(ts AS DATE)) AS active_days,
@@ -2600,8 +2596,8 @@ object EventQueries {
         |  CAST(sum(q) AS BIGINT) AS n_neg,
         |  CAST(round(1000000.0 * (CAST(sum(p * (2 * below_q + q)) AS DOUBLE)
         |    / (2.0 * sum(p) * sum(q)))) AS BIGINT) AS auc_ppm
-        |FROM cum GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_evt_mi" ->
+        |FROM cum GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q_evt_mi", qEvtMi,
       """WITH e AS (SELECT event_type, hour(ts) AS hr FROM events),
         |cells AS (SELECT event_type, hr, count(*) AS n_obs FROM e GROUP BY 1, 2),
         |rm AS (SELECT event_type, count(*) AS n_x FROM e GROUP BY 1),
@@ -2625,8 +2621,8 @@ object EventQueries {
         |SELECT event_type, CAST(sum(n_xy) AS BIGINT) AS n, count(*) AS n_cells,
         |  CAST(sum(mi_nnat) AS BIGINT) AS mi_nnat,
         |  CAST(sum(chi2_micro) AS BIGINT) AS chi2_micro
-        |FROM terms GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_evt_ks" ->
+        |FROM terms GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q_evt_ks", qEvtKs,
       """WITH pairs(cohort_a, cohort_b) AS (VALUES ('view', 'click'), ('purchase', 'error')),
         |e AS (SELECT event_type, CAST(round(value * 100) AS BIGINT) AS v_c FROM events),
         |grp AS (
@@ -2655,8 +2651,8 @@ object EventQueries {
         |  min(v_c) AS at_value_cents
         |FROM d JOIN dm ON d.cohort_a = dm.cohort_a AND d.cohort_b = dm.cohort_b
         |WHERE d_num = d_max
-        |GROUP BY 1, 2 ORDER BY 1""".stripMargin,
-    "q_evt_survival" ->
+        |GROUP BY 1, 2 ORDER BY 1""".stripMargin),
+    QueryDef("q_evt_survival", qEvtSurvival,
       """WITH u AS (
         |  SELECT user_id, min(epoch_us(ts)) AS first_us,
         |         min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS buy_us
@@ -2676,8 +2672,8 @@ object EventQueries {
         |  CAST(d AS BIGINT) AS n_death,
         |  round(exp(sum(ln(1 - CAST(d AS DOUBLE) / n_risk)) OVER (ORDER BY t_h
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)), 6) AS surv
-        |FROM risk ORDER BY t_hours""".stripMargin,
-    "q_evt_stickiness" ->
+        |FROM risk ORDER BY t_hours""".stripMargin),
+    QueryDef("q_evt_stickiness", qEvtStickiness,
       """WITH e AS (SELECT strftime(ts, '%Y-%m') AS month,
         |    strftime(ts, '%Y-%m-%d') AS day, user_id FROM events),
         |daily AS (SELECT month, day, CAST(count(DISTINCT user_id) AS BIGINT) AS dau
@@ -2689,8 +2685,8 @@ object EventQueries {
         |  FROM e GROUP BY 1)
         |SELECT dm.month, n_days, sum_dau, peak_dau, mau,
         |  CAST(floor(1000000 * sum_dau / (n_days * mau)) AS BIGINT) AS stickiness_ppm
-        |FROM dm JOIN mm ON dm.month = mm.month ORDER BY dm.month""".stripMargin,
-    "q_evt_benford" ->
+        |FROM dm JOIN mm ON dm.month = mm.month ORDER BY dm.month""".stripMargin),
+    QueryDef("q_evt_benford", qEvtBenford,
       """WITH c AS (SELECT CAST(round(value * 100) AS BIGINT) AS cents FROM events
         |  WHERE CAST(round(value * 100) AS BIGINT) > 0),
         |d AS (SELECT CAST(substr(CAST(cents AS VARCHAR), 1, 1) AS BIGINT) AS digit FROM c),
@@ -2703,8 +2699,8 @@ object EventQueries {
         |  CAST(e.benford_ppm AS BIGINT) AS benford_ppm,
         |  CAST(abs(floor(1000000 * g.n / n_total) - e.benford_ppm) AS BIGINT) AS dev_ppm
         |FROM g JOIN e ON g.digit = e.digit CROSS JOIN tot
-        |ORDER BY g.digit""".stripMargin,
-    "q_evt_gini" ->
+        |ORDER BY g.digit""".stripMargin),
+    QueryDef("q_evt_gini", qEvtGini,
       """WITH pu AS (SELECT user_id, CAST(count(*) AS BIGINT) AS x FROM events GROUP BY 1),
         |r AS (SELECT x, CAST(row_number() OVER (ORDER BY x, user_id) AS BIGINT) AS i FROM pu),
         |n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM pu),
@@ -2717,8 +2713,8 @@ object EventQueries {
         |  CAST(floor(1000000.0 * (2 * six - (n + 1) * sx) / (n * sx)) AS BIGINT) AS gini_ppm,
         |  top_decile_events,
         |  CAST(floor(1000000.0 * top_decile_events / sx) AS BIGINT) AS top_decile_ppm
-        |FROM s""".stripMargin,
-    "q_evt_cuped" ->
+        |FROM s""".stripMargin),
+    QueryDef("q_evt_cuped", qEvtCuped,
       """WITH mid AS (SELECT (min(epoch_us(ts)) + max(epoch_us(ts))) // 2 AS mid_us FROM events),
         |pu AS (SELECT user_id,
         |    CAST(sum(CASE WHEN epoch_us(ts) < mid_us THEN CAST(floor(value) AS BIGINT) ELSE 0 END) AS BIGINT) AS x,
@@ -2743,19 +2739,19 @@ object EventQueries {
         |  round(sum_y / n_users, 6) AS mean_y,
         |  round(sum_y / n_users - theta * (sum_x / n_users - sx / n), 6) AS mean_y_cuped,
         |  round(theta, 6) AS theta, var_red_ppm
-        |FROM v, th ORDER BY variant""".stripMargin,
+        |FROM v, th ORDER BY variant""".stripMargin),
     // Typed-extraction values replay via DuckDB's JSON path; the
     // variant SHAPE audit is engine-side reality pinned TRUE (the
     // round-9 multimodal verdict pattern).
-    "q_evt_variant" ->
+    QueryDef("q_evt_variant", qEvtVariant,
       """SELECT event_type, count(*) AS n,
         |  CAST(sum(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
         |  min(CAST(json_extract(props, '$.k') AS BIGINT)) AS min_k,
         |  max(CAST(json_extract(props, '$.k') AS BIGINT)) AS max_k,
         |  count(DISTINCT CAST(json_extract(props, '$.k') AS BIGINT)) AS ndv_k,
         |  TRUE AS shape_ok
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_evt_srm" ->
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q_evt_srm", qEvtSrm,
       """WITH u AS (SELECT event_type, user_id FROM (SELECT DISTINCT event_type, user_id FROM events)
         |  UNION ALL SELECT '_all', user_id FROM (SELECT DISTINCT user_id FROM events)),
         |v AS (SELECT event_type,
@@ -2766,29 +2762,9 @@ object EventQueries {
         |SELECT event_type, CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
         |  CAST(floor(1000000 * (n_a - n_b) * (n_a - n_b) / (n_a + n_b)) AS BIGINT) AS chi2_ppm,
         |  ((n_a - n_b) * (n_a - n_b) * 1000000 > 3841459 * (n_a + n_b)) AS srm
-        |FROM c ORDER BY event_type""".stripMargin,
-    // Counter replay, not a verdict: each probed CMS cell is a
-    // COUNT(*) over the identical bucket predicate (params literal-
-    // shared with graft.functions.CountMin), so the estimate VALUES
-    // hash-match — any hash or merge defect in the native aggregate
-    // shifts a counter and fails the gate.
-    "q_evt_countmin" ->
-      s"""WITH params AS (SELECT * FROM (VALUES (0, 131, 7), (1, 1031, 911),
-         |    (2, 131071, 3571), (3, 524287, 77377)) AS t(j, a, b)),
-         |counters AS (
-         |  SELECT p.j,
-         |    ((p.a * (e.user_id % 1000000007) + p.b) % 1000000007) % $cmsW AS bucket,
-         |    count(*) AS c
-         |  FROM events e CROSS JOIN params p GROUP BY 1, 2),
-         |probes AS (SELECT user_id, count(*) AS n_exact FROM events
-         |  WHERE user_id % 13 = 0 GROUP BY 1)
-         |SELECT pr.user_id, pr.n_exact, CAST(min(c.c) AS BIGINT) AS est,
-         |  (min(c.c) >= pr.n_exact) AS over_ok
-         |FROM probes pr CROSS JOIN params p
-         |JOIN counters c ON c.j = p.j
-         |  AND c.bucket = ((p.a * (pr.user_id % 1000000007) + p.b) % 1000000007) % $cmsW
-         |GROUP BY 1, 2 ORDER BY user_id""".stripMargin,
-    "q_evt_gap_fill" ->
+        |FROM c ORDER BY event_type""".stripMargin),
+    QueryDef("q_evt_countmin", qEvtCountmin, countminOracle),
+    QueryDef("q_evt_gap_fill", qEvtGapFill,
       """WITH hourly AS (
         |  SELECT event_type, epoch_us(ts) // 3600000000 AS h,
         |         count(*) AS n,
@@ -2804,8 +2780,8 @@ object EventQueries {
         |  hourly.cents IS NULL AS filled
         |FROM grid g LEFT JOIN hourly
         |  ON g.event_type = hourly.event_type AND g.h = hourly.h
-        |ORDER BY g.event_type, g.h""".stripMargin,
-    "q_evt_acf" ->
+        |ORDER BY g.event_type, g.h""".stripMargin),
+    QueryDef("q_evt_acf", qEvtAcf,
       """WITH hourly AS (
         |  SELECT epoch_us(ts) // 3600000000 AS h, count(*) AS y
         |  FROM events GROUP BY 1),
@@ -2824,45 +2800,9 @@ object EventQueries {
         |  CAST(round(1000000.0 * (n * sxy - sx * sy) /
         |    sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
         |         * CAST(n * syy - sy * sy AS DOUBLE))) AS BIGINT) AS r_ppm
-        |FROM m ORDER BY lag""".stripMargin,
-    "q_evt_attribution" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, event_type, epoch_us(ts) AS us,
-        |         CAST(round(value * 100) AS BIGINT) AS cents
-        |  FROM events),
-        |w AS (
-        |  SELECT *,
-        |    last_value(CASE WHEN event_type IN ('click','view')
-        |                    THEN event_type END IGNORE NULLS) OVER (
-        |      PARTITION BY user_id ORDER BY us, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS lt_type,
-        |    count(CASE WHEN event_type = 'click' THEN 1 END) OVER (
-        |      PARTITION BY user_id ORDER BY us, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS n_click,
-        |    count(CASE WHEN event_type = 'view' THEN 1 END) OVER (
-        |      PARTITION BY user_id ORDER BY us, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS n_view
-        |  FROM e),
-        |p AS (
-        |  SELECT *, n_click + n_view AS n_tot FROM w
-        |  WHERE event_type = 'purchase' AND n_click + n_view > 0),
-        |a AS (
-        |  SELECT
-        |    count(CASE WHEN lt_type = 'click' THEN 1 END) AS nlt_c,
-        |    CAST(coalesce(sum(CASE WHEN lt_type = 'click' THEN cents ELSE 0 END), 0) AS BIGINT) AS ltc_c,
-        |    CAST(sum(CAST(round(1000000.0 * n_click / n_tot) AS BIGINT)) AS BIGINT) AS lin_c,
-        |    CAST(sum(CAST(round(cents * 1000000.0 * n_click / n_tot) AS BIGINT)) AS BIGINT) AS linc_c,
-        |    count(CASE WHEN lt_type = 'view' THEN 1 END) AS nlt_v,
-        |    CAST(coalesce(sum(CASE WHEN lt_type = 'view' THEN cents ELSE 0 END), 0) AS BIGINT) AS ltc_v,
-        |    CAST(sum(CAST(round(1000000.0 * n_view / n_tot) AS BIGINT)) AS BIGINT) AS lin_v,
-        |    CAST(sum(CAST(round(cents * 1000000.0 * n_view / n_tot) AS BIGINT)) AS BIGINT) AS linc_v
-        |  FROM p)
-        |SELECT 'click' AS channel, nlt_c AS n_last_touch, ltc_c AS lt_cents,
-        |       lin_c AS lin_credit_ppm, linc_c AS lin_cents_ppm FROM a
-        |UNION ALL
-        |SELECT 'view', nlt_v, ltc_v, lin_v, linc_v FROM a
-        |ORDER BY channel""".stripMargin,
-    "q_evt_merge_upsert" ->
+        |FROM m ORDER BY lag""".stripMargin),
+    QueryDef("q_evt_attribution", qEvtAttribution, attributionOracle),
+    QueryDef("q_evt_merge_upsert", qEvtMergeUpsert,
       """WITH p AS (
         |  SELECT user_id, epoch_us(ts) AS us, event_id,
         |    CASE WHEN value < 10 THEN 'low' WHEN value < 20 THEN 'mid'
@@ -2885,8 +2825,8 @@ object EventQueries {
         |       WHEN d.tier = s.tier THEN 'unchanged'
         |       ELSE 'update' END AS action
         |FROM snap s FULL OUTER JOIN delta d ON s.user_id = d.user_id
-        |ORDER BY user_id""".stripMargin,
-    "q_evt_audience_hll" ->
+        |ORDER BY user_id""".stripMargin),
+    QueryDef("q_evt_audience_hll", qEvtAudienceHll,
       """WITH inc AS (SELECT DISTINCT event_type, user_id FROM events),
         |sz AS (SELECT event_type, count(*) AS n_users FROM inc GROUP BY 1),
         |b AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
@@ -2898,8 +2838,8 @@ object EventQueries {
         |  TRUE AS hll_inter_ok
         |FROM b JOIN sz s1 ON s1.event_type = type_a
         |       JOIN sz s2 ON s2.event_type = type_b
-        |ORDER BY type_a, type_b""".stripMargin,
-    "q_evt_concurrency" ->
+        |ORDER BY type_a, type_b""".stripMargin),
+    QueryDef("q_evt_concurrency", qEvtConcurrency,
       """WITH iv AS (
         |  SELECT epoch_us(ts) AS st, epoch_us(ts) + 300000000 AS en FROM events),
         |dd AS (
@@ -2916,8 +2856,8 @@ object EventQueries {
         |  FROM pts),
         |m AS (SELECT *, max(conc) OVER (PARTITION BY day) AS mx FROM c)
         |SELECT day, max(conc) AS peak_concurrent, min(us) AS peak_us
-        |FROM m WHERE conc = mx GROUP BY day ORDER BY day""".stripMargin,
-    "q_evt_scd2" ->
+        |FROM m WHERE conc = mx GROUP BY day ORDER BY day""".stripMargin),
+    QueryDef("q_evt_scd2", qEvtScd2,
       """WITH p AS (
         |  SELECT user_id, epoch_us(ts) AS us, event_id,
         |    CASE WHEN value < 10 THEN 'low' WHEN value < 20 THEN 'mid'
@@ -2939,16 +2879,16 @@ object EventQueries {
         |  (lead(valid_from_us) OVER w2 IS NULL) AS is_current,
         |  CAST(n_events AS BIGINT) AS n_events
         |FROM g WINDOW w2 AS (PARTITION BY user_id ORDER BY version)
-        |ORDER BY user_id, version""".stripMargin,
-    "q_evt_top_paths" ->
+        |ORDER BY user_id, version""".stripMargin),
+    QueryDef("q_evt_top_paths", qEvtTopPaths,
       """WITH j AS (
         |  SELECT user_id,
         |    string_agg(substr(event_type, 1, 1), '' ORDER BY ts, event_id) AS journey
         |  FROM events GROUP BY user_id)
         |SELECT substr(journey, 1, 5) AS path_prefix, count(*) AS n_users,
         |  CAST(sum(CASE WHEN journey LIKE '%p%' THEN 1 ELSE 0 END) AS BIGINT) AS n_converted
-        |FROM j GROUP BY 1 ORDER BY n_users DESC, path_prefix LIMIT 20""".stripMargin,
-    "q_evt_cohort_ltv" ->
+        |FROM j GROUP BY 1 ORDER BY n_users DESC, path_prefix LIMIT 20""".stripMargin),
+    QueryDef("q_evt_cohort_ltv", qEvtCohortLtv,
       """WITH o AS (SELECT o_custkey,
         |    year(o_orderdate) * 12 + month(o_orderdate) - 1 AS m,
         |    CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS rev_cents
@@ -2962,8 +2902,8 @@ object EventQueries {
         |SELECT cohort, age_months, n_custs, n_orders, rev_cents,
         |  CAST(sum(rev_cents) OVER (PARTITION BY cohort ORDER BY age_months
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_rev_cents
-        |FROM tri ORDER BY cohort, age_months""".stripMargin,
-    "q_evt_audience_overlap" ->
+        |FROM tri ORDER BY cohort, age_months""".stripMargin),
+    QueryDef("q_evt_audience_overlap", qEvtAudienceOverlap,
       """WITH inc AS (SELECT DISTINCT event_type, user_id FROM events),
         |sz AS (SELECT event_type, count(*) AS n_users FROM inc GROUP BY 1),
         |b AS (SELECT a.event_type AS type_a, b.event_type AS type_b, count(*) AS n_both
@@ -2975,8 +2915,8 @@ object EventQueries {
         |    AS jac_myriad
         |FROM b JOIN sz s1 ON s1.event_type = type_a
         |       JOIN sz s2 ON s2.event_type = type_b
-        |ORDER BY type_a, type_b""".stripMargin,
-    "q_evt_interarrival" ->
+        |ORDER BY type_a, type_b""".stripMargin),
+    QueryDef("q_evt_interarrival", qEvtInterarrival,
       """WITH g AS (SELECT epoch_us(ts) -
         |    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
         |  FROM events)
@@ -2984,8 +2924,8 @@ object EventQueries {
         |  count(*) AS n_gaps, min(gap_us) AS min_gap_us, max(gap_us) AS max_gap_us,
         |  CAST(sum(gap_us) AS BIGINT) AS sum_gap_us
         |FROM g WHERE gap_us IS NOT NULL
-        |GROUP BY 1 ORDER BY bucket""".stripMargin,
-    "q_evt_seasonality" ->
+        |GROUP BY 1 ORDER BY bucket""".stripMargin),
+    QueryDef("q_evt_seasonality", qEvtSeasonality,
       """WITH c AS (
         |  SELECT (CAST(ts AS DATE) - DATE '1970-01-01') % 7 AS dow_idx,
         |    CAST(hour(ts) AS INTEGER) AS hour, count(*) AS n
@@ -2994,8 +2934,8 @@ object EventQueries {
         |SELECT CAST(dow_idx AS INTEGER) AS dow_idx, hour, n,
         |  CAST(floor(10000 * n / total) AS BIGINT) AS share_myriad,
         |  row_number() OVER (ORDER BY n DESC, dow_idx, hour) = 1 AS is_peak
-        |FROM c, t ORDER BY dow_idx, hour""".stripMargin,
-    "q_evt_cusum" ->
+        |FROM c, t ORDER BY dow_idx, hour""".stripMargin),
+    QueryDef("q_evt_cusum", qEvtCusum,
       """WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n
         |  FROM events GROUP BY 1, 2),
         |s AS (SELECT event_type, day, n,
@@ -3019,13 +2959,13 @@ object EventQueries {
         |  CAST(cusum AS BIGINT) AS peak_cusum,
         |  strftime(day, '%Y-%m-%d') AS peak_day,
         |  cusum > total * 2 AS shift_detected
-        |FROM r WHERE rk = 1 ORDER BY event_type""".stripMargin,
+        |FROM r WHERE rk = 1 ORDER BY event_type""".stripMargin),
     // recursive-CTE replay of the fold. A struct-accumulator
     // list_reduce is NOT usable here: DuckDB updates accumulator
     // fields sequentially, so the 'b' expression reads the
     // already-updated 'l' (measured, not guessed) — the CTE advances
     // (l, b) atomically per day instead.
-    "q_evt_forecast" ->
+    QueryDef("q_evt_forecast", qEvtForecast,
       """WITH RECURSIVE d AS (
         |  SELECT event_type, CAST(n AS DOUBLE) AS y,
         |    row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
@@ -3046,8 +2986,8 @@ object EventQueries {
         |SELECT event_type, CAST(rn AS INTEGER) AS n_days,
         |  round(l, 6) AS level, round(b, 6) AS trend,
         |  round(l + b, 6) AS forecast_next
-        |FROM last WHERE rev = 1 ORDER BY event_type""".stripMargin,
-    "q_evt_pipeline" ->
+        |FROM last WHERE rev = 1 ORDER BY event_type""".stripMargin),
+    QueryDef("q_evt_pipeline", qEvtPipeline,
       """WITH u AS (
         |  SELECT user_id, count(*) AS n_events,
         |    min(CAST(ts AS DATE)) AS first_day, max(CAST(ts AS DATE)) AS last_day,
@@ -3070,14 +3010,14 @@ object EventQueries {
         |  SELECT 'lifetime', CAST(lifetime_weeks AS VARCHAR), count(*),
         |    CAST(sum(n_events) AS BIGINT), CAST(sum(conv) AS BIGINT)
         |  FROM x GROUP BY 2)
-        |ORDER BY section, k""".stripMargin,
+        |ORDER BY section, k""".stripMargin, eager = true), // localCheckpoint at construction
     // the round-trip law: melting the pivoted table back must equal the
     // direct long-form aggregation
-    "q_evt_unpivot" ->
+    QueryDef("q_evt_unpivot", qEvtUnpivot,
       """SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
         |  event_type, count(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin,
-    "q_evt_rfm" ->
+        |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin),
+    QueryDef("q_evt_rfm", qEvtRfm,
       """WITH anchor AS (SELECT max(ts) AS ts_max FROM events),
         |u AS (
         |  SELECT user_id, max(ts) AS last_ts, count(*) AS freq,
@@ -3097,16 +3037,16 @@ object EventQueries {
         |SELECT r_q, f_q, m_q, count(*) AS n_users,
         |  CAST(sum(freq) AS BIGINT) AS n_events,
         |  CAST(sum(monetary) AS DOUBLE) AS monetary_total
-        |FROM q GROUP BY 1, 2, 3 ORDER BY r_q, f_q, m_q""".stripMargin,
-    "q_evt_pivot" ->
+        |FROM q GROUP BY 1, 2, 3 ORDER BY r_q, f_q, m_q""".stripMargin),
+    QueryDef("q_evt_pivot", qEvtPivot,
       """SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
         |  CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click,
         |  CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS error,
         |  CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase,
         |  CAST(sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS signup,
         |  CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS "view"
-        |FROM events GROUP BY 1 ORDER BY day""".stripMargin,
-    "q_evt_value_pctl" ->
+        |FROM events GROUP BY 1 ORDER BY day""".stripMargin),
+    QueryDef("q_evt_value_pctl", qEvtValuePctl,
       """WITH r AS (
         |  SELECT event_type, value,
         |    row_number() OVER (PARTITION BY event_type ORDER BY value, event_id) AS rn,
@@ -3120,8 +3060,8 @@ object EventQueries {
         |FROM r
         |WHERE rn IN (CAST(ceil(cnt * 0.5) AS BIGINT), CAST(ceil(cnt * 0.95) AS BIGINT),
         |             CAST(ceil(cnt * 0.99) AS BIGINT))
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_evt_abtest" ->
+        |GROUP BY event_type ORDER BY event_type""".stripMargin),
+    QueryDef("q_evt_abtest", qEvtAbtest,
       """WITH u AS (
         |  SELECT user_id,
         |    max(CASE WHEN event_type = 'purchase' AND value > 90 THEN 1 ELSE 0 END) AS conv
@@ -3144,8 +3084,8 @@ object EventQueries {
         |    / sqrt((CAST(c_a + c_b AS DOUBLE) / (n_a + n_b))
         |           * (1.0 - CAST(c_a + c_b AS DOUBLE) / (n_a + n_b))
         |           * (1.0 / n_a + 1.0 / n_b)), 6)) > 1.96 AS significant
-        |FROM a""".stripMargin,
-    "q_evt_pattern" ->
+        |FROM a""".stripMargin),
+    QueryDef("q_evt_pattern", qEvtPattern,
       """WITH j AS (
         |  SELECT user_id, count(*) AS n_events,
         |    string_agg(substr(event_type, 1, 1), '' ORDER BY ts, event_id) AS journey
@@ -3155,8 +3095,8 @@ object EventQueries {
         |  CAST(len(regexp_extract_all(journey, 'ee+')) AS INTEGER) AS n_err_runs,
         |  len(regexp_extract_all(journey, 's[^p]*p')) > 0 AS signup_converted,
         |  md5(journey) AS journey_fp
-        |FROM j ORDER BY user_id""".stripMargin,
-    "q_evt_drift" ->
+        |FROM j ORDER BY user_id""".stripMargin),
+    QueryDef("q_evt_drift", qEvtDrift,
       """WITH e AS (SELECT CAST(ts AS DATE) AS day, event_type FROM events),
         |daily AS (SELECT day, event_type, count(*) AS n_dt FROM e GROUP BY day, event_type),
         |dtot AS (SELECT day, CAST(sum(n_dt) AS BIGINT) AS n_d FROM daily GROUP BY day),
@@ -3168,8 +3108,8 @@ object EventQueries {
         |  FROM daily d JOIN dtot t USING (day) JOIN g USING (event_type), tot)
         |SELECT strftime(day, '%Y-%m-%d') AS day, CAST(sum(n_dt) AS BIGINT) AS n_events,
         |  round(sum(term), 6) AS kl, (round(sum(term), 6) > 0.01) AS drifted
-        |FROM terms GROUP BY day ORDER BY day""".stripMargin,
-    "q_evt_ewma" ->
+        |FROM terms GROUP BY day ORDER BY day""".stripMargin),
+    QueryDef("q_evt_ewma", qEvtEwma,
       """WITH f AS (SELECT user_id, event_id, value,
         |    list(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
         |                      ROWS BETWEEN 7 PRECEDING AND CURRENT ROW) AS frame
@@ -3179,10 +3119,10 @@ object EventQueries {
         |          j -> list_reverse(frame)[j] / pow(2.0, j - 1)))
         |    / list_sum(list_transform(range(1, len(frame) + 1),
         |          j -> 1.0 / pow(2.0, j - 1))), 6) AS ewma
-        |FROM f ORDER BY user_id, event_id""".stripMargin,
+        |FROM f ORDER BY user_id, event_id""".stripMargin),
     // The TRUE literal is the accuracy CONTRACT: the engine's sketch
     // estimate must sit within 5% of exact or the hash gate fails.
-    "q_evt_hll_rolling" ->
+    QueryDef("q_evt_hll_rolling", qEvtHllRolling,
       """WITH du AS (SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events),
         |days AS (SELECT DISTINCT day FROM du),
         |ex AS (SELECT d.day AS tday, count(DISTINCT du.user_id) AS n_users_7d
@@ -3190,8 +3130,8 @@ object EventQueries {
         |       GROUP BY d.day)
         |SELECT strftime(tday, '%Y-%m-%d') AS day, n_users_7d,
         |  TRUE AS hll_within_5pct
-        |FROM ex ORDER BY day""".stripMargin,
-    "q_evt_anomaly" ->
+        |FROM ex ORDER BY day""".stripMargin),
+    QueryDef("q_evt_anomaly", qEvtAnomaly,
       """WITH x AS (
         |  SELECT user_id, event_id, value,
         |    CAST(sum(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS s1,
@@ -3208,12 +3148,12 @@ object EventQueries {
         |  FROM x WHERE n_prev >= 5)
         |SELECT user_id, event_id, value, round(mu, 6) AS mu, round(sd, 6) AS sd,
         |  (sd > 0 AND abs(value - mu) > 3.0 * sd) AS is_anomaly
-        |FROM y ORDER BY user_id, event_id""".stripMargin,
-    "q_evt_hourly" ->
+        |FROM y ORDER BY user_id, event_id""".stripMargin),
+    QueryDef("q_evt_hourly", qEvtHourly,
       """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour, event_type,
         |  count(*) AS n, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin,
-    "q_evt_sessionize" ->
+        |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin),
+    QueryDef("q_evt_sessionize", qEvtSessionize,
       """WITH e AS (
         |  SELECT user_id, epoch_us(ts) AS us,
         |    lag(epoch_us(ts), 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
@@ -3221,8 +3161,8 @@ object EventQueries {
         |SELECT user_id,
         |  CAST(sum(CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions,
         |  count(*) AS n_events
-        |FROM e GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_evt_session_stats" ->
+        |FROM e GROUP BY user_id ORDER BY user_id""".stripMargin),
+    QueryDef("q_evt_session_stats", qEvtSessionStats,
       """WITH e AS (
         |  SELECT user_id, ts, event_id, epoch_us(ts) AS us,
         |    lag(epoch_us(ts), 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
@@ -3240,8 +3180,8 @@ object EventQueries {
         |  SELECT user_id, sess_id, count(*) AS session_len
         |  FROM sessions GROUP BY user_id, sess_id)
         |SELECT session_len, count(*) AS n_sessions
-        |FROM lens GROUP BY session_len ORDER BY session_len""".stripMargin,
-    "q_evt_hopping" ->
+        |FROM lens GROUP BY session_len ORDER BY session_len""".stripMargin),
+    QueryDef("q_evt_hopping", qEvtHopping,
       """WITH hopped AS (
         |  SELECT event_type, value,
         |    unnest([to_timestamp(CAST(floor(epoch(ts) / 1800) AS BIGINT) * 1800),
@@ -3249,11 +3189,11 @@ object EventQueries {
         |  FROM events)
         |SELECT strftime(wstart, '%Y-%m-%d %H:%M:%S') AS wstart, event_type,
         |  count(*) AS n, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM hopped GROUP BY 1, 2 ORDER BY wstart, event_type""".stripMargin,
-    "q_evt_json" ->
+        |FROM hopped GROUP BY 1, 2 ORDER BY wstart, event_type""".stripMargin),
+    QueryDef("q_evt_json", qEvtJson,
       """SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS k, count(*) AS n
-        |FROM events GROUP BY 1 ORDER BY k""".stripMargin,
-    "q_evt_asof" ->
+        |FROM events GROUP BY 1 ORDER BY k""".stripMargin),
+    QueryDef("q_evt_asof", qEvtAsof,
       """WITH p AS (
         |  SELECT event_id, user_id, epoch_us(ts) AS p_us, value
         |  FROM events WHERE event_type = 'purchase'),
@@ -3265,8 +3205,8 @@ object EventQueries {
         |  p.p_us - max(c.c_us) AS gap_us
         |FROM p LEFT JOIN c ON c.user_id = p.user_id AND c.c_us <= p.p_us
         |GROUP BY p.event_id, p.user_id, p.p_us, p.value
-        |ORDER BY p.event_id""".stripMargin,
-    "q_evt_range_sql" ->
+        |ORDER BY p.event_id""".stripMargin),
+    QueryDef("q_evt_range_sql", qEvtRangeSql,
       """WITH p AS (
         |  SELECT event_id, user_id, epoch_us(ts) AS p_us
         |  FROM events WHERE event_type = 'purchase'),
@@ -3277,7 +3217,8 @@ object EventQueries {
         |FROM p JOIN c ON p.user_id = c.c_user
         |  AND c.c_us >= p.p_us - 3600000000 AND c.c_us <= p.p_us
         |ORDER BY event_id, c_us""".stripMargin,
-    "q_evt_asof_native" ->
+      eager = true), // rewrite-conf-scoped localCheckpoint at construction
+    QueryDef("q_evt_asof_native", qEvtAsofNative,
       """WITH p AS (
         |  SELECT event_id, user_id, epoch_us(ts) AS p_us, value
         |  FROM events WHERE event_type = 'purchase'),
@@ -3289,8 +3230,8 @@ object EventQueries {
         |  p.p_us - max(c.c_us) AS gap_us
         |FROM p LEFT JOIN c ON c.user_id = p.user_id AND c.c_us <= p.p_us
         |GROUP BY p.event_id, p.user_id, p.p_us, p.value
-        |ORDER BY p.event_id""".stripMargin,
-    "q_evt_asof_tol" ->
+        |ORDER BY p.event_id""".stripMargin),
+    QueryDef("q_evt_asof_tol", qEvtAsofTol,
       """WITH p AS (
         |  SELECT event_id, user_id, epoch_us(ts) AS p_us
         |  FROM events WHERE event_type = 'purchase'),
@@ -3303,8 +3244,8 @@ object EventQueries {
         |FROM p LEFT JOIN c ON c.user_id = p.user_id
         |  AND c.c_us BETWEEN p.p_us - 900000000 AND p.p_us
         |GROUP BY p.event_id, p.user_id, p.p_us
-        |ORDER BY event_id""".stripMargin,
-    "q_evt_range_join" ->
+        |ORDER BY event_id""".stripMargin),
+    QueryDef("q_evt_range_join", qEvtRangeJoin,
       """WITH p AS (
         |  SELECT event_id, user_id, epoch_us(ts) AS p_us
         |  FROM events WHERE event_type = 'purchase'),
@@ -3317,8 +3258,8 @@ object EventQueries {
         |FROM p LEFT JOIN c ON c.user_id = p.user_id
         |  AND c.c_us BETWEEN p.p_us - 3600000000 AND p.p_us
         |GROUP BY p.event_id, p.user_id, p.p_us
-        |ORDER BY event_id""".stripMargin,
-    "q_evt_overlap_join" ->
+        |ORDER BY event_id""".stripMargin),
+    QueryDef("q_evt_overlap_join", qEvtOverlapJoin,
       """WITH mk AS (
         |  SELECT user_id, event_type, epoch_us(ts) AS us, event_id,
         |    lag(epoch_us(ts)) OVER (PARTITION BY user_id, event_type
@@ -3346,10 +3287,10 @@ object EventQueries {
         |FROM sess c JOIN sess e ON c.user_id = e.user_id
         |  AND c.event_type = 'click' AND e.event_type = 'error'
         |  AND greatest(c.lo, e.lo - 3600000000) <= least(c.hi, e.hi + 3600000000)
-        |ORDER BY c.user_id, s_lo, w_lo""".stripMargin,
+        |ORDER BY c.user_id, s_lo, w_lo""".stripMargin),
     // identical relation through the SQL-surface naive overlap join —
     // the rewrite must not change a single row
-    "q_evt_overlap_sql" ->
+    QueryDef("q_evt_overlap_sql", qEvtOverlapSql,
       """WITH mk AS (
         |  SELECT user_id, event_type, epoch_us(ts) AS us, event_id,
         |    lag(epoch_us(ts)) OVER (PARTITION BY user_id, event_type
@@ -3379,10 +3320,11 @@ object EventQueries {
         |  AND c.lo <= e.hi + 3600000000
         |  AND e.lo - 3600000000 <= c.hi
         |ORDER BY c.user_id, s_lo, w_lo""".stripMargin,
+      eager = true), // rewrite-conf-scoped localCheckpoint at construction
     // The running-min funnel cascade is order-equivalent to global mins:
     // a click qualifies iff SOME view is strictly earlier, i.e. iff
     // min(view_us) < click_us; likewise purchases against min(qual click).
-    "q_evt_funnel" ->
+    QueryDef("q_evt_funnel", qEvtFunnel,
       """WITH e AS (
         |  SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
         |fv AS (
@@ -3408,8 +3350,8 @@ object EventQueries {
         |FROM fv
         |LEFT JOIN fc ON fv.user_id = fc.user_id
         |LEFT JOIN fp ON fv.user_id = fp.user_id
-        |ORDER BY fv.user_id""".stripMargin,
-    "q_evt_retention" ->
+        |ORDER BY fv.user_id""".stripMargin),
+    QueryDef("q_evt_retention", qEvtRetention,
       """WITH d AS (
         |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
         |c AS (
@@ -3419,14 +3361,14 @@ object EventQueries {
         |SELECT strftime(cohort, '%Y-%m-%d') AS cohort_day,
         |  CAST(datediff('day', cohort, day) AS INTEGER) AS day_offset,
         |  count(DISTINCT user_id) AS n_active
-        |FROM c GROUP BY 1, 2 ORDER BY cohort_day, day_offset""".stripMargin,
-    "q_evt_transitions" ->
+        |FROM c GROUP BY 1, 2 ORDER BY cohort_day, day_offset""".stripMargin),
+    QueryDef("q_evt_transitions", qEvtTransitions,
       """WITH e AS (
         |  SELECT event_type,
         |    lag(event_type, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
         |  FROM events)
         |SELECT prev_type, event_type, count(*) AS n
         |FROM e WHERE prev_type IS NOT NULL
-        |GROUP BY prev_type, event_type ORDER BY prev_type, event_type""".stripMargin,
+        |GROUP BY prev_type, event_type ORDER BY prev_type, event_type""".stripMargin),
   )
 }

@@ -342,14 +342,6 @@ object FeatureQueries {
       .orderBy("bin")
   }
 
-  val defs: Map[String, QueryFn] = Map(
-    "q_feat_target_enc" -> qFeatTargetEnc _,
-    "q_feat_woe" -> qFeatWoe _,
-    "q_feat_ols" -> qFeatOls _,
-    "q_feat_glm" -> qFeatGlm _,
-    "q_feat_calibration" -> qFeatCalibration _,
-  )
-
   private val labelCte =
     """lab AS (
       |  SELECT o_orderkey, o_orderpriority,
@@ -401,10 +393,10 @@ object FeatureQueries {
        |  FROM $sN s JOIN $bIn b USING (flag))""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
+  val registry: Seq[QueryDef] = Seq(
     // Calibration replay: same fixed-coefficient scorer, same decile
     // law, same exact-integer ECE arithmetic.
-    "q_feat_calibration" ->
+    QueryDef("q_feat_calibration", qFeatCalibration,
       """WITH li AS (
         |  SELECT l_orderkey, l_shipdate,
         |    CAST(CAST(l_quantity AS DECIMAL(18,2)) AS BIGINT) AS x1,
@@ -432,8 +424,8 @@ object FeatureQueries {
         |      FROM b)
         |SELECT bin, n, n_pos, conf_nnat,
         |       gap_micro // n_tot AS ece_ppm
-        |FROM b, t ORDER BY bin""".stripMargin,
-    "q_feat_glm" ->
+        |FROM b, t ORDER BY bin""".stripMargin),
+    QueryDef("q_feat_glm", qFeatGlm,
       s"""WITH rows AS (
          |  SELECT unnest([l_returnflag, 'ALL']) AS flag,
          |    CAST(CAST(l_quantity AS DECIMAL(18,2)) AS BIGINT) AS x1,
@@ -456,11 +448,11 @@ object FeatureQueries {
          |  FROM rows r JOIN bt3 USING (flag) GROUP BY r.flag)
          |SELECT flag, n, round(b0, 6) AS b0, round(b1, 6) AS b1,
          |  round(b2, 6) AS b2, sse_nano, n_correct
-         |FROM m ORDER BY flag""".stripMargin,
+         |FROM m ORDER BY flag""".stripMargin),
     // Full-law replay: exact-integer Gram sums, then the SAME Cramer
     // expression tree on doubles — identical operands + identical IEEE
     // ops = identical coefficients, so the fit crosses the hash gate.
-    "q_feat_ols" ->
+    QueryDef("q_feat_ols", qFeatOls,
       """WITH li AS (
         |  SELECT l_returnflag AS flag,
         |    CAST(CAST(l_quantity AS DECIMAL(18,2)) AS BIGINT) AS x1,
@@ -502,8 +494,8 @@ object FeatureQueries {
         |  round(c2, 4) AS b2_cents,
         |  round(1.0 - (byy - (c0*b0 + c1*b1 + c2*b2))
         |              / (byy - b0*b0/a00), 6) AS r2
-        |FROM co ORDER BY flag""".stripMargin,
-    "q_feat_target_enc" ->
+        |FROM co ORDER BY flag""".stripMargin),
+    QueryDef("q_feat_target_enc", qFeatTargetEnc,
       s"""WITH $labelCte,
          |cat AS (SELECT o_orderpriority, count(*) AS n, sum(late) AS n_pos
          |        FROM lab GROUP BY 1),
@@ -515,8 +507,8 @@ object FeatureQueries {
          |  END AS loo_neg_ppm,
          |  CAST(round(1000000.0 * (n_pos + 10.0 * p_tot / n_tot) / (n + 10.0))
          |       AS BIGINT) AS smoothed_ppm
-         |FROM cat, prior ORDER BY o_orderpriority""".stripMargin,
-    "q_feat_woe" ->
+         |FROM cat, prior ORDER BY o_orderpriority""".stripMargin),
+    QueryDef("q_feat_woe", qFeatWoe,
       s"""WITH $labelCte,
          |cat AS (SELECT o_orderpriority, sum(late) AS pos,
          |               sum(1 - late) AS neg
@@ -534,6 +526,6 @@ object FeatureQueries {
          |SELECT o_orderpriority, CAST(pos AS BIGINT) AS pos,
          |  CAST(neg AS BIGINT) AS neg, woe_nnat, iv_nnat,
          |  (SELECT CAST(sum(iv_nnat) AS BIGINT) FROM iv) AS iv_total_nnat
-         |FROM iv ORDER BY o_orderpriority""".stripMargin,
+         |FROM iv ORDER BY o_orderpriority""".stripMargin),
   )
 }

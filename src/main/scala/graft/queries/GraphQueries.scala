@@ -1117,21 +1117,6 @@ object GraphQueries {
           .cast("long").as("r_ppm"))
   }
 
-  val defs: Map[String, QueryFn] = Map(
-    "q_graph_assortativity" -> qGraphAssortativity _,
-    "q_graph_bfs" -> qGraphBfs _,
-    "q_graph_kcore" -> qGraphKcore _,
-    "q_basket_rules" -> qBasketRules _,
-    "q_graph_pagerank" -> qGraphPagerank _,
-    "q_graph_hits" -> qGraphHits _,
-    "q_graph_degree_dist" -> qGraphDegreeDist _,
-    "q_graph_triangles" -> qGraphTriangles _,
-    "q_graph_clustering" -> qGraphClustering _,
-    "q_graph_communities" -> qGraphCommunities _,
-    "q_graph_communities_bucketed" -> qGraphCommunitiesBucketed _,
-    "q_graph_linkpred" -> qGraphLinkpred _,
-  )
-
   /** The kcore oracle unrolls the peel as a generated 16-stage CTE
     * chain per k (no RECURSIVE: shrinking working sets don't fit the
     * union-only recursion model; a Spark fixpoint before stage 16
@@ -1165,8 +1150,8 @@ object GraphQueries {
     sb.toString
   }
 
-  val oracles: Map[String, String] = Map(
-    "q_graph_assortativity" ->
+  val registry: Seq[QueryDef] = Seq(
+    QueryDef("q_graph_assortativity", qGraphAssortativity,
       """WITH p AS (SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS sp
         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
         |edges AS (SELECT c AS src, sp AS dst FROM p UNION ALL SELECT sp, c FROM p),
@@ -1183,17 +1168,20 @@ object GraphQueries {
         |    sqrt((CAST(m AS DOUBLE) * CAST(suu AS DOUBLE) - CAST(su AS DOUBLE) * CAST(su AS DOUBLE)) *
         |         (CAST(m AS DOUBLE) * CAST(svv AS DOUBLE) - CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE))))
         |  AS BIGINT) AS r_ppm
-        |FROM s""".stripMargin,
-    "q_graph_bfs" -> bfsOracle,
-    "q_graph_kcore" -> kcoreOracle,
-    "q_graph_communities" -> lpaOracle,
+        |FROM s""".stripMargin),
+    QueryDef("q_graph_bfs", qGraphBfs, bfsOracle, eager = true), // edge-list checkpoint + count
+    QueryDef("q_graph_kcore", qGraphKcore, kcoreOracle,
+      eager = true), // edge-list checkpoint + count
+    QueryDef("q_graph_communities", qGraphCommunities, lpaOracle,
+      eager = true), // LPA supersteps: checkpoints + counts per round
     // identical census + the TRUE literal pinning the plan verdict
     // (same convention as q_layout_bucket_join)
-    "q_graph_communities_bucketed" ->
+    QueryDef("q_graph_communities_bucketed", qGraphCommunitiesBucketed,
       s"""SELECT community_size, n_communities,
          |  TRUE AS edge_scan_exchange_free
          |FROM ($lpaOracle) lpa ORDER BY community_size""".stripMargin,
-    "q_basket_rules" ->
+      eager = true), // bucketed-table write + plan probe at construction
+    QueryDef("q_basket_rules", qBasketRules,
       """WITH items AS (
         |  SELECT DISTINCT l.l_orderkey AS ok, p.p_brand AS brand
         |  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
@@ -1212,10 +1200,12 @@ object GraphQueries {
         |           JOIN supp s2 ON pairs.b2 = s2.brand
         |           CROSS JOIN n
         |ORDER BY lift_ppm DESC, b1, b2 LIMIT 20""".stripMargin,
-    "q_graph_pagerank" -> prOracle,
+      eager = true), // per-order brand-set checkpoint at construction (r18)
+    QueryDef("q_graph_pagerank", qGraphPagerank, prOracle,
+      eager = true), // edge-degree checkpoint at construction
     // HITS replay: two unrolled rounds of the coupled recursion with
     // the integer max-normalization.
-    "q_graph_hits" ->
+    QueryDef("q_graph_hits", qGraphHits,
       """WITH pairs AS (SELECT DISTINCT o_custkey AS c, l_suppkey AS sp
         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
         |h0 AS (SELECT DISTINCT c, CAST(1000000 AS BIGINT) AS h FROM pairs),
@@ -1242,7 +1232,8 @@ object GraphQueries {
         |SELECT side, key, score_micro FROM
         |  (SELECT * FROM ta UNION ALL SELECT * FROM th)
         |ORDER BY side, score_micro DESC, key""".stripMargin,
-    "q_graph_linkpred" ->
+      eager = true), // pair-list checkpoint at construction
+    QueryDef("q_graph_linkpred", qGraphLinkpred,
       s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
          |p AS (SELECT DISTINCT a.pk AS x, b.pk AS y
          |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
@@ -1261,7 +1252,8 @@ object GraphQueries {
          |  FROM na JOIN deg d1 ON d1.node = na.u JOIN deg d2 ON d2.node = na.v)
          |SELECT u, v, cn, jac_myriad, rnk FROM sc WHERE rnk <= 5
          |ORDER BY u, rnk""".stripMargin,
-    "q_graph_triangles" ->
+      eager = true), // shared pair-gen checkpoint at construction (r18)
+    QueryDef("q_graph_triangles", qGraphTriangles,
       """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
         |p AS (SELECT DISTINCT a.pk AS u, b.pk AS v
         |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
@@ -1281,9 +1273,10 @@ object GraphQueries {
         |SELECT COALESCE(tc.tri_count, 0) AS tri_count, count(*) AS n_parts
         |FROM deg LEFT JOIN tc USING (node)
         |GROUP BY 1 ORDER BY tri_count""".stripMargin,
+      eager = true), // edge-list checkpoint + count
     // local clustering coefficient banded census — same degree-ordered
     // triangle enumeration, cc in exact BIGINT ppm floor-division
-    "q_graph_clustering" ->
+    QueryDef("q_graph_clustering", qGraphClustering,
       """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
         |p AS (SELECT DISTINCT a.pk AS u, b.pk AS v
         |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
@@ -1307,7 +1300,8 @@ object GraphQueries {
         |  CAST(sum(tri_count) AS BIGINT) AS sum_tri,
         |  min(deg) AS min_deg, max(deg) AS max_deg
         |FROM cc GROUP BY 1 ORDER BY cc_band""".stripMargin,
-    "q_graph_degree_dist" ->
+      eager = true), // edge-list checkpoint at construction
+    QueryDef("q_graph_degree_dist", qGraphDegreeDist,
       """WITH p AS (SELECT DISTINCT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS sp
         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
         |deg AS (SELECT node, count(*) AS deg FROM (
@@ -1317,6 +1311,6 @@ object GraphQueries {
         |  count(*) AS n_nodes,
         |  min(deg) AS min_deg, max(deg) AS max_deg,
         |  CAST(sum(deg) AS BIGINT) AS sum_deg
-        |FROM deg GROUP BY 1, 2 ORDER BY node_type, bucket""".stripMargin,
+        |FROM deg GROUP BY 1, 2 ORDER BY node_type, bucket""".stripMargin),
   )
 }

@@ -147,15 +147,6 @@ object ImageQueries {
       .orderBy("fov", "label")
   }
 
-  val defs: Map[String, QueryFn] = Map(
-    "q_img_adjust" -> qImgAdjust _,
-    "q_a3_cellsize_sketch" -> qA3CellsizeSketch _,
-    "q_img_crop_roundtrip" -> qImgCropRoundtrip _,
-    "q_img_slice_roundtrip" -> qImgSliceRoundtrip _,
-    "q_img_relabel_chain" -> qImgRelabelChain _,
-    "q_trk_table" -> qTrkTable _,
-  )
-
   /** The image-domain computations are not SQL-expressible, but every
     * query here runs over a DETERMINISTIC fixture, so its full result
     * relation is derivable a priori from the operator contracts — the
@@ -181,8 +172,8 @@ object ImageQueries {
     *    n_cells 117, exact median 81; the percentile_approx sketch at
     *    its default accuracy is exact at this cardinality -> 81.0.
     */
-  val oracles: Map[String, String] = Map(
-    "q_trk_table" ->
+  val registry: Seq[QueryDef] = Seq(
+    QueryDef("q_trk_table", qTrkTable,
       """SELECT * FROM (VALUES
         |  ('fov1', 1, 0, 5, 6, FALSE),
         |  ('fov1', 2, 0, 2, 3, TRUE),
@@ -191,32 +182,32 @@ object ImageQueries {
         |  ('fov2', 2, 0, 2, 3, TRUE),
         |  ('fov2', 3, 2, 5, 4, FALSE)
         |) AS t(fov, label, frame_start, frame_end, n_frames, capped)
-        |ORDER BY fov, label""".stripMargin,
-    "q_img_crop_roundtrip" ->
+        |ORDER BY fov, label""".stripMargin),
+    QueryDef("q_img_crop_roundtrip", qImgCropRoundtrip,
       """SELECT 'fov' || CAST(f AS VARCHAR) AS fov, s AS stack,
         |       60 AS n_rows, 60 AS n_cols, TRUE AS mask_ok, TRUE AS count_ok
         |FROM generate_series(1, 4) t(f), generate_series(0, 3) u(s)
-        |ORDER BY fov, stack""".stripMargin,
-    "q_img_slice_roundtrip" ->
+        |ORDER BY fov, stack""".stripMargin),
+    QueryDef("q_img_slice_roundtrip", qImgSliceRoundtrip,
       """SELECT 'fov' || CAST(f AS VARCHAR) AS fov, s AS stack,
         |       s + 1 AS corner_tag, TRUE AS tag_ok
         |FROM generate_series(1, 4) t(f), generate_series(0, 8) u(s)
-        |ORDER BY fov, stack""".stripMargin,
-    "q_img_relabel_chain" ->
+        |ORDER BY fov, stack""".stripMargin),
+    QueryDef("q_img_relabel_chain", qImgRelabelChain,
       """SELECT 'fov' || CAST(f AS VARCHAR) AS fov, s AS stack, '1' AS ids
         |FROM generate_series(1, 4) t(f), generate_series(0, 5) u(s)
-        |ORDER BY fov, stack""".stripMargin,
-    "q_img_adjust" ->
+        |ORDER BY fov, stack""".stripMargin),
+    QueryDef("q_img_adjust", qImgAdjust,
       """SELECT 'fov' || CAST(f AS VARCHAR) AS fov, s AS stack,
         |       TRUE AS range_ok, TRUE AS non_degenerate
         |FROM generate_series(1, 4) t(f), generate_series(0, 3) u(s)
-        |ORDER BY fov, stack""".stripMargin,
-    "q_a3_cellsize_sketch" ->
+        |ORDER BY fov, stack""".stripMargin),
+    QueryDef("q_a3_cellsize_sketch", qA3CellsizeSketch,
       """SELECT * FROM (VALUES
         |  ('fluo',  117, CAST(81.0 AS DOUBLE), CAST(81.0 AS DOUBLE), TRUE),
         |  ('mibi',  117, CAST(81.0 AS DOUBLE), CAST(81.0 AS DOUBLE), TRUE),
         |  ('phase', 117, CAST(81.0 AS DOUBLE), CAST(81.0 AS DOUBLE), TRUE)
         |) AS t(category, n_cells, approx_median, exact_median, median_within_tol)
-        |ORDER BY category""".stripMargin,
+        |ORDER BY category""".stripMargin),
   )
 }

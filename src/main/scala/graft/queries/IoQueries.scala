@@ -775,24 +775,6 @@ object IoQueries {
       .orderBy("lang")
   }
 
-  val defs: Map[String, QueryFn] = Map(
-    "q_src_csv" -> qSrcCsv _,
-    "q_src_jsonl" -> qSrcJsonl _,
-    "q_src_tar_digest" -> qSrcTarDigest _,
-    "q_src_tar_samples" -> qSrcTarSamples _,
-    "q_src_tar_roundtrip" -> qSrcTarRoundtrip _,
-    "q_src_tar_gzip" -> qSrcTarGzip _,
-    "q_src_tar_reshard" -> qSrcTarReshard _,
-    "q_stream_tar_ingest" -> qStreamTarIngest _,
-    "q_src_tiff_digest" -> qSrcTiffDigest _,
-    "q_img_clean_digest" -> qImgCleanDigest _,
-    "q_src_ontology_digest" -> qSrcOntologyDigest _,
-    "q_npz_roundtrip" -> qNpzRoundtrip _,
-    "q_img_reconstruct_digest" -> qImgReconstructDigest _,
-    "q_img_reshape_digest" -> qImgReshapeDigest _,
-    "q_npz_sinks_digest" -> qNpzSinksDigest _,
-  )
-
   /** The TIFF oracle rows are INDEPENDENTLY derived: a raw IFD walk
     * (byte-order header, strip offsets/counts, int16 samples) over the
     * committed fixtures, sharing zero code with the JDK ImageIO path
@@ -801,10 +783,10 @@ object IoQueries {
     * verdict TRUE, 16 grid rows (14 roundtrip + 2 zero-filled for the
     * routed-away blank unit) + 2 separate/ rows.
     */
-  val oracles: Map[String, String] = Map(
+  val registry: Seq[QueryDef] = Seq(
     // Full generate_series replay of the tar-shard law — engine parser
     // and oracle share no code path.
-    "q_src_tar_digest" ->
+    QueryDef("q_src_tar_digest", qSrcTarDigest,
       """WITH e AS (
         |  SELECT s.s, i.i, 64 + 16 * i.i + 8 * s.s AS n
         |  FROM generate_series(0, 1) s(s), generate_series(0, 9) i(i)),
@@ -821,11 +803,11 @@ object IoQueries {
         |       CAST(sum((j + 1) * v % 1000000007) % 1000000007 AS BIGINT)
         |         AS chk
         |FROM b GROUP BY s, i, n
-        |ORDER BY shard, idx""".stripMargin,
+        |ORDER BY shard, idx""".stripMargin),
     // Sample-assembly law replay — key (incl. the 116-char long-name
     // cases), entry count/order, byte totals and the ext-salted
     // checksum all from generate_series; no parser code shared.
-    "q_src_tar_samples" ->
+    QueryDef("q_src_tar_samples", qSrcTarSamples,
       """WITH sm AS (
         |  SELECT s.s, m.m,
         |         CASE WHEN m.m = 5
@@ -850,11 +832,11 @@ object IoQueries {
         |       CAST(sum(n) AS BIGINT) AS n_bytes,
         |       CAST(sum(chk_e) % 1000000007 AS BIGINT) AS chk
         |FROM ec GROUP BY s, m, key, ne
-        |ORDER BY shard, sidx""".stripMargin,
+        |ORDER BY shard, sidx""".stripMargin),
     // The streaming-ingest twin shares the batch sample law verbatim
     // (stateless assembly: append emission is total), plus the
     // incrementality verdict pinned TRUE.
-    "q_stream_tar_ingest" ->
+    QueryDef("q_stream_tar_ingest", qStreamTarIngest,
       """WITH sm AS (
         |  SELECT s.s, m.m,
         |         CASE WHEN m.m = 5
@@ -880,11 +862,11 @@ object IoQueries {
         |       CAST(sum(chk_e) % 1000000007 AS BIGINT) AS chk,
         |       TRUE AS multi_batch
         |FROM ec GROUP BY s, m, key, ne
-        |ORDER BY shard, sidx""".stripMargin,
+        |ORDER BY shard, sidx""".stripMargin, eager = true), // stream drain at construction
     // CSV round-trip law: identical to the jsonl gate — codec and CSV
     // quoting are transparent transport; three planted malformed
     // lines quarantine.
-    "q_src_csv" ->
+    QueryDef("q_src_csv", qSrcCsv,
       """WITH c AS (
         |  SELECT lang, count(*) AS n_docs,
         |    CAST(sum(length(text)) AS BIGINT) AS sum_chars,
@@ -895,12 +877,12 @@ object IoQueries {
         |UNION ALL
         |SELECT '_CORRUPT', CAST(3 AS BIGINT), CAST(0 AS BIGINT),
         |       CAST(0 AS BIGINT)
-        |ORDER BY lang""".stripMargin,
+        |ORDER BY lang""".stripMargin, eager = true), // gzip CSV sink write at construction
     // JSONL round-trip law: the read-back census must equal this
     // DIRECT census of the source table (codec + JSON escaping are
     // transparent transport), plus exactly the three planted corrupt
     // lines in quarantine.
-    "q_src_jsonl" ->
+    QueryDef("q_src_jsonl", qSrcJsonl,
       """WITH c AS (
         |  SELECT lang, count(*) AS n_docs,
         |    CAST(sum(length(text)) AS BIGINT) AS sum_chars,
@@ -911,12 +893,12 @@ object IoQueries {
         |UNION ALL
         |SELECT '_CORRUPT', CAST(3 AS BIGINT), CAST(0 AS BIGINT),
         |       CAST(0 AS BIGINT)
-        |ORDER BY lang""".stripMargin,
+        |ORDER BY lang""".stripMargin, eager = true), // gzip JSONL sink write at construction
     // Gzip round-trip law: identical to the raw round trip (the codec
     // must be a transparent transport layer — the oracle censuses the
     // source table directly and never sees the compression), with the
     // 8-way routing and the .tar.gz naming.
-    "q_src_tar_gzip" ->
+    QueryDef("q_src_tar_gzip", qSrcTarGzip,
       """WITH s AS (
         |  SELECT doc_id,
         |    'shard-' || lpad(CAST(doc_id % 8 AS VARCHAR), 3, '0')
@@ -932,12 +914,13 @@ object IoQueries {
         |  CAST(sum((ei + 1) * (('0x' || substr(md5(payload), 1, 8))::BIGINT)
         |           % 1000000007) % 1000000007 AS BIGINT) AS chk
         |FROM e GROUP BY shard ORDER BY shard""".stripMargin,
+      eager = true), // gzip shard-sink write at construction
     // Reshard law: the bin-boundary ASSIGNMENT is replayed from the
     // documents table — archive footprint per sample (512-byte header
     // + 512-padded payload per entry), per-source cumsum in key order,
     // floor-division binning at 16384, shard naming — then the same
     // byte-exact md5 census per OUTPUT shard.
-    "q_src_tar_reshard" ->
+    QueryDef("q_src_tar_reshard", qSrcTarReshard,
       """WITH s AS (
         |  SELECT doc_id, source,
         |    'doc_' || lpad(CAST(doc_id AS VARCHAR), 8, '0') AS key,
@@ -964,9 +947,10 @@ object IoQueries {
         |  CAST(sum((ei + 1) * (('0x' || substr(md5(payload), 1, 8))::BIGINT)
         |           % 1000000007) % 1000000007 AS BIGINT) AS chk
         |FROM e GROUP BY shard ORDER BY shard""".stripMargin,
+      eager = true), // size-targeted reshard + sink write at construction
     // Round-trip law: the read-back census must equal this DIRECT
     // census of the source table — byte-exactness via md5 prefixes.
-    "q_src_tar_roundtrip" ->
+    QueryDef("q_src_tar_roundtrip", qSrcTarRoundtrip,
       """WITH s AS (
         |  SELECT doc_id,
         |    'shard-' || lpad(CAST(doc_id % 16 AS VARCHAR), 3, '0')
@@ -982,12 +966,13 @@ object IoQueries {
         |  CAST(sum((ei + 1) * (('0x' || substr(md5(payload), 1, 8))::BIGINT)
         |           % 1000000007) % 1000000007 AS BIGINT) AS chk
         |FROM e GROUP BY shard ORDER BY shard""".stripMargin,
+      eager = true), // shard-sink write at construction
     // Full DuckDB replay of the clean-labels law: blob j of plane
     // (fi, st) gets dense CC id j+1 (scan order), 7 px each at known
     // positions; speckles (area 1 < 4) vanish; planes with nb < 2
     // blobs are dropped by the min-objects filter. The checksum pins
     // exact (position, id) assignment.
-    "q_img_clean_digest" ->
+    QueryDef("q_img_clean_digest", qImgCleanDigest,
       """WITH plane AS (
         |  SELECT f.fi, f.fov, st.stack, (f.fi + st.stack) % 5 AS nb
         |  FROM (VALUES (0, 'fovA'), (1, 'fovB'), (2, 'fovC'),
@@ -1007,13 +992,13 @@ object IoQueries {
         |       CAST(sum(((i + 1) * lab) % 1000000007) % 1000000007
         |         AS BIGINT) AS lab_chk
         |FROM px GROUP BY fov, stack, nb
-        |ORDER BY fov, stack""".stripMargin,
+        |ORDER BY fov, stack""".stripMargin),
     // VALUES derived from the committed fixtures/ontology tree itself:
     // 3 tifs x 524,556 bytes per DCIS marker dir (directory listing),
     // metadata fields read from the raw JSON text (TYPE/ONTOLOGY
     // space-joined verbatim, single-element wrappers unwrapped) —
     // independent of the engine's walk and JSON paths.
-    "q_src_ontology_digest" ->
+    QueryDef("q_src_ontology_digest", qSrcOntologyDigest,
       """SELECT * FROM (VALUES
         |  ('dynamic/2d/fluo/HEK293/Nuclear_H2B-mClover/journal_pcbi_1005177',
         |   CAST(0 AS BIGINT), CAST(0 AS BIGINT), '', TRUE,
@@ -1040,7 +1025,8 @@ object IoQueries {
         |) AS t(rel_dir, n_tifs, tif_bytes, first_file, has_metadata,
         |       exp_id, ontology, type, dim_x, dim_y, marker0, facility)
         |ORDER BY rel_dir""".stripMargin,
-    "q_src_tiff_digest" ->
+      eager = true), // metadata JSON schema inference at construction
+    QueryDef("q_src_tiff_digest", qSrcTiffDigest,
       """SELECT * FROM (VALUES
         |  ('20200116_DCIS_Point2304_crop_0', 0, 512, 512, 79868, 335851, 42, 394077718),
         |  ('20200116_DCIS_Point2304_crop_1', 0, 512, 512, 67827, 263656, 37, 201889072),
@@ -1049,8 +1035,8 @@ object IoQueries {
         |  ('Point2304_crop_1', 0, 512, 512, 26425, 48332, 25, 106918797),
         |  ('Point2304_crop_2', 0, 512, 512, 49899, 93409, 42, 395140953)
         |) AS t(fov, stack, n_rows, n_cols, nnz, px_sum, px_max, checksum)
-        |ORDER BY fov, stack""".stripMargin,
-    "q_npz_roundtrip" ->
+        |ORDER BY fov, stack""".stripMargin),
+    QueryDef("q_npz_roundtrip", qNpzRoundtrip,
       """WITH grid AS (
         |  SELECT fov, crop, slc AS slice, stack,
         |    CASE WHEN fov = 'fovB' AND crop = 1 AND slc = 1
@@ -1068,21 +1054,23 @@ object IoQueries {
         |       mode, TRUE AS digest_ok
         |FROM rows_all
         |ORDER BY mode, fov, crop, slice, stack""".stripMargin,
+      eager = true), // writes the NPZ fixture at construction (S10 sink)
     // The reconstruct digest's oracle pins the a-priori inversion
     // grid: 8 reconstructed planes, every verdict TRUE, exactly the
     // law's 20 blob ids after dense relabel. The verdicts themselves
     // compare against the pure fixture law (never the written files).
-    "q_img_reconstruct_digest" ->
+    QueryDef("q_img_reconstruct_digest", qImgReconstructDigest,
       """SELECT fov, stack, 24 AS n_rows, 36 AS n_cols, 20 AS n_labels,
         |       TRUE AS px_ok, TRUE AS labels_ok, TRUE AS dense_ok
         |FROM (VALUES ('fovA'), ('fovB')) f(fov),
         |     generate_series(0, 3) s(stack)
         |ORDER BY fov, stack""".stripMargin,
+      eager = true), // writes+reconstructs the NPZ law fixture
     // Full DuckDB replay of the resize+pad+tile geometry: constant
     // pixels survive bilinear resize exactly, nearest 2x upscale is
     // index halving (out(r,c) = law(r//2, c//2)), pad is zeros, tiles
     // are 16x16 windows of the 64x64 padded canvas.
-    "q_img_reshape_digest" ->
+    QueryDef("q_img_reshape_digest", qImgReshapeDigest,
       """WITH cell AS (
         |  SELECT f.fi, f.fov, st.stack, t.ti * 4 + t.tj AS crop,
         |         t.ti * 16 + r.r AS gr, t.tj * 16 + c.c AS gc
@@ -1109,12 +1097,12 @@ object IoQueries {
         |         AS BIGINT) AS px_sum
         |FROM px
         |GROUP BY fi, fov, stack, crop
-        |ORDER BY fov, stack, crop""".stripMargin,
+        |ORDER BY fov, stack, crop""".stripMargin),
     // Full DuckDB replay of both single-file sinks' censuses from the
     // arithmetic law (12x17 planes, i = r*17+c), including the
     // position-weighted checksum — order-sensitive, so a channel-last
     // repack or row-order slip in encode/decode fails the hash.
-    "q_npz_sinks_digest" ->
+    QueryDef("q_npz_sinks_digest", qNpzSinksDigest,
       """WITH grid AS (
         |  SELECT f.fi, f.fov, st.stack, i.i,
         |         (i.i + st.stack * 7 + f.fi * 19) % 101 AS px,
@@ -1141,5 +1129,6 @@ object IoQueries {
         |       lab_nnz, lab_sum, lab_max, lab_chk
         |FROM cens c, (VALUES ('stitched'), ('combined')) m(mode)
         |ORDER BY mode, fov, stack""".stripMargin,
+      eager = true), // writes the stitched/combined NPZ sinks (S13/S14)
   )
 }

@@ -22,6 +22,24 @@ import org.apache.spark.sql.types.DecimalType
 object Q {
   type QueryFn = (SparkSession, String) => DataFrame
 
+  /** One registered operator: its name (the driver's key), its
+    * DataFrame builder and the DuckDB replay of its result. Every
+    * family object exposes its records as one `registry`, and
+    * [[graft.SparkEntry]] projects the union by name.
+    *
+    * `eager` marks a builder whose CONSTRUCTION itself runs Spark jobs:
+    * an eager localCheckpoint of a shared base projection, iterate-to-
+    * fixpoint counts, a driver point-lookup of a probe vector or
+    * codebook, split-size counts, a driver-held sketch, a sink write,
+    * or a run-to-completion streaming query. Registering one of these
+    * as a view is never a lazy definition, so the register-everything
+    * default of [[graft.ql.Ql.registerQueries]] skips it. QlSpec asserts
+    * that default runs zero jobs and PlanAuditSpec that every eager
+    * builder runs at least one, so the flag is checked both ways.
+    */
+  final case class QueryDef(name: String, build: QueryFn, oracle: String,
+                            eager: Boolean = false)
+
   /** Read one driver testdata table (see /root/repo/TESTDATA.md).
     *
     * The `events` table's `ts` encoding has varied across driver

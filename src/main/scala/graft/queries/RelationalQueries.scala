@@ -959,50 +959,6 @@ object RelationalQueries {
       .orderBy("l_shipmode")
   }
 
-  val defs: Map[String, QueryFn] = Map(
-    "q02_min_cost_supplier" -> qMinCostSupplier _,
-    "q09_product_profit" -> qProductProfit _,
-    "q12_shipping_modes" -> qShippingModes _,
-    "q11_important_stock" -> qImportantStock _,
-    "q16_parts_supplier" -> qPartsSupplierCount _,
-    "q20_potential_promotion" -> qPotentialPromotion _,
-    "q08_market_share" -> qMarketShare _,
-    "q10_returned_items" -> qReturnedItems _,
-    "q17_small_qty_revenue" -> qSmallQtyRevenue _,
-    "q18_large_orders" -> qLargeOrders _,
-    "q19_disjunctive_revenue" -> qDisjunctiveRevenue _,
-    "q21_waiting_supplier" -> qWaitingSupplier _,
-    "q15_top_supplier" -> qTopSupplier _,
-    "q22_sales_opportunity" -> qSalesOpportunity _,
-    "q04_order_priority" -> qOrderPriority _,
-    "q_part_abc" -> qPartAbc _,
-    "q14_promo_share" -> qPromoShare _,
-    "q07_nation_volume" -> qNationVolume _,
-    "q_cust_order_dist" -> qCustOrderDist _,
-    "q01_pricing_summary" -> q01PricingSummary _,
-    "q03_shipping_priority" -> q03ShippingPriority _,
-    "q05_region_revenue" -> q05RegionRevenue _,
-    "q06_forecast_revenue" -> q06ForecastRevenue _,
-    "q_p1_subset" -> qP1Subset _,
-    "q_p8_vocab_norm" -> qP8VocabNorm _,
-    "q_a1_median" -> qA1MedianAcctbal _,
-    "q_a1_sketch_scale" -> qA1SketchScale _,
-    "q_a4_rollup" -> qA4Rollup _,
-    "q_a5_distinct" -> qA5Distinct _,
-    "q_a6_count_distinct" -> qA6CountDistinct _,
-    "q_a7_extremes" -> qA7Extremes _,
-    "q_w1_running_max" -> qW1RunningMax _,
-    "q_j2_prev_event" -> qJ2PrevEvent _,
-    "q_w3_dense_relabel" -> qW3DenseRelabel _,
-    "q_topk_per_group" -> qTopkPerGroup _,
-    "q_r1_union_distinct" -> qR1UnionDistinct _,
-    "q_r2_split_assign" -> qR2SplitAssign _,
-    "q_r4_tile" -> qR4Tile _,
-    "q_r5_balance" -> qR5Balance _,
-    "q_join_semi" -> qJoinSemi _,
-    "q_join_anti" -> qJoinAnti _,
-  )
-
   /** Shared DuckDB CTE generating the deterministic partsupp relation
     * (same law as [[partsupp]]). Prepend to each partsupp oracle.
     */
@@ -1015,8 +971,8 @@ object RelationalQueries {
       |    100 + (p_partkey * 31 + i * 97) % 99900 AS ps_supplycost_cents
       |  FROM part, sc, (SELECT unnest(range(0, 4)) AS i))""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q02_min_cost_supplier" -> (psCte +
+  val registry: Seq[QueryDef] = Seq(
+    QueryDef("q02_min_cost_supplier", qMinCostSupplier, (psCte +
       """,
         |eu AS (
         |  SELECT s_suppkey, s_name, n_name,
@@ -1038,8 +994,8 @@ object RelationalQueries {
         |FROM j JOIN minc ON ps_partkey = mk
         |  AND ps_supplycost_cents = min_cost_cents
         |ORDER BY s_acctbal_cents DESC, n_name, s_name, p_partkey
-        |LIMIT 100""".stripMargin),
-    "q09_product_profit" -> (psCte +
+        |LIMIT 100""".stripMargin)),
+    QueryDef("q09_product_profit", qProductProfit, (psCte +
       """,
         |su AS (SELECT s_suppkey, n_name AS nation
         |       FROM supplier JOIN nation ON s_nationkey = n_nationkey),
@@ -1058,8 +1014,8 @@ object RelationalQueries {
         |JOIN ps ON l_partkey = ps_partkey AND l_suppkey = ps_suppkey
         |JOIN su ON l_suppkey = s_suppkey
         |JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin),
-    "q12_shipping_modes" ->
+        |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin)),
+    QueryDef("q12_shipping_modes", qShippingModes,
       """WITH li AS (
         |  SELECT l_orderkey, l_linenumber,
         |    (['AIR','MAIL','SHIP','TRUCK','RAIL','FOB','REG AIR'])
@@ -1081,8 +1037,8 @@ object RelationalQueries {
         |WHERE l_shipmode IN ('MAIL', 'SHIP')
         |  AND commit_day < receipt_day AND ship_day < commit_day
         |  AND receipt_day >= d1996 AND receipt_day < d1996 + 366
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q11_important_stock" -> (psCte +
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q11_important_stock", qImportantStock, (psCte +
       """,
         |grp AS (
         |  SELECT ps_partkey,
@@ -1098,8 +1054,8 @@ object RelationalQueries {
         |               count(*) AS n_parts FROM grp)
         |SELECT ps_partkey, value_cents FROM grp, tot
         |WHERE value_cents * n_parts > total_cents * 2
-        |ORDER BY value_cents DESC, ps_partkey""".stripMargin),
-    "q16_parts_supplier" -> (psCte +
+        |ORDER BY value_cents DESC, ps_partkey""".stripMargin)),
+    QueryDef("q16_parts_supplier", qPartsSupplierCount, (psCte +
       """
         |SELECT p_brand, p_type, p_size,
         |  count(DISTINCT ps_suppkey) AS supplier_cnt
@@ -1110,8 +1066,8 @@ object RelationalQueries {
         |WHERE p_brand <> 'Brand#1' AND p_type <> 'PROMO'
         |  AND p_size IN (1, 5, 9, 15, 25, 35)
         |GROUP BY 1, 2, 3
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin),
-    "q20_potential_promotion" -> (psCte +
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin)),
+    QueryDef("q20_potential_promotion", qPotentialPromotion, (psCte +
       """,
         |qty96 AS (
         |  SELECT l_partkey, l_suppkey,
@@ -1129,8 +1085,8 @@ object RelationalQueries {
         |SELECT s_suppkey, s_name FROM supplier
         |SEMI JOIN cand ON s_suppkey = ps_suppkey
         |WHERE s_nationkey = 3
-        |ORDER BY s_suppkey""".stripMargin),
-    "q08_market_share" ->
+        |ORDER BY s_suppkey""".stripMargin)),
+    QueryDef("q08_market_share", qMarketShare,
       """WITH rev AS (
         |  SELECT year(o_orderdate) AS o_year,
         |    CAST(round(l_extendedprice * 100) AS BIGINT)
@@ -1152,8 +1108,8 @@ object RelationalQueries {
         |  CAST(sum(rev) AS BIGINT) AS total_x10000,
         |  CAST(floor(1000000 * sum(CASE WHEN is_target THEN rev ELSE 0 END)
         |       / sum(rev)) AS BIGINT) AS mkt_share_ppm
-        |FROM rev GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q10_returned_items" ->
+        |FROM rev GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q10_returned_items", qReturnedItems,
       """SELECT o_custkey, count(*) AS n_items,
         |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
         |           * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT)
@@ -1162,8 +1118,8 @@ object RelationalQueries {
         |WHERE l_returnflag = 'R'
         |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
         |  AND o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
-        |GROUP BY 1 ORDER BY lost_x10000 DESC, o_custkey LIMIT 20""".stripMargin,
-    "q17_small_qty_revenue" ->
+        |GROUP BY 1 ORDER BY lost_x10000 DESC, o_custkey LIMIT 20""".stripMargin),
+    QueryDef("q17_small_qty_revenue", qSmallQtyRevenue,
       """WITH li AS (
         |  SELECT l_partkey, CAST(round(l_quantity) AS BIGINT) AS qty,
         |    CAST(round(l_extendedprice * 100) AS BIGINT) AS cents
@@ -1176,10 +1132,10 @@ object RelationalQueries {
         |  CAST(sum(cents) AS BIGINT) AS total_cents,
         |  CAST(floor(sum(cents) / 7) AS BIGINT) AS avg_weekly_cents
         |FROM li JOIN pp ON l_partkey = pk
-        |WHERE qty * 5 * cnt < qty_sum""".stripMargin,
+        |WHERE qty * 5 * cnt < qty_sum""".stripMargin),
     // Q18 replayed in its CLASSIC IN-(GROUP BY ... HAVING) form — the
     // Spark plan expressed the subquery as a direct aggregate join.
-    "q18_large_orders" ->
+    QueryDef("q18_large_orders", qLargeOrders,
       """SELECT c_custkey, o_orderkey,
         |  strftime(o_orderdate, '%Y-%m-%d') AS o_date,
         |  CAST(round(o_totalprice * 100) AS BIGINT) AS total_cents,
@@ -1189,8 +1145,8 @@ object RelationalQueries {
         |WHERE o_orderkey IN (
         |  SELECT l_orderkey FROM lineitem GROUP BY 1
         |  HAVING sum(CAST(round(l_quantity) AS BIGINT)) > 250)
-        |ORDER BY total_cents DESC, o_orderkey LIMIT 100""".stripMargin,
-    "q19_disjunctive_revenue" ->
+        |ORDER BY total_cents DESC, o_orderkey LIMIT 100""".stripMargin),
+    QueryDef("q19_disjunctive_revenue", qDisjunctiveRevenue,
       """WITH j AS (
         |  SELECT p_brand, p_size, l_quantity,
         |    CAST(round(l_extendedprice * 100) AS BIGINT)
@@ -1217,11 +1173,11 @@ object RelationalQueries {
         |  SELECT 'Brand#2' AS branch, n1 AS n_lines, r1 AS rev_x10000 FROM a
         |  UNION ALL SELECT 'Brand#15', n2, r2 FROM a
         |  UNION ALL SELECT 'Brand#19', n3, r3 FROM a)
-        |ORDER BY branch""".stripMargin,
+        |ORDER BY branch""".stripMargin),
     // Q21 replayed in its CLASSIC exists/not-exists form — the oracle
     // deliberately takes the self-join road the Spark plan collapsed
     // into per-order aggregation, so the two derivations cross-check.
-    "q21_waiting_supplier" ->
+    QueryDef("q21_waiting_supplier", qWaitingSupplier,
       """WITH l AS (
         |  SELECT l_orderkey, l_suppkey,
         |         l_shipdate > o_orderdate + INTERVAL 60 DAY AS late
@@ -1238,8 +1194,8 @@ object RelationalQueries {
         |                      AND l3.l_suppkey <> l1.l_suppkey AND l3.late))
         |SELECT s_name, count(*) AS numwait
         |FROM waiting JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY s_name ORDER BY numwait DESC, s_name""".stripMargin,
-    "q15_top_supplier" ->
+        |GROUP BY s_name ORDER BY numwait DESC, s_name""".stripMargin),
+    QueryDef("q15_top_supplier", qTopSupplier,
       """WITH rev AS (
         |  SELECT l_suppkey,
         |    CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
@@ -1252,8 +1208,8 @@ object RelationalQueries {
         |SELECT s_suppkey, s_name, total_x10000
         |FROM rev JOIN supplier ON l_suppkey = s_suppkey
         |WHERE total_x10000 = (SELECT max(total_x10000) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-    "q22_sales_opportunity" ->
+        |ORDER BY s_suppkey""".stripMargin),
+    QueryDef("q22_sales_opportunity", qSalesOpportunity,
       """WITH cust AS (
         |  SELECT c_custkey, c_nationkey,
         |         CAST(round(c_acctbal * 100) AS BIGINT) AS bal_cents
@@ -1269,8 +1225,8 @@ object RelationalQueries {
         |  AND NOT EXISTS (SELECT 1 FROM orders
         |                  WHERE o_custkey = c_custkey
         |                    AND o_orderdate >= TIMESTAMP '1998-06-01 00:00:00')
-        |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin,
-    "q04_order_priority" ->
+        |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin),
+    QueryDef("q04_order_priority", qOrderPriority,
       """SELECT o_orderpriority, count(*) AS order_count
         |FROM orders
         |WHERE o_orderdate >= DATE '1996-01-01'
@@ -1278,8 +1234,8 @@ object RelationalQueries {
         |  AND EXISTS (SELECT 1 FROM lineitem
         |              WHERE l_orderkey = o_orderkey
         |                AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q_part_abc" ->
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    QueryDef("q_part_abc", qPartAbc,
       """WITH rev AS (SELECT l_partkey,
         |    CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
         |      * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT) AS r
@@ -1292,8 +1248,8 @@ object RelationalQueries {
         |  FROM ranked, tot)
         |SELECT cls, count(*) AS n_parts,
         |  CAST(floor(1000000.0 * CAST(sum(r) AS BIGINT) / max(tot)) AS BIGINT) AS rev_share_ppm
-        |FROM cls GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q14_promo_share" ->
+        |FROM cls GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q14_promo_share", qPromoShare,
       """WITH li AS (SELECT strftime(l_shipdate, '%Y-%m') AS ship_month,
         |    p_type LIKE 'PROMO%' AS is_promo,
         |    CAST(round(l_extendedprice * 100) AS BIGINT)
@@ -1304,8 +1260,8 @@ object RelationalQueries {
         |  CAST(sum(r) AS BIGINT) AS total_x10000,
         |  CAST(floor(1000000.0 * (CAST(sum(CASE WHEN is_promo THEN r ELSE 0 END) AS BIGINT)
         |    / CAST(sum(r) AS BIGINT))) AS BIGINT) AS promo_ppm
-        |FROM li GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q07_nation_volume" ->
+        |FROM li GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q07_nation_volume", qNationVolume,
       """SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
         |  CAST(year(o_orderdate) AS BIGINT) AS yr,
         |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
@@ -1318,22 +1274,22 @@ object RelationalQueries {
         |JOIN nation sn ON s_nationkey = sn.n_nationkey
         |JOIN nation cn ON c_nationkey = cn.n_nationkey
         |WHERE sn.n_name <> cn.n_name
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "q_cust_order_dist" ->
+        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin),
+    QueryDef("q_cust_order_dist", qCustOrderDist,
       """SELECT c_count, count(*) AS custdist FROM (
         |  SELECT c.c_custkey, count(o.o_orderkey) AS c_count
         |  FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
         |  GROUP BY c.c_custkey)
-        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q01_pricing_summary" ->
+        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin),
+    QueryDef("q01_pricing_summary", q01PricingSummary,
       """SELECT l_returnflag, l_linestatus,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
         |  count(*) AS count_order
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q03_shipping_priority" ->
+        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    QueryDef("q03_shipping_priority", q03ShippingPriority,
       """SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -1342,8 +1298,8 @@ object RelationalQueries {
         |  AND o_orderdate < TIMESTAMP '1998-06-01 00:00:00'
         |  AND l_shipdate > TIMESTAMP '1998-06-01 00:00:00'
         |GROUP BY l_orderkey, strftime(o_orderdate, '%Y-%m-%d')
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-    "q05_region_revenue" ->
+        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin),
+    QueryDef("q05_region_revenue", q05RegionRevenue,
       """SELECT r_name, n_name,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
         |  count(*) AS n_items
@@ -1351,28 +1307,28 @@ object RelationalQueries {
         |JOIN customer ON o_custkey = c_custkey
         |JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin,
-    "q06_forecast_revenue" ->
+        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin),
+    QueryDef("q06_forecast_revenue", q06ForecastRevenue,
       """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
         |  count(*) AS n_items
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
         |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        |  AND l_discount BETWEEN 0.03 AND 0.07 AND l_quantity < 25""".stripMargin,
-    "q_p1_subset" ->
+        |  AND l_discount BETWEEN 0.03 AND 0.07 AND l_quantity < 25""".stripMargin),
+    QueryDef("q_p1_subset", qP1Subset,
       """SELECT c_custkey, c_name, c_mktsegment, c_acctbal FROM customer
         |WHERE c_mktsegment IN ('BUILDING','MACHINERY') AND c_acctbal > 1000.0
-        |ORDER BY c_custkey""".stripMargin,
-    "q_p8_vocab_norm" ->
+        |ORDER BY c_custkey""".stripMargin),
+    QueryDef("q_p8_vocab_norm", qP8VocabNorm,
       """SELECT CASE WHEN lower(event_type) IN ('click','view') THEN 'impression'
         |  WHEN lower(event_type) = 'signup' THEN 'conversion'
         |  WHEN lower(event_type) = 'purchase' THEN 'conversion'
         |  ELSE 'other' END AS kind, count(*) AS n
-        |FROM events GROUP BY 1 ORDER BY kind""".stripMargin,
+        |FROM events GROUP BY 1 ORDER BY kind""".stripMargin),
     // exact columns replayed; the *_within_tol verdicts are pinned TRUE
     // — the engine derives them from its live percentile_approx / HLL
     // sketches, so a sketch outside tolerance fails the hash
-    "q_a1_sketch_scale" ->
+    QueryDef("q_a1_sketch_scale", qA1SketchScale,
       """WITH ranked AS (
         |  SELECT c_mktsegment, c_acctbal,
         |    row_number() OVER (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey) AS rn,
@@ -1388,8 +1344,8 @@ object RelationalQueries {
         |       TRUE AS distinct_within_tol
         |FROM customer c JOIN med m ON c.c_mktsegment = m.c_mktsegment
         |GROUP BY c.c_mktsegment, m.exact_median
-        |ORDER BY c.c_mktsegment""".stripMargin,
-    "q_a1_median" ->
+        |ORDER BY c.c_mktsegment""".stripMargin),
+    QueryDef("q_a1_median", qA1MedianAcctbal,
       """WITH ranked AS (
         |  SELECT c_mktsegment, c_acctbal,
         |    row_number() OVER (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey) AS rn,
@@ -1397,55 +1353,56 @@ object RelationalQueries {
         |  FROM customer)
         |SELECT c_mktsegment, avg(c_acctbal) AS median_acctbal, count(*) AS n_mid
         |FROM ranked WHERE rn = CAST(floor((cnt + 1) / 2) AS BIGINT) OR rn = CAST(floor((cnt + 2) / 2) AS BIGINT)
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q_a4_rollup" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    QueryDef("q_a4_rollup", qA4Rollup,
       """SELECT coalesce(o_orderstatus, 'ALL') AS status,
         |  coalesce(o_orderpriority, 'ALL') AS priority,
         |  count(*) AS n, CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
         |FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
-        |ORDER BY status, priority""".stripMargin,
-    "q_a5_distinct" ->
-      "SELECT DISTINCT c_mktsegment FROM customer ORDER BY c_mktsegment",
-    "q_a6_count_distinct" ->
+        |ORDER BY status, priority""".stripMargin),
+    QueryDef("q_a5_distinct", qA5Distinct,
+      "SELECT DISTINCT c_mktsegment FROM customer ORDER BY c_mktsegment"),
+    QueryDef("q_a6_count_distinct", qA6CountDistinct,
       """SELECT c_nationkey, count(DISTINCT c_mktsegment) AS n_segments, count(*) AS n_customers
-        |FROM customer GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin,
-    "q_a7_extremes" ->
+        |FROM customer GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin),
+    QueryDef("q_a7_extremes", qA7Extremes,
       """SELECT event_type, max(value) AS max_value, min(value) AS min_value, count(*) AS n
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_w1_running_max" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    QueryDef("q_w1_running_max", qW1RunningMax,
       """SELECT event_id, user_id, value,
         |  max(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_max
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q_j2_prev_event" ->
+        |FROM events ORDER BY event_id""".stripMargin),
+    QueryDef("q_j2_prev_event", qJ2PrevEvent,
       """SELECT event_id, user_id, value,
         |  lag(value, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_value,
         |  lag(event_id, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_event_id
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q_w3_dense_relabel" ->
+        |FROM events ORDER BY event_id""".stripMargin),
+    QueryDef("q_w3_dense_relabel", qW3DenseRelabel,
       """SELECT l_suppkey, dense_rank() OVER (ORDER BY l_suppkey) AS new_id
         |FROM (SELECT DISTINCT l_suppkey FROM lineitem) ORDER BY l_suppkey""".stripMargin,
-    "q_topk_per_group" ->
+      eager = true), // RDD zipWithIndex partition-count job at construction
+    QueryDef("q_topk_per_group", qTopkPerGroup,
       """SELECT o_custkey, o_orderkey, o_totalprice, rk FROM (
         |  SELECT o_custkey, o_orderkey, o_totalprice,
         |    row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rk
-        |  FROM orders) WHERE rk <= 3 ORDER BY o_custkey, rk""".stripMargin,
-    "q_r1_union_distinct" ->
+        |  FROM orders) WHERE rk <= 3 ORDER BY o_custkey, rk""".stripMargin),
+    QueryDef("q_r1_union_distinct", qR1UnionDistinct,
       """SELECT DISTINCT * FROM (
         |  SELECT c_custkey AS custkey, 'high' AS tier FROM customer WHERE c_acctbal > 9000
         |  UNION ALL
         |  SELECT c_custkey AS custkey, 'low' AS tier FROM customer WHERE c_acctbal < -900)
-        |ORDER BY custkey, tier""".stripMargin,
-    "q_r2_split_assign" ->
+        |ORDER BY custkey, tier""".stripMargin),
+    QueryDef("q_r2_split_assign", qR2SplitAssign,
       """SELECT CASE WHEN o_orderkey % 10 < 8 THEN 'train'
         |  WHEN o_orderkey % 10 = 8 THEN 'val' ELSE 'test' END AS split,
         |  count(*) AS n, CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-        |FROM orders GROUP BY 1 ORDER BY split""".stripMargin,
-    "q_r4_tile" ->
+        |FROM orders GROUP BY 1 ORDER BY split""".stripMargin),
+    QueryDef("q_r4_tile", qR4Tile,
       """SELECT r_name, count(*) AS n_copies, CAST(sum(copy_idx) AS BIGINT) AS idx_sum FROM (
         |  SELECT r_name, unnest(range(1, r_regionkey + 2)) AS copy_idx FROM region)
-        |GROUP BY r_name ORDER BY r_name""".stripMargin,
-    "q_r5_balance" ->
+        |GROUP BY r_name ORDER BY r_name""".stripMargin),
+    QueryDef("q_r5_balance", qR5Balance,
       """WITH counted AS (
         |  SELECT c_mktsegment, c_custkey,
         |    row_number() OVER (PARTITION BY c_mktsegment ORDER BY c_custkey) AS rn,
@@ -1457,14 +1414,14 @@ object RelationalQueries {
         |    unnest(range(1, CAST(floor((max_cnt - rn) / cnt) AS BIGINT) + 2)) AS copy
         |  FROM counted, m)
         |SELECT c_mktsegment, count(*) AS n, CAST(sum(c_custkey) AS BIGINT) AS key_sum
-        |FROM tiled GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q_join_semi" ->
+        |FROM tiled GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    QueryDef("q_join_semi", qJoinSemi,
       """SELECT o_orderkey, o_totalprice FROM orders
         |WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey AND l_quantity >= 49)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_join_anti" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    QueryDef("q_join_anti", qJoinAnti,
       """SELECT c_custkey, c_name FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderstatus = 'F')
-        |ORDER BY c_custkey""".stripMargin,
+        |ORDER BY c_custkey""".stripMargin),
   )
 }

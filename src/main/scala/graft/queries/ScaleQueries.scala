@@ -747,8 +747,7 @@ object ScaleQueries {
     val orig = ImagePlane.blankPlanes(4, 2, 60, 60)
       .map(ImagePlane.gridLabels(_, cellSize = 10))
     val plan = CropOps.planCrops(60, 60, 24, 24, 0.5)
-    val streamDir = Files.createTempDirectory("q_stream_stitch")
-      .toFile.getAbsolutePath
+    val streamDir = graft.core.Scratch.local(s, "q_stream_stitch")
     // ONE write job for all 8 work-unit files (optimization r18, guide
     // §2.4): rows carry their unit index, land one-unit-per-partition
     // via repartitionByRange (8 distinct keys → 8 partitions, exact),
@@ -764,7 +763,7 @@ object ScaleQueries {
             new java.sql.Timestamp(1700000000000L + k * 60000L))
         }
     }
-    val tmp = Files.createTempDirectory("stitch_units").toFile.getAbsolutePath
+    val tmp = graft.core.Scratch.local(s, "stitch_units")
     rows.toDF("__unit", "__row", "fov", "stack", "crop", "slice",
       "nRows", "nCols", "channels", "pixels", "labels", "ts")
       .repartitionByRange(orig.length, col("__unit"))
@@ -952,47 +951,6 @@ object ScaleQueries {
       docs.select(explode(split(col("text"), " ")).as("token")), sk)
   }
 
-  val defs: Map[String, QueryFn] = Map(
-    "q_stream_countmin" -> qStreamCountmin _,
-    "q_stream_dd_quantile" -> qStreamDdQuantile _,
-    "q_stream_topk" -> qStreamTopk _,
-    "q_stream_sessionize" -> qStreamSessionize _,
-    "q_dedup_minhash_pairs" -> qDedupMinhash _,
-    "q_dedup_lsh_recall" -> qDedupLshRecall _,
-    "q_dedup_simhash_pairs" -> qDedupSimhash _,
-    "q_sim_ann_lsh" -> qSimAnnLsh _,
-    "q_sim_ann_ivf" -> qSimAnnIvf _,
-    "q_sim_ivf_recall" -> qSimIvfRecall _,
-    "q_mm_features" -> qMmFeatures _,
-    "q_mm_decode" -> qMmDecode _,
-    "q_mm_container" -> qMmContainer _,
-    "q_mm_audio" -> qMmAudio _,
-    "q_mm_frames" -> qMmFrames _,
-    "q_mm_phash" -> qMmPhash _,
-    "q_mm_tar_pipeline" -> qMmTarPipeline _,
-    "q_stream_hourly" -> qStreamHourly _,
-    "q_stream_psi" -> qStreamPsi _,
-    "q_stream_psi_tws" -> qStreamPsiTws _,
-    "q_stream_session_native" -> qStreamSessionNative _,
-    "q_stream_range_outer" -> qStreamRangeOuter _,
-    "q_stream_dedup" -> qStreamDedup _,
-    "q_stream_ewma" -> qStreamEwma _,
-    "q_stream_attribution" -> qStreamAttribution _,
-    "q_stream_ewma_tws" -> qStreamEwmaTws _,
-    "q_stream_pattern" -> qStreamPattern _,
-    "q_stream_pattern_tws" -> qStreamPatternTws _,
-    "q_stream_incremental" -> qStreamIncremental _,
-    "q_stream_hourly_append" -> qStreamHourlyAppend _,
-    "q_stream_hourly_tws" -> qStreamHourlyTws _,
-    "q_stream_sessionize_append" -> qStreamSessionizeAppend _,
-    "q_stream_sessionize_tws" -> qStreamSessionizeTws _,
-    "q_stream_neardup" -> qStreamNeardup _,
-    "q_stream_incremental_append" -> qStreamIncrementalAppend _,
-    "q_stream_stitch" -> qStreamStitch _,
-    "q_stream_stitch_tws" -> qStreamStitchTws _,
-    "q_stream_range_append" -> qStreamRangeAppend _,
-  )
-
   /** Fixture-parquet root for the signature/ANN oracles, resolved when
     * the SQL is built rather than hard-coded to a checkout path:
     * `-Dgraft.fixtures.dir=...` overrides; default is the `fixtures/`
@@ -1003,12 +961,12 @@ object ScaleQueries {
     sys.props.getOrElse("graft.fixtures.dir",
       new java.io.File("fixtures").getAbsolutePath)
 
-  val oracles: Map[String, String] = Map(
+  val registry: Seq[QueryDef] = Seq(
     // Streaming DD-quantile: the drained histogram is bit-equal to the
     // batch sketch (deterministic counter merge), so the oracle replays
     // the WHOLE law from the events table and pins the stream-vs-batch
     // verdict TRUE. Within bound carries +5 dc for exact-width buckets.
-    "q_stream_dd_quantile" ->
+    QueryDef("q_stream_dd_quantile", qStreamDdQuantile,
       """WITH b AS (
         |  SELECT event_type,
         |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
@@ -1065,17 +1023,20 @@ object ScaleQueries {
         |    <= p99_exact_c * 10 * 65 + 50000 AS p99_within
         |FROM nt JOIN est USING (event_type) JOIN ex ON ex.event_type = nt.event_type
         |ORDER BY event_type""".stripMargin,
+      eager = true), // complete-mode sketch drain at construction
     // Shared batch oracles: CMS commits a bit-identical matrix under
     // any slicing (value replay); MG's verdict columns are
     // merge-invariant by the PODS bound (verdict replay).
-    "q_stream_countmin" -> EventQueries.oracles("q_evt_countmin"),
-    "q_stream_topk" -> TextQueries.oracles("q_txt_topk_mg"),
+    QueryDef("q_stream_countmin", qStreamCountmin, EventQueries.countminOracle,
+      eager = true), // complete-mode sketch drain at construction
+    QueryDef("q_stream_topk", qStreamTopk, TextQueries.topkMgOracle,
+      eager = true), // complete-mode sketch drain at construction
     // Per-lang doc counts replay; every header fact is a pinned
     // verdict over the REAL encoder's bytes (the q_mm_decode pattern).
-    "q_mm_container" ->
+    QueryDef("q_mm_container", qMmContainer,
       """SELECT lang, count(*) AS n_docs, TRUE AS size_ok,
         |  TRUE AS container_ok, TRUE AS dims_ok, TRUE AS format_ok
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin),
     // Pinned-verdict multimodal oracles (the round-9 pattern): the
     // fixture inputs are deterministic functions of doc_id, so every
     // integer/constant column replays exactly in DuckDB; the live
@@ -1090,7 +1051,7 @@ object ScaleQueries {
     // from the real PNG encode→decode round trip. A codec that
     // corrupts any pixel changes hashes, clusters and pairs — the
     // whole relation hash-fails.
-    "q_mm_phash" ->
+    QueryDef("q_mm_phash", qMmPhash,
       """WITH d AS (SELECT doc_id, text, length(text) AS len FROM documents),
         |px AS (SELECT doc_id,
         |    list_transform(range(64), i -> ord(substr(text, CAST(i % len AS INT) + 1, 1))) AS p
@@ -1109,12 +1070,12 @@ object ScaleQueries {
         |ex AS (SELECT 'exact_cluster' AS kind, phash AS h1, phash AS h2,
         |         n AS n1, n AS n2, 0 AS hamming
         |       FROM cl WHERE n >= 2)
-        |SELECT * FROM ex UNION ALL SELECT * FROM near ORDER BY kind, h1, h2""".stripMargin,
+        |SELECT * FROM ex UNION ALL SELECT * FROM near ORDER BY kind, h1, h2""".stripMargin),
     // the pipeline census rebuilt from text arithmetic: phash by the
     // q_mm_phash law, shards by doc_id % 16, tokens by string_split —
     // the engine derives the same numbers through shard-encode ->
     // parse -> codec-decode -> hash
-    "q_mm_tar_pipeline" ->
+    QueryDef("q_mm_tar_pipeline", qMmTarPipeline,
       """WITH d AS (SELECT doc_id, text, length(text) AS len FROM documents),
         |px AS (SELECT doc_id,
         |    list_transform(range(64), i -> ord(substr(text, CAST(i % len AS INT) + 1, 1))) AS p
@@ -1131,22 +1092,23 @@ object ScaleQueries {
         |  CAST(sum(phash % 1000000007) % 1000000007 AS BIGINT) AS phash_chk,
         |  CAST(sum(ntok) AS BIGINT) AS n_tokens
         |FROM r GROUP BY shard ORDER BY shard""".stripMargin,
-    "q_mm_features" ->
+      eager = true), // shard-sink write at construction
+    QueryDef("q_mm_features", qMmFeatures,
       """SELECT doc_id AS id, 'text/fake' AS modality,
         |       octet_length(encode(text)) AS n_bytes,
         |       TRUE AS entropy_ok, TRUE AS hist_sum_ok
-        |FROM documents ORDER BY id""".stripMargin,
-    "q_mm_decode" ->
+        |FROM documents ORDER BY id""".stripMargin),
+    QueryDef("q_mm_decode", qMmDecode,
       """SELECT doc_id, 8 AS px_w, 8 AS px_h,
         |       TRUE AS entropy_ok, TRUE AS decode_ok
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_mm_audio" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("q_mm_audio", qMmAudio,
       """SELECT doc_id, CAST(8000 AS DOUBLE) AS sample_rate,
         |       CAST(2048 AS BIGINT) AS n_samples,
         |       (4 + doc_id % 8) * 2 AS n_zero_cross,
         |       CAST(4 + doc_id % 8 AS INT) AS dominant_bin,
         |       TRUE AS rms_ok, TRUE AS zcr_ok, TRUE AS dom_ok
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // Streaming EP2 stitch: the fixture is 4 fovs x 2 stacks of 60x60
     // grid-labeled planes (the q_img_crop_roundtrip census: 36 cells,
     // 36*81 = 2916 nonzero px), 25 crops per canvas, group k's crops
@@ -1159,22 +1121,22 @@ object ScaleQueries {
     // mis-places crops, a timeout that never fires (state leak), or a
     // quarantine that fabricates a canvas all diverge from this
     // relation and fail the hash.
-    "q_stream_stitch" ->
+    QueryDef("q_stream_stitch", qStreamStitch,
       """SELECT 'fov' || CAST(f AS VARCHAR) AS fov, s AS stack, 0 AS slice,
         |  CASE WHEN f = 1 AND s = 0 THEN 24 ELSE 25 END AS n_crops,
         |  CASE WHEN f = 1 AND s = 0 THEN -1 ELSE 36 END AS n_cells,
         |  CASE WHEN f = 1 AND s = 0 THEN -1 ELSE 2916 END AS n_nonzero,
         |  CASE WHEN f = 1 AND s = 0 THEN 'quarantined' ELSE 'stitched' END AS status
         |FROM generate_series(1, 4) t(f), generate_series(0, 1) u(s)
-        |ORDER BY fov, stack, slice""".stripMargin,
-    "q_stream_stitch_tws" ->
+        |ORDER BY fov, stack, slice""".stripMargin, eager = true), // stream drain at construction
+    QueryDef("q_stream_stitch_tws", qStreamStitchTws,
       """SELECT 'fov' || CAST(f AS VARCHAR) AS fov, s AS stack, 0 AS slice,
         |  CASE WHEN f = 1 AND s = 0 THEN 24 ELSE 25 END AS n_crops,
         |  CASE WHEN f = 1 AND s = 0 THEN -1 ELSE 36 END AS n_cells,
         |  CASE WHEN f = 1 AND s = 0 THEN -1 ELSE 2916 END AS n_nonzero,
         |  CASE WHEN f = 1 AND s = 0 THEN 'quarantined' ELSE 'stitched' END AS status
         |FROM generate_series(1, 4) t(f), generate_series(0, 1) u(s)
-        |ORDER BY fov, stack, slice""".stripMargin,
+        |ORDER BY fov, stack, slice""".stripMargin, eager = true), // stream drain at construction
     // The video fixture is synthesized by an arithmetic law (frame f of
     // doc d is a constant luma plane (d*31 + f*7) % 256, 16x16, 8
     // frames), so the every-2nd-frame sample's aggregate is exactly
@@ -1186,7 +1148,7 @@ object ScaleQueries {
     // range condition emits exactly the batch pair set, so the oracle
     // IS the batch inequality join over the same micro-second law as
     // q_evt_range_join (pairs, not counts).
-    "q_stream_range_append" ->
+    QueryDef("q_stream_range_append", qStreamRangeAppend,
       """WITH p AS (
         |  SELECT event_id, user_id, epoch_us(ts) AS p_us
         |  FROM events WHERE event_type = 'purchase'),
@@ -1196,13 +1158,13 @@ object ScaleQueries {
         |SELECT p.event_id, p.user_id, p.p_us, c.c_us
         |FROM p JOIN c ON c.user_id = p.user_id
         |  AND c.c_us BETWEEN p.p_us - 3600000000 AND p.p_us
-        |ORDER BY event_id, c_us""".stripMargin,
-    "q_mm_frames" ->
+        |ORDER BY event_id, c_us""".stripMargin, eager = true), // stream drain at construction
+    QueryDef("q_mm_frames", qMmFrames,
       """SELECT doc_id, 4 AS n_sampled, 1024 AS sampled_bytes,
         |       round(avg((doc_id * 31 + f * 7) % 256), 6) AS mean_luma,
         |       TRUE AS decode_ok
         |FROM documents, (VALUES (0), (2), (4), (6)) v(f)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // Signature-fixture oracles: DuckDB cannot compute Spark's
     // xxhash64, so the per-doc minhash/simhash signatures are pinned
     // in fixtures/signatures (graft.tools.FixtureGen, keyed by corpus
@@ -1213,7 +1175,7 @@ object ScaleQueries {
     // the slice (equal slices => equal buckets; an xxhash64 collision
     // admitting an extra engine candidate would fail this gate, which
     // is the point).
-    "q_dedup_minhash_pairs" ->
+    QueryDef("q_dedup_minhash_pairs", qDedupMinhash,
       s"""WITH nd AS (SELECT count(*) AS n, sum(n_chars) AS nc FROM documents),
         |sig AS (SELECT doc_id, minhash
         |        FROM read_parquet('$fixturesDir/signatures/*.parquet') s, nd
@@ -1232,12 +1194,13 @@ object ScaleQueries {
         |  FROM cand JOIN sig sa ON sa.doc_id = cand.id_a JOIN sig sb ON sb.doc_id = cand.id_b)
         |SELECT id_a, id_b, est_jaccard FROM est
         |WHERE est_jaccard >= 0.05 ORDER BY id_a, id_b""".stripMargin,
+      eager = true), // LSH candidate-pipeline checkpoint at construction
     // Streaming near-dup gate: replay the stream/store split over the
     // pinned signature fixture — candidates share any of the 32 raw
     // band slices (engine buckets are xxhash64 of the same slice), the
     // estimate is matches*10000//128 (exact integer permyriads both
     // engines), novel iff best < 5000.
-    "q_stream_neardup" ->
+    QueryDef("q_stream_neardup", qStreamNeardup,
       s"""WITH nd AS (SELECT count(*) AS n, sum(n_chars) AS nc FROM documents),
         |sig AS (SELECT doc_id, minhash
         |        FROM read_parquet('$fixturesDir/signatures/*.parquet') s, nd
@@ -1267,8 +1230,8 @@ object ScaleQueries {
         |  coalesce(a.best, -1) AS best_est_pm,
         |  coalesce(a.best, -1) < 5000 AS novel
         |FROM str d LEFT JOIN agg a USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-    "q_dedup_simhash_pairs" ->
+        |ORDER BY d.doc_id""".stripMargin, eager = true), // stream drain at construction
+    QueryDef("q_dedup_simhash_pairs", qDedupSimhash,
       s"""WITH nd AS (SELECT count(*) AS n, sum(n_chars) AS nc FROM documents),
         |sig AS (SELECT doc_id, simhash
         |        FROM read_parquet('$fixturesDir/signatures/*.parquet') s, nd
@@ -1282,12 +1245,12 @@ object ScaleQueries {
         |  FROM chunked a JOIN chunked b USING (ci, chunk)
         |  WHERE a.doc_id < b.doc_id)
         |SELECT id_a, id_b, hamming FROM pairs
-        |WHERE hamming <= 8 ORDER BY id_a, id_b""".stripMargin,
+        |WHERE hamming <= 8 ORDER BY id_a, id_b""".stripMargin),
     // LSH recall gate: BOTH sides replay — the exact-Jaccard denominator
     // via the q_dedup_jaccard_pairs CTE chain over the (possibly sampled)
     // subcorpus, the LSH numerator via the pinned signature fixture — so
     // the recall number itself is oracle-checked, not just pinned TRUE.
-    "q_dedup_lsh_recall" ->
+    QueryDef("q_dedup_lsh_recall", qDedupLshRecall,
       s"""WITH nd AS (SELECT count(*) AS n, sum(n_chars) AS nc FROM documents),
         |smp AS (SELECT n, nc, greatest(1, (n + 4999) // 5000) AS m FROM nd),
         |docs AS (SELECT d.doc_id, d.text FROM documents d, smp
@@ -1344,10 +1307,11 @@ object ScaleQueries {
         |       ELSE CAST(n_hits AS DOUBLE) / n_exact >= 0.9 END AS recall_ok,
         |  smp.m AS sample_mod, smp.n AS n_docs_total
         |FROM cnt, smp""".stripMargin,
+      eager = true), // LSH candidate-pipeline recall counts at construction
     // LSH ANN full value replay: bucket assignment from the pinned seeded
     // hyperplanes (data-independent fixture), multi-probe = hamming <= 2
     // on the 10-bit signature, cosine by the proven q_sim_knn_join recipe.
-    "q_sim_ann_lsh" ->
+    QueryDef("q_sim_ann_lsh", qSimAnnLsh,
       s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS vec
         |           FROM embeddings),
         |pl AS (SELECT bit, w
@@ -1377,13 +1341,14 @@ object ScaleQueries {
         |SELECT vec_id, label, round(cs, 6) AS cos_sim,
         |  vec_id IN (SELECT vec_id FROM exact) AS in_exact_topk
         |FROM ann WHERE rk <= 10 ORDER BY cos_sim DESC, vec_id""".stripMargin,
+      eager = true), // driver point-lookup of the probe vector at construction
     // IVF ANN full value replay: the codebook is a bit-deterministic
     // function of the corpus (quantized Lloyd sums), pinned per corpus
     // in fixtures/ivf_centroids keyed by (count, exact first-component
     // checksum); DuckDB replays cell assignment (argmax dot, first-wins
     // ties), the driver-side nprobe cell choice (normalized query), and
     // the pruned top-k.
-    "q_sim_ann_ivf" ->
+    QueryDef("q_sim_ann_ivf", qSimAnnIvf,
       s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS vec
         |           FROM embeddings),
         |nv AS (SELECT count(*) AS n,
@@ -1430,11 +1395,12 @@ object ScaleQueries {
         |SELECT vec_id, label, round(cs, 6) AS cos_sim,
         |  vec_id IN (SELECT vec_id FROM exact) AS in_exact_topk
         |FROM ann WHERE rk <= 10 ORDER BY cos_sim DESC, vec_id""".stripMargin,
+      eager = true), // probe-vector lookup + k-means codebook collect at construction
     // IVF recall gate: exact and pruned sides BOTH replay in SQL (probe
     // batch, per-probe brute-force top-10, fixture-codebook cell
     // assignment + nprobe choice, pruned per-probe top-10), so every
     // count and the recall value itself are oracle-checked.
-    "q_sim_ivf_recall" ->
+    QueryDef("q_sim_ivf_recall", qSimIvfRecall,
       s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS vec
         |           FROM embeddings),
         |nv AS (SELECT count(*) AS n,
@@ -1492,7 +1458,8 @@ object ScaleQueries {
         |  CASE WHEN n_exact = 0 THEN TRUE
         |       ELSE CAST(n_hits AS DOUBLE) / n_exact >= 0.6 END AS recall_ok
         |FROM cnt""".stripMargin,
-    "q_stream_sessionize" ->
+      eager = true), // k-means codebook collect + recall counts at construction
+    QueryDef("q_stream_sessionize", qStreamSessionize,
       """WITH e AS (
         |  SELECT user_id, epoch_us(ts) AS us,
         |    lag(epoch_us(ts), 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
@@ -1501,12 +1468,14 @@ object ScaleQueries {
         |  CAST(sum(CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions,
         |  count(*) AS n_events
         |FROM e GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_stream_dedup" ->
+      eager = true), // stream drain at construction
+    QueryDef("q_stream_dedup", qStreamDedup,
       """SELECT event_type, count(DISTINCT user_id) AS n_users
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+      eager = true), // stream drain at construction
     // the full-history fold the O(1) streaming state replaces: the
     // list_reduce IS the e' = v/2 + e/2 recursion, element 1 seeding
-    "q_stream_pattern" ->
+    QueryDef("q_stream_pattern", qStreamPattern,
       """WITH j AS (
         |  SELECT user_id, count(*) AS n_events,
         |    string_agg(substr(event_type, 1, 1), '' ORDER BY ts, event_id) AS journey
@@ -1515,8 +1484,8 @@ object ScaleQueries {
         |  CAST(len(regexp_extract_all(journey, 'vc*p')) AS BIGINT) AS n_conv,
         |  CAST(len(regexp_extract_all(journey, 'ee+')) AS BIGINT) AS n_err_runs,
         |  len(regexp_extract_all(journey, 's[^p]*p')) > 0 AS signup_converted
-        |FROM j ORDER BY user_id""".stripMargin,
-    "q_stream_pattern_tws" ->
+        |FROM j ORDER BY user_id""".stripMargin, eager = true), // stream drain at construction
+    QueryDef("q_stream_pattern_tws", qStreamPatternTws,
       """WITH j AS (
         |  SELECT user_id, count(*) AS n_events,
         |    string_agg(substr(event_type, 1, 1), '' ORDER BY ts, event_id) AS journey
@@ -1525,19 +1494,22 @@ object ScaleQueries {
         |  CAST(len(regexp_extract_all(journey, 'vc*p')) AS BIGINT) AS n_conv,
         |  CAST(len(regexp_extract_all(journey, 'ee+')) AS BIGINT) AS n_err_runs,
         |  len(regexp_extract_all(journey, 's[^p]*p')) > 0 AS signup_converted
-        |FROM j ORDER BY user_id""".stripMargin,
-    "q_stream_attribution" -> EventQueries.oracles("q_evt_attribution"),
-    "q_stream_ewma" ->
+        |FROM j ORDER BY user_id""".stripMargin, eager = true), // stream drain at construction
+    QueryDef("q_stream_attribution", qStreamAttribution, EventQueries.attributionOracle,
+      eager = true), // stream drain at construction
+    QueryDef("q_stream_ewma", qStreamEwma,
       """SELECT user_id, count(*) AS n_events,
         |  round(list_reduce(list(value ORDER BY ts, event_id),
         |    (acc, x) -> acc / 2.0 + x / 2.0), 6) AS ewma
         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_stream_ewma_tws" ->
+      eager = true), // stream drain at construction
+    QueryDef("q_stream_ewma_tws", qStreamEwmaTws,
       """SELECT user_id, count(*) AS n_events,
         |  round(list_reduce(list(value ORDER BY ts, event_id),
         |    (acc, x) -> acc / 2.0 + x / 2.0), 6) AS ewma
         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_stream_incremental" ->
+      eager = true), // stream drain at construction
+    QueryDef("q_stream_incremental", qStreamIncremental,
       """WITH fp AS (
         |  SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
         |  FROM documents),
@@ -1549,16 +1521,18 @@ object ScaleQueries {
         |  SELECT doc_id, fp, min(doc_id) OVER (PARTITION BY fp) AS keeper
         |  FROM novel)
         |WHERE doc_id = keeper ORDER BY doc_id""".stripMargin,
-    "q_stream_hourly" ->
+      eager = true), // stream drain at construction
+    QueryDef("q_stream_hourly", qStreamHourly,
       """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour, event_type,
         |  count(*) AS n, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
         |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin,
+      eager = true), // stream drain at construction
     // Outer-interval-join contract: the batch LEFT join restricted to
     // the stable region (p_ts at least 2 h — range + 2·delay — behind
     // the final event), where every NULL emission has provably
     // happened; the exact expiry boundary above it is engine-internal
     // batch timing (see the registry wrapper's scaladoc).
-    "q_stream_range_outer" ->
+    QueryDef("q_stream_range_outer", qStreamRangeOuter,
       """WITH cut AS (SELECT epoch_us(max(ts)) - 7200000000 AS cut_us FROM events),
         |p AS (SELECT event_id, user_id, epoch_us(ts) AS p_us
         |      FROM events WHERE event_type = 'purchase'),
@@ -1568,14 +1542,14 @@ object ScaleQueries {
         |FROM p LEFT JOIN c ON p.user_id = c.user_id
         |  AND c.c_us >= p.p_us - 3600000000 AND c.c_us <= p.p_us, cut
         |WHERE p.p_us <= cut_us
-        |ORDER BY event_id, c_us""".stripMargin,
+        |ORDER BY event_id, c_us""".stripMargin, eager = true), // append-mode drain at construction
     // Native-session emission law: a session window [start, last+gap)
     // is final iff the watermark (max event ms − 10 min) has passed
     // its END (last event + the 30-min gap). The gap boundary is
     // INCLUSIVE — an exactly-gap-spaced event MERGES (verified
     // empirically in SessionWindowSpec) — so the split rule is the
     // same strict > the custom sessionizers use.
-    "q_stream_session_native" ->
+    QueryDef("q_stream_session_native", qStreamSessionNative,
       """WITH wm AS (SELECT CAST(floor(epoch_us(max(ts)) / 1000) AS BIGINT) - 600000 AS wm_ms
         |           FROM events),
         |e AS (
@@ -1598,21 +1572,26 @@ object ScaleQueries {
         |FROM sess, wm
         |WHERE CAST(floor((end_us + 1800000000) / 1000) AS BIGINT) <= wm_ms
         |ORDER BY user_id, start_us""".stripMargin,
+      eager = true), // append-mode drain at construction
     // Append-mode PSI: the batch PSI replay under the same
     // window-finality law (generated beside the q_evt_psi oracle).
-    "q_stream_psi" -> EventQueries.psiOracle(emissionLaw = true),
+    QueryDef("q_stream_psi", qStreamPsi, EventQueries.psiOracle(emissionLaw = true),
+      eager = true), // append-mode drain at construction
     // transformWithState twin (window-keyed ValueState + timers) is
     // spec-pinned bit-equal to the classic, so it replays the same law.
-    "q_stream_psi_tws" -> EventQueries.psiOracle(emissionLaw = true),
+    QueryDef("q_stream_psi_tws", qStreamPsiTws, EventQueries.psiOracle(emissionLaw = true),
+      eager = true), // append-mode drain at construction
     // Append-mode emission law: a window is final iff the watermark
     // (max event time in MILLISECONDS minus the 2 h delay — Spark
     // tracks watermarks at ms precision) has passed its END.
-    "q_stream_hourly_append" -> hourlyAppendOracle,
+    QueryDef("q_stream_hourly_append", qStreamHourlyAppend, hourlyAppendOracle,
+      eager = true), // stream drain at construction
     // transformWithState twin (MapState + per-window event-time timer)
     // is spec-pinned bit-equal to the built-in windowed aggregation, so
     // it replays the IDENTICAL emission-law oracle (one shared string —
     // a fix to the law can never reach one twin and miss the other).
-    "q_stream_hourly_tws" -> hourlyAppendOracle,
+    QueryDef("q_stream_hourly_tws", qStreamHourlyTws, hourlyAppendOracle,
+      eager = true), // stream drain at construction
     // Append-session emission law: a session is final (and emitted)
     // iff a later session exists for its user, or the final watermark
     // (max event ms - 10 min delay) strictly passed its end + 30 min
@@ -1620,7 +1599,7 @@ object ScaleQueries {
     // timestamp, set at floor(end_us/1000) + gap_ms). The
     // transformWithState timer twin (q_stream_sessionize_tws, below)
     // is spec-pinned bit-equal, so it replays the identical law.
-    "q_stream_sessionize_append" ->
+    QueryDef("q_stream_sessionize_append", qStreamSessionizeAppend,
       """WITH wm AS (SELECT CAST(floor(epoch_us(max(ts)) / 1000) AS BIGINT) - 600000 AS wm_ms
         |           FROM events),
         |e AS (
@@ -1645,7 +1624,8 @@ object ScaleQueries {
         |WHERE sess.sess_id < last.last_id
         |   OR CAST(floor(end_us / 1000) AS BIGINT) + 1800000 < wm_ms
         |ORDER BY sess.user_id, start_us""".stripMargin,
-    "q_stream_sessionize_tws" ->
+      eager = true), // stream drain at construction
+    QueryDef("q_stream_sessionize_tws", qStreamSessionizeTws,
       """WITH wm AS (SELECT CAST(floor(epoch_us(max(ts)) / 1000) AS BIGINT) - 600000 AS wm_ms
         |           FROM events),
         |e AS (
@@ -1670,13 +1650,14 @@ object ScaleQueries {
         |WHERE sess.sess_id < last.last_id
         |   OR CAST(floor(end_us / 1000) AS BIGINT) + 1800000 < wm_ms
         |ORDER BY sess.user_id, start_us""".stripMargin,
-    "q_stream_incremental_append" ->
+      eager = true), // stream drain at construction
+    QueryDef("q_stream_incremental_append", qStreamIncrementalAppend,
       """WITH fp AS (
         |  SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
         |  FROM documents),
         |store AS (SELECT DISTINCT fp FROM fp WHERE doc_id % 10 <> 9)
         |SELECT DISTINCT fp FROM fp
         |WHERE doc_id % 10 = 9 AND fp NOT IN (SELECT fp FROM store)
-        |ORDER BY fp""".stripMargin,
+        |ORDER BY fp""".stripMargin, eager = true), // stream drain at construction
   )
 }

@@ -982,29 +982,6 @@ object SimilarityQueries {
       .orderBy("probe_id", "rk")
   }
 
-  val defs: Map[String, QueryFn] = Map(
-    "q_emb_meanpool_nn" -> qEmbMeanpoolNn _,
-    "q_sim_maxsim" -> qSimMaxsim _,
-    "q_emb_kmeans" -> qEmbKmeans _,
-    "q_emb_int8" -> qEmbInt8 _,
-    "q_emb_pca2" -> qEmbPca2 _,
-    "q_emb_pca" -> qEmbPca _,
-    "q_emb_pq" -> qEmbPq _,
-    "q_emb_pq_recall" -> qEmbPqRecall _,
-    "q_dedup_semdedup" -> qDedupSemdedup _,
-    "q_stream_semgate" -> qStreamSemgate _,
-    "q_emb_dim_stats" -> qEmbDimStats _,
-    "q_emb_outliers" -> qEmbOutliers _,
-    "q_sim_knn_join" -> qSimKnnJoin _,
-    "q_emb_matryoshka" -> qEmbMatryoshka _,
-    "q_sim_topk" -> qSimTopk _,
-    "q_sim_pair_count" -> qSimPairCount _,
-    "q_sim_norms" -> qSimNorms _,
-    "q_sim_centroid" -> qSimCentroid _,
-    "q_dedup_embedding" -> qDedupEmbedding _,
-    "q_emb_silhouette" -> qEmbSilhouette _,
-  )
-
   /** Shared oracle CTE prefix: PQ subvectors, seeded codebook and
     * rounded candidate distances over the first `m` subspaces —
     * the exact DuckDB replay of [[pqSubvectors]] + [[pqAssign]].
@@ -1149,10 +1126,10 @@ object SimilarityQueries {
        |      list_transform(string_split($tok, ''), c -> CAST(ord(c) AS BIGINT))),
        |      (acc, cp) -> (acc * 31 + cp) % $msP)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val registry: Seq[QueryDef] = Seq(
     // Centroid-silhouette replay: identical 1e-6 centroid rounding,
     // floor(d²·1e6) quantization, and integer s accumulation.
-    "q_emb_silhouette" ->
+    QueryDef("q_emb_silhouette", qEmbSilhouette,
       """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
         |flat AS (SELECT label, generate_subscripts(vec, 1) AS pos, unnest(vec) AS x FROM e),
         |cent AS (SELECT label, list(round(ax, 6) ORDER BY pos) AS cvec
@@ -1175,11 +1152,11 @@ object SimilarityQueries {
         |SELECT own AS label, count(*) AS n,
         |  CAST(sum(CASE WHEN b < a THEN 1 ELSE 0 END) AS BIGINT) AS n_misassigned,
         |  round(CAST(sum(s_q) AS DOUBLE) / (1000000.0 * count(*)), 6) AS mean_sil
-        |FROM sil GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM sil GROUP BY 1 ORDER BY 1""".stripMargin),
     // Pooled bi-encoder replay: per-dimension integer sums of the same
     // hash embeddings, joined on the 8 dimension ids — every score is
     // an exact int64.
-    "q_emb_meanpool_nn" ->
+    QueryDef("q_emb_meanpool_nn", qEmbMeanpoolNn,
       s"""WITH params AS (SELECT * FROM (VALUES ${(0 until 8).map(i =>
             s"(${i + 1}, ${msA(i)}, ${msB(i)})").mkString(", ")}) AS t(i, a, b)),
          |qt AS (
@@ -1204,10 +1181,11 @@ object SimilarityQueries {
          |    PARTITION BY probe_id ORDER BY score DESC, doc_id) AS INT) AS rk FROM sc)
          |SELECT probe_id, rk, doc_id, score FROM r WHERE rk <= 10
          |ORDER BY probe_id, rk""".stripMargin,
+      eager = true), // probe rows collected at construction
     // Value-level MaxSim replay: hash, embedding, per-query-token max
     // and the summed score are all int64-exact, so the top-10 relation
     // hashes identically — no float ever enters the sort key.
-    "q_sim_maxsim" ->
+    QueryDef("q_sim_maxsim", qSimMaxsim,
       s"""WITH qt AS (
          |  SELECT doc_id AS probe_id, CAST(i - 1 AS INT) AS qpos, w[CAST(i AS INT)] AS tok
          |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents
@@ -1231,14 +1209,17 @@ object SimilarityQueries {
          |    PARTITION BY probe_id ORDER BY score DESC, doc_id) AS INT) AS rk FROM sc)
          |SELECT probe_id, rk, doc_id, score FROM r WHERE rk <= 10
          |ORDER BY probe_id, rk""".stripMargin,
-    "q_emb_kmeans" -> kmeansOracle,
-    "q_emb_pca" -> pcaOracle,
-    "q_emb_pca2" -> pca2Oracle,
-    "q_emb_pq" ->
+      eager = true), // probe rows collected at construction
+    QueryDef("q_emb_kmeans", qEmbKmeans, kmeansOracle),
+    QueryDef("q_emb_pca", qEmbPca, pcaOracle,
+      eager = true), // power-iteration sums collected at construction
+    QueryDef("q_emb_pca2", qEmbPca2, pca2Oracle,
+      eager = true), // power-iteration sums collected at construction
+    QueryDef("q_emb_pq", qEmbPq,
       s"""${pqOracleCtes(pqM)}
         |SELECT sub, code, count(*) AS n, CAST(sum(qd) AS BIGINT) AS sum_qd
-        |FROM enc GROUP BY sub, code ORDER BY sub, code""".stripMargin,
-    "q_emb_pq_recall" ->
+        |FROM enc GROUP BY sub, code ORDER BY sub, code""".stripMargin),
+    QueryDef("q_emb_pq_recall", qEmbPqRecall,
       s"""${pqOracleCtes(pqM)},
         |dt AS (SELECT p.vec_id AS probe_id, cb.sub, cb.code,
         |        CAST(floor(list_sum(list_transform(range(1, ${pqSubDim + 1}),
@@ -1271,8 +1252,8 @@ object SimilarityQueries {
         |  round(coalesce(h.h_short, 0) / 10.0, 6) AS recall_rerank10
         |FROM (SELECT vec_id FROM e WHERE vec_id < $pqProbeCount) p
         |LEFT JOIN hits h ON p.vec_id = h.probe_id
-        |ORDER BY probe_id""".stripMargin,
-    "q_dedup_semdedup" ->
+        |ORDER BY probe_id""".stripMargin),
+    QueryDef("q_dedup_semdedup", qDedupSemdedup,
       s"""${pqOracleCtes(2)},
         |coded AS (SELECT vec_id,
         |        max(CASE WHEN sub = 0 THEN code END) * $pqK +
@@ -1286,12 +1267,12 @@ object SimilarityQueries {
         |         * sqrt(list_sum(list_transform(b.vec, x -> x * x)))), 6) AS sim
         |  FROM v a JOIN v b ON a.cl = b.cl AND a.vec_id < b.vec_id)
         |SELECT label_a, label_b, count(*) AS n_pairs, round(max(sim), 6) AS max_sim
-        |FROM pairs WHERE sim >= 0.2 GROUP BY label_a, label_b ORDER BY label_a, label_b""".stripMargin,
+        |FROM pairs WHERE sim >= 0.2 GROUP BY label_a, label_b ORDER BY label_a, label_b""".stripMargin),
     // Streaming semantic gate: replay the cell coding (same PQ CTEs as
     // q_dedup_semdedup), split stream/store on vec_id % 10, score each
     // arriving vector against its cell's store members, novel iff best
     // 6-dp cosine < 0.2.
-    "q_stream_semgate" ->
+    QueryDef("q_stream_semgate", qStreamSemgate,
       s"""${pqOracleCtes(2)},
         |coded AS (SELECT vec_id,
         |        max(CASE WHEN sub = 0 THEN code END) * $pqK +
@@ -1314,8 +1295,8 @@ object SimilarityQueries {
         |  coalesce(a.best, -1.0) AS best_sim,
         |  coalesce(a.best, -1.0) < 0.2 AS novel
         |FROM str s LEFT JOIN agg a USING (vec_id)
-        |ORDER BY s.vec_id""".stripMargin,
-    "q_emb_outliers" ->
+        |ORDER BY s.vec_id""".stripMargin, eager = true), // stream drain at construction
+    QueryDef("q_emb_outliers", qEmbOutliers,
       """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
         |x AS (SELECT label, CAST(generate_subscripts(vec, 1) AS BIGINT) AS pos,
         |        unnest(vec) AS x FROM e),
@@ -1334,8 +1315,8 @@ object SimilarityQueries {
         |  CASE WHEN rk_out <= 5 THEN 'outlier' ELSE 'prototype' END AS role,
         |  CAST(CASE WHEN rk_out <= 5 THEN rk_out ELSE rk_proto END AS INTEGER) AS rk
         |FROM r WHERE rk_out <= 5 OR rk_proto <= 5
-        |ORDER BY label, role, rk""".stripMargin,
-    "q_emb_int8" ->
+        |ORDER BY label, role, rk""".stripMargin),
+    QueryDef("q_emb_int8", qEmbInt8,
       """WITH ex AS (SELECT CAST(unnest(embedding) AS DOUBLE) AS x,
         |        CAST(generate_subscripts(embedding, 1) AS BIGINT) AS dim FROM embeddings),
         |sc AS (SELECT dim, max(abs(x)) AS absmax FROM ex GROUP BY dim),
@@ -1352,8 +1333,8 @@ object SimilarityQueries {
         |  CAST(floor(max(absmax) * 1000000) AS BIGINT) AS absmax_micro,
         |  count(DISTINCT q) AS n_levels, min(q) AS min_q, max(q) AS max_q,
         |  CAST(sum(err_nano) AS BIGINT) AS sum_err_nano, max(err_nano) AS max_err_nano
-        |FROM e GROUP BY dim ORDER BY dim""".stripMargin,
-    "q_emb_dim_stats" ->
+        |FROM e GROUP BY dim ORDER BY dim""".stripMargin),
+    QueryDef("q_emb_dim_stats", qEmbDimStats,
       """SELECT dim, count(*) AS n,
         |  CAST(sum(CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS BIGINT) AS sum_q,
         |  CAST(min(CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS BIGINT) AS min_q,
@@ -1361,8 +1342,8 @@ object SimilarityQueries {
         |FROM (SELECT unnest(embedding) AS x,
         |        CAST(generate_subscripts(embedding, 1) AS BIGINT) AS dim
         |      FROM embeddings)
-        |GROUP BY dim ORDER BY dim""".stripMargin,
-    "q_sim_knn_join" ->
+        |GROUP BY dim ORDER BY dim""".stripMargin),
+    QueryDef("q_sim_knn_join", qSimKnnJoin,
       """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
         |p AS (SELECT vec_id AS probe_id, vec AS qvec FROM e WHERE vec_id % 100 = 0
         |      ORDER BY vec_id LIMIT 32),
@@ -1375,11 +1356,11 @@ object SimilarityQueries {
         |r AS (SELECT *, row_number() OVER (
         |        PARTITION BY probe_id ORDER BY cos_sim DESC, vec_id) AS rk FROM s)
         |SELECT probe_id, vec_id, label, cos_sim, rk FROM r
-        |WHERE rk <= 3 ORDER BY probe_id, rk""".stripMargin,
+        |WHERE rk <= 3 ORDER BY probe_id, rk""".stripMargin),
     // Matryoshka replay: same slice folds over DOUBLE[] prefixes, the
     // floor(1e6) quantization + id tiebreak, and the same top-10
     // overlap law against the full-dim list.
-    "q_emb_matryoshka" ->
+    QueryDef("q_emb_matryoshka", qEmbMatryoshka,
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec
         |           FROM embeddings),
         |p AS (SELECT vec_id AS probe_id, vec AS qvec FROM e
@@ -1420,8 +1401,8 @@ object SimilarityQueries {
         |       AS BIGINT) AS recall_pct
         |FROM tt LEFT JOIN t64 f
         |  ON tt.probe_id = f.probe_id AND tt.vec_id = f.vec_id
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_sim_topk" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QueryDef("q_sim_topk", qSimTopk,
       """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
         |probe AS (SELECT vec FROM e WHERE vec_id = 0)
         |SELECT e.vec_id, e.label,
@@ -1429,8 +1410,8 @@ object SimilarityQueries {
         |    / (sqrt(list_sum(list_transform(e.vec, x -> x * x)))
         |       * sqrt(list_sum(list_transform(probe.vec, x -> x * x)))), 6) AS cos_sim
         |FROM e, probe WHERE e.vec_id <> 0
-        |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin,
-    "q_sim_pair_count" ->
+        |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin),
+    QueryDef("q_sim_pair_count", qSimPairCount,
       s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS vec
         |  FROM embeddings WHERE vec_id < $pairCountIdBound),
         |pairs AS (
@@ -1440,8 +1421,8 @@ object SimilarityQueries {
         |         * sqrt(list_sum(list_transform(b.vec, x -> x * x)))), 6) AS sim
         |  FROM e a JOIN e b ON a.vec_id < b.vec_id)
         |SELECT label_a, label_b, count(*) AS n_pairs, max(sim) AS max_sim
-        |FROM pairs WHERE sim > 0.3 GROUP BY label_a, label_b ORDER BY label_a, label_b""".stripMargin,
-    "q_dedup_embedding" ->
+        |FROM pairs WHERE sim > 0.3 GROUP BY label_a, label_b ORDER BY label_a, label_b""".stripMargin),
+    QueryDef("q_dedup_embedding", qDedupEmbedding,
       """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
         |pairs AS (
         |  SELECT a.label, a.vec_id AS id_a, b.vec_id AS id_b,
@@ -1451,17 +1432,17 @@ object SimilarityQueries {
         |  FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id)
         |SELECT label, count(*) AS n_dup_pairs, count(DISTINCT id_b) AS n_dup_docs,
         |  round(max(sim), 6) AS max_sim
-        |FROM pairs WHERE sim >= 0.2 GROUP BY label ORDER BY label""".stripMargin,
-    "q_sim_norms" ->
+        |FROM pairs WHERE sim >= 0.2 GROUP BY label ORDER BY label""".stripMargin),
+    QueryDef("q_sim_norms", qSimNorms,
       """SELECT vec_id, label, len(embedding) AS dim,
         |  round(sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x))), 6) AS l2_norm
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-    "q_sim_centroid" ->
+        |FROM embeddings ORDER BY vec_id""".stripMargin),
+    QueryDef("q_sim_centroid", qSimCentroid,
       """WITH ex AS (
         |  SELECT label, i - 1 AS pos, vec[i] AS x
         |  FROM (SELECT label, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
         |       unnest(range(1, 65)) AS t(i))
         |SELECT label, pos, count(*) AS n, round(avg(x), 6) AS mean_x
-        |FROM ex WHERE pos < 4 GROUP BY label, pos ORDER BY label, pos""".stripMargin,
+        |FROM ex WHERE pos < 4 GROUP BY label, pos ORDER BY label, pos""".stripMargin),
   )
 }

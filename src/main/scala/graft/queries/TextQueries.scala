@@ -1832,62 +1832,23 @@ object TextQueries {
       .orderBy("source", "status")
   }
 
-  val defs: Map[String, QueryFn] = Map(
-    "q_corpus_diff" -> qCorpusDiff _,
-    "q_txt_js_drift" -> qTxtJsDrift _,
-    "q_txt_kappa" -> qTxtKappa _,
-    "q_txt_langid_eval" -> qTxtLangidEval _,
-    "q_txt_ngram_novelty" -> qTxtNgramNovelty _,
-    "q_txt_burstiness" -> qTxtBurstiness _,
-    "q_txt_vocab_growth" -> qTxtVocabGrowth _,
-    "q_txt_blocklist" -> qTxtBlocklist _,
-    "q_txt_topk_mg" -> qTxtTopkMg _,
-    "q_txt_bigram_lm" -> qTxtBigramLm _,
-    "q_txt_zipf" -> qTxtZipf _,
-    "q_txt_bm25" -> qTxtBm25 _,
-    "q_txt_bloom_decon" -> qTxtBloomDecon _,
-    "q_txt_chunk_dedup" -> qTxtChunkDedup _,
-    "q_txt_exact_substr" -> qTxtExactSubstr _,
-    "q_txt_cdc_chunks" -> qTxtCdcChunks _,
-    "q_txt_mixture" -> qTxtMixture _,
-    "q_txt_colloc" -> qTxtColloc _,
-    "q_txt_bpe_merge" -> qTxtBpeMerge _,
-    "q_txt_bpe_train" -> qTxtBpeTrain _,
-    "q_txt_bpe_encode" -> qTxtBpeEncode _,
-    "q_txt_tfidf" -> qTxtTfidf _,
-    "q_txt_pii" -> qTxtPii _,
-    "q_txt_repetition" -> qTxtRepetition _,
-    "q_txt_dup_spans" -> qTxtDupSpans _,
-    "q_txt_unigram_lp" -> qTxtUnigramLp _,
-    "q_txt_dsir" -> qTxtDsir _,
-    "q_txt_ppl_bucket" -> qTxtPplBucket _,
-    "q_txt_mojibake" -> qTxtMojibake _,
-    "q_txt_curation_funnel" -> qTxtCurationFunnel _,
-    "q_txt_kneser_ney" -> qTxtKneserNey _,
-    "q_txt_decontaminate" -> qTxtDecontaminate _,
-    "q_txt_redact" -> qTxtRedact _,
-    "q_txt_pack" -> qTxtPack _,
-    "q_txt_sample_stratified" -> qTxtSampleStratified _,
-    "q_txt_sample_weighted" -> qTxtSampleWeighted _,
-    "q_txt_heavy_hitters" -> qTxtHeavyHitters _,
-    "q_txt_tokens" -> qTxtTokens _,
-    "q_txt_bpe_tokens" -> qTxtBpeTokens _,
-    "q_txt_quality" -> qTxtQuality _,
-    "q_txt_langid" -> qTxtLangid _,
-    "q_txt_wordfreq" -> qTxtWordfreq _,
-    "q_txt_fingerprint" -> qTxtFingerprint _,
-    "q_txt_rolling_fp" -> qTxtRolling _,
-    "q_txt_shingles" -> qTxtShingles _,
-  )
-
   private def piiOracleCols(pat: String, name: String): String =
     s"""count(CASE WHEN len(regexp_extract_all(text, '$pat')) > 0 THEN 1 END) AS docs_$name,
        |  CAST(sum(len(regexp_extract_all(text, '$pat'))) AS BIGINT) AS n_$name""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  private[queries] val topkMgOracle: String =
+    s"""WITH w AS (SELECT unnest(string_split(text, ' ')) AS token FROM documents),
+       |tot AS (SELECT count(*) AS n_total FROM w),
+       |e AS (SELECT token, count(*) AS n FROM w GROUP BY 1
+       |      ORDER BY n DESC, token LIMIT 20)
+       |SELECT token, n, (n * ${mgK + 1} > n_total) AS guaranteed,
+       |  TRUE AS present_ok, TRUE AS est_ok
+       |FROM e, tot ORDER BY n DESC, token""".stripMargin
+
+  val registry: Seq[QueryDef] = Seq(
     // Diff law replayed comparing TEXT equality (the engine compares
     // md5 digests — independence by construction).
-    "q_corpus_diff" ->
+    QueryDef("q_corpus_diff", qCorpusDiff,
       """WITH v1 AS (SELECT doc_id, source, text FROM documents),
         |v2 AS (
         |  SELECT doc_id, source,
@@ -1909,8 +1870,8 @@ object TextQueries {
         |SELECT source, status, CAST(count(*) AS BIGINT) AS n_docs,
         |       CAST(sum(na) AS BIGINT) AS bytes_before,
         |       CAST(sum(nb) AS BIGINT) AS bytes_after
-        |FROM j GROUP BY source, status ORDER BY source, status""".stripMargin,
-    "q_txt_js_drift" ->
+        |FROM j GROUP BY source, status ORDER BY source, status""".stripMargin),
+    QueryDef("q_txt_js_drift", qTxtJsDrift,
       """WITH toks AS (
         |  SELECT CAST(doc_id % 2 AS INTEGER) AS half,
         |         unnest(string_split(text, ' ')) AS tok
@@ -1947,8 +1908,8 @@ object TextQueries {
         |SELECT n_terms, n_tok_1, n_tok_2, jsd_nnat,
         |  (SELECT max(vt) FROM terms WHERE contrib_nnat = mx) AS top_token,
         |  mx AS top_contrib_nnat
-        |FROM agg""".stripMargin,
-    "q_txt_kappa" ->
+        |FROM agg""".stripMargin),
+    QueryDef("q_txt_kappa", qTxtKappa,
       """WITH scored AS (
         |  SELECT lang,
         |    len(list_filter(string_split(text, ' '), x -> x IN ('the','a','and','is'))) AS en_hits,
@@ -1997,8 +1958,8 @@ object TextQueries {
         |       ((CAST(rc AS DOUBLE) / n_tot) / n_tot)) /
         |      (1.0 - ((CAST(rc AS DOUBLE) / n_tot) / n_tot))) AS BIGINT) AS kappa_ppm
         |  FROM rc, tot)
-        |SELECT * FROM pl UNION ALL SELECT * FROM ov ORDER BY lang""".stripMargin,
-    "q_txt_langid_eval" ->
+        |SELECT * FROM pl UNION ALL SELECT * FROM ov ORDER BY lang""".stripMargin),
+    QueryDef("q_txt_langid_eval", qTxtLangidEval,
       """WITH scored AS (
         |  SELECT lang,
         |    len(list_filter(string_split(text, ' '), x -> x IN ('the','a','and','is'))) AS en_hits,
@@ -2020,8 +1981,8 @@ object TextQueries {
         |  CAST(floor(1000000 * cell.n / n_lang) AS BIGINT) AS recall_ppm,
         |  CAST(floor(1000000 * cell.n / n_guess) AS BIGINT) AS precision_ppm
         |FROM cell JOIN rt USING (lang) JOIN ct USING (guess)
-        |ORDER BY lang, guess""".stripMargin,
-    "q_txt_ngram_novelty" ->
+        |ORDER BY lang, guess""".stripMargin),
+    QueryDef("q_txt_ngram_novelty", qTxtNgramNovelty,
       """WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
         |tk AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
         |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
@@ -2035,16 +1996,16 @@ object TextQueries {
         |  FROM occ JOIN fs USING (sh) GROUP BY 1)
         |SELECT decile, n_occ, n_novel,
         |  CAST(floor(1000000 * n_novel / n_occ) AS BIGINT) AS novelty_ppm
-        |FROM c ORDER BY decile""".stripMargin,
-    "q_txt_burstiness" ->
+        |FROM c ORDER BY decile""".stripMargin),
+    QueryDef("q_txt_burstiness", qTxtBurstiness,
       """WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
         |g AS (SELECT token, CAST(count(*) AS BIGINT) AS cf,
         |    CAST(count(DISTINCT doc_id) AS BIGINT) AS df
         |  FROM w WHERE token <> '' GROUP BY 1)
         |SELECT token, cf, df,
         |  CAST(floor(1000 * cf / df) AS BIGINT) AS burstiness_x1000
-        |FROM g ORDER BY cf DESC, token LIMIT 20""".stripMargin,
-    "q_txt_vocab_growth" ->
+        |FROM g ORDER BY cf DESC, token LIMIT 20""".stripMargin),
+    QueryDef("q_txt_vocab_growth", qTxtVocabGrowth,
       """WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
         |fs AS (SELECT t AS token, min(doc_id) AS first_doc
         |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents)
@@ -2056,8 +2017,8 @@ object TextQueries {
         |  CAST(new_tokens AS BIGINT) AS new_tokens,
         |  CAST(sum(new_tokens) OVER (ORDER BY decile
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS vocab_cum
-        |FROM b ORDER BY decile""".stripMargin,
-    "q_txt_blocklist" ->
+        |FROM b ORDER BY decile""".stripMargin),
+    QueryDef("q_txt_blocklist", qTxtBlocklist,
       s"""WITH d AS (SELECT lang, string_split(text, ' ') AS w FROM documents),
          |f AS (SELECT lang, len(w) AS n_tok,
          |    len(list_intersect(w, [${blocklist.map("'" + _ + "'").mkString(", ")}])) > 0 AS blocked
@@ -2068,18 +2029,11 @@ object TextQueries {
          |  CAST(sum(CASE WHEN blocked THEN n_tok ELSE 0 END) AS BIGINT) AS tok_blocked,
          |  CAST(floor(1000000 * CAST(sum(CASE WHEN blocked THEN n_tok ELSE 0 END) AS BIGINT)
          |    / CAST(sum(n_tok) AS BIGINT)) AS BIGINT) AS blocked_ppm
-         |FROM f GROUP BY lang ORDER BY lang""".stripMargin,
-    "q_txt_topk_mg" ->
-      s"""WITH w AS (SELECT unnest(string_split(text, ' ')) AS token FROM documents),
-         |tot AS (SELECT count(*) AS n_total FROM w),
-         |e AS (SELECT token, count(*) AS n FROM w GROUP BY 1
-         |      ORDER BY n DESC, token LIMIT 20)
-         |SELECT token, n, (n * ${mgK + 1} > n_total) AS guaranteed,
-         |  TRUE AS present_ok, TRUE AS est_ok
-         |FROM e, tot ORDER BY n DESC, token""".stripMargin,
+         |FROM f GROUP BY lang ORDER BY lang""".stripMargin),
+    QueryDef("q_txt_topk_mg", qTxtTopkMg, topkMgOracle),
     // KN replay: identical integer-rational law — counts, continuation
     // counts, type totals, and the common-denominator div emission.
-    "q_txt_kneser_ney" ->
+    QueryDef("q_txt_kneser_ney", qTxtKneserNey,
       """WITH tk AS (SELECT lang, string_split(text, ' ') AS w FROM documents
         |  WHERE len(string_split(text, ' ')) >= 2),
         |bi AS (SELECT lang,
@@ -2108,8 +2062,8 @@ object TextQueries {
         |  (10000 * ((4 * n12 - 3) * tt + 3 * n_cont * n2))
         |    // (4 * n1 * tt) AS kn_myriad
         |FROM j WHERE cont_rnk <= 3
-        |ORDER BY lang, ctx_rnk, cont_rnk""".stripMargin,
-    "q_txt_bigram_lm" ->
+        |ORDER BY lang, ctx_rnk, cont_rnk""".stripMargin),
+    QueryDef("q_txt_bigram_lm", qTxtBigramLm,
       """WITH tk AS (SELECT lang, string_split(text, ' ') AS w FROM documents
         |  WHERE len(string_split(text, ' ')) >= 2),
         |bi AS (SELECT lang,
@@ -2128,8 +2082,8 @@ object TextQueries {
         |SELECT lang, w1, w2, n12, n1, n_cont, ctx_rnk, cont_rnk,
         |  CAST(floor(10000 * n12 / n1) AS BIGINT) AS prob_myriad
         |FROM j WHERE cont_rnk <= 3
-        |ORDER BY lang, ctx_rnk, cont_rnk""".stripMargin,
-    "q_txt_zipf" ->
+        |ORDER BY lang, ctx_rnk, cont_rnk""".stripMargin),
+    QueryDef("q_txt_zipf", qTxtZipf,
       """WITH c AS (SELECT lang, t AS token, count(*) AS n
         |  FROM (SELECT lang, unnest(string_split(text, ' ')) AS t FROM documents)
         |  GROUP BY lang, t),
@@ -2143,8 +2097,8 @@ object TextQueries {
         |  round((n_terms * sxy - sx * sy) / (n_terms * sxx - sx * sx), 6) AS zipf_slope,
         |  round((sy - (n_terms * sxy - sx * sy) / (n_terms * sxx - sx * sx) * sx)
         |    / n_terms, 6) AS zipf_intercept
-        |FROM sm ORDER BY lang""".stripMargin,
-    "q_txt_bm25" ->
+        |FROM sm ORDER BY lang""".stripMargin),
+    QueryDef("q_txt_bm25", qTxtBm25,
       """WITH d AS (SELECT doc_id, len(string_split(text, ' ')) AS dl,
         |             string_split(text, ' ') AS tk FROM documents),
         |st AS (SELECT count(*) AS n_docs, avg(CAST(dl AS DOUBLE)) AS avgdl FROM d),
@@ -2159,11 +2113,11 @@ object TextQueries {
         |      (1.0 - 0.75 + CAST(0.75 AS DOUBLE) * tf.dl / st.avgdl))), 6) AS bm25,
         |  count(*) AS n_terms_hit
         |FROM tf JOIN df USING (term), st
-        |GROUP BY doc_id ORDER BY bm25 DESC, doc_id LIMIT 10""".stripMargin,
+        |GROUP BY doc_id ORDER BY bm25 DESC, doc_id LIMIT 10""".stripMargin),
     // The UNPRUNED exact SQL: Bloom admits no false negatives, so the
     // engine's prune-then-join lineage must reproduce it bit-for-bit —
     // a sketch that dropped a true hit would flip this hash gate.
-    "q_txt_bloom_decon" ->
+    QueryDef("q_txt_bloom_decon", qTxtBloomDecon,
       """WITH sh AS (
         |  SELECT doc_id, unnest(
         |    CASE WHEN len(string_split(text, ' ')) >= 3 THEN
@@ -2176,10 +2130,11 @@ object TextQueries {
         |FROM sh t JOIN bench b USING (sh)
         |WHERE t.doc_id % 100 <> 0
         |GROUP BY t.doc_id ORDER BY doc_id""".stripMargin,
+      eager = true), // Bloom filter bits collected at construction
     // Chunk identity: the oracle partitions on the chunk STRING where the
     // engine partitions on its xxhash64 — identical equivalence classes
     // modulo a 64-bit collision (same convention as q_txt_dup_spans).
-    "q_txt_chunk_dedup" ->
+    QueryDef("q_txt_chunk_dedup", qTxtChunkDedup,
       """WITH tk AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
         |ch AS (SELECT doc_id, CAST(i AS BIGINT) AS chunk_idx,
         |         array_to_string(tk[CAST(i*8+1 AS INT) : CAST(i*8+8 AS INT)], ' ') AS chunk
@@ -2191,11 +2146,11 @@ object TextQueries {
         |  count(*) FILTER (WHERE rn = 1) AS n_kept,
         |  count(*) - count(*) FILTER (WHERE rn = 1) AS n_dropped,
         |  round((count(*) FILTER (WHERE rn = 1))::DOUBLE / count(*), 6) AS retention
-        |FROM win GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM win GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // Window identity on the 8-gram STRING where the engine uses its
     // xxhash64 (same collision convention as q_txt_chunk_dedup); the
     // rest replays the run/merge law with plain SQL windows.
-    "q_txt_exact_substr" ->
+    QueryDef("q_txt_exact_substr", qTxtExactSubstr,
       """WITH tk AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
         |g AS (SELECT doc_id, CAST(i AS BIGINT) AS pos,
         |        array_to_string(tk[CAST(i+1 AS INT) : CAST(i+8 AS INT)], ' ') AS sh
@@ -2230,11 +2185,11 @@ object TextQueries {
         |  round(CAST(coalesce(pd.dup_tokens, 0) AS DOUBLE) / len(tk.tk), 6)
         |    AS dup_ratio
         |FROM tk LEFT JOIN pd ON tk.doc_id = pd.doc_id
-        |ORDER BY tk.doc_id""".stripMargin,
+        |ORDER BY tk.doc_id""".stripMargin),
     // Full law replay: the naive per-position polynomial (the
     // q_txt_rolling_fp convention) drives the same mask cuts, chunk
     // slicing, and keep-first census on chunk STRINGS.
-    "q_txt_cdc_chunks" ->
+    QueryDef("q_txt_cdc_chunks", qTxtCdcChunks,
       """WITH hs AS (
         |  SELECT doc_id, text, len(text) AS n,
         |    CASE WHEN len(text) >= 4 THEN
@@ -2271,8 +2226,8 @@ object TextQueries {
         |  CAST(count(*) - count(*) FILTER (WHERE kept) AS BIGINT) AS n_dropped,
         |  round((count(*) FILTER (WHERE kept))::DOUBLE / count(*), 6) AS retention,
         |  CAST(max(clen) AS BIGINT) AS max_chunk
-        |FROM win GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q_txt_mixture" ->
+        |FROM win GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    QueryDef("q_txt_mixture", qTxtMixture,
       """WITH g AS (SELECT lang, source, count(*) AS n_docs,
         |             CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
         |           FROM documents GROUP BY lang, source),
@@ -2282,8 +2237,8 @@ object TextQueries {
         |  round(CAST(qw AS DOUBLE) / qtot, 6) AS w_temp,
         |  round(CAST(n_tokens AS DOUBLE) / tok_tot, 6) AS w_nat,
         |  CAST(floor(CAST(qw AS DOUBLE) / qtot * 100000) AS BIGINT) AS docs_per_100k
-        |FROM qg, tot ORDER BY lang, source""".stripMargin,
-    "q_txt_colloc" ->
+        |FROM qg, tot ORDER BY lang, source""".stripMargin),
+    QueryDef("q_txt_colloc", qTxtColloc,
       """WITH tk AS (SELECT doc_id, lang, string_split(text, ' ') AS tk FROM documents),
         |bg AS (SELECT lang, tk[CAST(i AS INT)] AS w1, tk[CAST(i AS INT)+1] AS w2
         |       FROM tk, unnest(range(1, len(tk))) AS t(i)),
@@ -2301,17 +2256,19 @@ object TextQueries {
         |       JOIN btot ON bgc.lang = btot.lang
         |       WHERE bgc.n_xy >= 5),
         |r AS (SELECT *, row_number() OVER (PARTITION BY lang ORDER BY score DESC, w1, w2) AS rk FROM sc)
-        |SELECT lang, rk, w1, w2, n_xy, score FROM r WHERE rk <= 10 ORDER BY lang, rk""".stripMargin,
-    "q_txt_bpe_train" -> bpeTrainOracle,
-    "q_txt_bpe_encode" -> bpeEncodeOracle,
-    "q_txt_bpe_merge" ->
+        |SELECT lang, rk, w1, w2, n_xy, score FROM r WHERE rk <= 10 ORDER BY lang, rk""".stripMargin),
+    QueryDef("q_txt_bpe_train", qTxtBpeTrain, bpeTrainOracle,
+      eager = true), // per-round argmax collect (merge learning)
+    QueryDef("q_txt_bpe_encode", qTxtBpeEncode, bpeEncodeOracle,
+      eager = true), // re-learns the merge chain at construction
+    QueryDef("q_txt_bpe_merge", qTxtBpeMerge,
       """WITH tok AS (SELECT unnest(string_split(text, ' ')) AS token FROM documents),
         |tf AS (SELECT token, count(*) AS freq FROM tok WHERE len(token) > 1 GROUP BY token),
         |pairs AS (SELECT substr(token, CAST(i AS INT), 2) AS pair, freq
         |          FROM tf, unnest(range(1, len(token))) AS t(i))
         |SELECT pair, CAST(sum(freq) AS BIGINT) AS n FROM pairs
-        |GROUP BY pair ORDER BY n DESC, pair LIMIT 20""".stripMargin,
-    "q_txt_tfidf" ->
+        |GROUP BY pair ORDER BY n DESC, pair LIMIT 20""".stripMargin),
+    QueryDef("q_txt_tfidf", qTxtTfidf,
       """WITH tm AS (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS term FROM documents),
         |t2 AS (SELECT * FROM tm WHERE len(term) > 0),
         |total AS (SELECT count(*) AS n_docs FROM documents),
@@ -2321,15 +2278,15 @@ object TextQueries {
         |        round(CAST(tf.tf AS DOUBLE) * total.n_docs / dfreq.df, 6) AS score
         |       FROM tf JOIN dfreq ON tf.term = dfreq.term, total),
         |r AS (SELECT *, row_number() OVER (PARTITION BY lang ORDER BY score DESC, term) AS rk FROM sc)
-        |SELECT lang, rk, term, tf, df, score FROM r WHERE rk <= 5 ORDER BY lang, rk""".stripMargin,
-    "q_txt_pii" ->
+        |SELECT lang, rk, term, tf, df, score FROM r WHERE rk <= 5 ORDER BY lang, rk""".stripMargin),
+    QueryDef("q_txt_pii", qTxtPii,
       s"""SELECT lang, count(*) AS n_docs,
         |  ${piiOracleCols(piiEmail, "email")},
         |  ${piiOracleCols(piiIpv4, "ipv4")},
         |  ${piiOracleCols(piiPhone, "phone")},
         |  ${piiOracleCols(piiSsn, "ssn")}
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    "q_txt_repetition" ->
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin),
+    QueryDef("q_txt_repetition", qTxtRepetition,
       """WITH tk AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
         |g AS (SELECT doc_id, len(tk) AS n_tokens,
         |   CASE WHEN len(tk) >= 2 THEN
@@ -2355,8 +2312,8 @@ object TextQueries {
         |SELECT doc_id, n_tokens, rep2, rep3, top2_n,
         |  round(top2_n * 2.0 / n_tokens, 6) AS top2_frac,
         |  (rep2 <= 0.05 AND round(top2_n * 2.0 / n_tokens, 6) <= 0.15) AS gopher_ok
-        |FROM r ORDER BY doc_id""".stripMargin,
-    "q_txt_dup_spans" ->
+        |FROM r ORDER BY doc_id""".stripMargin),
+    QueryDef("q_txt_dup_spans", qTxtDupSpans,
       """WITH tk AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
         |sh AS (SELECT doc_id, list_distinct(CASE WHEN len(tk) >= 5 THEN
         |    list_transform(range(1, len(tk) - 3),
@@ -2371,8 +2328,8 @@ object TextQueries {
         |SELECT doc_id, n_spans, n_shared, max_span_docs,
         |  round(n_shared::DOUBLE / n_spans, 6) AS shared_frac,
         |  (round(n_shared::DOUBLE / n_spans, 6) >= 0.5) AS dup_doc
-        |FROM d ORDER BY doc_id""".stripMargin,
-    "q_txt_unigram_lp" ->
+        |FROM d ORDER BY doc_id""".stripMargin),
+    QueryDef("q_txt_unigram_lp", qTxtUnigramLp,
       """WITH tok AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
         |freq AS (SELECT token, count(*) AS cnt FROM tok GROUP BY token),
@@ -2382,13 +2339,13 @@ object TextQueries {
         |  round((sum(ln(CAST(coalesce(topk.cnt, 1) AS DOUBLE)))
         |    - count(*) * ln(CAST(max(total) AS DOUBLE))) / count(*), 6) AS mean_logprob
         |FROM tok LEFT JOIN topk USING (token), tot
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q_txt_redact" ->
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    QueryDef("q_txt_redact", qTxtRedact,
       """SELECT doc_id,
         |  len(regexp_extract_all(text, '\b(customer|[a-z]*key)\b')) AS n_redacted,
         |  md5(regexp_replace(text, '\b(customer|[a-z]*key)\b', '<REDACTED>', 'g')) AS fp_redacted
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_txt_pack" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("q_txt_pack", qTxtPack,
       """WITH c AS (
         |  SELECT doc_id, lang, len(string_split(text, ' ')) AS n_tokens,
         |    sum(len(string_split(text, ' '))) OVER (PARTITION BY lang ORDER BY doc_id) AS end_tok
@@ -2398,23 +2355,23 @@ object TextQueries {
         |  CAST(floor((end_tok - 1) / 1024.0) AS BIGINT) AS last_block,
         |  CAST(floor((end_tok - 1) / 1024.0) AS BIGINT)
         |    - CAST(floor((end_tok - n_tokens) / 1024.0) AS BIGINT) + 1 AS n_blocks
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "q_txt_sample_stratified" ->
+        |FROM c ORDER BY doc_id""".stripMargin),
+    QueryDef("q_txt_sample_stratified", qTxtSampleStratified,
       """WITH h AS (
         |  SELECT doc_id, lang, (doc_id * 2654435761) % 4294967296 AS h,
         |    row_number() OVER (PARTITION BY lang
         |      ORDER BY (doc_id * 2654435761) % 4294967296, doc_id) AS rk
         |  FROM documents)
-        |SELECT doc_id, lang, h, rk FROM h WHERE rk <= 50 ORDER BY doc_id""".stripMargin,
-    "q_txt_sample_weighted" ->
+        |SELECT doc_id, lang, h, rk FROM h WHERE rk <= 50 ORDER BY doc_id""".stripMargin),
+    QueryDef("q_txt_sample_weighted", qTxtSampleWeighted,
       """SELECT doc_id, lang, n_chars,
         |  round(-ln(CAST((doc_id * 2654435761) % 4294967296 + 1 AS DOUBLE)
         |    / 4294967296) / n_chars, 12) AS skey
-        |FROM documents ORDER BY skey, doc_id LIMIT 100""".stripMargin,
+        |FROM documents ORDER BY skey, doc_id LIMIT 100""".stripMargin),
     // Funnel replay: same stage laws chained as CTEs — quality rules,
     // md5 keep-first, shingle-STRING contamination (the collision
     // convention of q_txt_decontaminate), per-lang 512-token packing.
-    "q_txt_curation_funnel" ->
+    QueryDef("q_txt_curation_funnel", qTxtCurationFunnel,
       """WITH d AS (
         |  SELECT doc_id, lang, text, n_chars,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
@@ -2464,8 +2421,8 @@ object TextQueries {
         |  UNION ALL SELECT 3, 'dedup_exact', n2, n3, t3, n3 FROM g
         |  UNION ALL SELECT 4, 'decontaminate', n3, n4, t4, n4 FROM g
         |  UNION ALL SELECT 5, 'pack', n4, n4, packed, seqs FROM g, pk)
-        |ORDER BY stage_id""".stripMargin,
-    "q_txt_decontaminate" ->
+        |ORDER BY stage_id""".stripMargin),
+    QueryDef("q_txt_decontaminate", qTxtDecontaminate,
       """WITH sh AS (
         |  SELECT doc_id, unnest(
         |    CASE WHEN len(string_split(text, ' ')) >= 3 THEN
@@ -2477,11 +2434,11 @@ object TextQueries {
         |SELECT t.doc_id, count(DISTINCT t.sh) AS n_hits
         |FROM sh t JOIN bench b USING (sh)
         |WHERE t.doc_id % 100 <> 0
-        |GROUP BY t.doc_id ORDER BY doc_id""".stripMargin,
+        |GROUP BY t.doc_id ORDER BY doc_id""".stripMargin),
     // Mojibake replay: identical plant, literal-replace repair chain
     // (the digraphs are metachar-free so regexp_* == literal
     // replace()), md5-prefix checksum over the fixed text.
-    "q_txt_mojibake" ->
+    QueryDef("q_txt_mojibake", qTxtMojibake,
       """WITH w AS (
         |  SELECT doc_id, lang,
         |    CASE WHEN doc_id % 7 = 0
@@ -2507,11 +2464,11 @@ object TextQueries {
         |  CAST(sum(n_art_after) AS BIGINT) AS artifacts_after,
         |  CAST(sum(('0x' || substr(md5(fixed), 1, 8))::BIGINT
         |           % 1000000007) % 1000000007 AS BIGINT) AS chk_fixed
-        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin),
     // DSIR replay: same capped vocab cut, same add-1 ratio with the
     // per-token quantization to nano-nat longs BEFORE any sum, so
     // every census number is an exact integer in both engines.
-    "q_txt_dsir" ->
+    QueryDef("q_txt_dsir", qTxtDsir,
       """WITH tk AS (SELECT doc_id, lang, source,
         |              unnest(string_split(text, ' ')) AS token
         |            FROM documents),
@@ -2537,11 +2494,11 @@ object TextQueries {
         |SELECT lang, source, count(*) AS n_docs,
         |  CAST(count(*) FILTER (WHERE w > 0) AS BIGINT) AS n_selected,
         |  CAST(sum(w) AS BIGINT) AS sum_w_nnat
-        |FROM pd GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |FROM pd GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // CCNet tercile replay: per-lang vocab cut by row_number, the
     // same nano-nat surprisal quantization, integer-division means
     // (operands positive, so div == //), ntile over the exact key.
-    "q_txt_ppl_bucket" ->
+    QueryDef("q_txt_ppl_bucket", qTxtPplBucket,
       """WITH tk AS (SELECT doc_id, lang, n_chars,
         |              unnest(string_split(text, ' ')) AS token
         |            FROM documents),
@@ -2570,22 +2527,22 @@ object TextQueries {
         |SELECT lang, tercile, count(*) AS n_docs,
         |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
         |  CAST(sum(mean_nnat) AS BIGINT) AS sum_mean_nnat
-        |FROM nt GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_txt_tokens" ->
+        |FROM nt GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QueryDef("q_txt_tokens", qTxtTokens,
       """SELECT doc_id,
         |  len(string_split(text, ' ')) AS n_tokens,
         |  len(list_distinct(string_split(text, ' '))) AS n_distinct,
         |  CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE) / len(string_split(text, ' ')) AS ttr,
         |  CAST(n_chars - (len(string_split(text, ' ')) - 1) AS DOUBLE) / len(string_split(text, ' ')) AS avg_tok_len
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_txt_bpe_tokens" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("q_txt_bpe_tokens", qTxtBpeTokens,
       """SELECT doc_id,
         |  len(string_split(text, ' ')) AS n_ws_tokens,
         |  len(regexp_extract_all(text, ' ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 ]+')) AS n_bpe_tokens,
         |  round(CAST(len(regexp_extract_all(text, ' ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 ]+')) AS DOUBLE)
         |    / len(string_split(text, ' ')), 6) AS bpe_per_ws
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_txt_quality" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("q_txt_quality", qTxtQuality,
       """SELECT doc_id,
         |  len(string_split(text, ' ')) AS n_tokens,
         |  len(list_filter(string_split(text, ' '), x -> x IN ('the','a','and','of','is','to','in'))) AS n_stop,
@@ -2594,8 +2551,8 @@ object TextQueries {
         |  CAST(len(list_filter(string_split(text, ' '), x -> len(x) <= 2)) AS DOUBLE)
         |    / len(string_split(text, ' ')) AS short_ratio,
         |  CASE WHEN n_chars < 200 THEN 'short' WHEN n_chars < 400 THEN 'medium' ELSE 'long' END AS len_bucket
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_txt_langid" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("q_txt_langid", qTxtLangid,
       """WITH scored AS (
         |  SELECT doc_id, lang,
         |    len(list_filter(string_split(text, ' '), x -> x IN ('the','a','and','is'))) AS en_hits,
@@ -2614,24 +2571,25 @@ object TextQueries {
         |       WHEN de_hits >= es_hits AND de_hits > 0 THEN 'de'
         |       WHEN es_hits > 0 THEN 'es'
         |       ELSE 'und' END) AS agree
-        |FROM scored ORDER BY doc_id""".stripMargin,
-    "q_txt_wordfreq" ->
+        |FROM scored ORDER BY doc_id""".stripMargin),
+    QueryDef("q_txt_wordfreq", qTxtWordfreq,
       """SELECT token, count(*) AS n FROM (
         |  SELECT unnest(string_split(text, ' ')) AS token FROM documents)
-        |GROUP BY token ORDER BY n DESC, token LIMIT 20""".stripMargin,
+        |GROUP BY token ORDER BY n DESC, token LIMIT 20""".stripMargin),
     // exact top-20 replayed; sketch_ok pinned TRUE — the engine computes
     // it from the live CMS, so an estimate outside [n, n + eps*total+1]
     // diverges from the pin and fails the hash
-    "q_txt_heavy_hitters" ->
+    QueryDef("q_txt_heavy_hitters", qTxtHeavyHitters,
       """SELECT token, n, TRUE AS sketch_ok FROM (
         |  SELECT token, count(*) AS n FROM (
         |    SELECT unnest(string_split(text, ' ')) AS token FROM documents)
         |  GROUP BY token ORDER BY n DESC, token LIMIT 20)
         |ORDER BY n DESC, token""".stripMargin,
-    "q_txt_fingerprint" ->
+      eager = true), // driver-held Count-Min sketch at construction
+    QueryDef("q_txt_fingerprint", qTxtFingerprint,
       """SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_txt_rolling_fp" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("q_txt_rolling_fp", qTxtRolling,
       """WITH h AS (
         |  SELECT doc_id, list_transform(range(1, len(text) - 2), i ->
         |    (((CAST(ord(text[i]) AS BIGINT) * 31 + ord(text[i+1])) * 31
@@ -2642,8 +2600,8 @@ object TextQueries {
         |    len(list_distinct(list_transform(range(1, len(hs) - 6),
         |      j -> list_min(hs[j:j+7]))))
         |  WHEN len(hs) > 0 THEN 1 ELSE 0 END AS n_winnow
-        |FROM h ORDER BY doc_id""".stripMargin,
-    "q_txt_shingles" ->
+        |FROM h ORDER BY doc_id""".stripMargin),
+    QueryDef("q_txt_shingles", qTxtShingles,
       """WITH tk AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
         |SELECT doc_id,
         |  CASE WHEN len(toks) >= 3 THEN len(list_distinct(list_transform(
@@ -2651,6 +2609,6 @@ object TextQueries {
         |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])))
         |  ELSE 0 END AS n_shingles,
         |  len(toks) AS n_tokens
-        |FROM tk ORDER BY doc_id""".stripMargin,
+        |FROM tk ORDER BY doc_id""".stripMargin),
   )
 }

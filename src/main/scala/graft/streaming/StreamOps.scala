@@ -251,8 +251,8 @@ object StreamOps {
   private def sliceBy(df: DataFrame, sliceCol: org.apache.spark.sql.Column,
                       nSlices: Int, prefix: String): String = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val streamDir = Files.createTempDirectory(prefix).toFile.getAbsolutePath
-    val tmp = Files.createTempDirectory(s"${prefix}_all").toFile.getAbsolutePath
+    val streamDir = graft.core.Scratch.local(df.sparkSession, prefix)
+    val tmp = graft.core.Scratch.local(df.sparkSession, s"${prefix}_all")
     val cols = df.columns
     df.withColumn("__slice", sliceCol)
       .withColumn("__row", monotonically_increasing_id())
@@ -273,8 +273,7 @@ object StreamOps {
           // zero-row part file (and the file source still saw a
           // micro-batch for it), so reproduce that — batch structure
           // is load-bearing for append-mode watermark progression
-          val etmp = Files.createTempDirectory(s"${prefix}_empty$i")
-            .toFile.getAbsolutePath
+          val etmp = graft.core.Scratch.local(df.sparkSession, s"${prefix}_empty$i")
           df.select(cols.map(col): _*).filter(lit(false))
             .coalesce(1).write.mode("overwrite").parquet(etmp)
           new java.io.File(etmp).listFiles()

@@ -17,30 +17,27 @@ import graft.SparkEntry
 object PlanSnap {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, tag, names) = args.take(4)
+    // an unregistered name throws here, listing it, before any work
+    val selected = SparkEntry.select(Some(names.split(',').map(_.trim).filter(_.nonEmpty).toSet))
     val spark = graft.core.GraftSession.get()
     graft.core.GraftSession.applyExtraConf(spark)
     Files.createDirectories(Paths.get(outDir))
-    val qs = SparkEntry.queries
-    names.split(',').map(_.trim).filter(_.nonEmpty).foreach { n =>
-      val out = Paths.get(outDir, s"${n}_$tag.txt")
-      qs.get(n) match {
-        case None => System.err.println(s"[plansnap] unknown query: $n")
-        case Some(fn) =>
-          val txt =
-            if (n.startsWith("q_stream_"))
-              "(streaming drain harness: the registered DataFrame is the " +
-                "drained result read back from parquet; batch explain " +
-                "carries no operator information — see the stream builder " +
-                "in streaming/StreamOps.scala and the bench state_rows " +
-                "artifact for this query's regression signal)\n"
-            else {
-              val df = fn(spark, sfDir)
-              df.queryExecution.explainString(
-                org.apache.spark.sql.execution.FormattedMode) + "\n"
-            }
-          Files.write(out, txt.getBytes("UTF-8"))
-          System.err.println(s"[plansnap] wrote $out")
-      }
+    selected.foreach { d =>
+      val out = Paths.get(outDir, s"${d.name}_$tag.txt")
+      val txt =
+        if (d.name.startsWith("q_stream_"))
+          "(streaming drain harness: the registered DataFrame is the " +
+            "drained result read back from parquet; batch explain " +
+            "carries no operator information — see the stream builder " +
+            "in streaming/StreamOps.scala and the bench state_rows " +
+            "artifact for this query's regression signal)\n"
+        else {
+          val df = d.build(spark, sfDir)
+          df.queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode) + "\n"
+        }
+      Files.write(out, txt.getBytes("UTF-8"))
+      System.err.println(s"[plansnap] wrote $out")
     }
     spark.stop()
   }

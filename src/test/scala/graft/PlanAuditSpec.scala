@@ -92,25 +92,73 @@ class PlanAuditSpec extends SparkSpec {
 
   test("decontamination joins against a BROADCAST benchmark set, and the self-checking queries hold") {
     // the benchmark side must broadcast (corpus never shuffles for it)
-    val plan = graft.queries.TextQueries.defs("q_txt_decontaminate")(spark, sfDir)
+    val plan = SparkEntry.queries("q_txt_decontaminate")(spark, sfDir)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"benchmark side not broadcast:\n$plan")
     // the real-codec round trip: every document must decode exactly
-    val mm = graft.queries.ScaleQueries.defs("q_mm_decode")(spark, sfDir).collect()
+    val mm = SparkEntry.queries("q_mm_decode")(spark, sfDir).collect()
     assert(mm.nonEmpty && mm.forall(_.getAs[Boolean]("decode_ok")),
       "ImageIO round-trip self-check must be all-true")
     assert(mm.forall(r => r.getAs[Int]("px_w") == 8 && r.getAs[Int]("px_h") == 8))
   }
 
+  /** What the inventory sweeps read from one construction of a query. */
+  private case class Built(sparkPlan: String, globalWindow: Boolean, constructJobs: Int)
+
+  /** One construction of every registered query outside `skip`, shared
+    * by the sweeps below. Each construction runs under its own
+    * local-property tag; one listener counts the jobs per tag and the
+    * bus is drained once after the sweep, not per query. The tables are
+    * registered first so `Q.t`'s one-time schema-inference jobs are not
+    * counted against the first query that reads each table.
+    */
+  private lazy val sweep: Map[String, Built] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val tag = "graft.spec.construct"
+    val sc = spark.sparkContext
+    graft.ql.Ql.registerTables(spark, sfDir)
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag)))
+          .foreach(n => jobs.merge(n, 1, (a, b) => a + b))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val built = SparkEntry.queries.toSeq.filterNot { case (n, _) => skip(n) }
+        .map { case (name, fn) =>
+          sc.setLocalProperty(tag, name)
+          val df = try fn(spark, sfDir) finally sc.setLocalProperty(tag, null)
+          val globalWindow = df.queryExecution.optimizedPlan.collect {
+            case w: org.apache.spark.sql.catalyst.plans.logical.Window
+                if w.partitionSpec.isEmpty => w
+          }.nonEmpty
+          name -> (df.queryExecution.sparkPlan.toString, globalWindow)
+        }
+      org.apache.spark.GraftTestAccess.drainListenerBus(sc)
+      built.map { case (name, (plan, global)) =>
+        name -> Built(plan, global, jobs.getOrDefault(name, 0).intValue)
+      }.toMap
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("no undeclared cartesian/nested-loop joins anywhere in the inventory") {
-    val offenders = SparkEntry.queries.toSeq
-      .filterNot { case (n, _) => skip(n) || declaredBoundedCross(n) }
-      .flatMap { case (name, fn) =>
-        val plan = fn(spark, sfDir).queryExecution.sparkPlan.toString
-        val bad = Seq("CartesianProduct", "BroadcastNestedLoopJoin").filter(plan.contains)
+    val offenders = sweep.toSeq
+      .filterNot { case (n, _) => declaredBoundedCross(n) }
+      .flatMap { case (name, b) =>
+        val bad = Seq("CartesianProduct", "BroadcastNestedLoopJoin").filter(b.sparkPlan.contains)
         if (bad.nonEmpty) Some(s"$name: ${bad.mkString(", ")}") else None
       }
     assert(offenders.isEmpty, s"unbounded join shapes:\n${offenders.mkString("\n")}")
+  }
+
+  test("every eager query runs a Spark job at construction") {
+    // the converse of QlSpec's zero-jobs gate on the lazy default: an
+    // `eager` flag left on a builder that no longer runs construction
+    // jobs would keep it out of Ql's default registration for nothing
+    val idle = SparkEntry.all.filter(d => d.eager && !skip(d.name))
+      .map(_.name).filter(n => sweep(n).constructJobs == 0)
+    assert(idle.isEmpty, s"flagged eager but construction ran no job: ${idle.sorted}")
   }
 
   test("IVF codebook obeys the broadcast-bound scale rule in the registered shape") {
@@ -177,15 +225,8 @@ class PlanAuditSpec extends SparkSpec {
       "q_part_skyline", "q_evt_gini", "q_txt_vocab_growth", "q_part_abc",
       "q_evt_survival", "q_eval_auc", "q_evt_ks", "q_eval_lift",
       "q_evt_spearman", "q_evt_wasserstein", "q_evt_kruskal")
-    val offenders = SparkEntry.queries.toSeq
-      .filterNot { case (n, _) => skip(n) || boundedDim(n) }
-      .flatMap { case (name, fn) =>
-        val globals = fn(spark, sfDir).queryExecution.optimizedPlan.collect {
-          case w: org.apache.spark.sql.catalyst.plans.logical.Window
-              if w.partitionSpec.isEmpty => w
-        }
-        if (globals.nonEmpty) Some(name) else None
-      }
+    val offenders = sweep.toSeq
+      .collect { case (name, b) if b.globalWindow && !boundedDim(name) => name }
     assert(offenders.isEmpty, s"unpartitioned windows in: $offenders")
   }
 

@@ -43,12 +43,27 @@ class VerifySpec extends SparkSpec {
   }
 
   test("registry invariants: every oracle keys a registered query; names well-formed") {
-    // a stale oracleSql key (e.g. after a rename) would make the driver
-    // replay SQL with no Spark dump to compare against — catch it here
+    // a name registered twice fails loudly instead of one record
+    // silently shadowing the other
+    val d = SparkEntry.all.head
+    val dup = intercept[IllegalArgumentException](SparkEntry.byName(Seq(d, d))(_.oracle))
+    assert(dup.getMessage.contains(d.name), dup.getMessage)
+    // both driver projections key the same queries, one per record
+    // (a new query raises the count)
     val qs = SparkEntry.queries.keySet
-    val orphans = SparkEntry.oracleSql.keySet -- qs
-    assert(orphans.isEmpty, s"oracleSql keys with no registered query: $orphans")
+    assert(qs == SparkEntry.oracleSql.keySet)
+    assert(qs.size == 284 && SparkEntry.all.size == 284, s"${qs.size} keys")
     val badNames = qs.filterNot(_.matches("q[0-9a-z_]+"))
     assert(badNames.isEmpty, s"non-conforming query names: $badNames")
+  }
+
+  test("an allowlist naming an unregistered query fails and lists the name") {
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Some(Set("q_typo", "q01_pricing_summary"))))
+    assert(e.getMessage.contains("q_typo") && !e.getMessage.contains("q01_pricing"),
+      e.getMessage)
+    assert(SparkEntry.select(Some(Set("q01_pricing_summary"))).map(_.name) ==
+      Seq("q01_pricing_summary"))
+    assert(SparkEntry.select(None).size == SparkEntry.queries.size)
   }
 }

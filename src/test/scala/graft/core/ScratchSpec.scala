@@ -33,4 +33,21 @@ class ScratchSpec extends SparkSpec {
       assert(spark.read.parquet(out).count() == 3)
     } finally spark.conf.unset("spark.graft.scratchDir")
   }
+
+  test("every allocation is registered for recursive deletion at JVM exit") {
+    val base = java.nio.file.Files.createTempDirectory("scratch_exit")
+      .toFile.getAbsolutePath
+    val shared =
+      try { spark.conf.set("spark.graft.scratchDir", base); Scratch.dir(spark, "drain") }
+      finally spark.conf.unset("spark.graft.scratchDir")
+    val dirs = Seq(shared, Scratch.dir(spark, "drain"), Scratch.local(spark, "slice"))
+    dirs.foreach { d =>
+      val p = new org.apache.hadoop.fs.Path(
+        if (d.contains(":")) d else new java.io.File(d).toURI.toString)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // cancel reports whether the path was registered; re-register it
+      assert(fs.cancelDeleteOnExit(p), s"$d is not registered for deletion")
+      assert(fs.deleteOnExit(p))
+    }
+  }
 }

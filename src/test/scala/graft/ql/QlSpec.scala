@@ -72,12 +72,6 @@ class QlSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("eagerQueries names all exist in the registry") {
-    val registry = graft.SparkEntry.queries.keySet
-    val ghosts = Ql.eagerQueries.diff(registry)
-    assert(ghosts.isEmpty, s"eagerQueries entries not in SparkEntry.queries: $ghosts")
-  }
-
   test("registered table views hit the pruned parquet scan") {
     Ql.registerTables(spark, dir)
     val plan = spark.sql(

@@ -81,7 +81,7 @@ class ComponentsSpec extends SparkSpec {
     // recompute the pair graph + per-doc split assignment the query
     // aggregates away, and assert both endpoints of EVERY near-dup
     // pair land in the same split — the property the operator exists for
-    val pairs = DedupQueries.defs("q_dedup_jaccard_pairs")(spark, dir)
+    val pairs = graft.SparkEntry.queries("q_dedup_jaccard_pairs")(spark, dir)
       .select(col("doc_a"), col("doc_b")).persist()
     val (comp, _) = DedupQueries.componentsFrom(pairs)
     val splitOf = graft.queries.Q.t(spark, dir, "documents").select("doc_id")
@@ -101,7 +101,7 @@ class ComponentsSpec extends SparkSpec {
     pairs.unpersist()
     assert(straddling == 0L, s"$straddling near-dup pairs cross a split boundary")
     // and the census totals partition the corpus
-    val census = DedupQueries.defs("q_dedup_cluster_split")(spark, dir).collect()
+    val census = graft.SparkEntry.queries("q_dedup_cluster_split")(spark, dir).collect()
     val nDocs = census.map(_.getAs[Long]("n_docs")).sum
     assert(nDocs == graft.queries.Q.t(spark, dir, "documents").count())
     assert(census.map(_.getAs[String]("split")).toSet == Set("train", "val", "test"))

@@ -11,7 +11,7 @@ import org.apache.spark.sql.Row
 class IoQueriesSpec extends SparkSpec {
 
   private def run(name: String): Array[Row] =
-    IoQueries.defs(name)(spark, "/root/testdata/sf0.001").collect()
+    graft.SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").collect()
 
   test("q_img_reconstruct_digest: EP2 inversion holds on all 8 planes") {
     val rows = run("q_img_reconstruct_digest")

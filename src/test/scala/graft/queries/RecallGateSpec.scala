@@ -11,7 +11,7 @@ import graft.SparkSpec
 class RecallGateSpec extends SparkSpec {
 
   test("at <= cap docs the gate is exact: mod 1, full corpus, recall holds") {
-    val row = ScaleQueries.defs("q_dedup_lsh_recall")(spark, "/root/testdata/sf0.001")
+    val row = graft.SparkEntry.queries("q_dedup_lsh_recall")(spark, "/root/testdata/sf0.001")
       .collect().head
     assert(row.getAs[Long]("sample_mod") == 1L)
     assert(row.getAs[Long]("n_docs_total") <= ScaleQueries.recallExactDocCap)

@@ -51,9 +51,9 @@ class PsiDriftSpec extends SparkSpec {
 
     // three time-contiguous slices (hours 0-1 / 2-3 / 4-5), ascending
     // mtimes -> one micro-batch each; the watermark advances between
-    val streamDir = Files.createTempDirectory("psi_stream").toFile.getAbsolutePath
+    val streamDir = graft.core.Scratch.local(spark, "psi_stream")
     Seq(0 to 1, 2 to 3, 4 to 5).zipWithIndex.foreach { case (hs, i) =>
-      val tmp = Files.createTempDirectory(s"psi_slice$i").toFile.getAbsolutePath
+      val tmp = graft.core.Scratch.local(spark, s"psi_slice$i")
       hs.flatMap(hourRows).toDF("event_id", "ts", "value")
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.queries.EventQueries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -29,11 +28,11 @@ class StreamAppendSpec extends SparkSpec {
   private def sliceToDir(df: DataFrame, orderCol: String, nSlices: Int,
                          tag: String): String = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val streamDir = Files.createTempDirectory(s"append_$tag").toFile.getAbsolutePath
+    val streamDir = graft.core.Scratch.local(spark, s"append_$tag")
     val ranked = df.withColumn("__slice",
       ntile(nSlices).over(org.apache.spark.sql.expressions.Window.orderBy(orderCol)))
     (1 to nSlices).foreach { i =>
-      val tmp = Files.createTempDirectory(s"slice_$tag$i").toFile.getAbsolutePath
+      val tmp = graft.core.Scratch.local(spark, s"slice_$tag$i")
       ranked.filter(col("__slice") === i).drop("__slice")
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
@@ -51,7 +50,7 @@ class StreamAppendSpec extends SparkSpec {
     val run = StreamOps.hourlyCountsAppend(spark, dir)
     val emitted = run.result.collect()
       .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
-    val batch = EventQueries.defs("q_evt_hourly")(spark, sfDir)
+    val batch = graft.SparkEntry.queries("q_evt_hourly")(spark, sfDir)
       .collect().map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
     // every emitted window is final: exact value match against batch
     emitted.foreach { case (k, v) =>
@@ -92,7 +91,7 @@ class StreamAppendSpec extends SparkSpec {
     // the watermark advances mid-stream — the MapState high-water stays
     // well below the total window count (the single-batch registry
     // drain holds everything; this pins the deployed multi-batch shape)
-    val totalWindows = graft.queries.EventQueries.defs("q_evt_hourly")(spark, sfDir).count()
+    val totalWindows = graft.SparkEntry.queries("q_evt_hourly")(spark, sfDir).count()
     assert(run.maxStateRows > 0, "tws rollup must hold open-window state")
     assert(run.maxStateRows < totalWindows / 2,
       s"tws state high-water ${run.maxStateRows} not bounded vs $totalWindows windows — timers not evicting")
@@ -103,7 +102,7 @@ class StreamAppendSpec extends SparkSpec {
     val dir = sliceToDir(docs, "doc_id", 5, "incdedup")
     val run = StreamOps.incrementalDedupAppend(spark, dir, sfDir)
     val emittedFps = run.result.collect().map(_.getString(1)).toSet
-    val batchRows = graft.queries.DedupQueries.defs("q_dedup_incremental")(spark, sfDir).collect()
+    val batchRows = graft.SparkEntry.queries("q_dedup_incremental")(spark, sfDir).collect()
     val batchFps = batchRows.map(_.getString(1)).toSet
     // same novel-fingerprint set as the batch operator (keeper doc for
     // intra-batch ties is first-arrival; the fp set is the contract)
@@ -143,7 +142,7 @@ class StreamAppendSpec extends SparkSpec {
       .map(ImagePlane.gridLabels(_, cellSize = 8))
     val plan = CropOps.planCrops(40, 40, 20, 20, 0.5)
     assert(plan.numCrops == 16)
-    val streamDir = Files.createTempDirectory("append_stitch").toFile.getAbsolutePath
+    val streamDir = graft.core.Scratch.local(spark, "append_stitch")
     import spark.implicits._
     orig.zipWithIndex.foreach { case (p, k) =>
       val crops = CropOps.cropOne(p, plan)
@@ -156,7 +155,7 @@ class StreamAppendSpec extends SparkSpec {
               new java.sql.Timestamp(1700000000000L + fileIdx * 60000L))
           }.toDF("fov", "stack", "crop", "slice", "nRows", "nCols",
             "channels", "pixels", "labels", "ts")
-          val tmp = Files.createTempDirectory(s"stitch_half$fileIdx").toFile.getAbsolutePath
+          val tmp = graft.core.Scratch.local(spark, s"stitch_half$fileIdx")
           withTs.coalesce(1).write.mode("overwrite").parquet(tmp)
           val part = new java.io.File(tmp).listFiles()
             .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
@@ -200,7 +199,7 @@ class StreamAppendSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(3))).toSet
     // drained inner join == the batch operator's pair set (matches
     // emit on arrival; nothing is withheld by the watermark)
-    val batch = graft.queries.EventQueries.defs("q_evt_range_join")(spark, sfDir)
+    val batch = graft.SparkEntry.queries("q_evt_range_join")(spark, sfDir)
     // recompute the expected PAIRS (not counts) from the raw table,
     // canonicalizing ts through the same boundary helper as the engine
     val e = graft.core.EventTime.normalize(events)
@@ -259,7 +258,7 @@ class StreamAppendSpec extends SparkSpec {
     assert(emitted.map(e => (e._1, e._2)).distinct.length == emitted.length)
     assert(emitted.forall(e => e._4 > 0 && e._3 >= e._2))
     // emitted + still-open = the batch operator's session count per user
-    val batch = graft.queries.EventQueries.defs("q_evt_sessionize")(spark, sfDir)
+    val batch = graft.SparkEntry.queries("q_evt_sessionize")(spark, sfDir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val emittedPerUser = emitted.groupBy(_._1).view.mapValues(_.length.toLong).toMap
     val nUsers = batch.size

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.queries.{EventQueries, Q}
+import graft.queries.Q
 import StreamOps.Drained
 
 class StreamOpsSpec extends SparkSpec {
@@ -10,7 +10,7 @@ class StreamOpsSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val streamed = StreamOps.hourlyCounts(spark, dir).result
       .collect().map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
-    val batch = EventQueries.defs("q_evt_hourly")(spark, dir)
+    val batch = graft.SparkEntry.queries("q_evt_hourly")(spark, dir)
       .collect().map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
     assert(streamed == batch, "watermarked stream result == batch result")
   }
@@ -19,8 +19,7 @@ class StreamOpsSpec extends SparkSpec {
     import graft.core.ImagePlane
     import graft.ops.CropOps
     import graft.sources.PlaneStore
-    val dir = java.nio.file.Files.createTempDirectory("stream_stitch")
-      .toFile.getAbsolutePath + "/crops"
+    val dir = graft.core.Scratch.local(spark, "stream_stitch") + "/crops"
     val orig = ImagePlane.blankPlanes(2, 2, 40, 40)
       .map(ImagePlane.gridLabels(_, cellSize = 8))
     val plan = CropOps.planCrops(40, 40, 20, 20, 0.5)
@@ -52,7 +51,7 @@ class StreamOpsSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val streamed = StreamOps.incrementalDedup(spark, dir).result
       .collect().map(r => r.getLong(0) -> r.getString(1)).toSeq.sorted
-    val batch = graft.queries.DedupQueries.defs("q_dedup_incremental")(spark, dir)
+    val batch = graft.SparkEntry.queries("q_dedup_incremental")(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toSeq.sorted
     assert(streamed.nonEmpty && streamed == batch,
       "stream-static anti join + keep-first agg == batch operator")
@@ -62,7 +61,7 @@ class StreamOpsSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val streamed = StreamOps.sessionCounts(spark, dir).result
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val batch = EventQueries.defs("q_evt_sessionize")(spark, dir)
+    val batch = graft.SparkEntry.queries("q_evt_sessionize")(spark, dir)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(streamed == batch, "flatMapGroupsWithState == lag/sum window result")
   }
@@ -80,7 +79,7 @@ class StreamOpsSpec extends SparkSpec {
     // two time-ordered slices, one micro-batch each: same final table
     val ev = graft.queries.Q.t(spark, dir, "events")
     val n = ev.count()
-    val tmp = java.nio.file.Files.createTempDirectory("ewma_slices")
+    val tmp = java.nio.file.Paths.get(graft.core.Scratch.local(spark, "ewma_slices"))
     // slice by median ts so each file is a contiguous time range
     val cut = ev.select(unix_micros(col("ts")).as("us")).orderBy("us")
       .collect()(n.toInt / 2).getLong(0)
@@ -110,7 +109,7 @@ class StreamOpsSpec extends SparkSpec {
       df.collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     val one = toMap(oneShot)
-    val batch = toMap(EventQueries.defs("q_evt_attribution")(spark, dir))
+    val batch = toMap(graft.SparkEntry.queries("q_evt_attribution")(spark, dir))
     assert(one == batch, "O(1)-state credit accumulators == batch window census")
     val nUsers = spark.read.parquet(s"$dir/events.parquet")
       .select("user_id").distinct().count()
@@ -119,7 +118,7 @@ class StreamOpsSpec extends SparkSpec {
     // two time-ordered slices, one micro-batch each: same census
     val ev = graft.queries.Q.t(spark, dir, "events")
     val n = ev.count()
-    val tmp = java.nio.file.Files.createTempDirectory("attr_slices")
+    val tmp = java.nio.file.Paths.get(graft.core.Scratch.local(spark, "attr_slices"))
     val cut = ev.select(unix_micros(col("ts")).as("us")).orderBy("us")
       .collect()(n.toInt / 2).getLong(0)
     def writeSlice(slice: org.apache.spark.sql.DataFrame, name: String): Unit = {
@@ -206,9 +205,9 @@ class StreamOpsSpec extends SparkSpec {
 
   test("transformWithState window-keyed PSI equals the classic windowed-agg twin") {
     val dir = "/root/testdata/sf0.001"
-    val classic = graft.queries.ScaleQueries.defs("q_stream_psi")(spark, dir)
+    val classic = graft.SparkEntry.queries("q_stream_psi")(spark, dir)
       .collect().map(_.toString).sorted.toSeq
-    val tws = graft.queries.ScaleQueries.defs("q_stream_psi_tws")(spark, dir)
+    val tws = graft.SparkEntry.queries("q_stream_psi_tws")(spark, dir)
       .collect().map(_.toString).sorted.toSeq
     assert(tws == classic,
       "window-keyed ValueState + timers must reproduce the classic PSI exactly")
@@ -218,9 +217,9 @@ class StreamOpsSpec extends SparkSpec {
   }
 
   test("transformWithState ListState stitch equals the flatMapGroups append twin") {
-    val tws = graft.queries.ScaleQueries.defs("q_stream_stitch_tws")(
+    val tws = graft.SparkEntry.queries("q_stream_stitch_tws")(
       spark, "twsfix").collect().map(_.toString).sorted.toSeq
-    val classic = graft.queries.ScaleQueries.defs("q_stream_stitch")(
+    val classic = graft.SparkEntry.queries("q_stream_stitch")(
       spark, "classicfix").collect().map(_.toString).sorted.toSeq
     assert(tws == classic,
       "ListState + timer stitch must reproduce the classic twin exactly")
@@ -270,7 +269,7 @@ class StreamOpsSpec extends SparkSpec {
   test("streaming semantic gate equals the batch in-cell cosine check") {
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
-    val streamed = graft.queries.SimilarityQueries.defs("q_stream_semgate")(
+    val streamed = graft.SparkEntry.queries("q_stream_semgate")(
       spark, dir)
     val got = streamed.collect().map(r =>
       r.getLong(0) -> (r.getLong(1), r.getDouble(2), r.getBoolean(3))).toMap
@@ -313,7 +312,7 @@ class StreamOpsSpec extends SparkSpec {
     val Drained(oneShot, maxState, _) = StreamOps.patternState(spark, dir)
     val one = oneShot.collect().map(r => r.getLong(0) ->
       (r.getLong(1), r.getLong(2), r.getLong(3), r.getBoolean(4))).toMap
-    val batch = EventQueries.defs("q_evt_pattern")(spark, dir)
+    val batch = graft.SparkEntry.queries("q_evt_pattern")(spark, dir)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getAs[Int]("n_conv").toLong,
           r.getAs[Int]("n_err_runs").toLong, r.getAs[Boolean]("signup_converted")))
@@ -337,7 +336,7 @@ class StreamOpsSpec extends SparkSpec {
         (uid * 1000 + i, new java.sql.Timestamp(t0 + i * 1000L), uid,
           letters(ch), 1.0, "{}")
       }
-    val tmp = java.nio.file.Files.createTempDirectory("cep_slices")
+    val tmp = java.nio.file.Paths.get(graft.core.Scratch.local(spark, "cep_slices"))
     import spark.implicits._
     def writeSlice(data: Seq[(Long, java.sql.Timestamp, Long, String, Double, String)],
                    name: String): Unit = {

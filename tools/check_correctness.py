@@ -6,7 +6,10 @@ Usage: python3 tools/check_correctness.py <sf_dir> <verify_out_dir>
 Reads each <verify_out_dir>/<name> parquet written by graft.Verify, runs
 the corresponding SQL from oracle_sql.json in DuckDB against the same
 testdata tables, and compares (rows sorted, columns sorted by name,
-values normalized). Dev tool only — the engine itself is pure Scala.
+values normalized). A dump with no oracle (rows-only), an oracle with no
+dump and no `_errors.json` entry, and a recorded crash each count as FAIL;
+the exit status is non-zero on any FAIL. Dev tool only — the engine itself
+is pure Scala.
 """
 import json
 import math
@@ -45,20 +48,29 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.loads(Path(out_dir, "oracle_sql.json").read_text())
-    n_pass = n_fail = n_skip = 0
+    n_pass = n_fail = n_rows_only = 0
     # Queries that crashed during the dump are recorded by Verify in
     # _errors.json (and Verify exits non-zero). Count each as a FAIL so
     # a shrunken dump can never read as a clean gate (the round-11 trap).
     err_path = Path(out_dir, "_errors.json")
-    if err_path.exists():
-        for name, msg in sorted(json.loads(err_path.read_text()).items()):
-            print(f"FAIL  {name:28s} crashed during dump: {msg[:120]}")
-            n_fail += 1
-    for name in sorted(p.name for p in Path(out_dir).iterdir() if p.is_dir()):
+    crashed = json.loads(err_path.read_text()) if err_path.exists() else {}
+    for name, msg in sorted(crashed.items()):
+        print(f"FAIL  {name:28s} crashed during dump: {msg[:120]}")
+        n_fail += 1
+    dumped = sorted(p.name for p in Path(out_dir).iterdir() if p.is_dir())
+    # An oracle with neither a dump nor a recorded crash means the dump
+    # shrank silently: FAIL, never an omission.
+    for name in sorted(set(oracle) - set(dumped) - set(crashed)):
+        print(f"FAIL  {name:28s} has an oracle but no dump")
+        n_fail += 1
+    for name in dumped:
         spark_df = pd.read_parquet(Path(out_dir, name))
         if name not in oracle:
-            print(f"SKIP  {name:28s} rows={len(spark_df)} (no oracle)")
-            n_skip += 1
+            # every registered query carries an oracle: a dump without
+            # one is a FAIL, not a skip
+            print(f"FAIL  {name:28s} rows={len(spark_df)} rows-only (no oracle)")
+            n_fail += 1
+            n_rows_only += 1
             continue
         try:
             duck_df = con.execute(oracle[name]).df()
@@ -102,7 +114,7 @@ def main():
         else:
             print(f"PASS  {name:28s} rows={len(a)}")
             n_pass += 1
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_skip} rows-only")
+    print(f"\n{n_pass} pass, {n_fail} fail ({n_rows_only} of them rows-only)")
     sys.exit(1 if n_fail else 0)
 
 
