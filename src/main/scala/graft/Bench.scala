@@ -14,8 +14,8 @@ object Bench {
       .builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // A/B trials (e.g. the naive-range-join rewrite) set session confs
-    // without a code change: "k1=v1;k2=v2". Applied overrides are
+    // Spark session confs (e.g. AQE or shuffle settings) for a trial
+    // run without a code change: "k1=v1;k2=v2". Applied overrides are
     // echoed to stderr and recorded in both emitted JSON lines, so a
     // bench artifact can never silently claim default config.
     val extraConf = graft.core.GraftSession.applyExtraConf(spark)

@@ -59,8 +59,8 @@ object Verify {
       .builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // A/B trials (e.g. the naive-range-join rewrite) set session confs
-    // without a code change: "k1=v1;k2=v2" — same hook as Bench. Every
+    // Spark session confs (e.g. AQE or shuffle settings) for a trial
+    // run without a code change: "k1=v1;k2=v2" — same hook as Bench. Every
     // applied override is echoed to stderr AND recorded in the output
     // dir (_extra_conf.json, written even when empty), so a gate
     // artifact is self-describing about non-default config.

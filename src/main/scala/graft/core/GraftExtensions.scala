@@ -16,8 +16,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // logical node + planner strategy + physical operator
     e.injectPlannerStrategy(_ => new graft.plans.AsOfJoinStrategy)
     // the bucketed range join as a logical node + optimizer rewrite;
-    // also (opt-in via spark.graft.rangeJoin.rewriteNaive) rebuckets
-    // any naive inequality join in any plan
+    // the same rule rebuckets any naive inequality join in any plan
     e.injectOptimizerRule(_ => new graft.plans.RangeJoinRewrite)
     e.injectFunction((
       new FunctionIdentifier("cosine_sim"),

@@ -53,7 +53,7 @@ object GraftSession {
   /** Apply `SPARK_GRAFT_EXTRA_CONF` ("k1=v1;k2=v2") to the session and
     * return the applied pairs so the caller can RECORD them in its
     * emitted artifact — a silent override could otherwise invalidate a
-    * certification run (e.g. flip an optimizer default) while the
+    * certification run (e.g. flip an AQE default) while the
     * artifact still claims default config. Malformed entries (no '=')
     * are loudly warned and skipped, never silently dropped. Values
     * cannot contain ';' (the separator) — warned if the remainder of a

@@ -10,11 +10,7 @@ import org.apache.spark.sql.graft.GraftSqlBridge
 import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 
 /** The bucketed range join as a first-class Catalyst operator — the
-  * second rung of the custom-operator ladder next to [[AsOfJoinPlan]].
-  *
-  * [[graft.ops.RangeJoin.joinPointsInInterval]] implements the same
-  * public bucketed-range-join rewrite as a hand-applied DataFrame
-  * composition; this node makes the rewrite a PLANNER-LEVEL fact:
+  * second rung of the custom-operator ladder next to [[AsOfJoinPlan]]:
   *
   *   - [[RangeJoinPlan]] declares the semantics (left intervals
   *     `[lo, hi]`, right points, equi keys, inner or left-outer);
@@ -27,25 +23,20 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
   *   - the SAME rule also recognizes a user's NAIVE inequality join —
   *     `l JOIN r ON l.k = r.k AND r.t BETWEEN l.lo AND l.hi`, which
   *     Spark would otherwise execute as a per-key cartesian (or a
-  *     BroadcastNestedLoopJoin when keyless) — and applies the
+  *     BroadcastNestedLoopJoin when keyless) — and always applies the
   *     rewrite to it, so ANY inequality join in ANY plan (including
-  *     `spark.sql` text) gets the bucketed plan. The rewrite is ON by
-  *     default since round 14 (`spark.graft.rangeJoin.rewriteNaive`,
-  *     set false to disable), with
-  *     `spark.graft.rangeJoin.bucketWidthUs` (default 1 h) and
-  *     `spark.graft.rangeJoin.maxBucketsPerRow` (default 64) sizing
-  *     the buckets. Default-on was measured, not assumed: a normalized
-  *     plan sweep of the full 221-query batch inventory
-  *     (tools.RewriteTrial) shows ZERO plan changes with the flag on —
-  *     the match conditions (a LongType point attribute bounded on
-  *     both sides by the opposite relation) fire only on the naive
-  *     shape the rule exists for — and the sf0.1 bench totals are
-  *     equal within load noise (BASELINE.md round-14 trial). The
-  *     explicit node needs no flag — constructing it IS the opt-in.
+  *     `spark.sql` text) gets the bucketed plan, with fixed
+  *     [[RangeJoinRewrite.naiveBucketWidthUs]] (1 h) buckets and a
+  *     [[RangeJoinRewrite.naiveMaxBuckets]] (64) fan-out cap. A
+  *     normalized plan sweep of the full batch inventory showed ZERO
+  *     plan changes from the rewrite — the match conditions (a LongType
+  *     point attribute bounded on both sides by the opposite relation)
+  *     fire only on the naive shape the rule exists for (BASELINE.md
+  *     round-14 trial).
   *     The naive rewrite is FULLY semantics-preserving: a NULL or
   *     inverted interval emits no match (exactly what the original
-  *     inner join did), and rows whose interval spans >=
-  *     maxBucketsPerRow buckets take a WIDE-ROW FALLBACK — the
+  *     inner join did), and rows whose interval spans more than
+  *     the cap take a WIDE-ROW FALLBACK — the
   *     original join shape restricted to exactly those rows, unioned
   *     with the bucketed branch — so the heavy tail degrades to the
   *     plan the user wrote instead of raising or exploding. Only the
@@ -58,12 +49,11 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
   *     rows are wide — the extra scan is the price of zero behavior
   *     change, bounded by one pass over each input.
   *
-  * Semantics are identical to the ops composition (both interval ends
-  * inclusive, integer-microsecond times, left-outer emits null-payload
-  * rows per unmatched bucket copy for null-ignoring aggregation);
-  * RangeJoinPlanSpec asserts bit-equality between the two paths and
-  * q_evt_range_join registers through this node against the unchanged
-  * DuckDB oracle.
+  * Semantics: both interval ends inclusive, integer-microsecond
+  * times, left-outer emits null-payload rows per unmatched bucket copy
+  * for null-ignoring aggregation; RangeJoinPlanSpec checks the rows
+  * against a Scala model of that contract and q_evt_range_join
+  * registers through this node against the DuckDB oracle.
   */
 case class RangeJoinPlan(
     left: LogicalPlan,
@@ -97,8 +87,7 @@ case class RangeJoinPlan(
 /** Interval-interval overlap join as a first-class Catalyst node —
   * the window-vs-window member of the temporal-join family
   * ([[AsOfJoinPlan]] = latest-before, [[RangeJoinPlan]] =
-  * point-in-window). Declares the semantics of
-  * [[graft.ops.RangeJoin.joinIntervalsOverlap]]: left rows carry
+  * point-in-window): left rows carry
   * `[leftLo, leftHi]`, right rows `[rightLo, rightHi]` (integer
   * microseconds, both ends inclusive), a pair matches when
   * `max(lo) <= min(hi)`. [[RangeJoinRewrite]] expands it to the
@@ -137,9 +126,27 @@ case class OverlapJoinPlan(
 
 object RangeJoinPlan {
 
-  /** Column-level entry with the same signature and semantics as
-    * [[graft.ops.RangeJoin.joinPointsInInterval]]; returns `left.*`
-    * plus `payloadCols`.
+  /** Inner- or left-outer-join the right points into the left
+    * intervals; returns `left.*` plus `payloadCols` (one row per
+    * matched pair — aggregate downstream for counts).
+    *
+    * @param keys        equi-join key columns present on both sides
+    * @param leftLo      left interval start (integer micros, inclusive)
+    * @param leftHi      left interval end (integer micros, inclusive)
+    * @param rightTime   right event-time column (integer micros)
+    * @param bucketWidth bucket width in microseconds: wide buckets mean
+    *                    fewer explode rows, narrow ones fewer false
+    *                    candidates reaching the exact filter
+    * @param maxBucketsPerRow declared fan-out bound; a left interval
+    *                    spanning more buckets (or inverted, hi < lo, or
+    *                    NULL-bounded) raises an error rather than
+    *                    exploding
+    * @param joinType    "inner" (default) emits matched pairs only;
+    *                    "left_outer" keeps every left row: each bucket
+    *                    copy of a left row whose candidates all miss
+    *                    survives with null payload, so left-outer output
+    *                    is for null-ignoring aggregation (count/max over
+    *                    the payload) downstream
     */
   def joinPointsInInterval(left: DataFrame, right: DataFrame,
       keys: Seq[String], leftLo: String, leftHi: String,
@@ -169,9 +176,12 @@ object RangeJoinPlan {
     GraftSqlBridge.ofRows(left.sparkSession, Project(keep, node))
   }
 
-  /** Column-level entry with the same signature and semantics as
-    * [[graft.ops.RangeJoin.joinIntervalsOverlap]]; returns `left.*`
-    * plus `payloadCols`.
+  /** Inner-join every right interval `[rightLo, rightHi]` that
+    * overlaps a left interval of the same key (both ends inclusive, so
+    * touching intervals match); returns `left.*` plus `payloadCols`,
+    * each pair exactly once. Both sides' bucket fan-outs are capped by
+    * `maxBucketsPerRow` with the explicit node's raise-on-malformed
+    * contract.
     */
   def joinIntervalsOverlap(left: DataFrame, right: DataFrame,
       keys: Seq[String], leftLo: String, leftHi: String,
@@ -200,7 +210,8 @@ object RangeJoinPlan {
 }
 
 /** Expands [[RangeJoinPlan]] into the bucket-explode composition, and
-  * (opt-in) rewrites naive inequality joins into the same shape. Runs
+  * rewrites every eligible naive inequality join into the same shape
+  * with [[RangeJoinRewrite.naiveBucketWidthUs]] buckets. Runs
   * inside the operator-optimization fixed point; both rewrites emit
   * only equality join conditions, so neither re-matches its own
   * output.
@@ -217,12 +228,8 @@ class RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
         rj.bucketWidth, rj.maxBucketsPerRow, rj.isLeftOuter, rj.output,
         strict = true)
     case oj: OverlapJoinPlan => expandOverlap(oj)
-    case j @ Join(_, _, Inner, Some(_), _) if naiveEnabled =>
-      rewriteNaive(j).getOrElse(j)
+    case j @ Join(_, _, Inner, Some(_), _) => rewriteNaive(j).getOrElse(j)
   }
-
-  private def naiveEnabled: Boolean =
-    conf.getConfString("spark.graft.rangeJoin.rewriteNaive", "true").toBoolean
 
   /** Floor bucket of an integer-microsecond time: exact for negative
     * epochs too (the pmod subtraction makes the dividend exactly
@@ -289,7 +296,7 @@ class RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
       if (isLeftOuter)
         // the exact range check must sit in the join CONDITION: as a
         // post-filter it would also drop the null rows that make the
-        // join left-outer (same construction as the ops composition)
+        // join left-outer
         Join(lExp, rPrj, LeftOuter, Some(And(cond, exactPred)), JoinHint.NONE)
       else
         Filter(exactPred, Join(lExp, rPrj, Inner, Some(cond), JoinHint.NONE))
@@ -323,8 +330,7 @@ class RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     * containing `greatest(leftLo, rightLo)` — the first shared
     * bucket, covered by both sides exactly when the intervals
     * overlap — so each pair survives exactly once with no distinct
-    * pass (same construction as the ops composition;
-    * RangeJoinPlanSpec pins bit-equality).
+    * pass.
     */
   private def expandOverlap(oj: OverlapJoinPlan): LogicalPlan = {
     val w = oj.bucketWidth
@@ -361,6 +367,8 @@ class RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     */
   private def rewriteNaive(j: Join): Option[LogicalPlan] = {
     val Join(l, r, _, Some(cond), _) = j: @unchecked
+    val width = RangeJoinRewrite.naiveBucketWidthUs
+    val maxBuckets = RangeJoinRewrite.naiveMaxBuckets
     if (l.isStreaming || r.isStreaming) return None
     // The rewrite evaluates BOTH child subtrees in two Union branches
     // (the bucketed plan and the wide-row fallback). That is sound
@@ -455,12 +463,6 @@ class RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
       (lowers, uppers) match {
         case (Vector((cLo, rLo)), Vector((cHi, rHi)))
             if rLo.point == rHi.point =>
-          val width =
-            conf.getConfString("spark.graft.rangeJoin.bucketWidthUs",
-              "3600000000").toLong
-          val maxBuckets =
-            conf.getConfString("spark.graft.rangeJoin.maxBucketsPerRow",
-              "64").toInt
           val unchosen = rangeConjs.map(_._1).filterNot(c => c == cLo || c == cHi)
           val exact = (Seq(cLo, cHi) ++ unchosen ++ leftover)
             .reduce[Expression](And(_, _))
@@ -473,7 +475,7 @@ class RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
           val bucketed = expand(intervalSide, pointPlan, orientedKeys,
             rLo.bound, rHi.bound, rLo.point, exact, width, maxBuckets,
             isLeftOuter = false, j.output, strict = false)
-          // Wide-row fallback: intervals spanning >= maxBucketsPerRow
+          // Wide-row fallback: intervals spanning more than maxBuckets
           // buckets are DROPPED by the bucketed branch (their explode
           // would be unbounded) and instead take the ORIGINAL join
           // shape, restricted to exactly those rows — so the rewrite
@@ -528,12 +530,6 @@ class RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
       (uppersL, lowersL) match {
         case (Vector((cUp, rUp)), Vector((cDn, rDn)))
             if rUp.point != rDn.point =>
-          val width =
-            conf.getConfString("spark.graft.rangeJoin.bucketWidthUs",
-              "3600000000").toLong
-          val maxBuckets =
-            conf.getConfString("spark.graft.rangeJoin.maxBucketsPerRow",
-              "64").toInt
           // lLo is the left attr upper-bounded by the right (so the
           // right bound is rHi); lHi the one lower-bounded (bound rLo)
           val (lLo, lHi) = (rUp.point, rDn.point)
@@ -572,7 +568,7 @@ class RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
             Filter(And(exact, canonical),
               Join(lExp, rExp, Inner, Some(equi), JoinHint.NONE)))
           // a row is routed to the fallback when its interval is
-          // non-null but inverted or spans >= maxBuckets buckets;
+          // non-null but inverted or spans more than maxBuckets buckets;
           // NULL-bounded rows can never satisfy the original
           // conjunction, so they may drop from both branches
           def bad(lo: Expression, hi: Expression): Expression =
@@ -592,4 +588,15 @@ class RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     }
     resolve('r').orElse(resolve('l')).orElse(resolveOverlap())
   }
+}
+
+object RangeJoinRewrite {
+
+  /** Bucket width of the naive-join rewrite: 1 h, in microseconds. */
+  val naiveBucketWidthUs: Long = 3600000000L
+
+  /** Bucket fan-out cap of the naive-join rewrite: an interval over
+    * more buckets takes the wide-row fallback instead.
+    */
+  val naiveMaxBuckets: Int = 64
 }

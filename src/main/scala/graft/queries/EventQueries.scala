@@ -154,7 +154,7 @@ object EventQueries {
 
   /** Windowed-count attribution (bucketed range join): for each
     * purchase, the count and latest time of the same user's clicks in
-    * the preceding hour — [[graft.ops.RangeJoin.joinPointsInInterval]]
+    * the preceding hour — [[graft.plans.RangeJoinPlan.joinPointsInInterval]]
     * (30-min buckets, so each 1-h interval explodes to at most 3
     * bucket rows; equi-shuffle on (user, bucket), exact BETWEEN as a
     * post-filter — no nested-loop join anywhere in the plan, which
@@ -172,10 +172,8 @@ object EventQueries {
       .withColumn("lo_us", col("p_us") - lit(3600000000L))
     val clicks = e.filter(col("event_type") === "click")
       .select(col("user_id"), unix_micros(col("ts")).as("c_us"))
-    // registered through the NATIVE logical node (plans.RangeJoinPlan +
-    // the RangeJoinRewrite optimizer expansion) since round 13; the
-    // hand-applied composition it replaced lives on in ops.RangeJoin
-    // (RangeJoinPlanSpec pins bit-equality between the two paths)
+    // the NATIVE logical node (plans.RangeJoinPlan + the
+    // RangeJoinRewrite optimizer expansion)
     graft.plans.RangeJoinPlan.joinPointsInInterval(
         purchases, clicks, Seq("user_id"),
         leftLo = "lo_us", leftHi = "p_us", rightTime = "c_us",
@@ -189,57 +187,54 @@ object EventQueries {
   /** The naive-inequality-join REWRITE, driver-visible through the SQL
     * surface: the purchase→click window join written as PLAIN ANSI SQL
     * (`JOIN ... ON user_id match AND c_us BETWEEN p_us-1h AND p_us`) —
-    * the shape Spark would execute as a per-key cartesian — run with
-    * `spark.graft.rangeJoin.rewriteNaive` on, so
-    * [[graft.plans.RangeJoinRewrite]] rebuckets it into the
-    * (key, bucket) equi join. A construction-time `require` pins that
-    * the rewrite actually fired (the optimized plan must carry the
-    * generated bucket column); the result is materialized under the
-    * conf (localCheckpoint — the flag is restored before return) and
-    * the oracle replays the same SQL in DuckDB. Complements
-    * q_evt_range_join (the explicit native node) and
-    * RangeJoinPlanSpec (bit-equality + keyless path).
+    * the shape Spark would execute as a per-key cartesian — which
+    * [[graft.plans.RangeJoinRewrite]] rebuckets into the (key, 1-h
+    * bucket) equi join. A construction-time `require` pins that the
+    * rewrite actually fired (the optimized plan must carry the
+    * generated bucket column); the oracle replays the same SQL in
+    * DuckDB. Complements q_evt_range_join (the explicit native node)
+    * and RangeJoinPlanSpec (Scala-model rows + keyless path).
     */
   private def qEvtRangeSql(s: SparkSession, dir: String): DataFrame = {
-    val tag = math.abs(dir.hashCode)
     val ev = t(s, dir, "events")
-    ev.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("p_us"))
-      .createOrReplaceTempView(s"__rsql_p_$tag")
-    ev.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), unix_micros(col("ts")).as("c_us"))
-      .createOrReplaceTempView(s"__rsql_c_$tag")
-    val prev = s.conf.getOption("spark.graft.rangeJoin.rewriteNaive")
-    val prevWidth = s.conf.getOption("spark.graft.rangeJoin.bucketWidthUs")
-    s.conf.set("spark.graft.rangeJoin.rewriteNaive", "true")
-    s.conf.set("spark.graft.rangeJoin.bucketWidthUs", "1800000000")
-    try {
-      val df = s.sql(
-        s"""SELECT p.event_id, p.user_id, p.p_us, c.c_us
-           |FROM __rsql_p_$tag p JOIN __rsql_c_$tag c
-           |  ON p.user_id = c.c_user
-           | AND c.c_us >= p.p_us - 3600000000
-           | AND c.c_us <= p.p_us""".stripMargin)
-      require(df.queryExecution.optimizedPlan.toString.contains("__graft_bkt"),
-        "naive-join rewrite did not fire on the SQL-surface inequality join")
-      df.localCheckpoint().orderBy("event_id", "c_us")
-    } finally {
-      prev match {
-        case Some(v) => s.conf.set("spark.graft.rangeJoin.rewriteNaive", v)
-        case None    => s.conf.unset("spark.graft.rangeJoin.rewriteNaive")
-      }
-      prevWidth match {
-        case Some(v) => s.conf.set("spark.graft.rangeJoin.bucketWidthUs", v)
-        case None    => s.conf.unset("spark.graft.rangeJoin.bucketWidthUs")
-      }
+    val df = sqlOver(s, "__rsql", Seq(
+      "p" -> ev.filter(col("event_type") === "purchase")
+        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("p_us")),
+      "c" -> ev.filter(col("event_type") === "click")
+        .select(col("user_id").as("c_user"), unix_micros(col("ts")).as("c_us")))) {
+      v => s"""SELECT p.event_id, p.user_id, p.p_us, c.c_us
+              |FROM ${v("p")} p JOIN ${v("c")} c
+              |  ON p.user_id = c.c_user
+              | AND c.c_us >= p.p_us - 3600000000
+              | AND c.c_us <= p.p_us""".stripMargin
     }
+    require(df.queryExecution.optimizedPlan.toString.contains("__graft_bkt"),
+      "naive-join rewrite did not fire on the SQL-surface inequality join")
+    df.orderBy("event_id", "c_us")
   }
+
+  /** Run `sql` over `inputs` registered as temp views named
+    * `<prefix>_<alias>_<n>` (`v(alias)` spells the name), dropping the
+    * views once `s.sql` has analysed the plan: the returned DataFrame
+    * carries the inputs' plans, so the session catalog keeps nothing.
+    */
+  private def sqlOver(s: SparkSession, prefix: String,
+      inputs: Seq[(String, DataFrame)])(sql: (String => String) => String)
+      : DataFrame = {
+    val n = viewSeq.incrementAndGet()
+    val v = (alias: String) => s"${prefix}_${alias}_$n"
+    inputs.foreach { case (alias, df) => df.createOrReplaceTempView(v(alias)) }
+    try s.sql(sql(v))
+    finally inputs.foreach { case (alias, _) => s.catalog.dropTempView(v(alias)) }
+  }
+
+  private val viewSeq = new java.util.concurrent.atomic.AtomicLong()
 
   /** Interval-overlap join (window-vs-window attribution): click
     * sessions that fall within an hour of the same user's error
     * bursts — both interval sets derived by gap-based sessionization
     * (30-min click gap, 10-min error gap), error windows padded
-    * ±1 h, then [[graft.ops.RangeJoin.joinIntervalsOverlap]] (1-h
+    * ±1 h, then [[graft.plans.RangeJoinPlan.joinIntervalsOverlap]] (1-h
     * buckets; each pair survives only in its canonical first shared
     * bucket, so the equi-join needs no dedup pass). Completes the
     * temporal-join family: as-of (latest-before), range join
@@ -277,8 +272,7 @@ object EventQueries {
 
   private def qEvtOverlapJoin(s: SparkSession, dir: String): DataFrame = {
     val (clicks, errors) = overlapIntervals(s, dir)
-    // registered through the NATIVE OverlapJoinPlan node since round 14
-    // (the ops composition is the spec-pinned bit-equal twin)
+    // the NATIVE OverlapJoinPlan node
     graft.plans.RangeJoinPlan.joinIntervalsOverlap(clicks, errors,
         Seq("user_id"),
         leftLo = "s_lo", leftHi = "s_hi", rightLo = "w_lo", rightHi = "w_hi",
@@ -292,8 +286,8 @@ object EventQueries {
     * surface — q_evt_range_sql's window-vs-window sibling: the same
     * session-interval overlap as q_evt_overlap_join written as PLAIN
     * ANSI SQL (`ON user match AND s_lo <= w_hi AND w_lo <= s_hi`),
-    * the shape Spark plans as a per-key cartesian, run with the
-    * default-on rewrite so [[graft.plans.RangeJoinRewrite]] rebuckets
+    * the shape Spark plans as a per-key cartesian, which
+    * [[graft.plans.RangeJoinRewrite]] rebuckets on
     * BOTH interval sides into the canonical-first-shared-bucket equi
     * join (inverted/over-wide rows take the wide-row fallback union
     * branch). A construction-time `require` pins that the double
@@ -301,33 +295,22 @@ object EventQueries {
     * DuckDB.
     */
   private def qEvtOverlapSql(s: SparkSession, dir: String): DataFrame = {
-    val tag = math.abs(dir.hashCode)
     val (clicks, errors) = overlapIntervals(s, dir)
-    clicks.createOrReplaceTempView(s"__osql_c_$tag")
-    errors.withColumnRenamed("user_id", "e_user")
-      .createOrReplaceTempView(s"__osql_e_$tag")
-    val prev = s.conf.getOption("spark.graft.rangeJoin.rewriteNaive")
-    s.conf.set("spark.graft.rangeJoin.rewriteNaive", "true")
-    try {
-      val df = s.sql(
-        s"""SELECT c.user_id, c.s_lo, c.s_hi, c.n_clicks,
-           |       e.w_lo, e.w_hi, e.n_errors,
-           |       least(c.s_hi, e.w_hi) - greatest(c.s_lo, e.w_lo)
-           |         AS overlap_us
-           |FROM __osql_c_$tag c JOIN __osql_e_$tag e
-           |  ON c.user_id = e.e_user
-           | AND c.s_lo <= e.w_hi
-           | AND e.w_lo <= c.s_hi""".stripMargin)
-      val opt = df.queryExecution.optimizedPlan.toString
-      require(opt.contains("__graft_bkt") && opt.contains("__graft_rbkt"),
-        "naive overlap rewrite did not fire on the SQL-surface join")
-      df.localCheckpoint().orderBy("user_id", "s_lo", "w_lo")
-    } finally {
-      prev match {
-        case Some(v) => s.conf.set("spark.graft.rangeJoin.rewriteNaive", v)
-        case None    => s.conf.unset("spark.graft.rangeJoin.rewriteNaive")
-      }
+    val df = sqlOver(s, "__osql", Seq(
+      "c" -> clicks, "e" -> errors.withColumnRenamed("user_id", "e_user"))) {
+      v => s"""SELECT c.user_id, c.s_lo, c.s_hi, c.n_clicks,
+              |       e.w_lo, e.w_hi, e.n_errors,
+              |       least(c.s_hi, e.w_hi) - greatest(c.s_lo, e.w_lo)
+              |         AS overlap_us
+              |FROM ${v("c")} c JOIN ${v("e")} e
+              |  ON c.user_id = e.e_user
+              | AND c.s_lo <= e.w_hi
+              | AND e.w_lo <= c.s_hi""".stripMargin
     }
+    val opt = df.queryExecution.optimizedPlan.toString
+    require(opt.contains("__graft_bkt") && opt.contains("__graft_rbkt"),
+      "naive overlap rewrite did not fire on the SQL-surface join")
+    df.orderBy("user_id", "s_lo", "w_lo")
   }
 
   /** Event-type transition counts: lag over the per-user ordered
@@ -3216,8 +3199,7 @@ object EventQueries {
         |SELECT p.event_id, p.user_id, p.p_us, c.c_us
         |FROM p JOIN c ON p.user_id = c.c_user
         |  AND c.c_us >= p.p_us - 3600000000 AND c.c_us <= p.p_us
-        |ORDER BY event_id, c_us""".stripMargin,
-      eager = true), // rewrite-conf-scoped localCheckpoint at construction
+        |ORDER BY event_id, c_us""".stripMargin),
     QueryDef("q_evt_asof_native", qEvtAsofNative,
       """WITH p AS (
         |  SELECT event_id, user_id, epoch_us(ts) AS p_us, value
@@ -3319,8 +3301,7 @@ object EventQueries {
         |  AND c.event_type = 'click' AND e.event_type = 'error'
         |  AND c.lo <= e.hi + 3600000000
         |  AND e.lo - 3600000000 <= c.hi
-        |ORDER BY c.user_id, s_lo, w_lo""".stripMargin,
-      eager = true), // rewrite-conf-scoped localCheckpoint at construction
+        |ORDER BY c.user_id, s_lo, w_lo""".stripMargin),
     // The running-min funnel cascade is order-equivalent to global mins:
     // a click qualifies iff SOME view is strictly earlier, i.e. iff
     // min(view_us) < click_us; likewise purchases against min(qual click).

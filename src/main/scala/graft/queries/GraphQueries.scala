@@ -217,17 +217,17 @@ object GraphQueries {
     * Algorithm: the degree-ordered "forward" method (Schank &
     * Wagner 2005; Suri & Vassilvitskii WWW'11 in its MapReduce
     * form). Every undirected edge is oriented from the endpoint with
-    * the SMALLER (degree, id) total-order key to the larger, wedges
-    * are out-neighbor pairs of a common apex, and a triangle is a
-    * wedge whose closing (lo→hi) edge exists — each triangle found
-    * exactly once. Orienting by degree bounds every out-list by
-    * O(sqrt(m)), so the wedge join is O(m^1.5) worst-case instead of
-    * sum-of-deg² — the difference between a hub with 10^6 neighbors
-    * generating 10^12 wedge rows and none at all. All three steps are
-    * equi-joins that shuffle on an 8-byte node id; nothing
-    * driver-side. The (deg·2^32 + id) key packs the total order into
-    * one BIGINT so both engines compare identically (ids < 2^32 by
-    * the key-space contract; deg < 2^31 trivially).
+    * the SMALLER (degree, id) total-order key to the larger, and a
+    * triangle is an oriented edge (apex→lo) plus a common out-neighbor
+    * hi of both endpoints — each triangle found exactly once.
+    * Orienting by degree bounds every out-list by O(sqrt(m)), so no
+    * hub with 10^6 neighbors ever expands sum-of-deg² candidates; the
+    * common out-neighbors come from intersecting sorted out-lists
+    * ([[trianglesFromPairsAdj]]). Every step is an equi-join on an
+    * 8-byte node id; nothing driver-side. The (deg·2^32 + id) key
+    * packs the total order into one BIGINT so both engines compare
+    * identically (ids < 2^32 by the key-space contract; deg < 2^31
+    * trivially).
     *
     * Projection fan-out is bounded by construction: an order has at
     * most 7 lines (the generator's lineitem contract), so the
@@ -239,9 +239,9 @@ object GraphQueries {
   /** The distinct co-purchase edge list (u < v), localCheckpoint'd —
     * every relation consumed more than once is materialized exactly
     * once (round-13 profile: the lazy pair lineage was 8.7 s of a 20 s
-    * wall and ran TWICE via the final degree join). Shared by the
-    * triangle, clustering and TriBench consumers so they can never
-    * silently measure different graphs.
+    * wall and ran TWICE via the final degree join). Shared by every
+    * co-purchase graph query (triangles, clustering, communities, link
+    * prediction, …) so they can never silently read different graphs.
     */
   private[graft] def coPurchasePairs(li: DataFrame): DataFrame = {
     // Optimization r18 (guide §2.4): the original self-join form paid
@@ -276,15 +276,11 @@ object GraphQueries {
       .union(tri.select(col("hi").as("node")))
       .groupBy("node").agg(count(lit(1)).as("tri_count"))
 
-  /** The broadcast-vs-shuffle_hash routing threshold (edge count) for
-    * BOTH triangle enumerations — read once here so tuning
-    * `spark.graft.triangles.broadcastEdgeCap` affects the registered
-    * adjacency path and the wedge twin identically (round-16 fix: the
-    * conf used to bind only under `useWedgePath=true`).
+  /** Edge count under which [[trianglesFromPairsAdj]] BROADCASTS the
+    * adjacency lists into the per-edge intersect (~a few hundred MB
+    * hashed at the cap); above it the join routes shuffle_hash.
     */
-  private[graft] def triBroadcastCap(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.triangles.broadcastEdgeCap")
-      .map(_.toLong).getOrElse(5000000L)
+  val triBroadcastEdgeCap = 5000000L
 
   private def qGraphTriangles(s: SparkSession, dir: String): DataFrame = {
     // no pre-distinct: coPurchasePairs' per-order collect_set dedups
@@ -292,20 +288,7 @@ object GraphQueries {
     // grouped form makes it a wasted exchange (optimization r18)
     val li = t(s, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val pairs = coPurchasePairs(li)
-    // Registered path since round 15: the ADJACENCY-INTERSECT twin
-    // ([[trianglesFromPairsAdj]]) — same census, measured 3.2x faster
-    // than the wedge+closing-join form at sf0.1 AND sf1 (tools
-    // .TriBench, walls in BASELINE.md), with O(m) shuffle instead of
-    // the O(m^1.5) wedge stream and no skew armor needed (the hottest
-    // adjacency list is bounded by the degree orientation). Set
-    // spark.graft.triangles.useWedgePath=true to route through the
-    // wedge form (kept spec'd + raced per round as the baseline).
-    val cap = triBroadcastCap(s)
-    val (tri, deg) =
-      if (s.conf.getOption("spark.graft.triangles.useWedgePath")
-            .contains("true")) trianglesFromPairs(pairs, cap)
-      else trianglesFromPairsAdj(pairs, cap)
+    val (tri, deg) = trianglesFromPairsAdj(coPurchasePairs(li))
     val perNode = perNodeTriCensus(tri)
     deg.join(perNode, Seq("node"), "left_outer")
       .select(coalesce(col("tri_count"), lit(0L)).as("tri_count"))
@@ -314,100 +297,25 @@ object GraphQueries {
   }
 
   /** Degree-ordered triangle enumeration from an undirected pair list
-    * `(u, v)` (u < v, deduplicated): returns the triangle relation
+    * `(u, v)` (u < v, deduplicated) by ADJACENCY INTERSECT (the
+    * "compact-forward" method): returns the triangle relation
     * `(apex, lo, hi)` — each triangle exactly once — and the degree
-    * relation `(node, deg)`. Extracted from [[qGraphTriangles]] so the
-    * closing-join routing (broadcast under `broadcastEdgeCap` edges,
-    * shuffle_hash above — the >5M-edge path a 100 TB corpus takes) is
-    * testable on planted fixtures: the skew spec forces cap=0 on a
-    * graph with one hot closing pair and asserts AQE splits the
-    * skewed partition.
-    */
-  private[graft] def trianglesFromPairs(pairs: DataFrame,
-      broadcastEdgeCap: Long = 5000000L): (DataFrame, DataFrame) = {
-    val deg = pairs.select(col("u").as("node"))
-      .union(pairs.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    // deg is checkpointed so its size statistic is exact: AQE broadcasts
-    // it here when node-dimension-sized and falls back to a shuffle on a
-    // billion-node graph — no hand-placed hint needed.
-    val keyed = pairs
-      .join(deg.select(col("node").as("u"), col("deg").as("du")), Seq("u"))
-      .join(deg.select(col("node").as("v"), col("deg").as("dv")), Seq("v"))
-      .select(col("u"), col("v"),
-        (col("du") * 4294967296L + col("u")).as("ku"),
-        (col("dv") * 4294967296L + col("v")).as("kv"))
-    // pairs ARE the distinct undirected edges, and pairs is already
-    // checkpointed — so the edge count (the broadcast-vs-shuffle_hash
-    // routing input) is known before e is built.
-    val nEdges = pairs.count()
-    val oriented = keyed.select(
-      when(col("ku") < col("kv"), col("u")).otherwise(col("v")).as("src"),
-      when(col("ku") < col("kv"), col("v")).otherwise(col("u")).as("dst"),
-      greatest(col("ku"), col("kv")).as("kdst"))
-    // Above the broadcast cap, checkpoint the oriented edges
-    // REPARTITIONED BY (src, dst), not on whatever single-endpoint hash
-    // the degree join left behind. This is skew armor for the
-    // shuffle_hash closing path: AQE's local shuffle read keeps the
-    // wedge-producing side on e's stored partitioning, so a hub
-    // endpoint's edges concentrated in one map would make every hot
-    // (lo, hi) reduce partition a SINGLE map chunk — and AQE's
-    // skew-join split works at map-chunk granularity, so single-map
-    // partitions are unsplittable. Two-key diversity spreads any
-    // node's edges across maps, keeping hot closing pairs splittable
-    // (spec-pinned in GraphSpec's planted-skew case). One extra
-    // shuffle of the edge list — the side ~100x smaller than the wedge
-    // stream it protects — and skipped entirely on the broadcast path,
-    // where wedges are filtered map-side and never shuffle at all.
-    val e = (if (nEdges <= broadcastEdgeCap) oriented
-             else oriented.repartition(col("src"), col("dst")))
-      .localCheckpoint()
-    val wedges = e.select(col("src").as("apex"), col("dst").as("lo"), col("kdst").as("klo"))
-      .join(e.select(col("src").as("apex"), col("dst").as("hi"), col("kdst").as("khi")),
-        Seq("apex"))
-      .filter(col("klo") < col("khi"))
-      .select(col("apex"), col("lo"), col("hi"))
-    // Close the wedge against the edge list. The wedge stream is the
-    // O(m^1.5) side (~149M rows at sf0.1, ~100x the edges), so HOW the
-    // closing join executes dominates the query:
-    //  - edges dimension-sized (<= 5M ~ a few hundred MB hashed):
-    //    BROADCAST them — the wedge stream is filtered map-side where
-    //    it is produced and never shuffles at all (24->9 s at sf0.1).
-    //  - bigger corpora: SHUFFLE_HASH — the honest O(m^1.5) shuffle,
-    //    partitioned by (lo, hi), with the edge side hashed per
-    //    partition rather than both sides sorted (21.8 s as SMJ vs
-    //    11.4 s as hash join at sf0.1 when measured in round 12).
-    // The same size-aware routing an optimizer with statistics would
-    // pick; the localCheckpoint above is what makes the count cheap.
-    val closing = e.select(col("src").as("lo"), col("dst").as("hi"))
-    val tri = wedges.join(
-      if (nEdges <= broadcastEdgeCap) broadcast(closing)
-      else closing.hint("shuffle_hash"),
-      Seq("lo", "hi"))
-    (tri, deg)
-  }
-
-  /** [[trianglesFromPairs]]' ADJACENCY-INTERSECT twin (the
-    * "compact-forward" variant of the same degree-ordered method):
-    * instead of materializing the O(m^1.5) wedge stream and closing
-    * it against the edge list, build each node's out-neighbor KEY
-    * list once (`collect_list` over the oriented edges — list length
-    * bounded O(sqrt m) by the degree orientation) and intersect the
-    * two endpoint lists per edge; every common out-neighbor IS a
-    * closed triangle, so only triangle rows ever materialize. Shuffle
-    * volume is O(m) — edges plus adjacency lists totaling m keys —
-    * against the wedge path's O(m^1.5) closing shuffle on the
-    * >broadcast-cap route; skew needs no armor because the hottest
-    * adjacency list is already capped by the orientation bound.
-    * Same (apex, lo, hi) triangle relation, each exactly once
-    * (spec-pinned equal to the wedge path on planted fixtures;
-    * measured in BASELINE.md round 15 — the wedge path stays the
-    * registered one at driver SFs where the broadcast route's
-    * map-side filter wins).
+    * relation `(node, deg)`. Instead of materializing the O(m^1.5)
+    * wedge stream and closing it against the edge list, build each
+    * node's out-neighbor KEY list once (`collect_list` over the
+    * oriented edges — list length bounded O(sqrt m) by the degree
+    * orientation) and intersect the two endpoint lists per edge; every
+    * common out-neighbor IS a closed triangle, so only triangle rows
+    * ever materialize. Shuffle volume is O(m) — edges plus adjacency
+    * lists totaling m keys — and skew needs no armor because the
+    * hottest adjacency list is capped by the orientation bound (the
+    * wedge+closing-join form measured 3.2x slower at sf0.1 and sf1,
+    * BASELINE.md round 15). GraphSpec pins the relation
+    * against a brute-force enumeration and both join routes against
+    * each other (`broadcastEdgeCap = 0` forces shuffle_hash).
     */
   private[graft] def trianglesFromPairsAdj(pairs: DataFrame,
-      broadcastEdgeCap: Long = 5000000L): (DataFrame, DataFrame) = {
+      broadcastEdgeCap: Long = triBroadcastEdgeCap): (DataFrame, DataFrame) = {
     val deg = pairs.select(col("u").as("node"))
       .union(pairs.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -434,8 +342,7 @@ object GraphQueries {
     // disk. Under the cap the adjacency side (total size ~m keys)
     // BROADCASTS — the edge stream never shuffles at all; above it,
     // SHUFFLE_HASH hash-builds the node-sized side per partition and
-    // the array-carrying stream stays pipelined, never sorted. Same
-    // knob and threshold as the wedge path's closing join.
+    // the array-carrying stream stays pipelined, never sorted.
     val nEdges = pairs.count()
     def route(d: DataFrame): DataFrame =
       if (nEdges <= broadcastEdgeCap) broadcast(d) else d.hint("shuffle_hash")
@@ -470,8 +377,7 @@ object GraphQueries {
     // grouped form makes it a wasted exchange (optimization r18)
     val li = t(s, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val pairs = coPurchasePairs(li)
-    val (tri, deg) = trianglesFromPairsAdj(pairs, triBroadcastCap(s))
+    val (tri, deg) = trianglesFromPairsAdj(coPurchasePairs(li))
     val perNode = perNodeTriCensus(tri)
     deg.filter(col("deg") >= 2)
       .join(perNode, Seq("node"), "left_outer")
@@ -515,7 +421,7 @@ object GraphQueries {
     */
   /** Node-count threshold under which [[lpaCensus]] BROADCASTS the
     * label relation into the per-round join (16 bytes/node — 4M nodes
-    * ≈ 64 MB hashed); override with `spark.graft.lpa.broadcastNodeCap`.
+    * ≈ 64 MB hashed).
     */
   val lpaBroadcastNodeCap = 4000000L
 
@@ -607,13 +513,11 @@ object GraphQueries {
     lpaLoop(edges, labels0, rounds, voteParts, route)
   }
 
-  /** Bucket count for the stored LPA edge table; override with
-    * `spark.graft.lpa.buckets`. Sized so an sf10-scale vote stream
-    * (~240M rows) lands ~2M rows a bucket — the same hash-resident
-    * aggregate target as [[lpaVoteParts]].
+  /** Bucket count for the stored LPA edge table. Sized so an
+    * sf10-scale vote stream (~240M rows) lands ~2M rows a bucket — the
+    * same hash-resident aggregate target as [[lpaVoteParts]].
     */
-  private[graft] def lpaBuckets(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.lpa.buckets").map(_.toInt).getOrElse(32)
+  private val lpaBuckets = 32
 
   /** Materialize the DOUBLED edge relation as a hash-bucketed table on
     * dst — the deployment layout for the above-broadcast-cap regime:
@@ -689,9 +593,7 @@ object GraphQueries {
     // grouped form makes it a wasted exchange (optimization r18)
     val li = t(s, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val cap = s.conf.getOption("spark.graft.lpa.broadcastNodeCap")
-      .map(_.toLong).getOrElse(lpaBroadcastNodeCap)
-    lpaCensus(coPurchasePairs(li), lpaRounds, cap)
+    lpaCensus(coPurchasePairs(li), lpaRounds)
   }
 
   /** The bucketed-edge deployment route under the same oracle: write
@@ -708,7 +610,6 @@ object GraphQueries {
     // no pre-distinct: coPurchasePairs' collect_set dedups (see above)
     val li = t(s, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val buckets = lpaBuckets(s)
     val path = graft.core.Scratch.dir(s, "lpa-edges")
     // per-run table name (token derived from the fresh scratch dir):
     // concurrent runs sharing a warehouse/metastore must not race on
@@ -717,7 +618,7 @@ object GraphQueries {
     val token = java.lang.Integer.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(path))
     val table = s"graft_lpa_edges_bucketed_$token"
-    saveLpaEdgesBucketed(coPurchasePairs(li), table, s"$path/edges", buckets)
+    saveLpaEdgesBucketed(coPurchasePairs(li), table, s"$path/edges", lpaBuckets)
     val edges = s.table(table)
     val probe = s.table(table).select(col("dst").as("node")).distinct()
       .withColumn("lab", col("node"))

@@ -1491,8 +1491,8 @@ object StreamOps {
 
   /** Stream-stream interval join, append mode: purchases join the same
     * user's clicks from the preceding `rangeMinutes` — the streaming
-    * twin of the batch bucketed range join ([[graft.ops.RangeJoin]] /
-    * q_evt_range_join), emitting the matched PAIRS. Both sides are
+    * twin of the batch bucketed range join ([[graft.plans.RangeJoinPlan]]
+    * / q_evt_range_join), emitting the matched PAIRS. Both sides are
     * watermarked and the join condition carries the event-time range,
     * which is what lets Spark EVICT join state: a buffered click can
     * only match purchases up to `rangeMinutes` newer, so once the

@@ -102,15 +102,20 @@ class PlanAuditSpec extends SparkSpec {
     assert(mm.forall(r => r.getAs[Int]("px_w") == 8 && r.getAs[Int]("px_h") == 8))
   }
 
-  /** What the inventory sweeps read from one construction of a query. */
-  private case class Built(sparkPlan: String, globalWindow: Boolean, constructJobs: Int)
+  /** What the inventory sweeps read from one construction of a query;
+    * `sessionChanges` names every session conf and temp view the
+    * construction left different from before it.
+    */
+  private case class Built(sparkPlan: String, globalWindow: Boolean,
+      constructJobs: Int, sessionChanges: Seq[String])
 
   /** One construction of every registered query outside `skip`, shared
     * by the sweeps below. Each construction runs under its own
     * local-property tag; one listener counts the jobs per tag and the
     * bus is drained once after the sweep, not per query. The tables are
     * registered first so `Q.t`'s one-time schema-inference jobs are not
-    * counted against the first query that reads each table.
+    * counted against the first query that reads each table. The session
+    * confs and temp views are snapshot around each construction.
     */
   private lazy val sweep: Map[String, Built] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -123,21 +128,29 @@ class PlanAuditSpec extends SparkSpec {
         Option(e.properties).flatMap(p => Option(p.getProperty(tag)))
           .foreach(n => jobs.merge(n, 1, (a, b) => a + b))
     }
+    def session(): Set[String] =
+      spark.conf.getAll.map { case (k, v) => s"conf $k=$v" }.toSet ++
+        spark.catalog.listTables().collect().filter(_.isTemporary)
+          .map(t => s"temp view ${t.name}")
     sc.addSparkListener(listener)
     try {
       val built = SparkEntry.queries.toSeq.filterNot { case (n, _) => skip(n) }
         .map { case (name, fn) =>
+          val before = session()
           sc.setLocalProperty(tag, name)
           val df = try fn(spark, sfDir) finally sc.setLocalProperty(tag, null)
+          val after = session()
+          val changes = ((before -- after).map("lost " + _) ++
+            (after -- before).map("left " + _)).toSeq.sorted
           val globalWindow = df.queryExecution.optimizedPlan.collect {
             case w: org.apache.spark.sql.catalyst.plans.logical.Window
                 if w.partitionSpec.isEmpty => w
           }.nonEmpty
-          name -> (df.queryExecution.sparkPlan.toString, globalWindow)
+          name -> (df.queryExecution.sparkPlan.toString, globalWindow, changes)
         }
       org.apache.spark.GraftTestAccess.drainListenerBus(sc)
-      built.map { case (name, (plan, global)) =>
-        name -> Built(plan, global, jobs.getOrDefault(name, 0).intValue)
+      built.map { case (name, (plan, global, changes)) =>
+        name -> Built(plan, global, jobs.getOrDefault(name, 0).intValue, changes)
       }.toMap
     } finally sc.removeSparkListener(listener)
   }
@@ -159,6 +172,17 @@ class PlanAuditSpec extends SparkSpec {
     val idle = SparkEntry.all.filter(d => d.eager && !skip(d.name))
       .map(_.name).filter(n => sweep(n).constructJobs == 0)
     assert(idle.isEmpty, s"flagged eager but construction ran no job: ${idle.sorted}")
+  }
+
+  test("constructions leave session confs and temp views unchanged") {
+    // the session is shared by every query a driver builds: a builder
+    // that overrides a conf or registers a view for its own SQL must
+    // restore or drop it before returning
+    val dirty = sweep.toSeq.collect {
+      case (name, b) if b.sessionChanges.nonEmpty =>
+        s"$name: ${b.sessionChanges.mkString(", ")}"
+    }
+    assert(dirty.isEmpty, s"constructions changed the session:\n${dirty.sorted.mkString("\n")}")
   }
 
   test("IVF codebook obeys the broadcast-bound scale rule in the registered shape") {

@@ -1,12 +1,16 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.plans.RangeJoinPlan
 import org.apache.spark.sql.functions._
 
-/** RangeJoin.joinPointsInInterval semantics on planted timelines:
+/** The bucketed range and overlap joins' column-level entries
+  * ([[RangeJoinPlan.joinPointsInInterval]],
+  * [[RangeJoinPlan.joinIntervalsOverlap]]) on planted timelines:
   * inclusive interval ends, key isolation, bucket-boundary crossing,
-  * the no-nested-loop plan shape, the fan-out guard, and a randomized
-  * differential gate against the naive inequality join.
+  * the no-nested-loop plan shape, the fan-out guard, and randomized
+  * differential gates against the inequality join's pairs enumerated
+  * in Scala.
   */
 class RangeJoinSpec extends SparkSpec {
   import spark.implicits._
@@ -30,7 +34,7 @@ class RangeJoinSpec extends SparkSpec {
   ).toDF("k", "rt", "tag")
 
   private def pairs() =
-    RangeJoin.joinPointsInInterval(left, right, Seq("k"), "lo", "hi", "rt",
+    RangeJoinPlan.joinPointsInInterval(left, right, Seq("k"), "lo", "hi", "rt",
         bucketWidth = 100L, payloadCols = Seq("tag"))
       .select("id", "tag").as[(Long, String)].collect().toSet
 
@@ -42,7 +46,7 @@ class RangeJoinSpec extends SparkSpec {
   }
 
   test("plan has no nested-loop/cartesian join") {
-    val out = RangeJoin.joinPointsInInterval(left, right, Seq("k"),
+    val out = RangeJoinPlan.joinPointsInInterval(left, right, Seq("k"),
       "lo", "hi", "rt", bucketWidth = 100L, payloadCols = Seq("tag"))
     val bad = out.queryExecution.sparkPlan.collect {
       case p: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => p
@@ -54,7 +58,7 @@ class RangeJoinSpec extends SparkSpec {
   test("fan-out guard: an interval past maxBucketsPerRow raises, not explodes") {
     val wide = Seq((1L, "a", 0L, 10000L)).toDF("id", "k", "lo", "hi")
     val ex = intercept[Exception] {
-      RangeJoin.joinPointsInInterval(wide, right, Seq("k"), "lo", "hi", "rt",
+      RangeJoinPlan.joinPointsInInterval(wide, right, Seq("k"), "lo", "hi", "rt",
         bucketWidth = 100L, payloadCols = Seq("tag"), maxBucketsPerRow = 8)
         .collect()
     }
@@ -64,7 +68,7 @@ class RangeJoinSpec extends SparkSpec {
   test("inverted interval (hi < lo) raises") {
     val inv = Seq((1L, "a", 200L, 100L)).toDF("id", "k", "lo", "hi")
     val ex = intercept[Exception] {
-      RangeJoin.joinPointsInInterval(inv, right, Seq("k"), "lo", "hi", "rt",
+      RangeJoinPlan.joinPointsInInterval(inv, right, Seq("k"), "lo", "hi", "rt",
         bucketWidth = 100L, payloadCols = Seq("tag")).collect()
     }
     assert(ex.getMessage.contains("hi < lo") || ex.getMessage.contains("buckets"),
@@ -72,7 +76,7 @@ class RangeJoinSpec extends SparkSpec {
   }
 
   test("left_outer: every left row survives; aggregate equals naive left join") {
-    val got = RangeJoin.joinPointsInInterval(left, right, Seq("k"),
+    val got = RangeJoinPlan.joinPointsInInterval(left, right, Seq("k"),
         "lo", "hi", "rt", bucketWidth = 100L, payloadCols = Seq("tag"),
         joinType = "left_outer")
       .groupBy("id").agg(count(col("tag")).as("n"))
@@ -92,15 +96,14 @@ class RangeJoinSpec extends SparkSpec {
     }
     val lDf = ls.toDF("id", "k", "lo", "hi")
     val rDf = rs.toDF("k", "rt", "tag")
-    val bucketed = RangeJoin.joinPointsInInterval(lDf, rDf, Seq("k"),
+    val bucketed = RangeJoinPlan.joinPointsInInterval(lDf, rDf, Seq("k"),
         "lo", "hi", "rt", bucketWidth = 128L, payloadCols = Seq("tag"),
         joinType = "left_outer")
       .groupBy("id").agg(count(col("tag")).as("n"))
       .as[(Long, Long)].collect().toMap
-    val naive = lDf.join(rDf, lDf("k") === rDf("k") &&
-        rDf("rt") >= lDf("lo") && rDf("rt") <= lDf("hi"), "left_outer")
-      .groupBy(lDf("id")).agg(count(rDf("tag")).as("n"))
-      .as[(Long, Long)].collect().toMap
+    val naive = ls.map { case (id, k, lo, hi) =>
+      id -> rs.count { case (rk, rt, _) => k == rk && rt >= lo && rt <= hi }.toLong
+    }.toMap
     assert(bucketed == naive)
   }
 
@@ -116,7 +119,7 @@ class RangeJoinSpec extends SparkSpec {
       ("a", 501L, 600L, "justPast"),    // 1 past id=2's hi: no match
       ("b", 200L, 300L, "contained")    // strictly inside id=3
     ).toDF("k", "rlo", "rhi", "tag")
-    val got = RangeJoin.joinIntervalsOverlap(a, b, Seq("k"),
+    val got = RangeJoinPlan.joinIntervalsOverlap(a, b, Seq("k"),
         "lo", "hi", "rlo", "rhi", bucketWidth = 100L, payloadCols = Seq("tag"))
       .select("id", "tag").as[(Long, String)].collect()
     // a multiset check: the multi-bucket pair must appear exactly once
@@ -137,12 +140,13 @@ class RangeJoinSpec extends SparkSpec {
     }
     val lDf = ls.toDF("id", "k", "lo", "hi")
     val rDf = rs.toDF("k", "rlo", "rhi", "tag")
-    val bucketed = RangeJoin.joinIntervalsOverlap(lDf, rDf, Seq("k"),
+    val bucketed = RangeJoinPlan.joinIntervalsOverlap(lDf, rDf, Seq("k"),
         "lo", "hi", "rlo", "rhi", bucketWidth = 128L, payloadCols = Seq("tag"))
       .select("id", "tag").as[(Long, String)].collect().sorted.toSeq
-    val naive = lDf.join(rDf, lDf("k") === rDf("k") &&
-        greatest(lDf("lo"), rDf("rlo")) <= least(lDf("hi"), rDf("rhi")))
-      .select("id", "tag").as[(Long, String)].collect().sorted.toSeq
+    val naive = (for {
+      (id, k, lo, hi) <- ls; (rk, rlo, rhi, tag) <- rs
+      if k == rk && math.max(lo, rlo) <= math.min(hi, rhi)
+    } yield (id, tag)).sorted
     // seq compare (not set): catches duplicate emissions too
     assert(bucketed == naive)
   }
@@ -158,12 +162,13 @@ class RangeJoinSpec extends SparkSpec {
     }
     val lDf = ls.toDF("id", "k", "lo", "hi")
     val rDf = rs.toDF("k", "rt", "tag")
-    val bucketed = RangeJoin.joinPointsInInterval(lDf, rDf, Seq("k"),
+    val bucketed = RangeJoinPlan.joinPointsInInterval(lDf, rDf, Seq("k"),
         "lo", "hi", "rt", bucketWidth = 128L, payloadCols = Seq("tag"))
-      .select("id", "tag").as[(Long, String)].collect().toSet
-    val naive = lDf.join(rDf, lDf("k") === rDf("k") &&
-        rDf("rt") >= lDf("lo") && rDf("rt") <= lDf("hi"))
-      .select("id", "tag").as[(Long, String)].collect().toSet
+      .select("id", "tag").as[(Long, String)].collect().sorted.toSeq
+    val naive = (for {
+      (id, k, lo, hi) <- ls; (rk, rt, tag) <- rs
+      if k == rk && rt >= lo && rt <= hi
+    } yield (id, tag)).sorted
     assert(bucketed == naive)
   }
 }

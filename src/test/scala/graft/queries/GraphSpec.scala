@@ -30,85 +30,52 @@ class GraphSpec extends SparkSpec {
     assert(hi > lo, s"mean rank of top degree quartile $hi <= bottom $lo")
   }
 
-  test("triangle close above the broadcast cap: shuffle_hash path, AQE skew split") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
-    // One hot closing pair: K apexes each adjacent to both 1 and 2,
-    // plus the closing edge (1,2). Every apex has degree 2 < deg(1) =
-    // deg(2) = K+1, so orientation sends apex->1 and apex->2 and all K
-    // wedges carry the SAME (lo,hi) = (1,2) key — one pathological
-    // shuffle partition in the closing join, the shape AQE's skew
-    // split exists for.
-    val k = 100000
-    val pairs = ((1L, 2L) +: (0 until k).flatMap { i =>
+  /** The hot-pair fixture: K apexes each adjacent to both 1 and 2,
+    * plus the edge (1,2) — K triangles all sharing the (1,2) pair.
+    */
+  private def hotEdges(k: Int): Seq[(Long, Long)] =
+    (1L, 2L) +: (0 until k).flatMap { i =>
       val a = 100L + i; Seq((1L, a), (2L, a))
-    }).toDF("u", "v").localCheckpoint()
-    // thresholds sized to the fixture: the hot partition carries 100k
-    // rows (a few hundred KB shuffled), the rest are ~empty, so any
-    // sub-100KB threshold flags exactly one partition as skewed
-    val confs = Seq(
-      "spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.adaptive.skewJoin.enabled" -> "true",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16384",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16384",
-      // Spark 4 clamps the skew-split target to minPartitionSize (1 MB
-      // default) — lower it so the fixture-sized hot partition splits
-      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16384")
-    val prior = confs.map { case (key, _) => key -> spark.conf.getOption(key) }
-    confs.foreach { case (key, v) => spark.conf.set(key, v) }
-    try {
-      // cap 0 forces the >5M-edge routing regardless of fixture size
-      val (tri, _) = GraphQueries.trianglesFromPairs(pairs, broadcastEdgeCap = 0L)
-      val rows = tri.collect()
-      assert(rows.length == k, s"${rows.length} triangles != $k")
-      assert(rows.forall(r =>
-        r.getAs[Long]("lo") == 1L && r.getAs[Long]("hi") == 2L))
-      val finalPlan = tri.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p                        => p
-      }
-      // query stages are leaf nodes to collect(); descend explicitly
-      def allNodes(p: org.apache.spark.sql.execution.SparkPlan)
-          : Seq[org.apache.spark.sql.execution.SparkPlan] = {
-        val kids = p match {
-          case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-            Seq(q.plan)
-          case other => other.children
-        }
-        p +: kids.flatMap(allNodes)
-      }
-      val closes = allNodes(finalPlan).collect { case j: ShuffledHashJoinExec => j }
-      assert(closes.nonEmpty, s"no shuffle_hash closing join in:\n$finalPlan")
-      assert(closes.exists(_.isSkewJoin),
-        s"AQE did not mark the closing join skew-split:\n$finalPlan")
-      // the routing is a physical choice only: both paths must agree
-      val (triB, _) =
-        GraphQueries.trianglesFromPairs(pairs, broadcastEdgeCap = Long.MaxValue)
-      assert(triB.count() == k.toLong)
-    } finally prior.foreach {
-      case (key, Some(v)) => spark.conf.set(key, v)
-      case (key, None)    => spark.conf.unset(key)
     }
-  }
 
-  test("adjacency-intersect triangles equal the wedge path: planted hot pair + random graph") {
+  private def triSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
+    df.collect().map(r => (r.getAs[Long]("apex"), r.getAs[Long]("lo"),
+      r.getAs[Long]("hi"))).toSet
+
+  test("adjacency-intersect triangles equal a brute-force enumeration") {
     import spark.implicits._
-    def triSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
-      df.collect().map(r => (r.getAs[Long]("apex"), r.getAs[Long]("lo"),
-        r.getAs[Long]("hi"))).toSet
-    // the skew fixture: K wedges all closing on the same (1,2) pair
-    val k = 5000
-    val hot = ((1L, 2L) +: (0 until k).flatMap { i =>
-      val a = 100L + i; Seq((1L, a), (2L, a))
-    }).toDF("u", "v").localCheckpoint()
-    val (wHot, dHot) = GraphQueries.trianglesFromPairs(hot)
-    val (aHot, dHot2) = GraphQueries.trianglesFromPairsAdj(hot)
-    assert(triSet(aHot) == triSet(wHot), "hot-pair triangle sets differ")
-    assert(triSet(aHot).size == k)
-    assert(dHot2.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
-      dHot.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+    /** Every {a < b < c} triple whose three edges are all in `edges`,
+      * and every node's degree.
+      */
+    def bruteForce(edges: Seq[(Long, Long)])
+        : (Set[(Long, Long, Long)], Map[Long, Long]) = {
+      val und = edges.map { case (u, v) => (math.min(u, v), math.max(u, v)) }.toSet
+      val nbrs = und.toSeq.flatMap { case (u, v) => Seq(u -> v, v -> u) }
+        .groupMap(_._1)(_._2).map { case (n, ns) => n -> ns.toSet }
+      val tris = for {
+        (a, b) <- und
+        c <- Seq(nbrs(a), nbrs(b)).minBy(_.size)
+        if c > b && nbrs(a)(c) && nbrs(b)(c)
+      } yield (a, b, c)
+      (tris, nbrs.map { case (n, ns) => n -> ns.size.toLong })
+    }
+    def check(label: String, edges: Seq[(Long, Long)]): Int = {
+      val (tri, deg) = GraphQueries.trianglesFromPairsAdj(
+        edges.toDF("u", "v").localCheckpoint())
+      val rows = tri.collect().map(r => Seq(r.getAs[Long]("apex"),
+        r.getAs[Long]("lo"), r.getAs[Long]("hi")).sorted)
+        .map { case Seq(a, b, c) => (a, b, c) }.toSeq
+      val (wantTri, wantDeg) = bruteForce(edges)
+      // each triangle exactly once, whatever its orientation
+      assert(rows.distinct.length == rows.length,
+        s"$label: ${rows.length - rows.distinct.length} duplicate triangles")
+      assert(rows.toSet == wantTri, s"$label: only-engine=" +
+        s"${(rows.toSet -- wantTri).take(3)} only-brute=${(wantTri -- rows.toSet).take(3)}")
+      assert(deg.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == wantDeg,
+        s"$label: degrees differ")
+      rows.length
+    }
+    assert(check("hot pair", hotEdges(5000)) == 5000)
     // seeded random graphs at varying densities — a property sweep,
     // not one lucky fixture (sparse graphs exercise empty adjacency
     // lists / zero-triangle nodes, dense ones the orientation bound)
@@ -119,15 +86,37 @@ class GraphSpec extends SparkSpec {
       val rand = Seq.fill(nDraws) {
         val a = rnd.nextInt(nNodes).toLong; val b = rnd.nextInt(nNodes).toLong
         (math.min(a, b), math.max(a, b))
-      }.filter(p => p._1 != p._2).distinct.toDF("u", "v").localCheckpoint()
-      val (wR, _) = GraphQueries.trianglesFromPairs(rand)
-      val (aR, _) = GraphQueries.trianglesFromPairsAdj(rand)
-      val ws = triSet(wR); val as = triSet(aR)
-      assert(as == ws, s"seed $seed: sets differ: only-wedge=${(ws -- as).take(3)} " +
-        s"only-adj=${(as -- ws).take(3)}")
-      sawTriangles |= ws.nonEmpty
+      }.filter(p => p._1 != p._2).distinct
+      sawTriangles |= check(s"seed $seed", rand) > 0
     }
     assert(sawTriangles, "fixture degenerate: no triangles in any random graph")
+  }
+
+  test("shuffle_hash triangle route (cap 0) equals the broadcast route") {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+    import spark.implicits._
+    val k = 5000
+    val pairs = hotEdges(k).toDF("u", "v").localCheckpoint()
+    // cap 0 forces the >5M-edge routing regardless of fixture size
+    val (shuffled, _) = GraphQueries.trianglesFromPairsAdj(pairs, broadcastEdgeCap = 0L)
+    val (broadcast, _) =
+      GraphQueries.trianglesFromPairsAdj(pairs, broadcastEdgeCap = Long.MaxValue)
+    val got = triSet(shuffled)
+    assert(got.size == k)
+    assert(got == triSet(broadcast), "the two routes disagree")
+    val finalPlan = shuffled.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p                        => p
+    }
+    // query stages are leaf nodes to collect(); descend explicitly
+    def allNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case q: QueryStageExec => Seq(q.plan)
+      case other             => other.children
+    }).flatMap(allNodes)
+    assert(allNodes(finalPlan).exists(_.isInstanceOf[ShuffledHashJoinExec]),
+      s"no shuffle_hash adjacency join in:\n$finalPlan")
   }
 
   test("bfs census: planted path, disconnected island, and hop-cap truncation") {
