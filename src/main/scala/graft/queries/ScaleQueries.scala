@@ -552,22 +552,6 @@ object ScaleQueries {
   private def qStreamAttribution(s: SparkSession, dir: String): DataFrame =
     StreamOps.attributionState(s, dir).result
 
-  /** The same EWMA on Spark 4's transformWithState (RocksDB-backed
-    * named state) — API-surface twin, must hash-match q_stream_ewma's
-    * oracle exactly. See StreamOps.ewmaStateTws.
-    */
-  private def qStreamEwmaTws(s: SparkSession, dir: String): DataFrame =
-    StreamOps.ewmaStateTws(s, dir).result
-
-  /** The append-mode sessionizer on Spark 4's transformWithState with
-    * EVENT-TIME TIMERS — watermark-evicted open-session state on the
-    * new API, bit-equal to the flatMapGroupsWithState twin, so it
-    * shares q_stream_sessionize_append's emission-law oracle. See
-    * StreamOps.sessionCountsAppendTws.
-    */
-  private def qStreamSessionizeTws(s: SparkSession, dir: String): DataFrame =
-    StreamOps.sessionCountsAppendTws(s, dir).result
-
   /** Streaming CEP — q_evt_pattern's stateful twin with O(1) DFA
     * state per user instead of the batch journey string; must produce
     * the identical pattern counts, so it replays the same journey
@@ -576,14 +560,6 @@ object ScaleQueries {
     */
   private def qStreamPattern(s: SparkSession, dir: String): DataFrame =
     StreamOps.patternState(s, dir).result
-
-  /** The same CEP DFA on Spark 4's transformWithState (RocksDB-backed
-    * named state) — API-surface twin of q_stream_pattern, must
-    * hash-match its journey oracle exactly. See
-    * StreamOps.patternStateTws.
-    */
-  private def qStreamPatternTws(s: SparkSession, dir: String): DataFrame =
-    StreamOps.patternStateTws(s, dir).result
 
   /** Stateful streaming sessionization (flatMapGroupsWithState) —
     * must equal the batch window-algebra sessionization, so it shares
@@ -612,32 +588,8 @@ object ScaleQueries {
   private def qStreamSessionizeAppend(s: SparkSession, dir: String): DataFrame =
     StreamOps.sessionCountsAppend(s, dir).result
 
-  /** The hourly append-mode emission-law oracle, shared verbatim by
-    * the classic windowed aggregation and its transformWithState twin
-    * (the twin is spec-pinned bit-equal, so ONE string serves both).
-    */
-  private val hourlyAppendOracle: String =
-    """WITH wm AS (SELECT CAST(floor(epoch_us(max(ts)) / 1000) AS BIGINT) - 7200000 AS wm_ms
-      |           FROM events),
-      |h AS (SELECT date_trunc('hour', ts) AS hr, event_type, count(*) AS n,
-      |        CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-      |      FROM events GROUP BY 1, 2)
-      |SELECT strftime(hr, '%Y-%m-%d %H:%M:%S') AS hour, event_type, n, sum_value
-      |FROM h, wm WHERE CAST(floor(epoch_us(hr + INTERVAL 1 HOUR) / 1000) AS BIGINT) <= wm_ms
-      |ORDER BY hour, event_type""".stripMargin
-
   private def qStreamHourlyAppend(s: SparkSession, dir: String): DataFrame =
     StreamOps.hourlyCountsAppend(s, dir, glob = Some("events.parquet")).result
-
-  /** The watermark-evicted hourly rollup on Spark 4's
-    * transformWithState — MapState + one event-time timer per open
-    * window encode the built-in windowed aggregation's append law
-    * (emit iff wm >= window end), bit-equal to q_stream_hourly_append,
-    * so it shares its emission-law oracle. See
-    * StreamOps.hourlyCountsAppendTws.
-    */
-  private def qStreamHourlyTws(s: SparkSession, dir: String): DataFrame =
-    StreamOps.hourlyCountsAppendTws(s, dir).result
 
   /** Native session_window sessionization (StreamOps
     * .sessionWindowAppend): the engine-managed twin of the custom
@@ -695,19 +647,6 @@ object ScaleQueries {
       graft.core.EventTime.normalize(s.read.parquet(s"$dir/events.parquet")),
       col("ts"), 6, "q_stream_psi")
     StreamOps.psiDriftAppend(s, streamDir, glob = None).result
-  }
-
-  /** [[qStreamPsi]] on Spark 4's transformWithState — ValueState
-    * bucket vectors keyed BY THE WINDOW, one event-time timer per
-    * window; same time-sliced replay, bit-equal to the classic
-    * windowed aggregation, so it shares its emission-law oracle. See
-    * StreamOps.psiDriftAppendTws.
-    */
-  private def qStreamPsiTws(s: SparkSession, dir: String): DataFrame = {
-    val streamDir = StreamOps.timeSliceParquet(
-      graft.core.EventTime.normalize(s.read.parquet(s"$dir/events.parquet")),
-      col("ts"), 6, "q_stream_psi_tws")
-    StreamOps.psiDriftAppendTws(s, streamDir, glob = None).result
   }
 
   /** The bounded-state incremental dedup, driver-visible:
@@ -783,17 +722,6 @@ object ScaleQueries {
   private def qStreamStitch(s: SparkSession, dir: String): DataFrame = {
     val (streamDir, plan) = stitchStreamFixture(s)
     StreamOps.incrementalStitchAppend(s, streamDir, plan,
-      quarantineMinutes = 3, watermarkDelay = "2 minutes").result
-  }
-
-  /** The same bounded incremental stitch on Spark 4's
-    * transformWithState (ListState crop accumulation + quarantine
-    * timer) — bit-equal to the flatMapGroupsWithState twin, same
-    * emission-law oracle. See StreamOps.incrementalStitchAppendTws.
-    */
-  private def qStreamStitchTws(s: SparkSession, dir: String): DataFrame = {
-    val (streamDir, plan) = stitchStreamFixture(s)
-    StreamOps.incrementalStitchAppendTws(s, streamDir, plan,
       quarantineMinutes = 3, watermarkDelay = "2 minutes").result
   }
 
@@ -1122,14 +1050,6 @@ object ScaleQueries {
     // quarantine that fabricates a canvas all diverge from this
     // relation and fail the hash.
     QueryDef("q_stream_stitch", qStreamStitch,
-      """SELECT 'fov' || CAST(f AS VARCHAR) AS fov, s AS stack, 0 AS slice,
-        |  CASE WHEN f = 1 AND s = 0 THEN 24 ELSE 25 END AS n_crops,
-        |  CASE WHEN f = 1 AND s = 0 THEN -1 ELSE 36 END AS n_cells,
-        |  CASE WHEN f = 1 AND s = 0 THEN -1 ELSE 2916 END AS n_nonzero,
-        |  CASE WHEN f = 1 AND s = 0 THEN 'quarantined' ELSE 'stitched' END AS status
-        |FROM generate_series(1, 4) t(f), generate_series(0, 1) u(s)
-        |ORDER BY fov, stack, slice""".stripMargin, eager = true), // stream drain at construction
-    QueryDef("q_stream_stitch_tws", qStreamStitchTws,
       """SELECT 'fov' || CAST(f AS VARCHAR) AS fov, s AS stack, 0 AS slice,
         |  CASE WHEN f = 1 AND s = 0 THEN 24 ELSE 25 END AS n_crops,
         |  CASE WHEN f = 1 AND s = 0 THEN -1 ELSE 36 END AS n_cells,
@@ -1485,25 +1405,9 @@ object ScaleQueries {
         |  CAST(len(regexp_extract_all(journey, 'ee+')) AS BIGINT) AS n_err_runs,
         |  len(regexp_extract_all(journey, 's[^p]*p')) > 0 AS signup_converted
         |FROM j ORDER BY user_id""".stripMargin, eager = true), // stream drain at construction
-    QueryDef("q_stream_pattern_tws", qStreamPatternTws,
-      """WITH j AS (
-        |  SELECT user_id, count(*) AS n_events,
-        |    string_agg(substr(event_type, 1, 1), '' ORDER BY ts, event_id) AS journey
-        |  FROM events GROUP BY user_id)
-        |SELECT user_id, n_events,
-        |  CAST(len(regexp_extract_all(journey, 'vc*p')) AS BIGINT) AS n_conv,
-        |  CAST(len(regexp_extract_all(journey, 'ee+')) AS BIGINT) AS n_err_runs,
-        |  len(regexp_extract_all(journey, 's[^p]*p')) > 0 AS signup_converted
-        |FROM j ORDER BY user_id""".stripMargin, eager = true), // stream drain at construction
     QueryDef("q_stream_attribution", qStreamAttribution, EventQueries.attributionOracle,
       eager = true), // stream drain at construction
     QueryDef("q_stream_ewma", qStreamEwma,
-      """SELECT user_id, count(*) AS n_events,
-        |  round(list_reduce(list(value ORDER BY ts, event_id),
-        |    (acc, x) -> acc / 2.0 + x / 2.0), 6) AS ewma
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-      eager = true), // stream drain at construction
-    QueryDef("q_stream_ewma_tws", qStreamEwmaTws,
       """SELECT user_id, count(*) AS n_events,
         |  round(list_reduce(list(value ORDER BY ts, event_id),
         |    (acc, x) -> acc / 2.0 + x / 2.0), 6) AS ewma
@@ -1577,55 +1481,25 @@ object ScaleQueries {
     // window-finality law (generated beside the q_evt_psi oracle).
     QueryDef("q_stream_psi", qStreamPsi, EventQueries.psiOracle(emissionLaw = true),
       eager = true), // append-mode drain at construction
-    // transformWithState twin (window-keyed ValueState + timers) is
-    // spec-pinned bit-equal to the classic, so it replays the same law.
-    QueryDef("q_stream_psi_tws", qStreamPsiTws, EventQueries.psiOracle(emissionLaw = true),
-      eager = true), // append-mode drain at construction
     // Append-mode emission law: a window is final iff the watermark
     // (max event time in MILLISECONDS minus the 2 h delay — Spark
     // tracks watermarks at ms precision) has passed its END.
-    QueryDef("q_stream_hourly_append", qStreamHourlyAppend, hourlyAppendOracle,
-      eager = true), // stream drain at construction
-    // transformWithState twin (MapState + per-window event-time timer)
-    // is spec-pinned bit-equal to the built-in windowed aggregation, so
-    // it replays the IDENTICAL emission-law oracle (one shared string —
-    // a fix to the law can never reach one twin and miss the other).
-    QueryDef("q_stream_hourly_tws", qStreamHourlyTws, hourlyAppendOracle,
+    QueryDef("q_stream_hourly_append", qStreamHourlyAppend,
+      """WITH wm AS (SELECT CAST(floor(epoch_us(max(ts)) / 1000) AS BIGINT) - 7200000 AS wm_ms
+        |           FROM events),
+        |h AS (SELECT date_trunc('hour', ts) AS hr, event_type, count(*) AS n,
+        |        CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+        |      FROM events GROUP BY 1, 2)
+        |SELECT strftime(hr, '%Y-%m-%d %H:%M:%S') AS hour, event_type, n, sum_value
+        |FROM h, wm WHERE CAST(floor(epoch_us(hr + INTERVAL 1 HOUR) / 1000) AS BIGINT) <= wm_ms
+        |ORDER BY hour, event_type""".stripMargin,
       eager = true), // stream drain at construction
     // Append-session emission law: a session is final (and emitted)
     // iff a later session exists for its user, or the final watermark
     // (max event ms - 10 min delay) strictly passed its end + 30 min
     // gap (Spark fires event-time timeouts when wm > the set
-    // timestamp, set at floor(end_us/1000) + gap_ms). The
-    // transformWithState timer twin (q_stream_sessionize_tws, below)
-    // is spec-pinned bit-equal, so it replays the identical law.
+    // timestamp, set at floor(end_us/1000) + gap_ms).
     QueryDef("q_stream_sessionize_append", qStreamSessionizeAppend,
-      """WITH wm AS (SELECT CAST(floor(epoch_us(max(ts)) / 1000) AS BIGINT) - 600000 AS wm_ms
-        |           FROM events),
-        |e AS (
-        |  SELECT user_id, epoch_us(ts) AS us, event_id,
-        |    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-        |  FROM events),
-        |f AS (
-        |  SELECT user_id, us, event_id,
-        |    CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000 THEN 1 ELSE 0 END AS new_sess
-        |  FROM e),
-        |sids AS (
-        |  SELECT user_id, us,
-        |    sum(new_sess) OVER (PARTITION BY user_id ORDER BY us, event_id) AS sess_id
-        |  FROM f),
-        |sess AS (
-        |  SELECT user_id, sess_id, min(us) AS start_us, max(us) AS end_us,
-        |         count(*) AS n_events
-        |  FROM sids GROUP BY user_id, sess_id),
-        |last AS (SELECT user_id, max(sess_id) AS last_id FROM sess GROUP BY user_id)
-        |SELECT sess.user_id AS user_id, start_us, end_us, n_events
-        |FROM sess JOIN last ON sess.user_id = last.user_id, wm
-        |WHERE sess.sess_id < last.last_id
-        |   OR CAST(floor(end_us / 1000) AS BIGINT) + 1800000 < wm_ms
-        |ORDER BY sess.user_id, start_us""".stripMargin,
-      eager = true), // stream drain at construction
-    QueryDef("q_stream_sessionize_tws", qStreamSessionizeTws,
       """WITH wm AS (SELECT CAST(floor(epoch_us(max(ts)) / 1000) AS BIGINT) - 600000 AS wm_ms
         |           FROM events),
         |e AS (

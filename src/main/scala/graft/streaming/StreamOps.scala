@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StreamingQueryListener, StreamingQueryProgress, Trigger}
@@ -58,32 +57,24 @@ object StreamOps {
     * keeps only the last `spark.sql.streaming.numRecentProgressUpdates`
     * batches. The high-water is recorded as `stateHighWater(name)`.
     *
-    * Session confs are set for the run and restored after, an unset
-    * key staying unset:
-    *   - `spark.sql.shuffle.partitions` = 8. Stateful micro-batch
-    *     drains commit one state store PER SHUFFLE PARTITION PER BATCH,
-    *     so at the session's core-count partitions a short multi-batch
-    *     replay spends its wall on state-store commits, not on the
-    *     operator (guide §2: partitioning sized to the workload, not
-    *     the core count). Partition count changes no registered
-    *     result: every drained contract is either a deterministic
-    *     per-key fold, a mergeable aggregation, or set-semantics output.
-    *   - the RocksDB state-store provider, when the plan holds a
-    *     `transformWithState` node (which requires it).
+    * The run sets `spark.sql.shuffle.partitions` = 8 and restores it
+    * after, an unset key staying unset. Stateful micro-batch drains
+    * commit one state store PER SHUFFLE PARTITION PER BATCH, so at the
+    * session's core-count partitions a short multi-batch replay spends
+    * its wall on state-store commits, not on the operator (guide §2:
+    * partitioning sized to the workload, not the core count).
+    * Partition count changes no registered result: every drained
+    * contract is either a deterministic per-key fold, a mergeable
+    * aggregation, or set-semantics output.
     */
   private[graft] def drain(out: Dataset[_], mode: OutputMode, name: String): Drained = {
     val spark = out.sparkSession
     val dir = graft.core.Scratch.dir(spark, "graft_drain")
     val writeMode = if (mode == OutputMode.Complete()) "overwrite" else "append"
-    val rocksDb = out.queryExecution.logical.exists(_.isInstanceOf[TransformWithState])
-    val confs = ("spark.sql.shuffle.partitions" -> "8") +:
-      (if (rocksDb) Seq("spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-       else Nil)
     val listener = new DrainListener
     spark.streams.addListener(listener)
     try {
-      val id = withConfs(spark, confs) {
+      val id = withConfs(spark, Seq("spark.sql.shuffle.partitions" -> "8")) {
         val q = out.toDF().writeStream
           .outputMode(mode)
           .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -378,186 +369,13 @@ object StreamOps {
       .select((date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour") +:
         (0 until graft.queries.EventQueries.psiNBuckets).map(b => col(s"b_$b"))): _*)
       .withColumn("j", lit(1))
-    val out = psiTotals(agg.join(psiReference(spark, eventsDir, glob), "j"))
+    val rSums = psiBucketSums(col("value"), "r_")
+    val reference = spark.read.parquet(glob.fold(eventsDir)(g => s"$eventsDir/$g"))
+      .agg(rSums.head, rSums.tail: _*).withColumn("j", lit(1))
+    val out = psiTotals(agg.join(reference, "j"))
       .select(col("hour"), col("n_events"), psiMicro.as("psi_micro"))
       .withColumn("drifted", col("psi_micro") > 200000L)
     drain(out, OutputMode.Append(), "q_stream_psi").map(_.orderBy("hour"))
-  }
-
-  /** The 1-row static reference histogram both PSI monitors join. */
-  private def psiReference(spark: SparkSession, dir: String,
-                           glob: Option[String]): DataFrame = {
-    val rSums = graft.queries.EventQueries.psiBucketSums(col("value"), "r_")
-    spark.read.parquet(glob.fold(dir)(g => s"$dir/$g"))
-      .agg(rSums.head, rSums.tail: _*).withColumn("j", lit(1))
-  }
-
-  case class EvtH(event_type: String, us: Long, cents: Long,
-                  ts: java.sql.Timestamp)
-  case class HourAgg(n: Long, cents: Long)
-  case class EvtP(hourMs: Long, bkt: Int, ts: java.sql.Timestamp)
-  case class PsiAgg(counts: Seq[Long])
-
-  /** [[psiDriftAppend]]'s window state on the Spark 4
-    * `transformWithState` API — the KEY IS THE WINDOW itself (hour
-    * start ms), so parallelism matches the built-in aggregation's
-    * window-hash distribution; state per key is the 20-bucket count
-    * vector in a ValueState, evicted by one event-time timer at
-    * `end - 1` ms (strict-fire encodes "emit iff wm >= window end").
-    * The $25 value bucket is computed by the ENGINE before the
-    * processor (the same `psiBucket` expression the batch and classic
-    * stream use), so the rounding law is shared; the finalized bucket
-    * vectors rejoin the static reference histogram and the PSI
-    * arithmetic IN-STREAM, exactly the classic plan's shape.
-    */
-  private class PsiProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, EvtP, (Long, Seq[Long])] {
-    @transient private var st
-        : org.apache.spark.sql.streaming.ValueState[PsiAgg] = _
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getValueState[PsiAgg]("buckets",
-        org.apache.spark.sql.Encoders.product[PsiAgg],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(hourMs: Long, rows: Iterator[EvtP],
-        timers: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[(Long, Seq[Long])] = {
-      val counts =
-        (if (st.exists()) st.get().counts
-         else Seq.fill(graft.queries.EventQueries.psiNBuckets)(0L)).toArray
-      rows.foreach(e => counts(e.bkt) += 1L)
-      st.update(PsiAgg(counts.toSeq))
-      getHandle.registerTimer(hourMs + 3599999L)
-      Iterator.empty
-    }
-    override def handleExpiredTimer(hourMs: Long,
-        timers: org.apache.spark.sql.streaming.TimerValues,
-        info: org.apache.spark.sql.streaming.ExpiredTimerInfo)
-        : Iterator[(Long, Seq[Long])] =
-      if (st.exists()) {
-        val a = st.get(); st.clear()
-        Iterator.single((hourMs, a.counts))
-      } else Iterator.empty
-  }
-
-  def psiDriftAppendTws(spark: SparkSession, eventsDir: String,
-                        glob: Option[String] = eventsGlob,
-                        maxFilesPerTrigger: Int = 1): Drained = {
-    import spark.implicits._
-    import graft.queries.EventQueries.{psiBucket, psiMicro, psiTotals, psiNBuckets}
-    val closed = fileStream(spark, eventsDir, glob, maxFilesPerTrigger)
-      .withWatermark("ts", "2 hours")
-      .select(
-        (floor(unix_micros(col("ts")) / 3600000000L) * 3600000L).as("hourMs"),
-        psiBucket(col("value")).cast("int").as("bkt"), col("ts"))
-      .as[EvtP]
-      .groupByKey(_.hourMs)
-      .transformWithState(new PsiProcessor,
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append())
-      .toDF("hour_ms", "counts")
-    val buckets = closed.select(
-      (col("hour_ms") +:
-        (0 until psiNBuckets).map(b => col("counts")(b).as(s"b_$b"))): _*)
-      .withColumn("j", lit(1))
-    val out = psiTotals(buckets.join(psiReference(spark, eventsDir, glob), "j"))
-      .select(
-        date_format(timestamp_millis(col("hour_ms")),
-          "yyyy-MM-dd HH:mm:ss").as("hour"),
-        col("n_events"), psiMicro.as("psi_micro"))
-      .withColumn("drifted", col("psi_micro") > 200000L)
-    drain(out, OutputMode.Append(), "q_stream_psi_tws").map(_.orderBy("hour"))
-  }
-
-  /** [[hourlyCountsAppend]] on the Spark 4 `transformWithState` API —
-    * the WINDOWED-AGGREGATION shape on the arbitrary-state surface
-    * (the ewma/pattern twins cover ValueState, sessionize covers
-    * ValueState+timers, stitch covers ListState; this one exercises
-    * `MapState` + one event-time timer PER OPEN WINDOW): per
-    * event-type key, a RocksDB-backed map from hour-window start (ms)
-    * to its running (count, cent-sum), each window registering a
-    * timer at `end - 1` ms. Event-time timers fire when the watermark
-    * STRICTLY passes them, so `end - 1` encodes the built-in windowed
-    * aggregation's append law exactly — emit iff `wm >= window end` —
-    * and the twin shares q_stream_hourly_append's emission-law oracle
-    * bit-for-bit.
-    *
-    * The per-row value is carried as exact decimal(18,2) CENTS (the
-    * cast is done by Spark itself before the processor, so the
-    * rounding law is the engine's own); the final `cents / 100.0` is
-    * one correctly-rounded IEEE division, identical to the built-in
-    * aggregation's `sum(decimal) cast double`.
-    */
-  private class HourlyProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, EvtH, (String, Long, Long, Long)] {
-    @transient private var st
-        : org.apache.spark.sql.streaming.MapState[Long, HourAgg] = _
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getMapState[Long, HourAgg]("hours",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.product[HourAgg],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(typ: String, rows: Iterator[EvtH],
-        timers: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[(String, Long, Long, Long)] = {
-      val touched = scala.collection.mutable.LinkedHashSet.empty[Long]
-      rows.foreach { e =>
-        val hourMs = Math.floorDiv(e.us, 3600000000L) * 3600000L
-        val cur = if (st.containsKey(hourMs)) st.getValue(hourMs)
-                  else HourAgg(0L, 0L)
-        st.updateValue(hourMs, HourAgg(cur.n + 1L, cur.cents + e.cents))
-        touched += hourMs
-      }
-      touched.foreach(h => getHandle.registerTimer(h + 3599999L))
-      Iterator.empty
-    }
-    override def handleExpiredTimer(typ: String,
-        timers: org.apache.spark.sql.streaming.TimerValues,
-        info: org.apache.spark.sql.streaming.ExpiredTimerInfo)
-        : Iterator[(String, Long, Long, Long)] = {
-      val hourMs = info.getExpiryTimeInMs - 3599999L
-      if (st.containsKey(hourMs)) {
-        val a = st.getValue(hourMs)
-        st.removeKey(hourMs)
-        Iterator.single((typ, hourMs, a.n, a.cents))
-      } else Iterator.empty
-    }
-  }
-
-  /** `maxFilesPerTrigger = 0` (the registry shape) drains everything
-    * in ONE batch; a positive value replays the directory one-or-more
-    * files per micro-batch. Multi-batch replays must be TIME-ORDERED
-    * slices: transformWithState's late-row filter drops rows with
-    * `ts < wm`, which is stricter than the built-in windowed
-    * aggregation's `window end <= wm` — on ordered slices no row is
-    * ever late, so the emitted set stays equal to the final-watermark
-    * law (spec-pinned in StreamAppendSpec).
-    */
-  def hourlyCountsAppendTws(spark: SparkSession, eventsDir: String,
-                            glob: Option[String] = eventsGlob,
-                            maxFilesPerTrigger: Int = 0): Drained = {
-    import spark.implicits._
-    val closed = fileStream(spark, eventsDir, glob, maxFilesPerTrigger)
-      .withWatermark("ts", "2 hours")
-      .select(col("event_type"), unix_micros(col("ts")).as("us"),
-        (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"),
-        col("ts"))
-      .as[EvtH]
-      .groupByKey(_.event_type)
-      .transformWithState(new HourlyProcessor,
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append())
-      .toDF("event_type", "hour_ms", "n", "cents")
-    drain(closed, OutputMode.Append(), "q_stream_hourly_tws").map(_
-      .select(
-        date_format(timestamp_millis(col("hour_ms")),
-          "yyyy-MM-dd HH:mm:ss").as("hour"),
-        col("event_type"), col("n"),
-        (col("cents") / 100.0).as("sum_value"))
-      .orderBy("hour", "event_type"))
   }
 
   /** NATIVE session windows (`session_window(ts, gap)` — Spark's
@@ -798,97 +616,6 @@ object StreamOps {
       .orderBy("channel"))
   }
 
-  /** [[ewmaState]] on the Spark 4 `transformWithState` API — the
-    * arbitrary-state surface that replaces mapGroupsWithState at
-    * scale (named state variables, RocksDB-backed, TTL/timers
-    * available): the SAME dyadic EWMA recursion held in a
-    * `ValueState[EwmaState]`, so it must reproduce [[ewmaState]]'s
-    * table bit-for-bit and shares q_stream_ewma's DuckDB oracle.
-    * transformWithState requires the RocksDB state-store provider,
-    * which [[drain]] selects from the plan.
-    */
-  private class EwmaProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, EvtV, (Long, Long, Double)] {
-    @transient private var st: org.apache.spark.sql.streaming.ValueState[EwmaState] = _
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getValueState[EwmaState]("ewma",
-        org.apache.spark.sql.Encoders.product[EwmaState],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(uid: Long, rows: Iterator[EvtV],
-        timers: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[(Long, Long, Double)] = {
-      var s = if (st.exists()) st.get() else EwmaState(0L, 0.0)
-      rows.toSeq.sortBy(e => (e.us, e.event_id)).foreach { e =>
-        s = if (s.n == 0L) EwmaState(1L, e.value)
-            else EwmaState(s.n + 1, s.ewma / 2.0 + e.value / 2.0)
-      }
-      st.update(s)
-      Iterator.single((uid, s.n, s.ewma))
-    }
-  }
-
-  def ewmaStateTws(spark: SparkSession, sfDir: String): Drained = {
-    import spark.implicits._
-    val updates = fileStream(spark, sfDir, eventsGlob)
-      .select(col("user_id"), unix_micros(col("ts")).as("us"),
-        col("event_id"), col("value"))
-      .as[EvtV]
-      .groupByKey(_.user_id)
-      .transformWithState(new EwmaProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update())
-      .toDF("user_id", "n_events", "ewma")
-    drain(updates, OutputMode.Update(), "q_stream_ewma_tws").map(lastEwma)
-  }
-
-  /** [[patternState]] on the Spark 4 `transformWithState` API: the
-    * same DFA simulation ([[cepStep]]/[[cepEmit]]) held in a
-    * `ValueState[CepState]`, so it must reproduce q_stream_pattern's
-    * table bit-for-bit and shares its DuckDB journey oracle. Like
-    * [[EwmaProcessor]] this exercises the arbitrary-state surface
-    * that replaces mapGroupsWithState at scale (named state
-    * variables, RocksDB-backed, TTL/timers available) — here the
-    * payload is the three-machine CEP state rather than a scalar
-    * recursion, proving the port pattern generalizes beyond EWMA.
-    */
-  private class PatternProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, EvtT, (Long, Long, Long, Long, Boolean)] {
-    @transient private var st: org.apache.spark.sql.streaming.ValueState[CepState] = _
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getValueState[CepState]("cep",
-        org.apache.spark.sql.Encoders.product[CepState],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(uid: Long, rows: Iterator[EvtT],
-        timers: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[(Long, Long, Long, Long, Boolean)] = {
-      var s = if (st.exists()) st.get() else cepInit
-      rows.toSeq.sortBy(e => (e.us, e.event_id)).foreach { e =>
-        s = cepStep(s, e.letter.charAt(0))
-      }
-      st.update(s)
-      val (n, conv, err, matched) = cepEmit(s)
-      Iterator.single((uid, n, conv, err, matched))
-    }
-  }
-
-  def patternStateTws(spark: SparkSession, sfDir: String): Drained = {
-    import spark.implicits._
-    val updates = fileStream(spark, sfDir, eventsGlob)
-      .select(col("user_id"), unix_micros(col("ts")).as("us"),
-        col("event_id"), substring(col("event_type"), 1, 1).as("letter"))
-      .as[EvtT]
-      .groupByKey(_.user_id)
-      .transformWithState(new PatternProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update())
-      .toDF(patternCols: _*)
-    drain(updates, OutputMode.Update(), "q_stream_pattern_tws").map(lastPattern)
-  }
-
   private val patternCols =
     Seq("user_id", "n_events", "n_conv", "n_err_runs", "signup_converted")
 
@@ -1054,86 +781,6 @@ object StreamOps {
       .map(_.orderBy("user_id", "start_us"))
   }
 
-  /** [[sessionCountsAppend]] on the Spark 4 `transformWithState` API
-    * with EVENT-TIME TIMERS — the full production shape on the new
-    * state surface: the open session lives in a RocksDB-backed
-    * `ValueState`, and eviction is a registered timer at
-    * `last_ms + gap` that fires when the watermark passes it
-    * (`handleExpiredTimer` emits the final session and clears state),
-    * exactly the law `setTimeoutTimestamp` encodes in the
-    * flatMapGroupsWithState twin. Sessions closed mid-batch by a
-    * later event emit immediately from `handleInputRows`, and the
-    * stale timer is re-registered whenever new events extend the open
-    * session. Must reproduce [[sessionCountsAppend]]'s drained table
-    * bit-for-bit, so it shares q_stream_sessionize_append's
-    * emission-law oracle.
-    */
-  private class SessionProcessor(gapUs: Long, gapMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, EvtW, (Long, Long, Long, Long)] {
-    @transient private var st: org.apache.spark.sql.streaming.ValueState[OpenSess] = _
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getValueState[OpenSess]("open",
-        org.apache.spark.sql.Encoders.product[OpenSess],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(uid: Long, rows: Iterator[EvtW],
-        timers: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[(Long, Long, Long, Long)] = {
-      val sorted = rows.toSeq.sortBy(e => (e.us, e.event_id))
-      val emitted =
-        scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-      var open = if (st.exists()) Some(st.get()) else None
-      val oldTimer = open.map(_.lastUs / 1000 + gapMs)
-      sorted.foreach { e =>
-        open = open match {
-          case Some(s) if e.us - s.lastUs <= gapUs =>
-            Some(OpenSess(s.startUs, e.us, s.nEvents + 1))
-          case Some(s) =>
-            emitted += ((uid, s.startUs, s.lastUs, s.nEvents))
-            Some(OpenSess(e.us, e.us, 1L))
-          case None =>
-            Some(OpenSess(e.us, e.us, 1L))
-        }
-      }
-      open.foreach(st.update)
-      val newTimer = open.map(_.lastUs / 1000 + gapMs)
-      if (newTimer != oldTimer) {
-        oldTimer.foreach(getHandle.deleteTimer)
-        newTimer.foreach(getHandle.registerTimer)
-      }
-      emitted.iterator
-    }
-    override def handleExpiredTimer(uid: Long,
-        timers: org.apache.spark.sql.streaming.TimerValues,
-        info: org.apache.spark.sql.streaming.ExpiredTimerInfo)
-        : Iterator[(Long, Long, Long, Long)] =
-      if (st.exists()) {
-        val s = st.get(); st.clear()
-        Iterator.single((uid, s.startUs, s.lastUs, s.nEvents))
-      } else Iterator.empty
-  }
-
-  def sessionCountsAppendTws(spark: SparkSession, sfDir: String,
-                             gapMinutes: Int = 30,
-                             watermarkDelay: String = "10 minutes"): Drained = {
-    import spark.implicits._
-    val gapUs = gapMinutes * 60L * 1000000L
-    val gapMs = gapMinutes * 60L * 1000L
-    val closed = fileStream(spark, sfDir, eventsGlob)
-      .withWatermark("ts", watermarkDelay)
-      .select(col("user_id"), unix_micros(col("ts")).as("us"),
-        col("event_id"), col("ts"))
-      .as[EvtW]
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionProcessor(gapUs, gapMs),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append())
-      .toDF("user_id", "start_us", "end_us", "n_events")
-    drain(closed, OutputMode.Append(), "q_stream_sessionize_tws")
-      .map(_.orderBy("user_id", "start_us"))
-  }
-
   /** Streaming EP2: incremental crop-stitching. Annotated work units
     * arrive as a file stream (the post-annotation download of
     * figure_eight_functions.py:362, incremental instead of batch);
@@ -1273,98 +920,6 @@ object StreamOps {
         })
       .toDF("fov", "stack", "slice", "n_crops", "n_cells", "n_nonzero", "status")
     drain(stitched, OutputMode.Append(), "q_stream_stitch")
-      .map(_.orderBy("fov", "stack", "slice"))
-  }
-
-  /** [[incrementalStitchAppend]] on the Spark 4 `transformWithState`
-    * API — the fourth family on the new state surface and the one
-    * that needs its FULL breadth: crops accumulate in a `ListState`
-    * (append-only: each batch serializes only its own arrivals,
-    * where the flatMapGroupsWithState twin rewrites the ENTIRE
-    * accumulated Seq every batch — O(arrivals) vs O(canvas) per
-    * touch, the difference between constant and quadratic total state
-    * I/O for a canvas filled one crop per batch), the crop count and
-    * last-arrival ms live in a tiny `ValueState` so the stitch
-    * decision never reads the list, and the quarantine eviction is an
-    * event-time timer re-registered as arrivals advance. Must
-    * reproduce the twin's drained table bit-for-bit (same emission
-    * law), so it shares q_stream_stitch's oracle.
-    */
-  private class StitchProcessor(plan: graft.ops.CropOps.CropPlan, gapMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        (String, Int, Int), CropArrival,
-        (String, Int, Int, Long, Long, Long, String)] {
-    @transient private var crops:
-      org.apache.spark.sql.streaming.ListState[graft.core.ImagePlane] = _
-    @transient private var meta:
-      org.apache.spark.sql.streaming.ValueState[(Long, Long)] = _
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      crops = getHandle.getListState[graft.core.ImagePlane]("crops",
-        org.apache.spark.sql.Encoders.product[graft.core.ImagePlane],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      meta = getHandle.getValueState[(Long, Long)]("meta",
-        org.apache.spark.sql.Encoders.product[(Long, Long)],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    }
-    override def handleInputRows(key: (String, Int, Int),
-        rows: Iterator[CropArrival],
-        timers: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[(String, Int, Int, Long, Long, Long, String)] = {
-      val arrivals = rows.toSeq
-      val (n0, last0) = if (meta.exists()) meta.get() else (0L, Long.MinValue)
-      val n = n0 + arrivals.length
-      if (n >= plan.numCrops) {
-        // the ONLY full list read: the canvas is complete
-        val acc = crops.get().toSeq ++ arrivals.map(_.plane)
-        crops.clear(); meta.clear()
-        if (last0 != Long.MinValue) getHandle.deleteTimer(last0 + gapMs)
-        val full = graft.ops.CropOps.stitchGroup(key._1, key._2, key._3,
-          acc.sortBy(_.crop), plan)
-        Iterator.single((full.fov, full.stack, full.slice, n,
-          full.labels.filter(_ != 0).distinct.length.toLong,
-          full.labels.count(_ != 0).toLong, "stitched"))
-      } else {
-        crops.appendList(arrivals.map(_.plane).toArray)
-        val lastMs = (last0 +: arrivals.map(_.ts.getTime)).max
-        meta.update((n, lastMs))
-        if (lastMs != last0) {
-          if (last0 != Long.MinValue) getHandle.deleteTimer(last0 + gapMs)
-          getHandle.registerTimer(lastMs + gapMs)
-        }
-        Iterator.empty
-      }
-    }
-    override def handleExpiredTimer(key: (String, Int, Int),
-        timers: org.apache.spark.sql.streaming.TimerValues,
-        info: org.apache.spark.sql.streaming.ExpiredTimerInfo)
-        : Iterator[(String, Int, Int, Long, Long, Long, String)] =
-      if (meta.exists()) {
-        val (n, _) = meta.get()
-        crops.clear(); meta.clear()
-        Iterator.single((key._1, key._2, key._3, n, -1L, -1L, "quarantined"))
-      } else Iterator.empty
-  }
-
-  def incrementalStitchAppendTws(spark: SparkSession, planesDir: String,
-                                 plan: graft.ops.CropOps.CropPlan,
-                                 quarantineMinutes: Int = 5,
-                                 watermarkDelay: String = "2 minutes",
-                                 maxFilesPerTrigger: Int = 1): Drained = {
-    import spark.implicits._
-    val gapMs = quarantineMinutes * 60L * 1000L
-    val stitched = fileStream(spark, planesDir, maxFiles = maxFilesPerTrigger)
-      .withWatermark("ts", watermarkDelay)
-      .select("fov", "stack", "crop", "slice", "nRows", "nCols",
-        "channels", "pixels", "labels", "ts")
-      .as[CropArrival]
-      .groupByKey(p => (p.fov, p.stack, p.slice))
-      .transformWithState(new StitchProcessor(plan, gapMs),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append())
-      .toDF("fov", "stack", "slice", "n_crops", "n_cells", "n_nonzero",
-        "status")
-    drain(stitched, OutputMode.Append(), "q_stream_stitch_tws")
       .map(_.orderBy("fov", "stack", "slice"))
   }
 

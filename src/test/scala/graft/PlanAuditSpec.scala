@@ -81,11 +81,8 @@ class PlanAuditSpec extends SparkSpec {
   // the sweep (their batch twins are covered) to bound suite time
   private val skip = Set("q_stream_hourly", "q_stream_sessionize", "q_stream_dedup",
     "q_stream_incremental", "q_stream_hourly_append", "q_stream_incremental_append",
-    "q_stream_sessionize_append", "q_stream_sessionize_tws",
-    "q_stream_neardup", "q_stream_semgate",
-    "q_stream_stitch", "q_stream_stitch_tws", "q_stream_range_append",
-    "q_stream_ewma", "q_stream_pattern", "q_stream_ewma_tws",
-    "q_stream_pattern_tws",
+    "q_stream_sessionize_append", "q_stream_neardup", "q_stream_semgate",
+    "q_stream_stitch", "q_stream_range_append", "q_stream_ewma", "q_stream_pattern",
     "q_stream_attribution", "q_stream_countmin", "q_stream_topk",
     "q_stream_dd_quantile",
     "q_stream_psi", "q_stream_session_native", "q_stream_range_outer")

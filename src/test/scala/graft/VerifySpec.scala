@@ -12,7 +12,7 @@ import java.nio.file.{Files, Paths}
 class VerifySpec extends SparkSpec {
 
   test("a planted broken query lands in _errors.json; healthy queries still dump") {
-    val out = Files.createTempDirectory("verify_spec").toFile.getAbsolutePath
+    val out = graft.TempDirs.create("verify_spec").toFile.getAbsolutePath
     val good: (SparkSession, String) => DataFrame =
       (s, _) => s.range(3).select(col("id"))
     val brokenConstruct: (SparkSession, String) => DataFrame =
@@ -35,7 +35,7 @@ class VerifySpec extends SparkSpec {
   }
 
   test("a clean dump writes an EMPTY _errors.json (absence means the dump died)") {
-    val out = Files.createTempDirectory("verify_spec_ok").toFile.getAbsolutePath
+    val out = graft.TempDirs.create("verify_spec_ok").toFile.getAbsolutePath
     val failures = Verify.dump(spark, "/root/testdata/sf0.001", out,
       Seq("q_ok" -> ((s: SparkSession, _: String) => s.range(1).toDF("id"))))
     assert(failures.isEmpty)
@@ -52,9 +52,40 @@ class VerifySpec extends SparkSpec {
     // (a new query raises the count)
     val qs = SparkEntry.queries.keySet
     assert(qs == SparkEntry.oracleSql.keySet)
-    assert(qs.size == 284 && SparkEntry.all.size == 284, s"${qs.size} keys")
+    assert(qs.size == 278 && SparkEntry.all.size == 278, s"${qs.size} keys")
     val badNames = qs.filterNot(_.matches("q[0-9a-z_]+"))
     assert(badNames.isEmpty, s"non-conforming query names: $badNames")
+  }
+
+  test("queries sharing one oracle text are exactly the pinned groups") {
+    // Two records answering one oracle compute one relation twice.
+    // Each pinned group carries the reason both records stay (most are
+    // batch/stream pairs whose stream must reproduce the batch
+    // relation); a new group lands here with its reason, or one of
+    // its records goes.
+    val pinned: Map[Set[String], String] = Map(
+      Set("q_evt_hourly", "q_stream_hourly") ->
+        "the complete-mode stream's final table is the batch rollup",
+      Set("q_evt_sessionize", "q_stream_sessionize") ->
+        "the update-mode stream sessionizer ends at the batch sessions",
+      Set("q_evt_countmin", "q_stream_countmin") ->
+        "the merged per-batch sketch is bit-identical to the batch sketch",
+      Set("q_txt_topk_mg", "q_stream_topk") ->
+        "the streamed Misra-Gries summary keeps the batch summary's guarantees",
+      Set("q_evt_attribution", "q_stream_attribution") ->
+        "the O(1)-state stream replays the batch credit arithmetic",
+      Set("q_dedup_incremental", "q_stream_incremental") ->
+        "the stream ingests the batch incremental dedup's novel slice",
+      Set("q_src_csv", "q_src_jsonl") ->
+        "two source codecs round-trip the same documents census",
+      Set("q_txt_bloom_decon", "q_txt_decontaminate") ->
+        "a Bloom prune has no false negatives, so it must equal the exact join",
+      Set("q_evt_asof", "q_evt_asof_native") ->
+        "the oracle proves the native as-of operator equal to the window composition")
+    val shared = SparkEntry.all.groupBy(_.oracle).values
+      .map(_.map(_.name).toSet).filter(_.size > 1).toSet
+    assert(shared == pinned.keySet,
+      s"unpinned groups: ${shared -- pinned.keySet}; stale pins: ${pinned.keySet -- shared}")
   }
 
   test("an allowlist naming an unregistered query fails and lists the name") {

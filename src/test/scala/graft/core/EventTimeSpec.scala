@@ -32,7 +32,7 @@ class EventTimeSpec extends SparkSpec {
     import java.nio.file.Files
     val base = spark.range(5).select(
       (lit(1700000000000000L) + col("id") * 61000000L).as("us"))
-    val tmp = Files.createTempDirectory("evt_enc").toFile.getAbsolutePath
+    val tmp = graft.TempDirs.create("evt_enc").toFile.getAbsolutePath
     // legacy nanos-as-Long (what nanosAsLong used to surface)
     base.select((col("us") * 1000L).as("ts"), col("us"))
       .write.mode("overwrite").parquet(s"$tmp/nanos/events.parquet")

@@ -34,7 +34,7 @@ class LocalFsSpec extends SparkSpec {
 
   private def octal(s: String): Short = Integer.parseInt(s, 8).toShort
 
-  private def tempDir(): Path = new Path(Files.createTempDirectory("localfs").toString)
+  private def tempDir(): Path = new Path(graft.TempDirs.create("localfs").toString)
 
   test("the session conf resolves file:// to the in-process classes") {
     val conf = spark.sparkContext.hadoopConfiguration

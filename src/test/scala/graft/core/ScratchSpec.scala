@@ -12,7 +12,7 @@ class ScratchSpec extends SparkSpec {
   }
 
   test("conf set: fresh scheme-qualified subdir under the shared base") {
-    val base = java.nio.file.Files.createTempDirectory("scratch_base")
+    val base = graft.TempDirs.create("scratch_base")
       .toFile.getAbsolutePath
     try {
       spark.conf.set("spark.graft.scratchDir", base)
@@ -35,7 +35,7 @@ class ScratchSpec extends SparkSpec {
   }
 
   test("every allocation is registered for recursive deletion at JVM exit") {
-    val base = java.nio.file.Files.createTempDirectory("scratch_exit")
+    val base = graft.TempDirs.create("scratch_exit")
       .toFile.getAbsolutePath
     val shared =
       try { spark.conf.set("spark.graft.scratchDir", base); Scratch.dir(spark, "drain") }

@@ -72,7 +72,7 @@ class IvfSpec extends SparkSpec {
   }
 
   test("store probe prunes cell partitions at planning time") {
-    val path = java.nio.file.Files.createTempDirectory("ivfstore")
+    val path = graft.TempDirs.create("ivfstore")
       .toFile.getAbsolutePath + "/emb"
     Ivf.saveIvfStore(embeddings, "embedding", path, centroids)
     val q = Ivf.annTopKFromStore(spark, path, "vec_id", "embedding", queryVec,
@@ -93,7 +93,7 @@ class IvfSpec extends SparkSpec {
   }
 
   test("codebook persists with the store: a fresh session probes without retraining") {
-    val path = java.nio.file.Files.createTempDirectory("ivfbook")
+    val path = graft.TempDirs.create("ivfbook")
       .toFile.getAbsolutePath + "/emb"
     Ivf.saveIvfStore(embeddings, "embedding", path, centroids)
     val book = Ivf.loadCodebook(spark, path)
@@ -160,7 +160,7 @@ class IvfSpec extends SparkSpec {
     assert(cents.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq)
     // the store probe still prunes partitions at planning time: a
     // 256-cell store reads nprobe directories, not 256
-    val path = java.nio.file.Files.createTempDirectory("ivf256")
+    val path = graft.TempDirs.create("ivf256")
       .toFile.getAbsolutePath + "/emb"
     Ivf.saveIvfStore(corpus, "embedding", path, cents)
     val qv = corpus.filter(col("vec_id") === 0L)

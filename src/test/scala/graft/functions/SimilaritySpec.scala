@@ -76,7 +76,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("annTopKFromStore prunes bucket partitions at planning time") {
-    val path = java.nio.file.Files.createTempDirectory("annstore")
+    val path = graft.TempDirs.create("annstore")
       .toFile.getAbsolutePath + "/emb"
     Similarity.saveBucketedStore(embeddings, "embedding", path, dim = 64, nBits = 6)
     val qv = embeddings.filter(col("vec_id") === 0L)

@@ -44,7 +44,7 @@ class CrowdServiceSpec extends SparkSpec {
   }
 
   private def makeBaseDir(): String = {
-    val base = Files.createTempDirectory("crowd").toFile.getAbsolutePath
+    val base = graft.TempDirs.create("crowd").toFile.getAbsolutePath
     val planes = ImagePlane.blankPlanes(2, 1, 8, 8).map(ImagePlane.gridLabels(_, 4))
     Npz.saveNpzsForCaliban(ImagePlane.toDataset(spark, planes), s"$base/crop_dir")
     base
@@ -59,7 +59,7 @@ class CrowdServiceSpec extends SparkSpec {
 
   test("createJob: copy, rename, store upload, log write, log PUT") {
     val base = makeBaseDir()
-    val store = Files.createTempDirectory("crowd_store").toFile.getAbsolutePath
+    val store = graft.TempDirs.create("crowd_store").toFile.getAbsolutePath
     val http = new FakeTransport
     val status = CrowdService.createJob(spark, base, jobIdToCopy = 77L,
       awsFolder = "proj", stage = "annotation", key = "k", storeDir = store,
@@ -86,7 +86,7 @@ class CrowdServiceSpec extends SparkSpec {
 
   test("transferJob copies files to the next stage and numbers the log") {
     val base = makeBaseDir()
-    val store = Files.createTempDirectory("crowd_store2").toFile.getAbsolutePath
+    val store = graft.TempDirs.create("crowd_store2").toFile.getAbsolutePath
     val http = new FakeTransport
     CrowdService.createJob(spark, base, 77L, "proj", "annotation", "k", store, http = http)
     val csv = CrowdService.transferJob(spark, base, jobIdToCopy = 1001L,
@@ -102,7 +102,7 @@ class CrowdServiceSpec extends SparkSpec {
 
   test("downloadOutput fetches report + annotations, reports missing") {
     val base = makeBaseDir()
-    val store = Files.createTempDirectory("crowd_store3").toFile.getAbsolutePath
+    val store = graft.TempDirs.create("crowd_store3").toFile.getAbsolutePath
     val http = new FakeTransport
     CrowdService.createJob(spark, base, 77L, "proj", "annotation", "k", store, http = http)
     // simulate an annotator never returning one unit
@@ -117,7 +117,7 @@ class CrowdServiceSpec extends SparkSpec {
   }
 
   test("createJob validates base and crop dirs like the reference") {
-    val empty = Files.createTempDirectory("crowd_empty").toFile.getAbsolutePath
+    val empty = graft.TempDirs.create("crowd_empty").toFile.getAbsolutePath
     val http = new FakeTransport
     intercept[IllegalArgumentException] {
       CrowdService.createJob(spark, s"$empty/nope", 1L, "p", "s", "k", empty, http = http)

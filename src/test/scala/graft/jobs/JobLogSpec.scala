@@ -3,8 +3,6 @@ package graft.jobs
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
-
 class JobLogSpec extends SparkSpec {
 
   test("createUploadLog builds reference-shaped rows with caliban URLs") {
@@ -23,7 +21,7 @@ class JobLogSpec extends SparkSpec {
 
   test("CSV round trip preserves the log table") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("joblog").toFile.getAbsolutePath + "/log"
+    val dir = graft.TempDirs.create("joblog").toFile.getAbsolutePath + "/log"
     val files = Seq("a.npz", "b.npz").toDF("filename")
     val log = JobLog.createUploadLog(files, "s1", "f", 1L)
     JobLog.writeLog(log, dir)

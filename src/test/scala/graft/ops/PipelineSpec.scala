@@ -17,7 +17,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("saveStitchedNpzs writes one {fov}.npz per fov (S13)") {
-    val dir = Files.createTempDirectory("stitched").toFile.getAbsolutePath
+    val dir = graft.TempDirs.create("stitched").toFile.getAbsolutePath
     val planes = ImagePlane.blankPlanes(2, 3, 10, 10).map(ImagePlane.cornerTag)
     Pipeline.saveStitchedNpzs(ImagePlane.toDataset(spark, planes), dir)
     // filter *.npz: the local ChecksumFileSystem adds .crc sidecars that
@@ -31,7 +31,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("EP1 flow: adjust -> crop -> slice -> NPZ units + upload log, then EP2 reconstructs") {
-    val dir = Files.createTempDirectory("ep1").toFile.getAbsolutePath
+    val dir = graft.TempDirs.create("ep1").toFile.getAbsolutePath
     val orig = ImagePlane.blankPlanes(2, 4, 30, 30).map(ImagePlane.gridLabels(_, 6))
     val (plan, log) = Pipeline.preAnnotationFlow(spark,
       ImagePlane.toDataset(spark, orig),
@@ -54,14 +54,14 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("ObjectStore upload/copy/download with missing tracking (S17)") {
-    val local = Files.createTempDirectory("os_local").toFile
-    val store = "file://" + Files.createTempDirectory("os_store").toFile.getAbsolutePath
-    val store2 = "file://" + Files.createTempDirectory("os_store2").toFile.getAbsolutePath
+    val local = graft.TempDirs.create("os_local").toFile
+    val store = "file://" + graft.TempDirs.create("os_store").toFile.getAbsolutePath
+    val store2 = "file://" + graft.TempDirs.create("os_store2").toFile.getAbsolutePath
     val f = new java.io.File(local, "a.npz")
     Files.writeString(f.toPath, "payload")
     ObjectStore.upload(spark, Seq(f.getAbsolutePath), store)
     ObjectStore.copy(spark, store, Seq("a.npz"), store2)
-    val dl = Files.createTempDirectory("os_dl").toFile.getAbsolutePath
+    val dl = graft.TempDirs.create("os_dl").toFile.getAbsolutePath
     val missing = ObjectStore.downloadTracking(spark, store2, Seq("a.npz", "ghost.npz"), dl)
     assert(missing == Seq("ghost.npz"))
     assert(new java.io.File(dl, "a.npz").exists())
@@ -77,7 +77,7 @@ class PipelineSpec extends SparkSpec {
       def copy(srcUri: String, destUri: String, attrs: ObjectStore.ObjectAttrs): Unit =
         copies += ((srcUri, destUri, attrs))
     }
-    val local = Files.createTempDirectory("os_acl").toFile
+    val local = graft.TempDirs.create("os_acl").toFile
     val a = new java.io.File(local, "a.npz"); Files.writeString(a.toPath, "x")
     val b = new java.io.File(local, "b.npz"); Files.writeString(b.toPath, "y")
     ObjectStore.uploadWithAttrs(spark, Seq(a.getAbsolutePath, b.getAbsolutePath),
@@ -93,7 +93,7 @@ class PipelineSpec extends SparkSpec {
     assert(copies.toSeq == Seq(("s3a://caliban-output/done/a.npz",
       "s3a://caliban-input/next/a.npz", ObjectStore.ObjectAttrs("public-read", Map.empty))))
     // default Hadoop binding still moves real bytes (conf-level ACL documented)
-    val store = "file://" + Files.createTempDirectory("os_acl_store").toFile.getAbsolutePath
+    val store = "file://" + graft.TempDirs.create("os_acl_store").toFile.getAbsolutePath
     ObjectStore.uploadWithAttrs(spark, Seq(a.getAbsolutePath), store)
     assert(new java.io.File(new java.net.URI(store + "/a.npz")).exists())
   }

@@ -4,8 +4,6 @@ import graft.{Fixtures, SparkSpec}
 import graft.sources.Tiff
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
-
 /** EP1 -> EP2 on the reference's REAL microscopy fixtures: ontology
   * scan -> distributed TIFF decode -> crop into annotation work units
   * -> NPZ sink + log_data.json sidecar -> fresh-session reconstruction
@@ -18,7 +16,7 @@ class RealDataE2ESpec extends SparkSpec {
     s"${Fixtures.ontology}/static/2d/mibi/DCIS/Nuclear_DNA/20200116_DCIS"
 
   test("real DCIS TIFFs crop, sink, and reconstruct byte-exact") {
-    val saveDir = Files.createTempDirectory("real_e2e").toFile.getAbsolutePath
+    val saveDir = graft.TempDirs.create("real_e2e").toFile.getAbsolutePath
 
     // EP1: distributed decode of the real 512x512 points
     val planes = Tiff.readTiffDir(spark, fixtureDir)

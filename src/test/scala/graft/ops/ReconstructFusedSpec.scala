@@ -23,7 +23,7 @@ class ReconstructFusedSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private def writeUnits(nFovs: Int, stackLen: Int, rows: Int, cols: Int,
                          crop: Option[(Int, Int, Double)], slice: Option[(Int, Int)])
       : (String, Reconstruct.ReconstructionPlan) = {
-    val dir = Files.createTempDirectory("reconstruct_fused").toFile.getAbsolutePath
+    val dir = graft.TempDirs.create("reconstruct_fused").toFile.getAbsolutePath
     val orig = ImagePlane.blankPlanes(nFovs, stackLen, rows, cols, channels)
       .map(ImagePlane.gridLabels(_, cellSize = 5))
       .map(p => p.copy(pixels = Array.tabulate(p.pixels.length)(i => (i + 31 * p.stack).toFloat)))

@@ -4,8 +4,6 @@ import graft.SparkSpec
 import graft.core.ImagePlane
 import graft.sources.Npz
 
-import java.nio.file.Files
-
 /** EP2 end-to-end: crop + slice -> NPZ work units on disk -> read back
   * with grid completion -> stitch slices -> stitch crops. The full
   * reference annotation round trip (reshape_data.py:194-234 +
@@ -14,7 +12,7 @@ import java.nio.file.Files
 class ReconstructSpec extends SparkSpec {
 
   test("full crop+slice+NPZ round trip preserves masks and cell counts") {
-    val dir = Files.createTempDirectory("reconstruct").toFile.getAbsolutePath
+    val dir = graft.TempDirs.create("reconstruct").toFile.getAbsolutePath
     val stackLen = 5
     val orig = ImagePlane.blankPlanes(2, stackLen, 40, 40)
       .map(ImagePlane.gridLabels(_, cellSize = 8))
@@ -41,7 +39,7 @@ class ReconstructSpec extends SparkSpec {
   }
 
   test("log_data.json sidecar: EP2 reconstructs in a fresh session from disk alone") {
-    val dir = Files.createTempDirectory("reconstruct_sidecar").toFile.getAbsolutePath
+    val dir = graft.TempDirs.create("reconstruct_sidecar").toFile.getAbsolutePath
     val stackLen = 4
     val orig = ImagePlane.blankPlanes(2, stackLen, 32, 32)
       .map(ImagePlane.gridLabels(_, cellSize = 8))
@@ -78,7 +76,7 @@ class ReconstructSpec extends SparkSpec {
   }
 
   test("preAnnotationFlow persists the sidecar next to the work units") {
-    val dir = Files.createTempDirectory("flow_sidecar").toFile.getAbsolutePath
+    val dir = graft.TempDirs.create("flow_sidecar").toFile.getAbsolutePath
     val orig = ImagePlane.blankPlanes(1, 2, 20, 20).map(ImagePlane.gridLabels(_, 5))
     Pipeline.preAnnotationFlow(spark, ImagePlane.toDataset(spark, orig),
       origRows = 20, origCols = 20, stackLen = 2,
@@ -89,7 +87,7 @@ class ReconstructSpec extends SparkSpec {
   }
 
   test("missing NPZ units come back as zeros, rest reconstructs") {
-    val dir = Files.createTempDirectory("reconstruct_missing").toFile.getAbsolutePath
+    val dir = graft.TempDirs.create("reconstruct_missing").toFile.getAbsolutePath
     val orig = ImagePlane.blankPlanes(1, 1, 30, 30).map(ImagePlane.gridLabels(_, 10))
     val ds = ImagePlane.toDataset(spark, orig)
     val (units, plan) = Reconstruct.cropAndSlice(ds,

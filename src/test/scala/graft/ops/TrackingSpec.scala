@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.SparkSpec
 import graft.core.ImagePlane
-import java.nio.file.Files
 
 /** T1–T5 (Tracking.ipynb): frame normalization, the lineage/track
   * table, the cell-10 consistency audit, and the .trk container
@@ -101,7 +100,7 @@ class TrackingSpec extends SparkSpec {
   }
 
   test(".trk round trip: planes and lineage survive write/read") {
-    val dir = Files.createTempDirectory("trk").toFile.getAbsolutePath
+    val dir = graft.TempDirs.create("trk").toFile.getAbsolutePath
     val linked = Relabel.predictRelationships(
       ImagePlane.toDataset(spark, movie("fov1") ++ movie("fov2")))
     Tracking.writeTrks(linked, dir)

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.{SparkEntry, SparkSpec}
@@ -15,7 +14,7 @@ class BootstrapSpec extends SparkSpec {
   import spark.implicits._
 
   private def dir(): String =
-    Files.createTempDirectory("boot").toFile.getAbsolutePath
+    graft.TempDirs.create("boot").toFile.getAbsolutePath
 
   test("bootstrap: 3-purchase corpus replayed weight-by-weight in scalar Scala") {
     val d = dir()

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.{SparkEntry, SparkSpec}
 
 /** Pins the CDC law and the property it exists for: after a one-char
@@ -45,7 +43,7 @@ class CdcChunksSpec extends SparkSpec {
   test("registered query replays the plain-Scala law on a planted corpus") {
     val a = lcgText(500, 7L)
     val b = a.substring(0, 200) + "@" + a.substring(200)
-    val d = Files.createTempDirectory("cdc").toFile.getAbsolutePath
+    val d = graft.TempDirs.create("cdc").toFile.getAbsolutePath
     Seq((1L, a), (2L, b)).toDF("doc_id", "text")
       .write.parquet(s"$d/documents.parquet")
     val rows = SparkEntry.queries("q_txt_cdc_chunks")(spark, d)

@@ -36,7 +36,7 @@ class ChunkPcaHllSpec extends SparkSpec {
       (1L, "a b c d e f g h i j k l m n o p"), // exact dup -> retention 0
       (2L, "q r s t u v w x a b c d e f g h")  // second chunk dups doc 0's first
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("chunkdedup").toString
+    val dir = graft.TempDirs.create("chunkdedup").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = SparkEntry.queries("q_txt_chunk_dedup")(spark, dir)
       .collect().map(r => r.getLong(0) -> (r.getLong(2), r.getLong(3))).toMap

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.{SparkEntry, SparkSpec}
@@ -14,7 +13,7 @@ class EvalStatsSpec extends SparkSpec {
   import spark.implicits._
 
   private def dir(): String =
-    Files.createTempDirectory("evalstats").toFile.getAbsolutePath
+    graft.TempDirs.create("evalstats").toFile.getAbsolutePath
 
   private def ts(s: String) = Timestamp.valueOf(s)
 

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.{SparkEntry, SparkSpec}
@@ -15,7 +14,7 @@ class FeatureEvalSpec extends SparkSpec {
   import spark.implicits._
 
   private def dir(): String =
-    Files.createTempDirectory("featev").toFile.getAbsolutePath
+    graft.TempDirs.create("featev").toFile.getAbsolutePath
 
   private def ts(s: String) = Timestamp.valueOf(s"$s 00:00:00")
 

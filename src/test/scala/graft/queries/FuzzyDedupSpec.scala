@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.{SparkEntry, SparkSpec}
 
 /** The driver corpus contains only distance-0 title collisions, so the
@@ -29,7 +27,7 @@ class FuzzyDedupSpec extends SparkSpec {
     s.replaceAll("\\s+", " ").toLowerCase.take(40)
 
   test("planted typos: output equals the brute-force distance<=1 pair set") {
-    val dir = Files.createTempDirectory("fuzzy").toFile.getAbsolutePath
+    val dir = graft.TempDirs.create("fuzzy").toFile.getAbsolutePath
     val texts = Seq(
       1L -> "hello world data engine",
       2L -> "hello world data engine",    // exact dup -> dist 0

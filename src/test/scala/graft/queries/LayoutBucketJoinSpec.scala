@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.{SparkEntry, SparkSpec}
@@ -16,7 +14,7 @@ class LayoutBucketJoinSpec extends SparkSpec {
   import spark.implicits._
 
   test("negative control: un-bucketed SMJ carries shuffles; bucketed query verdict true") {
-    val d = Files.createTempDirectory("bkt").toFile.getAbsolutePath
+    val d = graft.TempDirs.create("bkt").toFile.getAbsolutePath
     // plain-parquet twin of the registered join, forced to SMJ
     Seq((1L, "1-URGENT"), (2L, "5-LOW"))
       .toDF("o_orderkey", "o_orderpriority").write.parquet(s"$d/orders.parquet")

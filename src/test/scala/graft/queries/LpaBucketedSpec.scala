@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -25,7 +23,7 @@ class LpaBucketedSpec extends SparkSpec {
   }
 
   test("stored bucketing: round join edge side exchange-free; plain parquet is not") {
-    val d = Files.createTempDirectory("lpabkt").toFile.getAbsolutePath
+    val d = graft.TempDirs.create("lpabkt").toFile.getAbsolutePath
     val tbl = "lpa_bucketed_spec_edges"
     GraphQueries.saveLpaEdgesBucketed(pairs, tbl, s"$d/edges", buckets = 4)
     val probe = spark.table(tbl).select(col("dst").as("node")).distinct()
@@ -47,7 +45,7 @@ class LpaBucketedSpec extends SparkSpec {
   }
 
   test("bucketed census equals the broadcast-route census") {
-    val d = Files.createTempDirectory("lpabkt2").toFile.getAbsolutePath
+    val d = graft.TempDirs.create("lpabkt2").toFile.getAbsolutePath
     val tbl = "lpa_bucketed_spec_census"
     val p = pairs.localCheckpoint()
     GraphQueries.saveLpaEdgesBucketed(p, tbl, s"$d/edges", buckets = 4)

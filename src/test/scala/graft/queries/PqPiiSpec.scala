@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.functions._
 
@@ -57,7 +55,7 @@ class PqPiiSpec extends SparkSpec {
   }
 
   test("pii census detects planted PII and stays zero on clean text") {
-    val dir = Files.createTempDirectory("pii").toFile.getAbsolutePath
+    val dir = graft.TempDirs.create("pii").toFile.getAbsolutePath
     Seq(
       (1L, "contact me at alice@example.com or bob.smith+tag@mail.co today", "en", "w", 60L),
       (2L, "server at 10.0.0.1 and 192.168.1.254 responded", "en", "w", 47L),
@@ -83,7 +81,7 @@ class PqPiiSpec extends SparkSpec {
   }
 
   test("bpe merge: pair counts are vocabulary-weighted, argmax is the first merge") {
-    val dir = Files.createTempDirectory("bpe").toFile.getAbsolutePath
+    val dir = graft.TempDirs.create("bpe").toFile.getAbsolutePath
     // "xxxy" freq 2 -> pairs xx(x2 per token), xy(x1); "zq" freq 1
     Seq((1L, "xxxy zq", "en", "w", 0L), (2L, "xxxy", "en", "w", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -94,7 +92,7 @@ class PqPiiSpec extends SparkSpec {
   }
 
   test("collocation: a repeated adjacent pair scores above independent co-occurrence") {
-    val dir = Files.createTempDirectory("colloc").toFile.getAbsolutePath
+    val dir = graft.TempDirs.create("colloc").toFile.getAbsolutePath
     val phrase = Seq.fill(6)("big data").mkString(" ")
     // the repeated phrase yields (big,data) x6 and (data,big) x5 at its
     // internal boundaries; doc 2 adds unigram mass without adjacency
@@ -120,7 +118,7 @@ class PqPiiSpec extends SparkSpec {
   }
 
   test("tf-idf: a lang-exclusive rare term outranks corpus-wide fillers") {
-    val dir = Files.createTempDirectory("tfidf").toFile.getAbsolutePath
+    val dir = graft.TempDirs.create("tfidf").toFile.getAbsolutePath
     val fill = "alpha beta gamma"
     Seq(
       (1L, s"$fill quux quux quux", "en", "w", 0L),

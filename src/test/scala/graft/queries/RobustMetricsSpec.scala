@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.{SparkEntry, SparkSpec}
@@ -15,7 +14,7 @@ class RobustMetricsSpec extends SparkSpec {
   import spark.implicits._
 
   private def dir(): String =
-    Files.createTempDirectory("robust").toFile.getAbsolutePath
+    graft.TempDirs.create("robust").toFile.getAbsolutePath
 
   private def ts(s: String) = Timestamp.valueOf(s"$s 12:00:00")
 

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.{SparkEntry, SparkSpec}
@@ -57,7 +56,7 @@ class Round12eOpsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   private def writeEvents(rows: Seq[(Long, String, Long, String, Double)]): String = {
-    val dir = Files.createTempDirectory("r12e").toFile.getAbsolutePath
+    val dir = graft.TempDirs.create("r12e").toFile.getAbsolutePath
     rows.map { case (id, ts, uid, typ, v) =>
       (id, Timestamp.valueOf(ts), uid, typ, v, """{"k": 1}""")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.{SparkEntry, SparkSpec}
@@ -43,7 +42,7 @@ class Round12fOpsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   private def writeEvents(rows: Seq[(Long, String, Long, String, Double)]): String = {
-    val dir = Files.createTempDirectory("r12f").toFile.getAbsolutePath
+    val dir = graft.TempDirs.create("r12f").toFile.getAbsolutePath
     rows.map { case (id, ts, uid, typ, v) =>
       (id, Timestamp.valueOf(ts), uid, typ, v, """{"k": 1}""")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -79,7 +78,7 @@ class Round12fOpsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // srcA: sizes 3000,2000,3000,5000 -> start offsets 0,3000,5000,8000
     //   -> bins 0,0,1,1: bin0=5000 bin1=8000; fill = 13000/(2*4096)
     // srcB: one 9000-char file -> one bin, overshoot reported honestly
-    val dir = Files.createTempDirectory("r12f").toFile.getAbsolutePath
+    val dir = graft.TempDirs.create("r12f").toFile.getAbsolutePath
     Seq((1L, "x", "en", "srcA", 3000L), (2L, "x", "en", "srcA", 2000L),
       (3L, "x", "en", "srcA", 3000L), (4L, "x", "en", "srcA", 5000L),
       (5L, "x", "en", "srcB", 9000L))
@@ -96,7 +95,7 @@ class Round12fOpsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("basket rules: support/confidence/lift by hand") {
     // orders: 1={A,B} 2={A,B} 3={A} -> supp A=3 B=2 pair=2 N=3
-    val dir = Files.createTempDirectory("r12f").toFile.getAbsolutePath
+    val dir = graft.TempDirs.create("r12f").toFile.getAbsolutePath
     Seq((10L, "pA", "Brand#A", "t", 1, 1.0), (20L, "pB", "Brand#B", "t", 1, 1.0))
       .toDF("p_partkey", "p_name", "p_brand", "p_type", "p_size", "p_retailprice")
       .write.parquet(s"$dir/part.parquet")

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.{SparkEntry, SparkSpec}
@@ -15,7 +14,7 @@ class Round12gOpsSpec extends SparkSpec {
   import spark.implicits._
 
   private def writeEvents(rows: Seq[(Long, String, Long, String, Double)]): String = {
-    val dir = Files.createTempDirectory("r12g").toFile.getAbsolutePath
+    val dir = graft.TempDirs.create("r12g").toFile.getAbsolutePath
     rows.map { case (id, ts, uid, typ, v) =>
       (id, Timestamp.valueOf(ts), uid, typ, v, """{"k": 1}""")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -107,7 +106,7 @@ class Round12gOpsSpec extends SparkSpec {
   test("k-anonymity: class census at both generalization levels by hand") {
     // nation 1 / seg A: balances 500, 700 (bucket 0) and -500 (bucket -1)
     // nation 2 / seg A: balance 1500 (bucket 1)
-    val dir = Files.createTempDirectory("r12g").toFile.getAbsolutePath
+    val dir = graft.TempDirs.create("r12g").toFile.getAbsolutePath
     Seq((1L, "c1", 1L, 5.0, "A"), (2L, "c2", 1L, 7.0, "A"),
       (3L, "c3", 1L, -5.0, "A"), (4L, "c4", 2L, 1500.0, "A"))
       .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")

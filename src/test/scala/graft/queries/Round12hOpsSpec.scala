@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.{SparkEntry, SparkSpec}
@@ -14,7 +13,7 @@ class Round12hOpsSpec extends SparkSpec {
   import spark.implicits._
 
   private def writeEvents(rows: Seq[(Long, String, Long, String, Double, String)]): String = {
-    val dir = Files.createTempDirectory("r12h").toFile.getAbsolutePath
+    val dir = graft.TempDirs.create("r12h").toFile.getAbsolutePath
     rows.map { case (id, ts, uid, typ, v, props) =>
       (id, Timestamp.valueOf(ts), uid, typ, v, props)
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -23,7 +22,7 @@ class Round12hOpsSpec extends SparkSpec {
   }
 
   private def writeDocs(rows: Seq[(Long, String, String)]): String = {
-    val dir = Files.createTempDirectory("r12h_docs").toFile.getAbsolutePath
+    val dir = graft.TempDirs.create("r12h_docs").toFile.getAbsolutePath
     rows.map { case (id, text, lang) => (id, text, lang, s"src${id % 3}", text.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
@@ -118,7 +117,7 @@ class Round12hOpsSpec extends SparkSpec {
   }
 
   test("order-count distribution: zero-order customers land in the 0 bucket") {
-    val dir = Files.createTempDirectory("r12h_q13").toFile.getAbsolutePath
+    val dir = graft.TempDirs.create("r12h_q13").toFile.getAbsolutePath
     Seq((1L, "A"), (2L, "B"), (3L, "C"))
       .toDF("c_custkey", "c_name").write.parquet(s"$dir/customer.parquet")
     Seq((10L, 1L), (11L, 1L), (12L, 1L), (13L, 2L))

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.{SparkEntry, SparkSpec}
@@ -15,7 +14,7 @@ class Round12iOpsSpec extends SparkSpec {
   import spark.implicits._
 
   private def dir(): String =
-    Files.createTempDirectory("r12i").toFile.getAbsolutePath
+    graft.TempDirs.create("r12i").toFile.getAbsolutePath
 
   test("assortativity: a star co-purchase graph is exactly disassortative (r = -1)") {
     val d = dir()

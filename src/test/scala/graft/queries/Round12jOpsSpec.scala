@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.{SparkEntry, SparkSpec}
@@ -17,7 +16,7 @@ class Round12jOpsSpec extends SparkSpec {
   import spark.implicits._
 
   private def dir(): String =
-    Files.createTempDirectory("r12j").toFile.getAbsolutePath
+    graft.TempDirs.create("r12j").toFile.getAbsolutePath
 
   test("q04: one late line flips EXISTS; window excludes 1995 orders") {
     val d = dir()

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.{SparkEntry, SparkSpec}
@@ -18,7 +17,7 @@ class Round12kOpsSpec extends SparkSpec {
   import spark.implicits._
 
   private def dir(): String =
-    Files.createTempDirectory("r12k").toFile.getAbsolutePath
+    graft.TempDirs.create("r12k").toFile.getAbsolutePath
 
   private val jan96 = Timestamp.valueOf("1996-01-01 00:00:00")
   private def ts(s: String) = Timestamp.valueOf(s"$s 00:00:00")

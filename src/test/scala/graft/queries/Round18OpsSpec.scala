@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.{SparkEntry, SparkSpec}
@@ -18,7 +17,7 @@ class Round18OpsSpec extends SparkSpec {
   import spark.implicits._
 
   private def dir(): String =
-    Files.createTempDirectory("r18").toFile.getAbsolutePath
+    graft.TempDirs.create("r18").toFile.getAbsolutePath
 
   private def ts(s: String) = Timestamp.valueOf(s"$s 00:00:00")
 

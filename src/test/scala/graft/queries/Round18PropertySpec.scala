@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.{SparkEntry, SparkSpec}
@@ -19,7 +18,7 @@ class Round18PropertySpec extends SparkSpec {
   import spark.implicits._
 
   private def dir(): String =
-    Files.createTempDirectory("r18p").toFile.getAbsolutePath
+    graft.TempDirs.create("r18p").toFile.getAbsolutePath
 
   private def ts(s: String) = Timestamp.valueOf(s"$s 00:00:00")
 

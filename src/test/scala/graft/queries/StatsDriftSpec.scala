@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.{SparkEntry, SparkSpec}
@@ -15,7 +14,7 @@ class StatsDriftSpec extends SparkSpec {
   import spark.implicits._
 
   private def dir(): String =
-    Files.createTempDirectory("statsdrift").toFile.getAbsolutePath
+    graft.TempDirs.create("statsdrift").toFile.getAbsolutePath
 
   private def ts(s: String) = Timestamp.valueOf(s)
 

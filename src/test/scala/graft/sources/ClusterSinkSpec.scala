@@ -5,8 +5,6 @@ import graft.core.ImagePlane
 import graft.ops.Pipeline
 import org.apache.hadoop.fs.Path
 
-import java.nio.file.Files
-
 /** The NPZ sinks must write through the Hadoop FileSystem of the save
   * dir's scheme (not executor-local `java.io.File`) so the same code
   * lands output on a shared store (`s3a://`, `hdfs://`) on a real
@@ -16,7 +14,7 @@ import java.nio.file.Files
 class ClusterSinkSpec extends SparkSpec {
 
   private def fileUri(suffix: String): String =
-    "file://" + Files.createTempDirectory(suffix).toFile.getAbsolutePath
+    "file://" + graft.TempDirs.create(suffix).toFile.getAbsolutePath
 
   private def fs(uri: String) =
     new Path(uri).getFileSystem(spark.sparkContext.hadoopConfiguration)

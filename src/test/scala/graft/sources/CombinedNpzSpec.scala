@@ -47,7 +47,7 @@ class CombinedNpzSpec extends SparkSpec {
   }
 
   private def roundTrip(ps: Seq[ImagePlane], parts: Int): Unit = {
-    val out = Files.createTempDirectory("combined_npz").toFile.getAbsolutePath + "/all.npz"
+    val out = graft.TempDirs.create("combined_npz").toFile.getAbsolutePath + "/all.npz"
     Npz.createCombinedNpz(ImagePlane.toDataset(spark, ps).repartition(parts), out)
     val entries = readZip(out)
     assert(entries.keySet == Set("X.npy", "y.npy"))

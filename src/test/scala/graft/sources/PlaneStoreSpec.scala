@@ -10,7 +10,7 @@ import java.nio.file.Files
 class PlaneStoreSpec extends SparkSpec {
 
   test("partitioned save/load round trip; fov read is partition-pruned") {
-    val dir = Files.createTempDirectory("planestore").toFile.getAbsolutePath + "/planes"
+    val dir = graft.TempDirs.create("planestore").toFile.getAbsolutePath + "/planes"
     val orig = ImagePlane.blankPlanes(3, 2, 16, 16).map(ImagePlane.gridLabels(_, 4))
     PlaneStore.save(ImagePlane.toDataset(spark, orig), dir)
     val back = PlaneStore.load(spark, dir).collect()
@@ -25,7 +25,7 @@ class PlaneStoreSpec extends SparkSpec {
   }
 
   test("bucketed table: per-fov aggregation plans without a shuffle") {
-    val path = Files.createTempDirectory("bucketed").toFile.getAbsolutePath + "/t"
+    val path = graft.TempDirs.create("bucketed").toFile.getAbsolutePath + "/t"
     val planes = ImagePlane.blankPlanes(4, 2, 8, 8)
     PlaneStore.saveBucketedTable(ImagePlane.toDataset(spark, planes),
       "plane_bucket_spec", path, buckets = 4)
@@ -41,7 +41,7 @@ class PlaneStoreSpec extends SparkSpec {
   }
 
   test("createCombinedNpz folds planes into one training NPZ (S14)") {
-    val out = Files.createTempDirectory("combined").toFile.getAbsolutePath + "/all.npz"
+    val out = graft.TempDirs.create("combined").toFile.getAbsolutePath + "/all.npz"
     val planes = ImagePlane.blankPlanes(2, 2, 8, 8).map(ImagePlane.gridLabels(_, 4))
     Npz.createCombinedNpz(ImagePlane.toDataset(spark, planes), out)
     val decoded = Npz.decodeTrainingNpz("all.npz",

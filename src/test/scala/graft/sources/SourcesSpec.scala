@@ -30,7 +30,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("saveNpzsForCaliban + readTrainingNpzDir round trip with blank routing") {
-    val dir = Files.createTempDirectory("npz_sink").toFile.getAbsolutePath
+    val dir = graft.TempDirs.create("npz_sink").toFile.getAbsolutePath
     val planes = Seq(
       ImagePlane.gridLabels(ImagePlane.blankPlanes(1, 1, 10, 10).head, 5),
       ImagePlane.blankPlanes(1, 1, 10, 10).head.copy(fov = "fov_blank"))
@@ -46,7 +46,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("loadNpzsWithGrid zero-fills missing units (io_utils.py:202-218)") {
-    val dir = Files.createTempDirectory("npz_grid").toFile.getAbsolutePath
+    val dir = graft.TempDirs.create("npz_grid").toFile.getAbsolutePath
     val p = ImagePlane.gridLabels(ImagePlane.blankPlanes(1, 1, 10, 10).head, 5)
     Npz.saveNpzsForCaliban(ImagePlane.toDataset(spark, Seq(p)), dir, "include")
     val expected = Seq(("fov1", 0, 0, 1), ("fov1", 1, 0, 1), ("fov2", 0, 0, 1))
@@ -77,7 +77,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("readChannelStackedDir aligns per-channel files into stacked planes (S9)") {
-    val dir = Files.createTempDirectory("chan_stack").toFile
+    val dir = graft.TempDirs.create("chan_stack").toFile
     def writeTiff(name: String, value: Int): Unit = {
       val img = new java.awt.image.BufferedImage(
         4, 4, java.awt.image.BufferedImage.TYPE_USHORT_GRAY)
@@ -125,7 +125,7 @@ class SourcesSpec extends SparkSpec {
 
   test("loadMetadata dropna is per-file: union nulls survive, own-key nulls drop (data_loader.py:386)") {
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("meta").toFile
+    val dir = graft.TempDirs.create("meta").toFile
     def write(sub: String, json: String): Unit = {
       val d = new java.io.File(dir, sub); d.mkdirs()
       val w = new java.io.PrintWriter(new java.io.File(d, "metadata"))

@@ -177,7 +177,7 @@ class TarShardsSpec extends SparkSpec {
     val longName = "wds/" + "k" * 140 + ".img"
     val bytes = TarShards.encodeTar(Seq(
       "a.txt" -> Array[Byte](1, 2, 3), longName -> Array[Byte](9)))
-    val f = java.nio.file.Files.createTempFile("enc", ".tar")
+    val f = graft.TempDirs.create("enc").resolve("enc.tar")
     java.nio.file.Files.write(f, bytes)
     import scala.sys.process._
     val out = Seq("python3", "-c",
@@ -189,7 +189,7 @@ class TarShardsSpec extends SparkSpec {
 
   test("writeShards + readSamples closed loop on a tiny sample frame") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("wshard").toFile.getAbsolutePath
+    val d = graft.TempDirs.create("wshard").toFile.getAbsolutePath
     val df = Seq(
       ("s-0.tar", "k1", Seq("img", "json"),
         Map("img" -> Array[Byte](1, 2), "json" -> Array[Byte](3))),
@@ -209,7 +209,7 @@ class TarShardsSpec extends SparkSpec {
 
   test("gzip shards: write .tar.gz, python tarfile and readSamples both inflate") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("gzshard").toFile.getAbsolutePath
+    val d = graft.TempDirs.create("gzshard").toFile.getAbsolutePath
     val df = Seq(
       ("z-0.tar.gz", "k0", Seq("txt"), Map("txt" -> Array[Byte](4, 5, 6))),
       ("z-0.tar.gz", "k1", Seq("img"), Map("img" -> Array[Byte](7)))
@@ -255,7 +255,7 @@ class TarShardsSpec extends SparkSpec {
       "k0" -> "g-00000.tar", "k1" -> "g-00000.tar",
       "k2" -> "g-00001.tar", "k3" -> "g-00001.tar",
       "k9" -> "h-00000.tar"))
-    val d = java.nio.file.Files.createTempDirectory("reshard").toFile.getAbsolutePath
+    val d = graft.TempDirs.create("reshard").toFile.getAbsolutePath
     TarShards.writeShards(sharded, d)
     val back = TarShards.readSamples(spark, d)
     assert(back.count() == 5)

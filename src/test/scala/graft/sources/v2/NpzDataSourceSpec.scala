@@ -5,12 +5,10 @@ import graft.core.ImagePlane
 import graft.sources.Npz
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
-
 class NpzDataSourceSpec extends SparkSpec {
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("npz_v2").toFile.getAbsolutePath
+    val d = graft.TempDirs.create("npz_v2").toFile.getAbsolutePath
     val planes =
       for (f <- 1 to 4; st <- 0 until 2)
         yield ImagePlane.gridLabels(

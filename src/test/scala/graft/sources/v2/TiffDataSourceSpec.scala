@@ -14,7 +14,7 @@ class TiffDataSourceSpec extends SparkSpec {
     * convention across two imaging subtrees.
     */
   private lazy val tree: String = {
-    val base = Files.createTempDirectory("onto").toFile
+    val base = graft.TempDirs.create("onto").toFile
     def writeTiff(rel: String, value: Int): Unit = {
       val f = new java.io.File(base, rel)
       f.getParentFile.mkdirs()

@@ -4,7 +4,6 @@ import graft.SparkSpec
 import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path, RawLocalFileSystem}
 
 import java.net.URI
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 /** Local-disk FileSystem under a custom `graftfs://` scheme, with call
@@ -49,7 +48,7 @@ object GraftTestFileSystem {
 class TiffHadoopConfSpec extends SparkSpec {
 
   private lazy val tree: String = {
-    val base = Files.createTempDirectory("onto-conf").toFile
+    val base = graft.TempDirs.create("onto-conf").toFile
     def writeTiff(rel: String, value: Int): Unit = {
       val f = new java.io.File(base, rel)
       f.getParentFile.mkdirs()

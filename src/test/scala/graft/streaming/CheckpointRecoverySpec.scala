@@ -23,7 +23,7 @@ class CheckpointRecoverySpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val ev = graft.queries.Q.t(spark, dir, "events")
     val n = ev.count()
-    val root = java.nio.file.Files.createTempDirectory("ckpt_recovery")
+    val root = graft.TempDirs.create("ckpt_recovery")
     val srcDir = root.resolve("src"); java.nio.file.Files.createDirectory(srcDir)
     val ckpt = root.resolve("ckpt").toString
 

@@ -26,7 +26,7 @@ class PsiDriftSpec extends SparkSpec {
       (h * 100L + i, Timestamp.valueOf(f"2024-01-01 $h%02d:30:00"), v)
     }
 
-    val batchDir = Files.createTempDirectory("psi_batch").toFile.getAbsolutePath
+    val batchDir = graft.TempDirs.create("psi_batch").toFile.getAbsolutePath
     (0 until 6).flatMap(hourRows).toDF("event_id", "ts", "value")
       .coalesce(1).write.parquet(s"$batchDir/events.parquet")
     val batch = SparkEntry.queries("q_evt_psi")(spark, batchDir).collect()

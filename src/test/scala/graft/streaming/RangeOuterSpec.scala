@@ -15,7 +15,7 @@ class RangeOuterSpec extends SparkSpec {
   import spark.implicits._
 
   test("matched pair + NULL emission + tail exclusion") {
-    val d = Files.createTempDirectory("rangeouter").toFile.getAbsolutePath
+    val d = graft.TempDirs.create("rangeouter").toFile.getAbsolutePath
     def ts(s: String) = Timestamp.valueOf(s)
     val rows = Seq(
       (1L, 10L, "click", ts("2024-01-01 00:30:00")),
@@ -24,7 +24,7 @@ class RangeOuterSpec extends SparkSpec {
       (4L, 90L, "purchase", ts("2024-01-01 06:00:00")), // tail: past cutoff
       (5L, 90L, "click", ts("2024-01-01 06:00:00")))    // watermark pusher
     // literal events.parquet FILE (glob matches leaf files)
-    val tmp = Files.createTempDirectory("rangeouter_tmp").toFile.getAbsolutePath
+    val tmp = graft.TempDirs.create("rangeouter_tmp").toFile.getAbsolutePath
     rows.toDF("event_id", "user_id", "event_type", "ts")
       .coalesce(1).write.mode("overwrite").parquet(tmp)
     val part = new java.io.File(tmp).listFiles()

@@ -15,14 +15,14 @@ class SessionWindowSpec extends SparkSpec {
   import spark.implicits._
 
   test("exact-gap event merges natively (inclusive boundary); tail held") {
-    val d = Files.createTempDirectory("sesswin").toFile.getAbsolutePath
+    val d = graft.TempDirs.create("sesswin").toFile.getAbsolutePath
     val rows = Seq(
       (1L, 1L, Timestamp.valueOf("2024-01-01 00:00:00")),
       (1L, 2L, Timestamp.valueOf("2024-01-01 00:30:00")), // exactly the gap
       (2L, 3L, Timestamp.valueOf("2024-01-01 02:00:00"))) // watermark pusher
     // the streaming source needs a literal file named events.parquet
     // (pathGlobFilter matches leaf files, not directories)
-    val tmp = Files.createTempDirectory("sesswin_tmp").toFile.getAbsolutePath
+    val tmp = graft.TempDirs.create("sesswin_tmp").toFile.getAbsolutePath
     rows.toDF("user_id", "event_id", "ts")
       .coalesce(1).write.mode("overwrite").parquet(tmp)
     val part = new java.io.File(tmp).listFiles()

@@ -71,32 +71,6 @@ class StreamAppendSpec extends SparkSpec {
       s"state high-water ${run.maxStateRows} not bounded vs ${batch.size} total windows — watermark not evicting")
   }
 
-  test("transformWithState hourly rollup: sliced replay equals classic, per-window timers evict") {
-    val events = spark.read.parquet(s"$sfDir/events.parquet")
-    val dir = sliceToDir(events, "ts", 10, "hourlytws")
-    val classic = StreamOps.hourlyCountsAppend(spark, dir)
-    val run = StreamOps.hourlyCountsAppendTws(spark, dir, glob = None,
-      maxFilesPerTrigger = 1)
-    def toMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
-    val a = toMap(classic.result)
-    val b = toMap(run.result)
-    // time-ordered slices: no row is ever late for either API, so the
-    // MapState + per-window-timer law must reproduce the built-in
-    // windowed aggregation's emitted set exactly, batch by batch
-    assert(b == a, s"sliced tws emission diverged: only-classic=" +
-      s"${(a.toSet -- b.toSet).take(3)} only-tws=${(b.toSet -- a.toSet).take(3)}")
-    assert(run.numBatches >= 10, s"expected >=10 micro-batches, got ${run.numBatches}")
-    // THE scale assertion: per-window timers evict closed windows as
-    // the watermark advances mid-stream — the MapState high-water stays
-    // well below the total window count (the single-batch registry
-    // drain holds everything; this pins the deployed multi-batch shape)
-    val totalWindows = graft.SparkEntry.queries("q_evt_hourly")(spark, sfDir).count()
-    assert(run.maxStateRows > 0, "tws rollup must hold open-window state")
-    assert(run.maxStateRows < totalWindows / 2,
-      s"tws state high-water ${run.maxStateRows} not bounded vs $totalWindows windows — timers not evicting")
-  }
-
   test("append-mode incremental dedup: fingerprint set matches batch, dedup state evicts") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val dir = sliceToDir(docs, "doc_id", 5, "incdedup")

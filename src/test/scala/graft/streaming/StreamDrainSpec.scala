@@ -9,29 +9,20 @@ import graft.SparkSpec
 import org.apache.spark.GraftTestAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, StreamingQueryException,
-  StreamingQueryListener, StreamingQueryProgress, TimeMode, TimerValues}
-
-/** A transformWithState processor that fails on its first input. */
-class FailingProcessor extends StatefulProcessor[Long, Long, Long] {
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = ()
-  override def handleInputRows(key: Long, rows: Iterator[Long],
-                               timers: TimerValues): Iterator[Long] =
-    throw new IllegalStateException("planted processor failure")
-}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQueryException,
+  StreamingQueryListener, StreamingQueryProgress}
 
 /** The contract of [[StreamOps.drain]]: its batch count and state
-  * high-water cover every micro-batch, it leaves the session as it
-  * found it (also when the stream fails), and it picks the state-store
-  * provider from the plan.
+  * high-water cover every micro-batch, and it leaves the session as it
+  * found it, also when the stream fails.
   */
 class StreamDrainSpec extends SparkSpec {
 
   /** A directory holding a synthetic 12-hour `events.parquet` file. */
   private lazy val sf: String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("drain_spec").toFile.getAbsolutePath
-    val tmp = Files.createTempDirectory("drain_spec_events").toFile.getAbsolutePath
+    val dir = graft.TempDirs.create("drain_spec").toFile.getAbsolutePath
+    val tmp = graft.TempDirs.create("drain_spec_events").toFile.getAbsolutePath
     (0 until 2000).map { i =>
       (i.toLong, new Timestamp(1704067200000L + i * 21600L), (i % 37).toLong,
         Seq("click", "view", "purchase")(i % 3), (i % 97) * 1.25)
@@ -97,40 +88,32 @@ class StreamDrainSpec extends SparkSpec {
     import spark.implicits._
     spark.conf.unset(providerKey)
     val shuffleBefore = spark.conf.getAll.get(shuffleKey)
+    // a value no drain sets: a conf leaked by an earlier drain cannot
+    // pass for the restored one
+    spark.conf.set(shuffleKey, "3")
     val viewsBefore = spark.catalog.listTables().collect().map(_.name).toSet
     def assertRestored(): Unit = {
-      assert(spark.conf.getAll.get(shuffleKey) == shuffleBefore)
+      assert(spark.conf.getAll.get(shuffleKey) == Some("3"))
       assert(!spark.conf.getAll.contains(providerKey), "an unset provider must stay unset")
       assert(spark.streams.active.isEmpty)
       assert(spark.catalog.listTables().collect().map(_.name).toSet == viewsBefore)
     }
-    StreamOps.ewmaStateTws(spark, sf).result.collect()
-    assertRestored()
-    StreamOps.hourlyCounts(spark, sf).result.collect()
-    assertRestored()
-    val failing = StreamOps.fileStream(spark, sf, Some("events.parquet"))
-      .select(col("user_id")).as[Long]
-      .groupByKey(identity)
-      .transformWithState(new FailingProcessor, TimeMode.None(), OutputMode.Update())
-    val e = intercept[StreamingQueryException] {
-      StreamOps.drain(failing, OutputMode.Update(), "spec_failing")
-    }
-    assert(e.getMessage.contains("planted processor failure"), e.getMessage)
-    assertRestored()
-  }
-
-  test("the RocksDB provider is chosen from the plan") {
-    spark.conf.unset(providerKey)
-    def metricKeys(p: Seq[StreamingQueryProgress]): Set[String] =
-      p.flatMap(_.stateOperators.flatMap(_.customMetrics.keySet.asScala)).toSet
-    val (tws, twsProgress, _) = observed(StreamOps.ewmaStateTws(spark, sf))
-    assert(tws.maxStateRows > 0)
-    assert(metricKeys(twsProgress).exists(_.startsWith("rocksdb")),
-      s"transformWithState drain ran without RocksDB: ${metricKeys(twsProgress)}")
-    val (classic, classicProgress, _) = observed(StreamOps.ewmaState(spark, sf))
-    assert(classic.maxStateRows > 0)
-    assert(metricKeys(classicProgress).nonEmpty)
-    assert(!metricKeys(classicProgress).exists(_.startsWith("rocksdb")),
-      s"mapGroupsWithState drain ran on RocksDB: ${metricKeys(classicProgress)}")
+    try {
+      StreamOps.ewmaState(spark, sf).result.collect()
+      assertRestored()
+      StreamOps.hourlyCounts(spark, sf).result.collect()
+      assertRestored()
+      val failing = StreamOps.fileStream(spark, sf, Some("events.parquet"))
+        .select(col("user_id")).as[Long]
+        .groupByKey(identity)
+        .flatMapGroupsWithState[Long, Long](OutputMode.Update(), GroupStateTimeout.NoTimeout) {
+          (_, _, _) => throw new IllegalStateException("planted state failure")
+        }
+      val e = intercept[StreamingQueryException] {
+        StreamOps.drain(failing, OutputMode.Update(), "spec_failing")
+      }
+      assert(e.getMessage.contains("planted state failure"), e.getMessage)
+      assertRestored()
+    } finally shuffleBefore.fold(spark.conf.unset(shuffleKey))(spark.conf.set(shuffleKey, _))
   }
 }

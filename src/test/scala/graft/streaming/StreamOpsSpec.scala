@@ -138,97 +138,6 @@ class StreamOpsSpec extends SparkSpec {
       "time-ordered two-batch replay must reproduce the single-batch census")
   }
 
-  test("transformWithState EWMA equals the mapGroupsWithState twin bit-for-bit") {
-    val dir = "/root/testdata/sf0.001"
-    val Drained(mgws, _, _) = StreamOps.ewmaState(spark, dir)
-    val Drained(tws, maxState, _) = StreamOps.ewmaStateTws(spark, dir)
-    val a = mgws.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    val b = tws.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    assert(a == b, "the Spark 4 state API must reproduce the classic API exactly")
-    assert(maxState == a.size.toLong, "RocksDB state rows == users (O(1)/user)")
-    // conf restored: the shared session must not keep the RocksDB provider
-    assert(!spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      .exists(_.contains("RocksDB")))
-  }
-
-  test("transformWithState CEP equals the mapGroupsWithState twin bit-for-bit") {
-    val dir = "/root/testdata/sf0.001"
-    val Drained(mgws, _, _) = StreamOps.patternState(spark, dir)
-    val Drained(tws, maxState, _) = StreamOps.patternStateTws(spark, dir)
-    def toMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) ->
-        (r.getLong(1), r.getLong(2), r.getLong(3), r.getBoolean(4))).toMap
-    val a = toMap(mgws)
-    val b = toMap(tws)
-    assert(a == b, "the Spark 4 state API must reproduce the classic CEP exactly")
-    assert(maxState == a.size.toLong, "RocksDB state rows == users (O(1)/user)")
-    assert(!spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      .exists(_.contains("RocksDB")))
-  }
-
-  test("transformWithState timer sessionizer equals the flatMapGroups append twin") {
-    val dir = "/root/testdata/sf0.001"
-    val classic = StreamOps.sessionCountsAppend(spark, dir)
-    val tws = StreamOps.sessionCountsAppendTws(spark, dir)
-    def toSet(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val a = toSet(classic.result)
-    val b = toSet(tws.result)
-    assert(b == a, s"timer eviction law must match setTimeoutTimestamp: " +
-      s"only-classic=${(a -- b).take(3)} only-tws=${(b -- a).take(3)}")
-    assert(!spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      .exists(_.contains("RocksDB")))
-  }
-
-  test("transformWithState MapState hourly rollup equals the windowed-agg append twin") {
-    val dir = "/root/testdata/sf0.001"
-    val classic = StreamOps.hourlyCountsAppend(spark, dir,
-      glob = Some("events.parquet"))
-    val tws = StreamOps.hourlyCountsAppendTws(spark, dir)
-    def toMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getString(1)) ->
-        (r.getLong(2), r.getDouble(3))).toMap
-    val a = toMap(classic.result)
-    val b = toMap(tws.result)
-    assert(b == a, s"per-window timer law must match the built-in append " +
-      s"eviction: only-classic=${(a.toSet -- b.toSet).take(3)} " +
-      s"only-tws=${(b.toSet -- a.toSet).take(3)}")
-    assert(a.nonEmpty, "fixture degenerate: no finalized windows emitted")
-    // MapState rows == open (type, hour) windows; the single-batch
-    // drain holds every window at its high-water, like the classic's
-    // single-batch shape — the bound is the WINDOW count, never rows
-    assert(tws.maxStateRows > 0)
-    assert(!spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      .exists(_.contains("RocksDB")))
-  }
-
-  test("transformWithState window-keyed PSI equals the classic windowed-agg twin") {
-    val dir = "/root/testdata/sf0.001"
-    val classic = graft.SparkEntry.queries("q_stream_psi")(spark, dir)
-      .collect().map(_.toString).sorted.toSeq
-    val tws = graft.SparkEntry.queries("q_stream_psi_tws")(spark, dir)
-      .collect().map(_.toString).sorted.toSeq
-    assert(tws == classic,
-      "window-keyed ValueState + timers must reproduce the classic PSI exactly")
-    assert(tws.nonEmpty, "fixture degenerate: no finalized PSI windows")
-    assert(!spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      .exists(_.contains("RocksDB")))
-  }
-
-  test("transformWithState ListState stitch equals the flatMapGroups append twin") {
-    val tws = graft.SparkEntry.queries("q_stream_stitch_tws")(
-      spark, "twsfix").collect().map(_.toString).sorted.toSeq
-    val classic = graft.SparkEntry.queries("q_stream_stitch")(
-      spark, "classicfix").collect().map(_.toString).sorted.toSeq
-    assert(tws == classic,
-      "ListState + timer stitch must reproduce the classic twin exactly")
-    // the quarantine row is present (group 0 misses its last crop)
-    assert(tws.exists(_.contains("quarantined")))
-    assert(!spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      .exists(_.contains("RocksDB")))
-  }
-
   test("streaming near-dup gate equals the batch band-check, stateless join") {
     import org.apache.spark.sql.functions._
     import graft.functions.{Dedup, MinhashEstimate}
