@@ -145,32 +145,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         }
         graft.functions.CountMinSketchAgg(children.head, asInt(children(1)), asInt(children(2)))
       }))
-    // Spark 4 keeps its runtime-filter Bloom expressions off the SQL
-    // search path; expose both so two-phase bloom-pruned joins are
-    // writable in the Column API (the probe side must be a CONSTANT per
-    // BloomFilterMightContain's input check — build the sketch with
-    // bloom_agg, collect the one binary row, pass it as a literal).
-    e.injectFunction((
-      new FunctionIdentifier("bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "bloom_agg"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3,
-          "bloom_agg takes (xxhash64_value, estimatedNumItems, numBits)")
-        org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          children.head, children(1), children(2), 0, 0)
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "bloom_might_contain"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "bloom_might_contain takes (bloom_filter_bytes, xxhash64_value)")
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          children.head, children(1))
-      }))
   }
 }

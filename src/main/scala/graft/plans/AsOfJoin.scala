@@ -11,31 +11,46 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.GraftSqlBridge
 import org.apache.spark.sql.types.LongType
 
-/** The as-of join as a first-class Catalyst operator — the engine's
-  * exemplar of the full custom-operator ladder: a logical node
-  * ([[AsOfJoinPlan]]), a planner strategy ([[AsOfJoinStrategy]],
-  * injected via `SparkSessionExtensions.injectPlannerStrategy` in
+/** Generic as-of (point-in-time) join as a first-class Catalyst
+  * operator: every left row picks up the LATEST right row with the
+  * same key whose time is at or before the left row's time — the
+  * temporal-attribution / feature-snapshot lookup every training-data
+  * pipeline needs (label a purchase with the ad click that preceded
+  * it, join an example to the newest feature snapshot as of its
+  * cutoff). It is the engine's exemplar of the full custom-operator
+  * ladder: a logical node ([[AsOfJoinPlan]]), a planner strategy
+  * ([[AsOfJoinStrategy]], injected via
+  * `SparkSessionExtensions.injectPlannerStrategy` in
   * [[graft.core.GraftExtensions]]) and a physical operator
   * ([[AsOfJoinExec]]) that declares its distribution/ordering
   * requirements and lets `EnsureRequirements` place the exchanges.
   *
-  * Semantics are IDENTICAL to the window composition in
-  * [[graft.ops.Asof.joinLastBefore]] (each left row takes the latest
-  * same-key right row at or before its time; optional staleness
-  * tolerance; row-atomic payload) — AsOfJoinExecSpec asserts
-  * bit-equality between the two paths, and q_evt_asof_native shares
-  * q_evt_asof's DuckDB oracle. What the native operator buys at
-  * scale: the composition unions BOTH sides into one shuffle and
-  * sorts the merged timeline, carrying left columns as nulls through
-  * right rows and vice versa; the physical operator shuffles each
-  * side separately (each exchange carries only its own columns),
-  * sorts them independently, and streams a two-pointer merge per
-  * co-partition with O(1) state — no unioned wide rows, no window
-  * buffering, and the right side needs no null-padding columns at
-  * all. Spark itself ships no ASOF JOIN (only pandas-on-Spark's
-  * merge_asof, which plans a broadcast or union like our
-  * composition), which is exactly the "operator Spark lacks" case the
-  * custom-plan ladder exists for.
+  * Spark ships no ASOF JOIN (only pandas-on-Spark's merge_asof, which
+  * plans a broadcast or a union + window), and the naive encoding — an
+  * inequality join `r.time <= l.time` + max — plans as a per-key
+  * cartesian. The physical operator shuffles each side separately
+  * (each exchange carries only its own columns), sorts them
+  * independently, and streams a two-pointer merge per co-partition
+  * with O(1) state: no row explosion, no window buffering, no
+  * null-padded union rows.
+  *
+  * Semantics (AsOfJoinSpec checks them against a plain-Scala model):
+  *  - tie rule: a right row at exactly the left row's time IS matched
+  *    ("at or before" is inclusive);
+  *  - a left row with no same-key right row at or before it keeps its
+  *    row with null payload (left-outer);
+  *  - the payload is row-atomic: every payload column comes from the
+  *    one matched right row, even where some of its fields are null;
+  *  - optional tolerance (same units as the time columns, inclusive):
+  *    the latest-at-or-before row only matches if `leftTime -
+  *    rightTime <= tolerance` — the merge_asof tolerance rule. The
+  *    latest-before row IS the nearest, so a match beyond tolerance
+  *    means no in-tolerance row exists; the payload nulls, and no
+  *    second lookup is needed.
+  *
+  * Time columns are integer (LongType) event time on both sides —
+  * integer microseconds recommended; sub-microsecond parquet precision
+  * truncates differently across engines.
   */
 case class AsOfJoinPlan(
     left: LogicalPlan,
@@ -61,11 +76,19 @@ case class AsOfJoinPlan(
 
 object AsOfJoinPlan {
 
-  /** Column-level entry with the same signature and semantics as
-    * [[graft.ops.Asof.joinLastBefore]]; returns `left.*` plus
-    * `payloadCols` (null when nothing matches). The projection is
-    * built as a logical `Project` over the join node's attributes, so
-    * key columns never collide by name.
+  /** Column-level entry; returns `left.*` plus `payloadCols` (null
+    * when nothing matches). The projection is built as a logical
+    * `Project` over the join node's attributes, so key columns never
+    * collide by name.
+    *
+    * @param left      rows to enrich (all its columns are kept)
+    * @param right     lookup timeline
+    * @param keys      equi-join key columns present on both sides
+    * @param leftTime  left event-time column name (LongType)
+    * @param rightTime right event-time column name (LongType)
+    * @param payloadCols right columns to carry (must not collide with
+    *                  left column names)
+    * @param tolerance optional max staleness, inclusive (see above)
     */
   def joinLastBefore(left: DataFrame, right: DataFrame, keys: Seq[String],
       leftTime: String, rightTime: String, payloadCols: Seq[String],

@@ -428,12 +428,9 @@ object AdvancedQueries {
     */
   private def qLayoutBucketJoin(s: SparkSession, dir: String): DataFrame = {
     val tag = math.abs(dir.hashCode).toString
-    // one FIXED path per source dir, overwritten on re-run — a fresh
-    // temp dir per invocation would leak a fact-table copy every
-    // bench/verify pass
-    val base = java.nio.file.Paths
-      .get(System.getProperty("java.io.tmpdir"), s"graft_bktjoin_$tag")
-      .toFile.getAbsolutePath
+    // the bucketed copies live under the Scratch contract: a fresh dir
+    // per invocation, deleted when the JVM exits
+    val base = graft.core.Scratch.dir(s, "bktjoin")
     val oT = s"t_orders_bkt_$tag"
     val lT = s"t_lineitem_bkt_$tag"
     t(s, dir, "orders").select(col("o_orderkey"), col("o_orderpriority"))

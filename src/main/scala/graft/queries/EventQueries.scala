@@ -86,36 +86,15 @@ object EventQueries {
 
   /** As-of join (point-in-time attribution): each purchase joins the
     * LATEST click of the same user at or before the purchase time,
-    * via [[graft.ops.Asof.joinLastBefore]] (union + running window —
-    * one shuffle, linear, no range-join explosion; see its scaladoc).
+    * through the native Catalyst operator ([[graft.plans.AsOfJoinExec]],
+    * planned via the injected strategy): two side-local exchanges and
+    * a per-co-partition O(1)-state merge, no range-join explosion.
     * Times compare and emit as integer microseconds (`unix_micros` /
     * DuckDB `epoch_us`) because parquet stores ns while Spark
     * truncates to us — raw ns timestamps would tie-break differently
     * in the oracle. The oracle replays the quadratic inequality-join
-    * encoding, which is exactly the formulation the operator avoids.
-    */
-  private def qEvtAsof(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events")
-    val purchases = e.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"),
-        unix_micros(col("ts")).as("p_us"), col("value"))
-    val clicks = e.filter(col("event_type") === "click")
-      .select(col("user_id"), unix_micros(col("ts")).as("click_us"))
-    graft.ops.Asof.joinLastBefore(purchases, clicks, Seq("user_id"),
-        leftTime = "p_us", rightTime = "click_us",
-        payloadCols = Seq("click_us"))
-      .withColumn("gap_us", col("p_us") - col("click_us"))
-      .orderBy("event_id")
-  }
-
-  /** The SAME as-of attribution through the native Catalyst operator
-    * ([[graft.plans.AsOfJoinExec]], planned via the injected
-    * strategy) instead of the union+window composition — two
-    * side-local exchanges and a per-co-partition O(1)-state merge in
-    * place of one merged-timeline shuffle. Shares q_evt_asof's
-    * oracle verbatim, so the driver gate hash-proves the two
-    * execution paths equal; AsOfJoinSpec additionally asserts the
-    * physical plan shape.
+    * encoding, which is exactly the formulation the operator avoids;
+    * AsOfJoinSpec asserts the physical plan shape.
     */
   private def qEvtAsofNative(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "events")
@@ -133,10 +112,11 @@ object EventQueries {
 
   /** As-of with tolerance (merge_asof staleness rule): the latest
     * prior click only attributes if it is at most 15 minutes stale —
-    * the latest-before row is the nearest, so one carry + one
-    * staleness check decides; no second lookup. The oracle encodes
-    * the equivalent bounded window (max click in [p-15min, p]):
-    * identical by the nearest-row argument in the operator scaladoc.
+    * the latest-before row is the nearest, so the merge's one
+    * candidate plus one staleness check decides; no second lookup.
+    * The oracle encodes the equivalent bounded window (max click in
+    * [p-15min, p]): identical by the nearest-row argument in
+    * [[graft.plans.AsOfJoinPlan]]'s scaladoc.
     */
   private def qEvtAsofTol(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "events")
@@ -145,7 +125,7 @@ object EventQueries {
         unix_micros(col("ts")).as("p_us"))
     val clicks = e.filter(col("event_type") === "click")
       .select(col("user_id"), unix_micros(col("ts")).as("click_us"))
-    graft.ops.Asof.joinLastBefore(purchases, clicks, Seq("user_id"),
+    graft.plans.AsOfJoinPlan.joinLastBefore(purchases, clicks, Seq("user_id"),
         leftTime = "p_us", rightTime = "click_us",
         payloadCols = Seq("click_us"), tolerance = Some(900000000L))
       .withColumn("gap_us", col("p_us") - col("click_us"))
@@ -373,7 +353,7 @@ object EventQueries {
     * row regardless of history length. Stage cascade:
     * fv = running first view; a click qualifies only after fv;
     * fc = running first qualifying click; a purchase qualifies only
-    * after fc. Times compare as integer microseconds (see qEvtAsof's
+    * after fc. Times compare as integer microseconds (see qEvtAsofNative's
     * ns-truncation note).
     */
   private def qEvtFunnel(s: SparkSession, dir: String): DataFrame = {
@@ -3176,19 +3156,6 @@ object EventQueries {
     QueryDef("q_evt_json", qEvtJson,
       """SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS k, count(*) AS n
         |FROM events GROUP BY 1 ORDER BY k""".stripMargin),
-    QueryDef("q_evt_asof", qEvtAsof,
-      """WITH p AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS p_us, value
-        |  FROM events WHERE event_type = 'purchase'),
-        |c AS (
-        |  SELECT user_id, epoch_us(ts) AS c_us
-        |  FROM events WHERE event_type = 'click')
-        |SELECT p.event_id, p.user_id, p.p_us, p.value,
-        |  max(c.c_us) AS click_us,
-        |  p.p_us - max(c.c_us) AS gap_us
-        |FROM p LEFT JOIN c ON c.user_id = p.user_id AND c.c_us <= p.p_us
-        |GROUP BY p.event_id, p.user_id, p.p_us, p.value
-        |ORDER BY p.event_id""".stripMargin),
     QueryDef("q_evt_range_sql", qEvtRangeSql,
       """WITH p AS (
         |  SELECT event_id, user_id, epoch_us(ts) AS p_us

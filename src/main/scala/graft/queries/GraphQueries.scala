@@ -439,31 +439,44 @@ object GraphQueries {
     math.max(spark.conf.get("spark.sql.shuffle.partitions").toInt,
       (nEdges / 2000000L).toInt)
 
-  /** One round's raw vote stream: the edge relation joined to the
-    * (routed) label relation on dst. Factored out so the spec can
-    * plan-assert exactly the join the loop runs each round.
+  /** `pairs` must be pre-materialized (coPurchasePairs checkpoints) —
+    * every round streams it twice via the edge union below.
     */
-  private[graft] def lpaVotes(edges: DataFrame, labels: DataFrame,
-      route: DataFrame => DataFrame): DataFrame =
-    edges
-      .join(route(labels.select(col("node").as("dst"), col("lab"))),
-        Seq("dst"))
-      .select(col("src"), col("lab"))
-
-  /** The shared synchronous-LPA superstep loop — both label-routing
-    * strategies ([[lpaCensus]]'s broadcast/shuffle_hash and
-    * [[lpaCensusBucketed]]'s stored-bucketing form) drive this same
-    * body, so they can never diverge semantically.
-    */
-  private def lpaLoop(edges: DataFrame, labels0: DataFrame, rounds: Int,
-      voteParts: Int, route: DataFrame => DataFrame): DataFrame = {
-    var labels = labels0
+  private[graft] def lpaCensus(pairs: DataFrame, rounds: Int,
+      broadcastNodeCap: Long = lpaBroadcastNodeCap): DataFrame = {
+    // edges are DERIVED, never checkpointed: the doubled relation is a
+    // pair of cheap map passes over the materialized pairs, and
+    // checkpointing 2m rows beside the m-row pairs cache thrashed the
+    // block store at sf10 (347 s to build vs 4 s at sf1 — an 83x
+    // cliff the decade drill caught; recomputing the union per round
+    // reads the same bytes without doubling residency).
+    val edges = pairs.select(col("u").as("src"), col("v").as("dst"))
+      .union(pairs.select(col("v").as("src"), col("u").as("dst")))
+    var labels = pairs.select(col("u").as("node"))
+      .union(pairs.select(col("v").as("node"))).distinct()
+      .withColumn("lab", col("node")).localCheckpoint()
+    val nNodes = labels.count()
+    val voteParts = lpaVoteParts(pairs.sparkSession, 2L * pairs.count())
+    // The label relation is NODE-dimension (16 bytes a row): under the
+    // cap it broadcasts, so the m-row edge relation never shuffles for
+    // the join — the sf10 decade drill measured the alternative
+    // (hash-partitioning edges by dst per round; localCheckpoint does
+    // NOT carry partitioning into the next round's plan, so all four
+    // rounds re-exchanged 239M rows: 30x wall for 10x data). Above the
+    // cap (a billion-node graph) the label side routes shuffle_hash —
+    // never sort-merge, which would drag the edge stream through a
+    // per-round sort.
+    def route(d: DataFrame): DataFrame =
+      if (nNodes <= broadcastNodeCap) broadcast(d) else d.hint("shuffle_hash")
     for (_ <- 1 to rounds) {
       // ONE m-row exchange per round: the raw (src, lab) vote stream
       // repartitions by src, which satisfies BOTH downstream
       // aggregations (ClusteredDistribution on (src, lab) and on src),
       // so the count and the argmax plan exchange-free on top of it.
-      val votes = lpaVotes(edges, labels, route)
+      val votes = edges
+        .join(route(labels.select(col("node").as("dst"), col("lab"))),
+          Seq("dst"))
+        .select(col("src"), col("lab"))
         .repartition(voteParts, col("src"))
       labels = votes
         .groupBy(col("src").as("node"), col("lab"))
@@ -479,108 +492,6 @@ object GraphQueries {
       .orderBy("community_size")
   }
 
-  /** `pairs` must be pre-materialized (coPurchasePairs checkpoints) —
-    * every round streams it twice via the edge union below.
-    */
-  private[graft] def lpaCensus(pairs: DataFrame, rounds: Int,
-      broadcastNodeCap: Long = lpaBroadcastNodeCap): DataFrame = {
-    // edges are DERIVED, never checkpointed: the doubled relation is a
-    // pair of cheap map passes over the materialized pairs, and
-    // checkpointing 2m rows beside the m-row pairs cache thrashed the
-    // block store at sf10 (347 s to build vs 4 s at sf1 — an 83x
-    // cliff the decade drill caught; recomputing the union per round
-    // reads the same bytes without doubling residency).
-    val edges = pairs.select(col("u").as("src"), col("v").as("dst"))
-      .union(pairs.select(col("v").as("src"), col("u").as("dst")))
-    val labels0 = pairs.select(col("u").as("node"))
-      .union(pairs.select(col("v").as("node"))).distinct()
-      .withColumn("lab", col("node")).localCheckpoint()
-    val nNodes = labels0.count()
-    val voteParts = lpaVoteParts(pairs.sparkSession, 2L * pairs.count())
-    // The label relation is NODE-dimension (16 bytes a row): under the
-    // cap it broadcasts, so the m-row edge relation never shuffles for
-    // the join — the sf10 decade drill measured the alternative
-    // (hash-partitioning edges by dst per round; localCheckpoint does
-    // NOT carry partitioning into the next round's plan, so all four
-    // rounds re-exchanged 239M rows: 30x wall for 10x data). Above the
-    // cap (a billion-node graph) the label side routes shuffle_hash —
-    // never sort-merge, which would drag the edge stream through a
-    // per-round sort; at that scale a bucketed edge table is the real
-    // deployment answer — [[lpaCensusBucketed]] below, the same
-    // mechanism as sources.PlaneStore.saveBucketedTable.
-    def route(d: DataFrame): DataFrame =
-      if (nNodes <= broadcastNodeCap) broadcast(d) else d.hint("shuffle_hash")
-    lpaLoop(edges, labels0, rounds, voteParts, route)
-  }
-
-  /** Bucket count for the stored LPA edge table. Sized so an
-    * sf10-scale vote stream (~240M rows) lands ~2M rows a bucket — the
-    * same hash-resident aggregate target as [[lpaVoteParts]].
-    */
-  private val lpaBuckets = 32
-
-  /** Materialize the DOUBLED edge relation as a hash-bucketed table on
-    * dst — the deployment layout for the above-broadcast-cap regime:
-    * the per-round label join then plans with the edge side read
-    * straight from the stored bucketing (zero edge exchanges across
-    * ALL rounds; only the node-dimension label relation shuffles to
-    * the bucket count each round). The one edge shuffle is paid once
-    * at write time and amortized over every round of every query that
-    * reads the table — the explicit repartition before the bucketed
-    * write keeps the layout one file per bucket instead of
-    * tasks×buckets fragments.
-    */
-  private[graft] def saveLpaEdgesBucketed(pairs: DataFrame, table: String,
-      path: String, buckets: Int): Unit =
-    pairs.select(col("u").as("src"), col("v").as("dst"))
-      .union(pairs.select(col("v").as("src"), col("u").as("dst")))
-      .repartition(buckets, col("dst"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("path", path)
-      .bucketBy(buckets, "dst")
-      .saveAsTable(table)
-
-  /** LPA over a stored bucketed edge table ([[saveLpaEdgesBucketed]]):
-    * the per-round join streams the edge scan on its stored
-    * HashPartitioning(dst) while the label side is FORCED shuffle_hash
-    * (this is the above-cap deployment form — broadcast is the
-    * under-cap answer and sort-merge is forbidden per the measured
-    * sf10 array-spill failure class). LpaBucketedSpec plan-asserts the
-    * edge side of the round join carries zero exchanges, with an
-    * unbucketed negative control.
-    */
-  private[graft] def lpaCensusBucketed(s: SparkSession, table: String,
-      rounds: Int): DataFrame = {
-    val edges = s.table(table)
-    val voteParts = lpaVoteParts(s, edges.count())
-    // the doubled relation has every node as a dst, so dst alone
-    // seeds the label universe
-    val labels0 = edges.select(col("dst").as("node")).distinct()
-      .withColumn("lab", col("node")).localCheckpoint()
-    lpaLoop(edges, labels0, rounds, voteParts, _.hint("shuffle_hash"))
-  }
-
-  /** Plan verdict for the bucketed round join: the ShuffledHashJoin's
-    * STREAMED (edge) side must contain no shuffle exchange — the scan
-    *'s stored bucketing satisfies the join's ClusteredDistribution
-    * directly. Same AQE-off materialization discipline as
-    * [[AdvancedQueries.smjShuffleFree]]; the df must not have
-    * materialized its queryExecution before this call.
-    */
-  private[graft] def lpaEdgeSideShuffleFree(votes: DataFrame): Boolean = {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
-    val s = votes.sparkSession
-    s.synchronized {
-      val prev = s.conf.get("spark.sql.adaptive.enabled")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      try votes.queryExecution.executedPlan
-        .collectFirst { case j: ShuffledHashJoinExec => j }
-        .exists(_.left.collect { case e: ShuffleExchangeExec => e }.isEmpty)
-      finally s.conf.set("spark.sql.adaptive.enabled", prev)
-    }
-  }
-
   /** LPA communities over the part co-purchase graph — the operator a
     * curation pipeline runs right after triangles/clustering: tight
     * co-purchase communities are the "customers who bought these also
@@ -594,43 +505,6 @@ object GraphQueries {
     val li = t(s, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
     lpaCensus(coPurchasePairs(li), lpaRounds)
-  }
-
-  /** The bucketed-edge deployment route under the same oracle: write
-    * the doubled co-purchase edges ONCE as a dst-bucketed table (under
-    * the Scratch contract), run the identical LPA loop over the stored
-    * layout with the label side forced shuffle_hash, and pin the plan
-    * claim in the OUTPUT — edge_scan_exchange_free comes from
-    * inspecting the round join's physical plan, and the oracle asserts
-    * it TRUE, so a layout regression that re-introduces the per-round
-    * edge exchange fails the hash gate, not just a spec.
-    */
-  private def qGraphCommunitiesBucketed(s: SparkSession,
-      dir: String): DataFrame = {
-    // no pre-distinct: coPurchasePairs' collect_set dedups (see above)
-    val li = t(s, dir, "lineitem")
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val path = graft.core.Scratch.dir(s, "lpa-edges")
-    // per-run table name (token derived from the fresh scratch dir):
-    // concurrent runs sharing a warehouse/metastore must not race on
-    // one catalog entry; the table is dropped below once the loop has
-    // materialized, so the catalog carries nothing between runs
-    val token = java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(path))
-    val table = s"graft_lpa_edges_bucketed_$token"
-    saveLpaEdgesBucketed(coPurchasePairs(li), table, s"$path/edges", lpaBuckets)
-    val edges = s.table(table)
-    val probe = s.table(table).select(col("dst").as("node")).distinct()
-      .withColumn("lab", col("node"))
-    val planOk = lpaEdgeSideShuffleFree(
-      lpaVotes(edges, probe, _.hint("shuffle_hash")))
-    // lpaCensusBucketed materializes every round (localCheckpoint), so
-    // the returned census reads only the final checkpointed labels —
-    // the table can be dropped before the caller ever executes it
-    val out = lpaCensusBucketed(s, table, lpaRounds)
-      .withColumn("edge_scan_exchange_free", lit(planOk))
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    out
   }
 
   /** The communities oracle unrolls [[lpaRounds]] synchronous vote
@@ -1075,13 +949,6 @@ object GraphQueries {
       eager = true), // edge-list checkpoint + count
     QueryDef("q_graph_communities", qGraphCommunities, lpaOracle,
       eager = true), // LPA supersteps: checkpoints + counts per round
-    // identical census + the TRUE literal pinning the plan verdict
-    // (same convention as q_layout_bucket_join)
-    QueryDef("q_graph_communities_bucketed", qGraphCommunitiesBucketed,
-      s"""SELECT community_size, n_communities,
-         |  TRUE AS edge_scan_exchange_free
-         |FROM ($lpaOracle) lpa ORDER BY community_size""".stripMargin,
-      eager = true), // bucketed-table write + plan probe at construction
     QueryDef("q_basket_rules", qBasketRules,
       """WITH items AS (
         |  SELECT DISTINCT l.l_orderkey AS ok, p.p_brand AS brand

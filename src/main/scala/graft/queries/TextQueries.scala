@@ -1337,41 +1337,6 @@ object TextQueries {
       .orderBy("doc_id")
   }
 
-  /** Two-phase Bloom-pruned decontamination — the same benchmark-overlap
-    * census as [[qTxtDecontaminate]], but the corpus side is first
-    * pruned by a Bloom filter built over the benchmark's shingle
-    * hashes, and only survivors reach the exact join. This is the
-    * runtime-filter pattern written out at the query level: at 100 TB
-    * the ~125 KB sketch ships to every task as a literal (one driver
-    * collect of ONE aggregated row — the Ivf-codebook shape) and
-    * discards the overwhelming non-contaminated majority inside the
-    * scan, before any shuffle; the exact broadcast join then touches
-    * only candidates.
-    *
-    * Correctness is structural, and the oracle enforces it: Bloom
-    * filters admit false positives but NEVER false negatives, so
-    * prune-then-exact-join returns exactly the unpruned answer — the
-    * DuckDB replay is the plain exact SQL, and any sketch that dropped
-    * a true hit would flip the hash gate. (The probe must be a CONSTANT
-    * per BloomFilterMightContain's input contract, which is why the
-    * sketch rides a literal, not a broadcast column.)
-    */
-  private def qTxtBloomDecon(s: SparkSession, dir: String): DataFrame = {
-    val sh = t(s, dir, "documents")
-      .withColumn("tk", toks)
-      .select(col("doc_id"), explode(shingleHashes3(col("tk"))).as("sh"))
-    val bench = sh.filter(col("doc_id") % 100 === 0).select("sh").distinct()
-    val bloomBytes = bench
-      .agg(call_function("bloom_agg", col("sh"), lit(100000L), lit(1000000L)).as("bf"))
-      .collect()(0).getAs[Array[Byte]](0)
-    sh.filter(col("doc_id") % 100 =!= 0)
-      .filter(call_function("bloom_might_contain", lit(bloomBytes), col("sh")))
-      .join(broadcast(bench), Seq("sh"))
-      .groupBy("doc_id")
-      .agg(countDistinct(col("sh")).as("n_hits"))
-      .orderBy("doc_id")
-  }
-
   /** BM25 retrieval scoring (Robertson-Spärck Jones, Lucene ln(1+x)
     * idf form; k1 = 1.2, b = 0.75) of the corpus against a fixed
     * 3-term query — the relevance-ranking primitive of every
@@ -2114,23 +2079,6 @@ object TextQueries {
         |  count(*) AS n_terms_hit
         |FROM tf JOIN df USING (term), st
         |GROUP BY doc_id ORDER BY bm25 DESC, doc_id LIMIT 10""".stripMargin),
-    // The UNPRUNED exact SQL: Bloom admits no false negatives, so the
-    // engine's prune-then-join lineage must reproduce it bit-for-bit —
-    // a sketch that dropped a true hit would flip this hash gate.
-    QueryDef("q_txt_bloom_decon", qTxtBloomDecon,
-      """WITH sh AS (
-        |  SELECT doc_id, unnest(
-        |    CASE WHEN len(string_split(text, ' ')) >= 3 THEN
-        |      list_distinct(list_transform(range(1, len(string_split(text, ' ')) - 1),
-        |        i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1] || ' ' || string_split(text, ' ')[i+2]))
-        |    ELSE [] END) AS sh
-        |  FROM documents),
-        |bench AS (SELECT DISTINCT sh FROM sh WHERE doc_id % 100 = 0)
-        |SELECT t.doc_id, count(DISTINCT t.sh) AS n_hits
-        |FROM sh t JOIN bench b USING (sh)
-        |WHERE t.doc_id % 100 <> 0
-        |GROUP BY t.doc_id ORDER BY doc_id""".stripMargin,
-      eager = true), // Bloom filter bits collected at construction
     // Chunk identity: the oracle partitions on the chunk STRING where the
     // engine partitions on its xxhash64 — identical equivalence classes
     // modulo a 64-bit collision (same convention as q_txt_dup_spans).

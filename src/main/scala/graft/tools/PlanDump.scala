@@ -36,7 +36,7 @@ object PlanDump {
     "q_topk_per_group",       // windowed top-k, partial-ranked
     "q_dedup_minhash_pairs",  // banded LSH: no all-pairs anywhere
     "q_txt_decontaminate",    // broadcast benchmark set
-    "q_evt_asof",             // union + running-window as-of join
+    "q_evt_asof_native",      // AsOfJoinExec: one exchange per side, merge
     "q_evt_psi",              // sibling conditional sums, 1-row reference
     "q_sim_ann_ivf",          // partition-pruned probe of the cell store
     "q_layout_bucket_join",   // SMJ with zero exchanges (bucketed)

@@ -52,7 +52,7 @@ class VerifySpec extends SparkSpec {
     // (a new query raises the count)
     val qs = SparkEntry.queries.keySet
     assert(qs == SparkEntry.oracleSql.keySet)
-    assert(qs.size == 278 && SparkEntry.all.size == 278, s"${qs.size} keys")
+    assert(qs.size == 275 && SparkEntry.all.size == 275, s"${qs.size} keys")
     val badNames = qs.filterNot(_.matches("q[0-9a-z_]+"))
     assert(badNames.isEmpty, s"non-conforming query names: $badNames")
   }
@@ -77,11 +77,7 @@ class VerifySpec extends SparkSpec {
       Set("q_dedup_incremental", "q_stream_incremental") ->
         "the stream ingests the batch incremental dedup's novel slice",
       Set("q_src_csv", "q_src_jsonl") ->
-        "two source codecs round-trip the same documents census",
-      Set("q_txt_bloom_decon", "q_txt_decontaminate") ->
-        "a Bloom prune has no false negatives, so it must equal the exact join",
-      Set("q_evt_asof", "q_evt_asof_native") ->
-        "the oracle proves the native as-of operator equal to the window composition")
+        "two source codecs round-trip the same documents census")
     val shared = SparkEntry.all.groupBy(_.oracle).values
       .map(_.map(_.name).toSet).filter(_.size > 1).toSet
     assert(shared == pinned.keySet,

@@ -8,7 +8,9 @@ import graft.{SparkEntry, SparkSpec}
   * over plain parquet MUST report a shuffle under the sort-merge join
   * (negative control — proves the plan inspection isn't vacuously
   * true), and the registered query over bucketed tables must emit
-  * join_shuffle_free = true with the exact join census.
+  * join_shuffle_free = true with the exact join census, writing its
+  * bucketed copies to a Scratch dir (no `graft_bktjoin_*` entry in
+  * java.io.tmpdir).
   */
 class LayoutBucketJoinSpec extends SparkSpec {
   import spark.implicits._
@@ -28,8 +30,14 @@ class LayoutBucketJoinSpec extends SparkSpec {
     assert(!AdvancedQueries.smjShuffleFree(plain),
       "plain-parquet SMJ must need a shuffle — the verdict would be vacuous")
 
+    def bktDirs(): Set[String] = Option(
+        new java.io.File(System.getProperty("java.io.tmpdir")).list())
+      .map(_.filter(_.startsWith("graft_bktjoin_")).toSet).getOrElse(Set.empty)
+    val before = bktDirs()
     val out = SparkEntry.queries("q_layout_bucket_join")(spark, d)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
+    assert(bktDirs() -- before == Set.empty[String],
+      s"query left ${bktDirs() -- before} in java.io.tmpdir")
     // rev: 10000*100=1,000,000; 5000*50=250,000 -> A total 1,250,000
     assert(out.toSeq == Seq(
       ("1-URGENT", 2L, 1250000L, true),
