@@ -15,6 +15,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // custom-operator ladder step (c): the as-of join as a real
     // logical node + planner strategy + physical operator
     e.injectPlannerStrategy(_ => new graft.plans.AsOfJoinStrategy)
+    // a typed kernel that keeps its input's key: the exec reports the
+    // input's clustering and the kernel's row order on its own output
+    e.injectPlannerStrategy(_ => new graft.plans.KeyedMapStrategy)
     // the bucketed range join as a logical node + optimizer rewrite;
     // the same rule rebuckets any naive inequality join in any plan
     e.injectOptimizerRule(_ => new graft.plans.RangeJoinRewrite)

@@ -2,6 +2,7 @@ package graft.ops
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.core.ImagePlane
+import graft.plans.KeyedMap
 import graft.sources.Npz
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SparkSession}
@@ -135,6 +136,12 @@ object Reconstruct {
     * Units of a fov outside the plan have no marker and are skipped.
     * Task memory is one (fov, slice): its compressed units, their
     * decoded crops and one canvas.
+    *
+    * Output contract: hash-clustered by fov (the units' exchange), and
+    * in (fov, stack) order within each partition, with crop and slice 0
+    * on every plane, so in [[Relabel.chainOrder]] too. The plan reports
+    * both ([[KeyedMap]]): [[Relabel.predictRelationships]] over this
+    * output plans no exchange and no sort of its own.
     */
   def reconstructFromNpzDir(spark: SparkSession, dir: String,
                             plan: ReconstructionPlan): Dataset[ImagePlane] = {
@@ -147,12 +154,13 @@ object Reconstruct {
       .where(col("crop") < nCrops && col("slice") < slices.numSlices)
     val markers = plan.fovs.toDF("fov").select(lit(null).cast("string").as("path"), col("fov"),
       lit(-1).as("crop"), lit(-1).as("slice"), lit(null).cast("binary").as("content"))
-    units.unionByName(markers)
+    val sorted = units.unionByName(markers)
       .repartition(col("fov"))
       .sortWithinPartitions("fov", "slice", "crop")
       .select("fov", "slice", "crop", "path", "content")
       .as[(String, Int, Int, String, Array[Byte])]
-      .mapPartitions(rows => stitchFovs(rows.buffered, plan, nCrops, slices))
+    KeyedMap.mapPartitions(sorted, "fov", Relabel.chainOrder)(rows =>
+      stitchFovs(rows.buffered, plan, nCrops, slices))
   }
 
   /** The reconstruct kernel over one partition of (fov, slice, crop)-

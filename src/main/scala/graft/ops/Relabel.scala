@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.core.ImagePlane
+import graft.plans.KeyedMap
 import org.apache.spark.sql.Dataset
 
 /** Label renumbering and frame-to-frame identity propagation.
@@ -14,11 +15,17 @@ import org.apache.spark.sql.Dataset
   *   - `predictRelationships` — sequential per-fov pass linking cells
   *     between consecutive frames by IOU with greedy best-first
   *     matching (relabel.py:97-276). Sequential by construction
-  *     (frame t+1 is matched against *relabeled* frame t), so it runs
-  *     inside one task per fov via mapGroups — same peak memory as
-  *     the reference's loop, distributed across fovs.
+  *     (frame t+1 is matched against *relabeled* frame t), so each fov
+  *     is linked inside one task, by one streaming pass over its
+  *     frames in [[chainOrder]] that holds two planes at a time, and
+  *     fovs spread across tasks.
   */
 object Relabel {
+
+  /** The frame order of the chain: (fov, crop, slice, stack). The link
+    * kernel and the reconstruct kernel both emit their planes in it.
+    */
+  val chainOrder: Seq[String] = Seq("fov", "crop", "slice", "stack")
 
   /** W4: dense renumber of one frame's labels to startVal..n,
     * preserving sort order of the original ids.
@@ -53,39 +60,43 @@ object Relabel {
     * (already relabeled) frame t when IOU >= threshold, greedy
     * best-first with one-to-one assignment; unmatched cells get fresh
     * ids above everything seen (relabel.py:97-276 semantics).
+    *
+    * The input is hash-partitioned by fov and sorted by [[chainOrder]]
+    * within each partition; over an input already so (the output of
+    * [[Reconstruct.reconstructFromNpzDir]], or of this method) Spark
+    * plans neither the exchange nor the sort. The output is
+    * hash-clustered by fov, in [[chainOrder]] ([[KeyedMap]]).
     */
   def predictRelationships(ds: Dataset[ImagePlane], threshold: Double = 0.1)
       : Dataset[ImagePlane] = {
     implicit val enc = ds.encoder
     import org.apache.spark.sql.functions.col
     // secondary sort instead of groupByKey + toSeq: the chain only ever
-    // needs (prev, cur), so a repartition-by-fov + within-partition sort
-    // lets one streaming pass hold TWO planes per task — a deep time
-    // series (10k frames) costs the same task memory as a 2-frame one.
-    // Frame order matches the previous toSeq.sortBy: (crop, slice, stack).
-    ds.repartition(col("fov"))
-      .sortWithinPartitions("fov", "crop", "slice", "stack")
-      .mapPartitions { it =>
-        new Iterator[ImagePlane] {
-          private var prevFov: String = null
-          private var prev: ImagePlane = _
-          private var nextId = 0
-          def hasNext: Boolean = it.hasNext
-          def next(): ImagePlane = {
-            val cur = it.next()
-            if (cur.fov != prevFov) {
-              prevFov = cur.fov
-              prev = cur.copy(labels = relabelArray(cur.labels))
-              nextId = (0 +: prev.labels.toSeq).max + 1
-            } else {
-              val (linked, maxUsed) = linkFrames(prev.labels, cur.labels, threshold, nextId)
-              nextId = math.max(nextId, maxUsed + 1)
-              prev = cur.copy(labels = linked)
-            }
-            prev
+    // needs (prev, cur), so one streaming pass holds TWO planes per
+    // task — a deep time series (10k frames) costs the same task
+    // memory as a 2-frame one
+    val sorted = ds.repartition(col("fov")).sortWithinPartitions(chainOrder.map(col): _*)
+    KeyedMap.mapPartitions(sorted, "fov", chainOrder) { it =>
+      new Iterator[ImagePlane] {
+        private var prevFov: String = null
+        private var prev: ImagePlane = _
+        private var nextId = 0
+        def hasNext: Boolean = it.hasNext
+        def next(): ImagePlane = {
+          val cur = it.next()
+          if (cur.fov != prevFov) {
+            prevFov = cur.fov
+            prev = cur.copy(labels = relabelArray(cur.labels))
+            nextId = (0 +: prev.labels.toSeq).max + 1
+          } else {
+            val (linked, maxUsed) = linkFrames(prev.labels, cur.labels, threshold, nextId)
+            nextId = math.max(nextId, maxUsed + 1)
+            prev = cur.copy(labels = linked)
           }
+          prev
         }
       }
+    }
   }
 
   private[ops] def propagateChain(planes: Seq[ImagePlane], threshold: Double)

@@ -3,7 +3,7 @@ package graft.ops
 import graft.core.ImagePlane
 import graft.sources.{Npy, SerializableHadoopConf}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Cell-lineage tracking surface — the data-engineering half of the
@@ -30,9 +30,12 @@ import org.apache.spark.sql.functions._
   *     executors (the notebook's per-batch dump loop, distributed).
   *
   * Scale shape: [[trackTable]] is a relational aggregation over
-  * (fov, frame, label) tuples — one shuffle keyed by (fov, label),
-  * never a per-fov tensor materialization, so a 10k-movie corpus
-  * spreads across the cluster. The trk sink necessarily materializes
+  * (fov, frame, label) tuples, never a per-fov tensor
+  * materialization, so a 10k-movie corpus spreads across the cluster.
+  * Its aggregates and join are keyed by fov (or by fov and label), so
+  * over linked planes that are already hash-clustered by fov (the
+  * output of [[Relabel.predictRelationships]], persisted or not) they
+  * plan no exchange; over any other input they plan their own. The trk sink necessarily materializes
   * one fov's stack per task (a .trk file IS that stack — same unit
   * the reference holds in memory), which bounds task memory at one
   * movie, the same contract as the NPZ sink.
@@ -81,13 +84,9 @@ object Tracking {
     */
   def trackTable(linked: Dataset[ImagePlane],
                  divisions: Option[DataFrame] = None): DataFrame = {
-    val s = linked.sparkSession
-    import s.implicits._
     // only fov, stack and labels are read: pixels are never deserialized
-    val cells = linked.select("fov", "stack", "labels").as[(String, Int, Array[Int])]
-      .flatMap { case (fov, stack, labels) =>
-        labels.iterator.filter(_ != 0).toSet.toSeq.map((l: Int) => (fov, stack, l))
-      }.toDF("fov", "frame", "label")
+    val cells = linked.select(col("fov"), col("stack").as("frame"),
+      explode(cellLabels(col("labels"))).as("label"))
     // movie horizon from the PLANES (a trailing empty frame still
     // extends the movie), tiny per-fov aggregate — AQE broadcasts it
     val horizons = linked.select(col("fov"), col("stack").as("frame"))
@@ -120,18 +119,19 @@ object Tracking {
     }
   }
 
+  /** The distinct nonzero labels of one plane's mask: the cells present
+    * in that frame.
+    */
+  private[ops] def cellLabels(labels: Column): Column =
+    array_distinct(filter(labels, _ =!= 0))
+
   /** Tracking.ipynb cell 10: per fov, the lineage's label set must
     * equal the distinct nonzero mask labels. Returns one row per fov
     * with both sets and the verdict.
     */
   def lineageConsistent(linked: Dataset[ImagePlane], tracks: DataFrame): DataFrame = {
-    val s = linked.sparkSession
-    import s.implicits._
     // only fov and labels are read: pixels are never deserialized
-    val maskLabels = linked.select("fov", "labels").as[(String, Array[Int])]
-      .flatMap { case (fov, labels) =>
-        labels.iterator.filter(_ != 0).toSet.toSeq.map((l: Int) => (fov, l))
-      }.toDF("fov", "label")
+    val maskLabels = linked.select(col("fov"), explode(cellLabels(col("labels"))).as("label"))
       .groupBy("fov").agg(sort_array(collect_set("label")).as("mask_labels"))
     val trackLabels = tracks.groupBy("fov")
       .agg(sort_array(collect_set("label")).as("track_labels"))

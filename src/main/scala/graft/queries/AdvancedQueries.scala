@@ -446,6 +446,10 @@ object AdvancedQueries {
       .join(s.table(oT), col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_lines"), sum(col("rev")).as("rev_x10000"))
+    // the analysed plan holds each table's files and bucket spec, so
+    // the catalog entries can go now; dropping an external table keeps
+    // its files, which the Scratch dir holds until JVM exit
+    Seq(oT, lT).foreach(n => s.sql(s"DROP TABLE $n"))
     census.withColumn("join_shuffle_free", lit(smjShuffleFree(census)))
       .orderBy("o_orderpriority")
   }

@@ -41,7 +41,8 @@ object PlanDump {
     "q_sim_ann_ivf",          // partition-pruned probe of the cell store
     "q_layout_bucket_join",   // SMJ with zero exchanges (bucketed)
     "q_evt_range_join",       // native RangeJoinPlan -> bucket equi join
-    "q_graph_triangles")      // checkpointed lineage + broadcast close
+    "q_graph_triangles",      // checkpointed lineage + broadcast close
+    "q_trk_table")            // link + track behind one fov exchange
 
   /** Slowest-10 query names from a Bench walls artifact (the first
     * JSON line of BENCH_WALLS_LATEST.json), parsed with a minimal

@@ -100,8 +100,8 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   /** What the inventory sweeps read from one construction of a query;
-    * `sessionChanges` names every session conf and temp view the
-    * construction left different from before it.
+    * `sessionChanges` names every session conf, temp view and catalog
+    * table the construction left different from before it.
     */
   private case class Built(sparkPlan: String, globalWindow: Boolean,
       constructJobs: Int, sessionChanges: Seq[String])
@@ -112,7 +112,8 @@ class PlanAuditSpec extends SparkSpec {
     * bus is drained once after the sweep, not per query. The tables are
     * registered first so `Q.t`'s one-time schema-inference jobs are not
     * counted against the first query that reads each table. The session
-    * confs and temp views are snapshot around each construction.
+    * confs, temp views and catalog tables are snapshot around each
+    * construction.
     */
   private lazy val sweep: Map[String, Built] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -127,8 +128,8 @@ class PlanAuditSpec extends SparkSpec {
     }
     def session(): Set[String] =
       spark.conf.getAll.map { case (k, v) => s"conf $k=$v" }.toSet ++
-        spark.catalog.listTables().collect().filter(_.isTemporary)
-          .map(t => s"temp view ${t.name}")
+        spark.catalog.listTables().collect()
+          .map(t => if (t.isTemporary) s"temp view ${t.name}" else s"table ${t.name}")
     sc.addSparkListener(listener)
     try {
       val built = SparkEntry.queries.toSeq.filterNot { case (n, _) => skip(n) }
@@ -171,10 +172,10 @@ class PlanAuditSpec extends SparkSpec {
     assert(idle.isEmpty, s"flagged eager but construction ran no job: ${idle.sorted}")
   }
 
-  test("constructions leave session confs and temp views unchanged") {
+  test("constructions leave session confs, temp views and catalog tables unchanged") {
     // the session is shared by every query a driver builds: a builder
-    // that overrides a conf or registers a view for its own SQL must
-    // restore or drop it before returning
+    // that overrides a conf, registers a view for its own SQL or saves
+    // a table must restore or drop it before returning
     val dirty = sweep.toSeq.collect {
       case (name, b) if b.sessionChanges.nonEmpty =>
         s"$name: ${b.sessionChanges.mkString(", ")}"
