@@ -48,11 +48,9 @@ object SparkEntry {
       all.filter(d => names(d.name))
   }
 
-  /** Comma-separated name allowlist from environment variable `env`
-    * (unset ⇒ `None`, the whole inventory).
-    */
-  def allowlist(env: String): Option[Set[String]] =
-    sys.env.get(env).map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
+  /** The names in a comma-separated list, blanks dropped. */
+  def nameList(csv: String): Set[String] =
+    csv.split(',').map(_.trim).filter(_.nonEmpty).toSet
 
   /** Name-keyed projection of `defs`; a name registered twice throws
     * and names it (a plain `toMap` keeps the last entry silently).

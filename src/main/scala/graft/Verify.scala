@@ -1,8 +1,19 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** The correctness gate's dump: each registered query's result →
+  * parquet under `<outDir>/<name>`, plus `oracle_sql.json` (the DuckDB
+  * replay of each) and `_errors.json`, which `tools/check_correctness.py`
+  * compares and counts. It runs on the engine's default session confs;
+  * no environment variable overrides them.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir>
+  *
+  * `SPARK_GRAFT_VERIFY_ONLY=q_a,q_b` dumps a named subset (a name that
+  * is not registered fails before any work), and `SPARK_GRAFT_CPUS`
+  * sets the local core count (default 4). Timing is not measured here:
+  * `perfbench/` is the engine's one timing harness.
+  */
 object Verify {
 
   /** Dump each query's result under `outDir/<name>`; returns the map of
@@ -50,25 +61,14 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // Optional comma-separated allowlist for targeted replays (e.g. the
-    // sf1 dedup spot-pass); unset ⇒ full dump, the driver's contract. A
-    // name that is not registered fails here, before any work.
-    val selected = SparkEntry.select(SparkEntry.allowlist("SPARK_GRAFT_VERIFY_ONLY"))
+    // unset ⇒ the full dump the correctness gate compares
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_VERIFY_ONLY").map(SparkEntry.nameList))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.core.GraftSession
       .builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Spark session confs (e.g. AQE or shuffle settings) for a trial
-    // run without a code change: "k1=v1;k2=v2" — same hook as Bench. Every
-    // applied override is echoed to stderr AND recorded in the output
-    // dir (_extra_conf.json, written even when empty), so a gate
-    // artifact is self-describing about non-default config.
-    val extraConf = graft.core.GraftSession.applyExtraConf(spark)
     val failures = dump(spark, sfDir, outDir, selected.map(d => d.name -> d.build))
-    Files.writeString(Paths.get(s"$outDir/_extra_conf.json"),
-      extraConf.map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }
-        .mkString("{", ",", "}"))
     val json = selected
       .map(d => s"${jsonStr(d.name)}: ${jsonStr(d.oracle)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -1,9 +1,11 @@
 package graft.core
 
-import graft.functions.{CosineSimilarity, DistinctNonzeroCount, L2Squared, LabelAreas, MinhashEstimate, MinhashSignature, RollingHash, SimhashExpr, SortedLongIntersect, SortedLongIntersectCount}
+import graft.functions.{CosineSimilarity, CountMinSketchAgg, DistinctNonzeroCount, L2Squared, LabelAreas, MinhashEstimate, MinhashSignature, MisraGriesTopK, PcaRound, PolyHash, RollingHash, SimhashExpr, SortedLongIntersect, SortedLongIntersectCount}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import scala.reflect.ClassTag
 
 /** Engine extensions registered on every GraftSession: native
   * expressions exposed to SQL (`SELECT cosine_sim(a.vec, b.vec)`), so
@@ -21,132 +23,62 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // the bucketed range join as a logical node + optimizer rewrite;
     // the same rule rebuckets any naive inequality join in any plan
     e.injectOptimizerRule(_ => new graft.plans.RangeJoinRewrite)
-    e.injectFunction((
-      new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "cosine_sim takes exactly 2 arguments")
-        CosineSimilarity(children.head, children(1))
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("l2_sq"),
-      new ExpressionInfo(classOf[L2Squared].getName, "l2_sq"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "l2_sq takes exactly 2 arguments")
-        L2Squared(children.head, children(1))
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("minhash_est"),
-      new ExpressionInfo(classOf[MinhashEstimate].getName, "minhash_est"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "minhash_est takes exactly 2 arguments")
-        MinhashEstimate(children.head, children(1))
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash"),
-      (children: Seq[Expression]) => {
-        require(children.length == 4,
-          "rolling_hash takes (text, k, base, mod); k/base/mod literals")
-        def asLong(e: Expression): Long = e.eval() match {
-          case n: java.lang.Number => n.longValue()
-          case other => sys.error(s"rolling_hash parameter must be a literal, got $other")
-        }
-        RollingHash(children.head, asLong(children(1)).toInt,
-          asLong(children(2)), asLong(children(3)))
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("label_areas"),
-      new ExpressionInfo(classOf[LabelAreas].getName, "label_areas"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "label_areas takes exactly 1 argument")
-        LabelAreas(children.head)
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimhashExpr].getName, "simhash64"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "simhash64 takes exactly 1 argument")
-        SimhashExpr(children.head)
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinhashSignature].getName, "minhash_sig"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3,
-          "minhash_sig takes (shingle_hashes, numHashes, seed); numHashes/seed literals")
-        def asLong(e: Expression): Long = e.eval() match {
-          case n: java.lang.Number => n.longValue()
-          case other => sys.error(s"minhash_sig parameter must be a literal, got $other")
-        }
-        MinhashSignature(children.head, asLong(children(1)).toInt, asLong(children(2)))
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("sorted_intersect_count"),
-      new ExpressionInfo(classOf[SortedLongIntersectCount].getName, "sorted_intersect_count"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "sorted_intersect_count takes exactly 2 arguments")
-        SortedLongIntersectCount(children.head, children(1))
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("sorted_intersect"),
-      new ExpressionInfo(classOf[SortedLongIntersect].getName, "sorted_intersect"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "sorted_intersect takes exactly 2 arguments")
-        SortedLongIntersect(children.head, children(1))
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("distinct_nonzero_count"),
-      new ExpressionInfo(classOf[DistinctNonzeroCount].getName, "distinct_nonzero_count"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "distinct_nonzero_count takes exactly 1 argument")
-        DistinctNonzeroCount(children.head)
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("pca_round"),
-      new ExpressionInfo(classOf[graft.functions.PcaRound].getName, "pca_round"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3 || children.length == 4,
-          "pca_round takes (vec, mu, w[, v1]); mu/w/v1 array literals")
-        def arr(e: Expression): Array[Double] = e.eval() match {
-          case a: org.apache.spark.sql.catalyst.util.ArrayData => a.toDoubleArray()
-          case other => sys.error(s"pca_round parameter must be a literal array, got $other")
-        }
-        graft.functions.PcaRound(children.head, arr(children(1)), arr(children(2)),
-          if (children.length == 4) Some(arr(children(3))) else None)
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("mg_topk"),
-      new ExpressionInfo(classOf[graft.functions.MisraGriesTopK].getName, "mg_topk"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "mg_topk takes (token, k); k literal")
-        val k = children(1).eval() match {
-          case n: java.lang.Number => n.intValue()
-          case other => sys.error(s"mg_topk k must be a literal, got $other")
-        }
-        graft.functions.MisraGriesTopK(children.head, k)
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("poly_hash"),
-      new ExpressionInfo(classOf[graft.functions.PolyHash].getName, "poly_hash"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3, "poly_hash takes (str, base, mod); base/mod literals")
-        def asLong(ex: Expression): Long = ex.eval() match {
-          case n: java.lang.Number => n.longValue()
-          case other => sys.error(s"poly_hash parameter must be a literal, got $other")
-        }
-        graft.functions.PolyHash(children.head, asLong(children(1)), asLong(children(2)))
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("cms_sketch"),
-      new ExpressionInfo(classOf[graft.functions.CountMinSketchAgg].getName, "cms_sketch"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3, "cms_sketch takes (key, d, w); d/w literals")
-        def asInt(ex: Expression): Int = ex.eval() match {
-          case n: java.lang.Number => n.intValue()
-          case other => sys.error(s"cms_sketch parameter must be a literal, got $other")
-        }
-        graft.functions.CountMinSketchAgg(children.head, asInt(children(1)), asInt(children(2)))
-      }))
+    // one row per SQL function: name, expression class, allowed argument
+    // counts, and the builder over the checked arguments
+    def fn(name: String, cls: Class[_], arities: Int*)(build: Seq[Expression] => Expression): Unit =
+      e.injectFunction((new FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+        (c: Seq[Expression]) => {
+          require(arities.contains(c.length),
+            s"$name takes ${arities.mkString(" or ")} arguments, got ${c.length}")
+          build(c)
+        }))
+    import GraftExtensions.literal
+
+    fn("cosine_sim", classOf[CosineSimilarity], 2)(c => CosineSimilarity(c(0), c(1)))
+    fn("l2_sq", classOf[L2Squared], 2)(c => L2Squared(c(0), c(1)))
+    fn("minhash_est", classOf[MinhashEstimate], 2)(c => MinhashEstimate(c(0), c(1)))
+    // (text, k, base, mod); k/base/mod literals
+    fn("rolling_hash", classOf[RollingHash], 4)(c => RollingHash(c(0),
+      literal[Number]("rolling_hash", c(1)).intValue,
+      literal[Number]("rolling_hash", c(2)).longValue,
+      literal[Number]("rolling_hash", c(3)).longValue))
+    fn("label_areas", classOf[LabelAreas], 1)(c => LabelAreas(c(0)))
+    fn("simhash64", classOf[SimhashExpr], 1)(c => SimhashExpr(c(0)))
+    // (shingle_hashes, numHashes, seed); numHashes/seed literals
+    fn("minhash_sig", classOf[MinhashSignature], 3)(c => MinhashSignature(c(0),
+      literal[Number]("minhash_sig", c(1)).intValue,
+      literal[Number]("minhash_sig", c(2)).longValue))
+    fn("sorted_intersect_count", classOf[SortedLongIntersectCount], 2)(c =>
+      SortedLongIntersectCount(c(0), c(1)))
+    fn("sorted_intersect", classOf[SortedLongIntersect], 2)(c => SortedLongIntersect(c(0), c(1)))
+    fn("distinct_nonzero_count", classOf[DistinctNonzeroCount], 1)(c => DistinctNonzeroCount(c(0)))
+    // (vec, mu, w[, v1]); mu/w/v1 array literals
+    fn("pca_round", classOf[PcaRound], 3, 4) { c =>
+      val arrays = c.tail.map(literal[ArrayData]("pca_round", _).toDoubleArray())
+      PcaRound(c(0), arrays(0), arrays(1), arrays.lift(2))
+    }
+    // (token, k); k literal
+    fn("mg_topk", classOf[MisraGriesTopK], 2)(c =>
+      MisraGriesTopK(c(0), literal[Number]("mg_topk", c(1)).intValue))
+    // (str, base, mod); base/mod literals
+    fn("poly_hash", classOf[PolyHash], 3)(c => PolyHash(c(0),
+      literal[Number]("poly_hash", c(1)).longValue,
+      literal[Number]("poly_hash", c(2)).longValue))
+    // (key, d, w); d/w literals
+    fn("cms_sketch", classOf[CountMinSketchAgg], 3)(c => CountMinSketchAgg(c(0),
+      literal[Number]("cms_sketch", c(1)).intValue,
+      literal[Number]("cms_sketch", c(2)).intValue))
   }
+}
+
+object GraftExtensions {
+
+  /** The value of argument `x` of SQL function `fn`, which must be a
+    * literal (foldable) of type `T`; anything else fails, naming `fn`.
+    */
+  private def literal[T: ClassTag](fn: String, x: Expression): T =
+    Some(x).filter(_.foldable).map(_.eval()) match {
+      case Some(v: T) => v
+      case _ => sys.error(s"$fn parameter must be a literal, got $x")
+    }
 }

@@ -43,38 +43,4 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
-
-  def get(): SparkSession = {
-    val s = builder().getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  /** Apply `SPARK_GRAFT_EXTRA_CONF` ("k1=v1;k2=v2") to the session and
-    * return the applied pairs so the caller can RECORD them in its
-    * emitted artifact — a silent override could otherwise invalidate a
-    * certification run (e.g. flip an AQE default) while the
-    * artifact still claims default config. Malformed entries (no '=')
-    * are loudly warned and skipped, never silently dropped. Values
-    * cannot contain ';' (the separator) — warned if the remainder of a
-    * split looks truncated is not detectable, so the limitation is
-    * documented here and in the artifact itself via the echoed pairs.
-    */
-  def applyExtraConf(spark: SparkSession): Seq[(String, String)] =
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap {
-      _.split(';').map(_.trim).filter(_.nonEmpty).flatMap { kv =>
-        val i = kv.indexOf('=')
-        if (i <= 0) {
-          System.err.println(
-            s"[graft] WARNING: malformed SPARK_GRAFT_EXTRA_CONF entry " +
-              s"'$kv' (expected key=value) — skipped")
-          None
-        } else {
-          val (k, v) = (kv.take(i).trim, kv.drop(i + 1).trim)
-          spark.conf.set(k, v)
-          System.err.println(s"[graft] extra conf applied: $k=$v")
-          Some(k -> v)
-        }
-      }
-    }
 }

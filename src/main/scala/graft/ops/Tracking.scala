@@ -4,6 +4,7 @@ import graft.core.ImagePlane
 import graft.sources.{Npy, SerializableHadoopConf}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Cell-lineage tracking surface — the data-engineering half of the
@@ -32,10 +33,12 @@ import org.apache.spark.sql.functions._
   * Scale shape: [[trackTable]] is a relational aggregation over
   * (fov, frame, label) tuples, never a per-fov tensor
   * materialization, so a 10k-movie corpus spreads across the cluster.
-  * Its aggregates and join are keyed by fov (or by fov and label), so
-  * over linked planes that are already hash-clustered by fov (the
-  * output of [[Relabel.predictRelationships]], persisted or not) they
-  * plan no exchange; over any other input they plan their own. The trk sink necessarily materializes
+  * It reads the linked planes once: one aggregate keyed by (fov,
+  * label), then a window keyed by fov over the aggregated rows for the
+  * movie horizon. Over linked planes that are already hash-clustered
+  * by fov (the output of [[Relabel.predictRelationships]], persisted or
+  * not) neither plans an exchange; over any other input they plan
+  * their own. The trk sink necessarily materializes
   * one fov's stack per task (a .trk file IS that stack — same unit
   * the reference holds in memory), which bounds task memory at one
   * movie, the same contract as the NPZ sink.
@@ -84,20 +87,19 @@ object Tracking {
     */
   def trackTable(linked: Dataset[ImagePlane],
                  divisions: Option[DataFrame] = None): DataFrame = {
-    // only fov, stack and labels are read: pixels are never deserialized
+    // only fov, stack and labels are read: pixels are never deserialized.
+    // A frame with no cells still yields one null-label row, so the
+    // movie horizon below comes from the PLANES (a trailing empty frame
+    // extends the movie) in the same single scan.
     val cells = linked.select(col("fov"), col("stack").as("frame"),
-      explode(cellLabels(col("labels"))).as("label"))
-    // movie horizon from the PLANES (a trailing empty frame still
-    // extends the movie), tiny per-fov aggregate — AQE broadcasts it
-    val horizons = linked.select(col("fov"), col("stack").as("frame"))
-      .groupBy("fov").agg(max("frame").as("last_frame"))
+      explode_outer(cellLabels(col("labels"))).as("label"))
     val base = cells.groupBy("fov", "label")
       .agg(sort_array(collect_set("frame")).as("frames"),
         min("frame").as("frame_start"),
         max("frame").as("frame_end"))
-      .join(horizons, "fov")
-      .withColumn("capped", col("frame_end") < col("last_frame"))
-      .drop("last_frame")
+      .withColumn("capped",
+        col("frame_end") < max("frame_end").over(Window.partitionBy("fov")))
+      .filter(col("label").isNotNull)
     divisions match {
       case Some(d) =>
         val dd = d.select(col("fov"), col("parent").cast("int"),

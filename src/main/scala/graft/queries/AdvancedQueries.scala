@@ -399,7 +399,7 @@ object AdvancedQueries {
     val s = df.sparkSession
     // the conf flip is session-global: serialize verdict computation on
     // the session so a concurrent caller can't plan with AQE off or
-    // restore it mid-inspection (Verify/Bench run queries sequentially;
+    // restore it mid-inspection (Verify runs queries sequentially;
     // this guards parallel spec suites)
     s.synchronized {
       val prev = s.conf.get("spark.sql.adaptive.enabled")

@@ -34,7 +34,7 @@ object IoQueries {
 
   /** Same fixture-root resolution as the ANN oracles: override with
     * `-Dgraft.fixtures.dir`, default `fixtures/` under the working
-    * directory (the repo root for Verify/Bench and the driver).
+    * directory (the repo root for Verify and the oracle replay).
     */
   private def fixturesRoot: String =
     sys.props.getOrElse("graft.fixtures.dir",

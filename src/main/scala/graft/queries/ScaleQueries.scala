@@ -748,7 +748,7 @@ object ScaleQueries {
     * time-sliced files with ascending mtimes, one micro-batch each.
     * A single-file drain would give the watermark no chance to
     * advance, the join would buffer BOTH full streams, and the
-    * state_rows artifact Bench emits would read "holds everything" —
+    * drain's recorded state high-water would read "holds everything" —
     * sliced, the time-range condition actually evicts and the
     * recorded high water is the honest horizon bound (range +
     * watermark delay of buffered rows, not the corpus).
@@ -775,8 +775,7 @@ object ScaleQueries {
     val streamDir = StreamOps.sliceParquet(ev, col("event_id"), 6, "q_stream_cms")
     val sk = StreamOps.completeAggDrain(s, streamDir, "*.parquet",
       df => df.agg(CountMin.cmsSketch(col("user_id"),
-        EventQueries.cmsD, EventQueries.cmsW).as("sk")),
-      "q_stream_countmin").result
+        EventQueries.cmsD, EventQueries.cmsW).as("sk"))).result
     EventQueries.cmsProbeTable(ev, sk)
   }
 
@@ -814,8 +813,7 @@ object ScaleQueries {
     val streamHist = StreamOps.completeAggDrain(s, streamDir, "*.parquet",
       df => bucketize(df).groupBy("event_type", "bid")
         .agg(count(lit(1)).as("s_cnt"), max("rep_dc").as("s_rep"),
-          max("low_c").as("s_low")),
-      "q_stream_dd_quantile").result
+          max("low_c").as("s_low"))).result
     val batchHist = bucketize(ev).groupBy("event_type", "bid")
       .agg(count(lit(1)).as("cnt"), max("rep_dc").as("rep_dc"),
         max("low_c").as("low_c"))
@@ -873,8 +871,7 @@ object ScaleQueries {
     val sk = StreamOps.completeAggDrain(s, streamDir, "*.parquet",
       df => df.select(explode(split(col("text"), " ")).as("token"))
         .agg(mgTopK(col("token"), TextQueries.mgK).as("summary"),
-          count(lit(1)).as("n_total")),
-      "q_stream_topk").result
+          count(lit(1)).as("n_total"))).result
     TextQueries.mgVerdict(
       docs.select(explode(split(col("text"), " ")).as("token")), sk)
   }
@@ -883,7 +880,7 @@ object ScaleQueries {
     * the SQL is built rather than hard-coded to a checkout path:
     * `-Dgraft.fixtures.dir=...` overrides; default is the `fixtures/`
     * directory under the process working directory (the repo root for
-    * Verify/Bench and the driver's replay).
+    * Verify and the oracle replay).
     */
   private val fixturesDir: String =
     sys.props.getOrElse("graft.fixtures.dir",

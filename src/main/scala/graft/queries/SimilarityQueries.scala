@@ -555,7 +555,7 @@ object SimilarityQueries {
         (coalesce(col("best0"), lit(-1.0)) < 0.2).as("novel"))
     // emitted volume is one scored row per arriving vector (linear in
     // data); the drain writes updates executor-side to parquet
-    StreamOps.drain(scored, OutputMode.Update(), "q_stream_semgate").result
+    StreamOps.drain(scored, OutputMode.Update()).result
       .groupBy("vec_id")
       .agg(max(struct(col("n_cand"), col("best_sim"), col("novel"))).as("last"))
       .select(col("vec_id"), col("last.n_cand").as("n_cand"),

@@ -29,15 +29,6 @@ object StreamOps {
     def map(f: DataFrame => DataFrame): Drained = copy(result = f(result))
   }
 
-  /** State-store high-water marks observed by the most recent drain
-    * of each stream operator, keyed by the operator's registry name.
-    * Bench emits this map as `state_rows` in its JSON line, making the
-    * bound a per-round driver-visible artifact instead of spec-only
-    * assurance. [[drain]] is its only writer.
-    */
-  val stateHighWater: scala.collection.concurrent.TrieMap[String, Long] =
-    scala.collection.concurrent.TrieMap.empty
-
   /** How long [[drain]] waits, after the query has stopped, for the
     * listener bus to deliver its QueryTerminatedEvent. */
   private val terminatedTimeoutMs = 60000L
@@ -55,7 +46,8 @@ object StreamOps {
     * StreamingQueryListener filtered by the query id, complete up to
     * the query's QueryTerminatedEvent; the query's own progress buffer
     * keeps only the last `spark.sql.streaming.numRecentProgressUpdates`
-    * batches. The high-water is recorded as `stateHighWater(name)`.
+    * batches. Both are returned in the [[Drained]] record, the only
+    * place a drain reports them.
     *
     * The run sets `spark.sql.shuffle.partitions` = 8 and restores it
     * after, an unset key staying unset. Stateful micro-batch drains
@@ -67,7 +59,7 @@ object StreamOps {
     * contract is either a deterministic per-key fold, a mergeable
     * aggregation, or set-semantics output.
     */
-  private[graft] def drain(out: Dataset[_], mode: OutputMode, name: String): Drained = {
+  private[graft] def drain(out: Dataset[_], mode: OutputMode): Drained = {
     val spark = out.sparkSession
     val dir = graft.core.Scratch.dir(spark, "graft_drain")
     val writeMode = if (mode == OutputMode.Complete()) "overwrite" else "append"
@@ -89,7 +81,6 @@ object StreamOps {
       val progress = listener.awaitTerminated(id)
       val maxState = progress.flatMap(_.stateOperators.map(_.numRowsTotal))
         .foldLeft(0L)(math.max)
-      stateHighWater(name) = maxState
       Drained(spark.read.schema(out.schema).parquet(dir), maxState, progress.length)
     } finally spark.streams.removeListener(listener)
   }
@@ -164,7 +155,7 @@ object StreamOps {
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("event_type"), col("n"), col("sum_value"))
-    drain(agg, OutputMode.Complete(), "q_stream_hourly")
+    drain(agg, OutputMode.Complete())
       .map(_.orderBy("hour", "event_type"))
   }
 
@@ -181,7 +172,7 @@ object StreamOps {
       .withWatermark("ts", "24 hours")
       .dropDuplicates("user_id", "event_type")
       .select("user_id", "event_type")
-    drain(deduped, OutputMode.Append(), "q_stream_dedup").map(_
+    drain(deduped, OutputMode.Append()).map(_
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_users"))
       .orderBy("event_type"))
@@ -212,7 +203,7 @@ object StreamOps {
     // with the corpus, and complete mode re-emits ALL of it every
     // micro-batch. min(doc_id) is monotone per key, so re-folding the
     // drained updates with the same min yields exactly the final table.
-    drain(novel, OutputMode.Update(), "q_stream_incremental").map(
+    drain(novel, OutputMode.Update()).map(
       _.groupBy("fp").agg(min("doc_id").as("doc_id"))
         .select("doc_id", "fp").orderBy("doc_id"))
   }
@@ -306,14 +297,14 @@ object StreamOps {
     * summaries, so state holds one buffer per group (one row total for
     * a global sketch) no matter how many micro-batches arrive —
     * O(sketch) streaming state, vs. the complete-mode window harnesses
-    * whose state is result-sized. `name` is the registry name the
-    * state high-water is recorded under for Bench's state_rows.
+    * whose state is result-sized. The returned [[Drained]] carries the
+    * state high-water, so a caller can check that bound.
     */
   def completeAggDrain(spark: SparkSession, dir: String, glob: String,
-                       build: DataFrame => DataFrame, name: String,
+                       build: DataFrame => DataFrame,
                        maxFilesPerTrigger: Int = 1): Drained =
     drain(build(fileStream(spark, dir, Some(glob), maxFilesPerTrigger)),
-      OutputMode.Complete(), name)
+      OutputMode.Complete())
 
   /** The 100 TB form of [[hourlyCounts]]: APPEND output mode, so each
     * window row is emitted exactly once — when the watermark passes
@@ -342,7 +333,7 @@ object StreamOps {
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("event_type"), col("n"), col("sum_value"))
-    drain(agg, OutputMode.Append(), "q_stream_hourly_append")
+    drain(agg, OutputMode.Append())
       .map(_.orderBy("hour", "event_type"))
   }
 
@@ -375,7 +366,7 @@ object StreamOps {
     val out = psiTotals(agg.join(reference, "j"))
       .select(col("hour"), col("n_events"), psiMicro.as("psi_micro"))
       .withColumn("drifted", col("psi_micro") > 200000L)
-    drain(out, OutputMode.Append(), "q_stream_psi").map(_.orderBy("hour"))
+    drain(out, OutputMode.Append()).map(_.orderBy("hour"))
   }
 
   /** NATIVE session windows (`session_window(ts, gap)` — Spark's
@@ -403,7 +394,7 @@ object StreamOps {
         unix_micros(col("session_window.start")).as("start_us"),
         (unix_micros(col("session_window.end")) - gapUs).as("end_us"),
         col("n_events"))
-    drain(agg, OutputMode.Append(), "q_stream_session_native")
+    drain(agg, OutputMode.Append())
       .map(_.orderBy("user_id", "start_us"))
   }
 
@@ -437,7 +428,7 @@ object StreamOps {
       .dropDuplicatesWithinWatermark("fp")
       .join(store, Seq("fp"), "left_anti")
       .select("doc_id", "fp")
-    drain(novel, OutputMode.Append(), "q_stream_incremental_append")
+    drain(novel, OutputMode.Append())
       .map(_.orderBy("doc_id"))
   }
 
@@ -481,7 +472,7 @@ object StreamOps {
           }
       }
       .toDF("shard", "sidx", "key", "exts", "entries")
-    drain(stream, OutputMode.Append(), "q_stream_tar_ingest")
+    drain(stream, OutputMode.Append())
   }
 
   /** Streaming EWMA (α = 1/2): the MINIMAL stateful online feature —
@@ -525,7 +516,7 @@ object StreamOps {
           (uid, st.n, st.ewma)
         })
       .toDF("user_id", "n_events", "ewma")
-    drain(updates, OutputMode.Update(), "q_stream_ewma").map(lastEwma)
+    drain(updates, OutputMode.Update()).map(lastEwma)
   }
 
   /** The per-user last EWMA update: the event count is monotone. */
@@ -598,7 +589,7 @@ object StreamOps {
         })
       .toDF("user_id", "seq", "nlt_c", "ltc_c", "lin_c", "linc_c",
         "nlt_v", "ltc_v", "lin_v", "linc_v")
-    drain(updates, OutputMode.Update(), "q_stream_attribution").map(_
+    drain(updates, OutputMode.Update()).map(_
       .groupBy("user_id")
       .agg(max(struct(col("seq"), col("nlt_c"), col("ltc_c"), col("lin_c"),
         col("linc_c"), col("nlt_v"), col("ltc_v"), col("lin_v"),
@@ -707,7 +698,7 @@ object StreamOps {
           (uid, n, conv, err, conv2)
         })
       .toDF(patternCols: _*)
-    drain(updates, OutputMode.Update(), "q_stream_pattern").map(lastPattern)
+    drain(updates, OutputMode.Update()).map(lastPattern)
   }
 
   /** The 100 TB form of [[sessionCounts]]: per-user state carries ONE
@@ -777,7 +768,7 @@ object StreamOps {
           }
         })
       .toDF("user_id", "start_us", "end_us", "n_events")
-    drain(closed, OutputMode.Append(), "q_stream_sessionize_append")
+    drain(closed, OutputMode.Append())
       .map(_.orderBy("user_id", "start_us"))
   }
 
@@ -829,7 +820,7 @@ object StreamOps {
           }
         })
       .toDF("fov", "stack", "slice", "n_cells", "n_nonzero")
-    drain(stitched, OutputMode.Append(), "stream_stitch")
+    drain(stitched, OutputMode.Append())
       .map(_.orderBy("fov", "stack", "slice"))
   }
 
@@ -919,7 +910,7 @@ object StreamOps {
           }
         })
       .toDF("fov", "stack", "slice", "n_crops", "n_cells", "n_nonzero", "status")
-    drain(stitched, OutputMode.Append(), "q_stream_stitch")
+    drain(stitched, OutputMode.Append())
       .map(_.orderBy("fov", "stack", "slice"))
   }
 
@@ -992,7 +983,7 @@ object StreamOps {
         (col("best_est_pm") < 5000L).as("novel"))
     // last update per doc wins (a doc's 32 band rows arrive in one
     // batch, so there is exactly one)
-    drain(scored, OutputMode.Update(), "q_stream_neardup").map(_
+    drain(scored, OutputMode.Update()).map(_
       .groupBy("doc_id")
       .agg(max(struct(col("n_cand"), col("best_est_pm"), col("novel")))
         .as("last"))
@@ -1038,7 +1029,7 @@ object StreamOps {
       .toDF("user_id", "n_sessions", "n_events")
     // the update drain appends per-batch emissions; keep each user's
     // final totals (single-batch local runs emit exactly once)
-    drain(updated, OutputMode.Update(), "q_stream_sessionize").map(_
+    drain(updated, OutputMode.Update()).map(_
       .groupBy("user_id")
       .agg(max(col("n_sessions")).as("n_sessions"), max(col("n_events")).as("n_events"))
       .orderBy("user_id"))
@@ -1067,7 +1058,7 @@ object StreamOps {
                          glob: Option[String] = None): Drained =
     drain(purchaseClicks(spark, eventsDir, rangeMinutes, watermarkDelay,
         maxFilesPerTrigger, glob, "inner"),
-      OutputMode.Append(), "q_stream_range_append")
+      OutputMode.Append())
       .map(_.orderBy("event_id", "c_us"))
 
   /** LEFT OUTER stream-stream interval join — [[intervalJoinAppend]]'s
@@ -1087,7 +1078,7 @@ object StreamOps {
                               glob: Option[String] = None): Drained =
     drain(purchaseClicks(spark, eventsDir, rangeMinutes, watermarkDelay,
         maxFilesPerTrigger, glob, "left_outer"),
-      OutputMode.Append(), "q_stream_range_outer")
+      OutputMode.Append())
       .map(_.orderBy("event_id", "c_us"))
 
   /** Purchases joined to the same user's clicks from the preceding

@@ -14,17 +14,11 @@ import graft.SparkEntry
   * reviewable as an artifact rather than only asserted in
   * PlanAuditSpec.
   *
-  * Usage: runMain graft.tools.PlanDump <sfDir> <outFile> [wallsJson]
+  * Usage: runMain graft.tools.PlanDump <sfDir> <outFile> [q1,q2,...]
   *
-  * With `wallsJson` (the BENCH_WALLS_LATEST.json artifact), the panel
-  * additionally includes every BATCH query among the bench's slowest
-  * 10, so each round's plan snapshot covers exactly the queries where
-  * a plan regression costs the most. Streaming harnesses in the
-  * slowest set are listed by name only: their registered DataFrame is
-  * the DRAINED RESULT of a run-to-completion stream (a parquet
-  * read-back), so the batch explain carries no operator information —
-  * their regression signal is the bench artifact's `state_rows` +
-  * batch counts.
+  * With the optional comma list, the file holds the plans of exactly
+  * those registered queries instead of the panel; a name that is not
+  * registered fails before any work.
   */
 object PlanDump {
 
@@ -44,61 +38,27 @@ object PlanDump {
     "q_graph_triangles",      // checkpointed lineage + broadcast close
     "q_trk_table")            // link + track behind one fov exchange
 
-  /** Slowest-10 query names from a Bench walls artifact (the first
-    * JSON line of BENCH_WALLS_LATEST.json), parsed with a minimal
-    * regex walk over the flat `"queries":{"name":sec,...}` object —
-    * no JSON library on the classpath, and the shape is ours.
-    */
-  private[tools] def slowestFromWalls(wallsJson: String, n: Int = 10): Seq[String] = {
-    val line = {
-      val src = scala.io.Source.fromFile(wallsJson)
-      try src.getLines().nextOption().getOrElse("") finally src.close()
-    }
-    val obj = """"queries"\s*:\s*\{([^}]*)\}""".r
-      .findFirstMatchIn(line).map(_.group(1)).getOrElse("")
-    """"([^"]+)"\s*:\s*([0-9.eE+-]+)""".r.findAllMatchIn(obj)
-      .map(m => m.group(1) -> m.group(2).toDouble)
-      .toSeq.sortBy(-_._2).take(n).map(_._1)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outFile = args(1)
+    val names = args.lift(2).map(SparkEntry.nameList)
+      .fold(panel)(names => SparkEntry.select(Some(names)).map(_.name))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark: SparkSession = graft.core.GraftSession
       .builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val slowest = args.drop(2).headOption.map(slowestFromWalls(_)).getOrElse(Nil)
-    val (slowStream, slowBatch) = slowest.partition(_.startsWith("q_stream_"))
-    // a walls artifact from a prior round may name queries since
-    // renamed/removed — skip them rather than abort the whole snapshot
-    val full = (panel ++ slowBatch.filterNot(panel.contains))
-      .filter(SparkEntry.queries.contains)
     val sb = new StringBuilder
     sb.append("# Physical plans (generated by graft.tools.PlanDump)\n\n")
     sb.append(s"Source: `$sfDir`; Spark ${spark.version}; ")
     sb.append("plans are `explain(formatted)` of the registered queries.\n")
-    if (slowest.nonEmpty) {
-      sb.append(s"\nBench slowest-10 (from ${args(2)}): ")
-      sb.append(slowest.mkString("`", "`, `", "`") + ".\n")
-      if (slowStream.nonEmpty) {
-        sb.append("Streaming harnesses in that set — ")
-        sb.append(slowStream.mkString("`", "`, `", "`"))
-        sb.append(" — are omitted below: their registered DataFrame is the ")
-        sb.append("drained result of a run-to-completion stream (a parquet ")
-        sb.append("read-back), so the batch explain carries no operator ")
-        sb.append("information; regression signal for them is the bench ")
-        sb.append("artifact's `state_rows` and batch counts.\n")
-      }
-    }
-    full.foreach { name =>
+    names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       sb.append(s"\n## $name\n\n```\n$plan```\n")
     }
     Files.writeString(Paths.get(outFile), sb.toString)
-    println(s"wrote ${full.size} plans to $outFile")
+    println(s"wrote ${names.size} plans to $outFile")
     spark.stop()
   }
 }

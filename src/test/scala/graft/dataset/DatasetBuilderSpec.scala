@@ -9,15 +9,15 @@ import org.apache.spark.sql.functions._
   */
 class DatasetBuilderSpec extends SparkSpec {
 
-  private def fixture() = {
+  /** 3 experiments x 10 images of `n` x `n`, constant grid labels. */
+  private def fixture(n: Int = 20, cellSize: Int = 5) = {
     import spark.implicits._
-    // 3 experiments x 10 images of 20x20, constant grid labels
     val planes = for {
       e <- 1 to 3
       i <- 0 until 10
     } yield {
       val p = ImagePlane.gridLabels(
-        ImagePlane.blankPlanes(1, 1, 20, 20).head, cellSize = 5)
+        ImagePlane.blankPlanes(1, 1, n, n).head, cellSize = cellSize)
       (s"exp$e", p.fov + s"_e${e}_i$i", p.stack, p.crop, p.slice,
         p.nRows, p.nCols, p.channels, p.pixels, p.labels)
     }
@@ -62,6 +62,30 @@ class DatasetBuilderSpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(trainCounts("breast") == trainCounts("lung"),
       s"balanced categories: $trainCounts")
+  }
+
+  test("buildDataset: balance resamples train/val only, leaving the test rows as they are") {
+    val (planes, meta) = fixture()
+    def nTest(balance: Boolean): Long = DatasetBuilder.buildDataset(spark, planes, meta,
+      balance = balance, seed = 42).filter(col("split") === "test").count()
+    assert(nTest(balance = false) == 3)
+    assert(nTest(balance = true) == 3)
+  }
+
+  test("buildDataset: tile, relabel and clean keep every grid quadrant whole") {
+    // 64x64 planes of 7x7 cells on an 8-px grid tile into four 32x32
+    // quadrants of 4x4 cells each: 16 cells and 16 * 49 = 784 px
+    val (planes, meta) = fixture(n = 64, cellSize = 8)
+    val tiles = DatasetBuilder.buildDataset(spark, planes, meta,
+      outRows = 32, outCols = 32, relabelCC = true, smallObjectThreshold = 20,
+      seed = 42).collect()
+    assert(tiles.length == 30 * 4)
+    tiles.foreach { t =>
+      val ids = t.labels.filter(_ != 0)
+      assert((t.nRows, t.nCols) == ((32, 32)))
+      assert(ids.distinct.length == 16 && ids.length == 784,
+        s"${t.fov} crop ${t.crop}: ${ids.distinct.length} cells, ${ids.length} px")
+    }
   }
 
   test("buildDataset: reshape tiles to the output shape") {

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.SparkSpec
 import graft.core.ImagePlane
+import graft.plans.KeyedMapExec
 import graft.sources.Npz
 import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.execution.SortExec
@@ -104,10 +105,13 @@ class Ep2ClusteringSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(sorts(linked) == 1, s"sorts in:\n${linked.queryExecution.executedPlan}")
     assertSame(planes, chained(recon().collect().toSeq))
 
-    // unpersisted, the track table's two branches each run the chain:
-    // the units' exchange is the only kind planned
+    // unpersisted, the track table reads the linked planes once: one
+    // stitch and one link kernel, behind the units' exchange, which is
+    // the only kind planned
     val direct = Tracking.trackTable(linked)
     direct.collect()
+    val kernels = collect(direct.queryExecution.executedPlan) { case k: KeyedMapExec => k }
+    assert(kernels.size == 2, s"kernels in:\n${direct.queryExecution.executedPlan}")
     val origins = collect(direct.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e.shuffleOrigin }
     assert(origins.nonEmpty && origins.forall(_ == REPARTITION_BY_COL),
       s"exchanges in:\n${direct.queryExecution.executedPlan}")

@@ -45,9 +45,15 @@ class TrackingSpec extends SparkSpec {
     assert(out.find(_.fov == "flat").get.pixels.forall(_ == 0f))
   }
 
+  private def emptyFrame(fov: String, t: Int): ImagePlane =
+    ImagePlane(fov, t, 0, 0, 16, 16, Seq("c"), new Array[Float](256), new Array[Int](256))
+
   test("trackTable: frames, span, capped from linked planes") {
-    val linked = Relabel.predictRelationships(
-      ImagePlane.toDataset(spark, movie("fov1") ++ movie("fov2")))
+    // fov3's movie ends in a frame with no cells, which still extends
+    // its horizon; "blank" has only empty frames
+    val planes = movie("fov1") ++ movie("fov2") ++ movie("fov3") ++
+      Seq(emptyFrame("fov3", 4)) ++ (0 until 3).map(emptyFrame("blank", _))
+    val linked = Relabel.predictRelationships(ImagePlane.toDataset(spark, planes))
     val rows = Tracking.trackTable(linked)
       .collect().map(r => (r.getAs[String]("fov"), r.getAs[Int]("label")) ->
         (r.getAs[Seq[Int]]("frames"), r.getAs[Boolean]("capped"))).toMap
@@ -56,6 +62,11 @@ class TrackingSpec extends SparkSpec {
       assert(rows((f, 1)) == (Seq(0, 1, 2, 3), false))
       assert(rows((f, 2)) == (Seq(0, 1), true))
     }
+    // every track ends before fov3's empty last frame
+    assert(rows((("fov3", 1))) == (Seq(0, 1, 2, 3), true))
+    assert(rows((("fov3", 2))) == (Seq(0, 1), true))
+    assert(rows.size == 6, s"rows: ${rows.keys.toSeq.sorted}")
+    assert(!rows.keys.exists(_._1 == "blank"))
   }
 
   test("trackTable divisions: parent capped at division, daughters linked") {

@@ -22,8 +22,7 @@ class StreamSketchSpec extends SparkSpec {
     val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
     assert(files.length == 6, "replay must be genuinely multi-batch")
     val StreamOps.Drained(skT, maxState, _) = StreamOps.completeAggDrain(spark, dir,
-      "*.parquet", df => df.agg(CountMin.cmsSketch(col("user_id"), 4, 256).as("sk")),
-      "spec_cms")
+      "*.parquet", df => df.agg(CountMin.cmsSketch(col("user_id"), 4, 256).as("sk")))
     assert(maxState == 1L, s"global sketch state must be exactly 1 row, saw $maxState")
     val streamed = skT.head().getSeq[Long](0)
     val batch = ev.agg(CountMin.cmsSketch(col("user_id"), 4, 256))
@@ -38,8 +37,7 @@ class StreamSketchSpec extends SparkSpec {
     val dir = StreamOps.sliceParquet(docs, col("doc_id"), 5, "spec_topk")
     val StreamOps.Drained(sk, maxState, _) = StreamOps.completeAggDrain(spark, dir,
       "*.parquet", df => df.select(explode(split(col("text"), " ")).as("token"))
-        .agg(mgTopK(col("token"), 100).as("summary"), count(lit(1)).as("n_total")),
-      "spec_topk")
+        .agg(mgTopK(col("token"), 100).as("summary"), count(lit(1)).as("n_total")))
     assert(maxState == 1L, s"global summary state must be exactly 1 row, saw $maxState")
     val words = docs.select(explode(split(col("text"), " ")).as("token"))
     val verdict = graft.queries.TextQueries.mgVerdict(words, sk).collect()
